@@ -394,8 +394,6 @@ object Smoke {
         Dedup.dedupCorpus(docs, 3, 8, 4, 0.5).count())
       timed("pq_topk", mult)(
         Similarity.pqTopK(emb, col("vec_id") % 100 === 0, 10, 2, 4, 1).count())
-      timed("rq_topk", mult)(
-        Similarity.rqTopK(emb, col("vec_id") % 100 === 0, 10, 4, 4, 1).count())
     }
   }
 
@@ -437,7 +435,6 @@ object Smoke {
       timed("ivf_auto")(Similarity.ivfTopK(emb, pred, 10,
         Similarity.autoSemDedupK(n), 4).count())
       timed("pq_topk")(Similarity.pqTopK(emb, pred, 10, 4, 16, 1).count())
-      timed("rq_topk")(Similarity.rqTopK(emb, pred, 10, 16, 16, 1).count())
       timed("ivfpq_topk")(Similarity.ivfpqTopK(emb, pred, 10, 16, 4, 4, 16, 1).count())
       timed("sq8_topk")(Similarity.sq8TopK(emb, pred, 10).count())
       // flat auto semDedup (k = n/64 cells: n²/64 assignment work) vs

@@ -79,14 +79,6 @@ object SparkEntry {
     Set("q_simhash_neardup", "q_ann_recall", "q_ann_frontier",
       "q_candidate_stats", "q_semdedup", "q_embedding_neardup_lsh")
 
-  /** Cross-scale CERTIFIED recall floors (milli-recall) + serving
-    * constants + cost expressions now live in ONE config,
-    * `functions.AnnPolicy` (r18, VERDICT task 2) — the engine side of
-    * `q_ann_frontier`, its oracle SQL and the rung implementations all
-    * read it, so a rung re-point cannot mis-rank the policy surface. */
-  private def frontierFloorsMilli: Seq[(String, Long)] =
-    graft.functions.AnnPolicy.rungs.map(r => (r.method, r.floorMilli))
-
   /** Per-SF half-measured quantizer floors for `q_ann_recall` — each
     * driver scale gets its own floor at HALF that scale's measured
     * recall. `AnnPolicy.floorMilli` per rung is the MINIMUM of these
@@ -94,17 +86,11 @@ object SparkEntry {
     * re-derives that relationship so a re-point cannot update one
     * table and silently strand the other. */
   private[graft] val perSfQuantFloors: Map[String, Seq[(String, Double)]] = Map(
-    "sf0.001" -> Seq(("pq", 0.02), ("pq_rerank", 0.11), ("rq", 0.01),
-    ("rq_rerank", 0.08), ("ivfpq", 0.01), ("ivfpq_rerank", 0.09),
-    ("pq_hi", 0.25), ("pq_opq", 0.26), ("ivfpq_auto", 0.24),
+    "sf0.001" -> Seq(("pq_hi", 0.25), ("ivfpq_auto", 0.24),
     ("ivfrq_auto", 0.13), ("knn_graph", 0.12), ("knn_graph_search", 0.46)),
-    "sf0.01" -> Seq(("pq", 0.03), ("pq_rerank", 0.13), ("rq", 0.02),
-    ("rq_rerank", 0.10), ("ivfpq", 0.03), ("ivfpq_rerank", 0.12),
-    ("pq_hi", 0.27), ("pq_opq", 0.29), ("ivfpq_auto", 0.27),
+    "sf0.01" -> Seq(("pq_hi", 0.27), ("ivfpq_auto", 0.27),
     ("ivfrq_auto", 0.20), ("knn_graph", 0.11), ("knn_graph_search", 0.44)),
-    "sf0.1" -> Seq(("pq", 0.007), ("pq_rerank", 0.037), ("rq", 0.002),
-    ("rq_rerank", 0.025), ("ivfpq", 0.007), ("ivfpq_rerank", 0.03),
-    ("pq_hi", 0.22), ("pq_opq", 0.22), ("ivfpq_auto", 0.17),
+    "sf0.1" -> Seq(("pq_hi", 0.22), ("ivfpq_auto", 0.17),
     ("ivfrq_auto", 0.085), ("knn_graph", 0.057), ("knn_graph_search", 0.31)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -582,29 +568,19 @@ object SparkEntry {
       // are fixed and md5-deterministic per corpus, so each driver SF
       // gets its OWN quantizer floors at HALF that scale's measured
       // recall (BUILD_NOTES "ANN recall trend (r13)") instead of one
-      // collapse-only cross-scale min — at the sf0.01 gate pq's floor
-      // rises 0.01 → 0.03, pq_rerank 0.06 → 0.13, etc., so a real
-      // retrieval regression fails the DRIVER gate, not only the exact
-      // FunctionsSpec pins. Non-quantizer floors were already tighter
-      // than half-measured at every scale and stay scale-invariant.
-      // Unknown dirs (generated scale probes) fall back to half the
-      // cross-scale minimum — still a non-collapse certificate there.
-      val quantFloors = perSfQuantFloors
-      val fallback = Seq(("pq", 0.007), ("pq_rerank", 0.037), ("rq", 0.002),
-        ("rq_rerank", 0.025), ("ivfpq", 0.007), ("ivfpq_rerank", 0.03),
-        ("pq_hi", 0.22), ("pq_opq", 0.22), ("ivfpq_auto", 0.17),
-        ("ivfrq_auto", 0.085), ("knn_graph", 0.057), ("knn_graph_search", 0.31))
-      val scaleKey = new java.io.File(d).getName
-      val floors = (Seq(
-        ("lsh", 0.35), ("lsh_multi", 0.38), ("ivf", 0.42),
-        ("sq8", 0.70), ("sq8_rerank", 0.90)) ++
-        quantFloors.getOrElse(scaleKey, fallback))
+      // collapse-only cross-scale min, so a real retrieval regression
+      // fails the oracle gate, not only the exact FunctionsSpec pins.
+      // Every other rung, and every rung at an unknown dir (generated
+      // scale probes), is held to its certified cross-scale floor
+      // `AnnPolicy.floorMilli` — still a non-collapse certificate.
+      val perSf = perSfQuantFloors
+        .getOrElse(new java.io.File(d).getName, Nil).toMap
+      val floors = graft.functions.AnnPolicy.rungs
+        .map(r => (r.method, perSf.getOrElse(r.method, r.floorMilli / 1000.0)))
         .toDF("method", "floor")
-      val bases = Seq(("pq_rerank", "pq"), ("rq_rerank", "rq"),
-        ("ivfpq_rerank", "ivfpq"), ("sq8_rerank", "sq8"))
-        .toDF("method", "base_method")
-      // 14-row result; checkpoint so the base-recall self-join doesn't
-      // re-run the method pipelines.
+      val bases = Seq(("sq8_rerank", "sq8")).toDF("method", "base_method")
+      // one row per rung; checkpoint so the base-recall self-join
+      // doesn't re-run the method pipelines.
       val r = Similarity.annRecall(Tables.embeddings(s, d),
         col("vec_id") % 100 === 0, graft.functions.AnnPolicy.k,
         graft.functions.AnnPolicy.harnessLshBits, graft.functions.AnnPolicy.harnessLshTables,
@@ -624,7 +600,7 @@ object SparkEntry {
     // time distance/LUT evaluations, closed-form from COUNT(*), |Q| and
     // the COUNT(*)-derived auto params — the oracle computes the same
     // numbers), the method's cross-scale CERTIFIED recall floor, a
-    // recall_ok flag (measured recall from the 17-method harness >= the
+    // recall_ok flag (measured recall from the recall harness >= the
     // certified floor — literal 1 in the oracle, so a retrieval
     // regression fails the gate), and on_frontier: pareto-optimality
     // over (cost_units ASC, certified floor DESC) — the policy read
@@ -635,20 +611,11 @@ object SparkEntry {
       import s.implicits._
       import org.apache.spark.sql.functions._
       val e = Tables.embeddings(s, d)
-      val n = e.count()
-      val q = e.filter(col("vec_id") % 100 === 0).count()
-      val c = Similarity.autoIvfCells(n).toLong
-      val p2 = Similarity.autoIvfProbe(c.toInt).toLong
-      val h = Similarity.autoGraphHops(n).toLong
-      val b = Similarity.autoGraphBeam(n).toLong
-      // harness lsh/ivf bucket size — divisor from the shared config
-      val bucket16 =
-        math.max(1L, n / graft.functions.AnnPolicy.harnessIvfCells)
       // every rung's cost expression + certified floor come from the
       // shared AnnPolicy config — the oracle's CASE is generated from
       // the SAME expression trees (drift-proof by construction)
-      val env = Map("n" -> n, "q" -> q, "c" -> c, "p2" -> p2,
-        "h" -> h, "bm" -> b, "b16" -> bucket16)
+      val env = graft.functions.AnnPolicy.env(e.count(),
+        e.filter(col("vec_id") % 100 === 0).count())
       val costs = graft.functions.AnnPolicy.rungs
         .map(r => (r.method, r.cost.eval(env), r.floorMilli))
         .toDF("method", "cost_units", "floor_milli")
@@ -1138,75 +1105,17 @@ object SparkEntry {
       Similarity.sq8TopK(Tables.embeddings(s, d),
         col("vec_id") % 100 === 0, 10, candPred = Some(col("label") % 2 === 0))
     }),
-    // product-quantization ANN: 2 subspace codebooks (fixed-point
-    // k-means, 1 certified iteration), ADC top-k over the code index
-    "q_pq_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.pqTopK(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, m = 2, ksub = 4, iters = 1)
-    }),
     // the HIGH-FIDELITY PQ operating point (r15, closes r14 verdict
     // #3): m=16 subspaces × 64 centroids = 96 code bits (21× raw
-    // compression) vs the 4-bit demo point — raw ADC recall 0.54 at
-    // the sf0.01 gate (0.50/0.445 at sf0.001/sf0.1; half-measured
-    // floors pinned in q_ann_recall), so the compressed serving story
+    // compression) — raw ADC recall 0.54 at the sf0.01 gate
+    // (0.50/0.445 at sf0.001/sf0.1; half-measured floors pinned in
+    // q_ann_recall), so the compressed serving story
     // has a measured >= 0.5-recall rung. Same certified-iteration
     // training chain, replayed by the oracle at the wider shape.
     "q_pq_hi" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       Similarity.pqTopK(Tables.embeddings(s, d),
         col("vec_id") % 100 === 0, 10, m = 16, ksub = 64, iters = 1)
-    }),
-    // OPQ-P (Ge et al. CVPR 2013): variance-balancing dim PERMUTATION
-    // (prescribed-permutation OPQ — the cheap rung before a free
-    // rotation) learned from a deterministic integer-exact sample,
-    // then q_pq_hi's certified PQ chain over the permuted vectors.
-    // Squared L2 is permutation-invariant, so ground truth is shared
-    // with the plain index; only the subspace grouping the codebooks
-    // see changes. The recall benefit is proven on a planted
-    // anisotropic fixture in SimilaritySpec (this corpus is near-
-    // isotropic, so here the gate certifies the permutation+chain).
-    "q_pq_opq" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.opqPqTopK(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, m = 16, ksub = 64, iters = 1)
-    }),
-    // PQ + exact re-rank (the FAISS refine step): ADC 50-pool, exact
-    // quantized-cosine final order
-    "q_pq_rerank" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.pqTopKRerank(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, m = 2, ksub = 4, iters = 1, pool = 50)
-    }),
-    // residual quantization ANN: stage-1 codebook + stage-2 residual
-    // codebook (both certified fixed-point k-means), single-lookup ADC
-    "q_rq_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.rqTopK(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, k1 = 4, k2 = 4, iters = 1)
-    }),
-    // RQ + exact re-rank: the additive-code ADC pool refined by
-    // exact quantized cosine
-    "q_rq_rerank" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.rqTopKRerank(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, k1 = 4, k2 = 4, iters = 1, pool = 50)
-    }),
-    // IVFADC (FAISS IVFPQ): coarse cells + PQ on the residuals,
-    // queries probe nProbe cells and ADC-score only their codes
-    "q_ivfpq_topk" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.ivfpqTopK(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, nCells = 4, nProbe = 2,
-        m = 2, ksub = 4, iters = 1)
-    }),
-    // IVFADC + exact re-rank: the probed-ADC pool refined by exact
-    // quantized cosine (the full FAISS IVFPQ,R serving stack)
-    "q_ivfpq_rerank" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.ivfpqTopKRerank(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, nCells = 4, nProbe = 2,
-        m = 2, ksub = 4, iters = 1, pool = 50)
     }),
     // the SCALE path of IVFADC (the autoLshBits pattern applied to the
     // coarse quantizer): nCells <= fixed is the LSH-bits scale trap —
@@ -1225,8 +1134,8 @@ object SparkEntry {
       // ksub=64, 96 code bits on coarse residuals) with sqrt(c)
       // probing: measured 0.48/0.54/0.355 across the SFs, ABOVE flat
       // pq_hi at sf0.1 (0.22) — the Jegou residual-quantization gain,
-      // now visible at the gated operating point. The 4-bit demo
-      // point lives on in q_ivfpq_topk/q_ivfpq_rerank.
+      // now visible at the gated operating point. The 4-bit point
+      // lives on in q_ann_filtered_ivfpq.
       Similarity.ivfpqTopK(e, col("vec_id") % 100 === 0, graft.functions.AnnPolicy.k,
         nCells = c, nProbe = Similarity.autoIvfProbe(c),
         m = graft.functions.AnnPolicy.ivfpqAutoM, ksub = graft.functions.AnnPolicy.ivfpqAutoKsub, iters = 1)
@@ -1241,7 +1150,7 @@ object SparkEntry {
         col("vec_id") % 100 === 0, 10)
     }),
     // SQ8 + exact re-rank: code-space 50-pool, exact quantized-cosine
-    // final order (the refine sibling of q_pq_rerank on the cheap rung)
+    // final order (the FAISS refine step on the cheap rung)
     "q_sq8_rerank" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       Similarity.sq8TopKRerank(Tables.embeddings(s, d),
@@ -1263,8 +1172,8 @@ object SparkEntry {
         nCells = c, nProbe = Similarity.autoIvfProbe(c), iters = 2)
         .withColumn("n_cells", lit(c.toLong))
     }),
-    // IVF-RQ at AUTO cell count: the probed scale sibling of the flat
-    // q_rq_topk scan (32x exponent 1.01) — certified coarse chain,
+    // IVF-RQ at AUTO cell count: the probed residual quantizer (the
+    // flat RQ scan measured exponent 1.01 at 32x) — certified coarse chain,
     // EIGHT additive 16-code residual stages (r17 fixed the ADC to the
     // L-stage LUT expansion and gated 4x64 at 0.18/0.30/0.13; the r18
     // tri-scale lab shows 8x16 above it at every SF — 0.26/0.40/0.17 —
@@ -2431,15 +2340,12 @@ object SparkEntry {
     // literal-1 flags — the hash matches iff every method clears its
     // cross-scale floor AND every rerank stage is monotone.
     "q_ann_recall" ->
-      """WITH q AS (SELECT count(*) * 10 AS n_truth FROM embeddings WHERE vec_id % 100 = 0)
-        |SELECT m.method, q.n_truth,
-        |       CAST(1 AS BIGINT) AS recall_ok,
-        |       CAST(1 AS BIGINT) AS rerank_ok
-        |FROM (VALUES ('lsh'), ('lsh_multi'), ('ivf'), ('pq'), ('pq_rerank'),
-        |             ('pq_hi'), ('pq_opq'), ('rq'), ('rq_rerank'), ('ivfpq'),
-        |             ('ivfpq_rerank'), ('ivfpq_auto'), ('ivfrq_auto'),
-        |             ('knn_graph'), ('knn_graph_search'), ('sq8'), ('sq8_rerank')) AS m(method)
-        |CROSS JOIN q""".stripMargin,
+      s"""WITH q AS (SELECT count(*) * 10 AS n_truth FROM embeddings WHERE vec_id % 100 = 0)
+         |SELECT m.method, q.n_truth,
+         |       CAST(1 AS BIGINT) AS recall_ok,
+         |       CAST(1 AS BIGINT) AS rerank_ok
+         |FROM (VALUES ${graft.functions.AnnPolicy.rungs.map(r => s"('${r.method}')").mkString(", ")}) AS m(method)
+         |CROSS JOIN q""".stripMargin,
     "q_ann_frontier" -> annFrontierSql,
     "q_ann_serve" -> annServeSql(400L, "ivf", ivfTopkOracleSql),
     // r19 (ADVICE): the served depth interpolates AnnPolicy.k — the
@@ -3009,17 +2915,6 @@ object SparkEntry {
          |                        neighbor_id ASC) AS rnk
          |      FROM p)
          |SELECT query_id, rnk, neighbor_id, cosine FROM r WHERE rnk <= 10""".stripMargin,
-    // PQ replay: the q_kmeans certified-iteration discipline applied
-    // per subspace (s = d // 32), then ADC distances off the SAME c1
-    // centroids the engine searches with. a2 = final codes.
-    "q_pq_topk" ->
-      s"""$pqBaseSql,
-         |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adist, vec_id) AS rnk
-         |      FROM dist)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin,
     // the high-fidelity PQ point: the SAME certified chain at
     // subWidth=4 / ksub=64 (96 code bits — see q_pq_hi's comment)
     "q_pq_hi" ->
@@ -3028,76 +2923,6 @@ object SparkEntry {
          |             row_number() OVER (PARTITION BY query_id
          |               ORDER BY adist, vec_id) AS rnk
          |      FROM dist)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin,
-    // OPQ-P: the variance-balancing dim permutation (integer score
-    // over the md5-sample, round-robin deal) + the SAME certified PQ
-    // chain at q_pq_hi's shape — the oracle re-derives the identical
-    // permutation from its own sample aggregation
-    "q_pq_opq" ->
-      s"""${opqBaseSqlFor(16, 4, 64, 1024)},
-         |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adist, vec_id) AS rnk
-         |      FROM dist)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin,
-    // ADC proposes the 50-pool; exact quantized cosine re-ranks it —
-    // the FAISS refine step, replayed off the same code index
-    "q_pq_rerank" ->
-      s"""$pqBaseSql,
-         |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adist, vec_id) AS rnk
-         |      FROM dist),
-         |pool AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 50),
-         |x AS (SELECT p.query_id, p.neighbor_id,
-         |             CAST(list_sum(list_transform(list_zip(qq.q, cc.q), z -> z[1] * z[2])) AS BIGINT) AS dot,
-         |             qq.nq AS qn, cc.nq AS cn
-         |      FROM pool p
-         |      JOIN n qq ON qq.vec_id = p.query_id
-         |      JOIN n cc ON cc.vec_id = p.neighbor_id),
-         |f AS (SELECT query_id, neighbor_id,
-         |             CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) AS cosine,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) DESC,
-         |                        neighbor_id ASC) AS rnk
-         |      FROM x)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, cosine
-         |FROM f WHERE rnk <= 10""".stripMargin,
-    // RQ replay: stage-1 certified k-means on the +2^20-shifted dims,
-    // residuals re-shifted +2^21, stage-2 certified k-means on them
-    // (seeds by md5(vec_id || 'r')), ADC off the combined c1+c2 table.
-    "q_rq_topk" ->
-      s"""$rqBaseSql
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin,
-    // RQ + exact re-rank: the additive-code ADC pool (50) refined by
-    // exact quantized cosine — the refine sibling of q_pq_rerank /
-    // q_ivfpq_rerank for the residual-quantized index
-    "q_rq_rerank" ->
-      s"""$rqBaseSql,
-         |pool AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 50),
-         |x AS (SELECT p.query_id, p.neighbor_id,
-         |             CAST(list_sum(list_transform(list_zip(qq.q, cc.q), z -> z[1] * z[2])) AS BIGINT) AS dot,
-         |             qq.nq AS qn, cc.nq AS cn
-         |      FROM pool p
-         |      JOIN n qq ON qq.vec_id = p.query_id
-         |      JOIN n cc ON cc.vec_id = p.neighbor_id),
-         |f AS (SELECT query_id, neighbor_id,
-         |             CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) AS cosine,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) DESC,
-         |                        neighbor_id ASC) AS rnk
-         |      FROM x)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, cosine
-         |FROM f WHERE rnk <= 10""".stripMargin,
-    // IVFADC replay: coarse certified k-means (cells), residuals to
-    // the assigned centroid, PQ codebooks on the residuals (seeds by
-    // md5(vec_id || 'p')), probe = 2 nearest cells by exact integer
-    // L2, ADC over the probed cells' codes only.
-    "q_ivfpq_topk" ->
-      s"""$ivfpqBaseSql
          |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
          |FROM r WHERE rnk <= 10""".stripMargin,
     // IVF-SQ8 at auto cell count: certified 2-iteration coarse chain,
@@ -3150,26 +2975,6 @@ object SparkEntry {
       s"""${sq8BaseSqlFor("label % 2 = 0")}
          |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
          |FROM r WHERE rnk <= 10""".stripMargin,
-    // IVFADC + exact re-rank: the probed-ADC pool (50) refined by
-    // exact quantized cosine — mirror of q_pq_rerank over the
-    // cell-restricted index
-    "q_ivfpq_rerank" ->
-      s"""$ivfpqBaseSql,
-         |pool AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 50),
-         |x AS (SELECT p.query_id, p.neighbor_id,
-         |             CAST(list_sum(list_transform(list_zip(qq.q, cc.q), z -> z[1] * z[2])) AS BIGINT) AS dot,
-         |             qq.nq AS qn, cc.nq AS cn
-         |      FROM pool p
-         |      JOIN n qq ON qq.vec_id = p.query_id
-         |      JOIN n cc ON cc.vec_id = p.neighbor_id),
-         |f AS (SELECT query_id, neighbor_id,
-         |             CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) AS cosine,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) DESC,
-         |                        neighbor_id ASC) AS rnk
-         |      FROM x)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, cosine
-         |FROM f WHERE rnk <= 10""".stripMargin,
     // SQ8 replay: affine 8-bit codes off per-dim min/max bounds, then
     // symmetric integer code-space distance — see sq8BaseSql
     "q_sq8_topk" ->
@@ -3177,7 +2982,7 @@ object SparkEntry {
          |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
          |FROM r WHERE rnk <= 10""".stripMargin,
     // SQ8 code-space proposes the 50-pool; exact quantized cosine
-    // re-ranks it — the same refine stage as q_pq_rerank
+    // re-ranks it — the FAISS refine step
     "q_sq8_rerank" ->
       s"""$sq8BaseSql,
          |pool AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 50),
@@ -4390,83 +4195,6 @@ object SparkEntry {
            |       drop_reason IS NULL AS keep
            |FROM j""".stripMargin
 
-  /** Shared PQ training + ADC replay (m=2 subspaces of 32 dims, ksub=4,
-    * 1 certified iteration, queries = vec_id % 100 = 0): CTEs through
-    * `dist` (query → candidate ADC distance). `q_pq_topk` ranks it
-    * directly; `q_pq_rerank` re-ranks the 50-pool by exact cosine. */
-  /** The IVFADC replay chain (coarse certified k-means -> residuals
-    * -> PQ-on-residual training -> probe -> cell-restricted ADC),
-    * through the ranked candidate CTE `r`. Shared by q_ivfpq_topk
-    * (ADC top-k) and q_ivfpq_rerank (pool + exact-cosine refine). */
-  /** The RQ replay chain (two-stage certified k-means -> additive
-    * codes -> combined-table ADC), through the ranked candidate CTE
-    * `r`. Shared by q_rq_topk and q_rq_rerank. */
-  private lazy val rqBaseSql =
-    s"""WITH n AS ($quantizedSql),
-         |vd AS (SELECT vec_id, generate_subscripts(q,1)-1 AS d,
-         |              unnest(q) + 1048576 AS x FROM n),
-         |s1 AS (SELECT vec_id,
-         |         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS code1
-         |       FROM n QUALIFY code1 < 4),
-         |c10 AS (SELECT s1.code1, vd.d, vd.x AS c
-         |        FROM vd JOIN s1 USING (vec_id)),
-         |a10 AS (SELECT vec_id, code1 FROM (
-         |    SELECT vd.vec_id, c10.code1,
-         |           row_number() OVER (PARTITION BY vd.vec_id
-         |             ORDER BY sum((vd.x - c10.c)*(vd.x - c10.c)), c10.code1) AS rn
-         |    FROM vd JOIN c10 ON vd.d = c10.d
-         |    GROUP BY vd.vec_id, c10.code1 QUALIFY rn = 1)),
-         |c1 AS (SELECT a10.code1, vd.d,
-         |              CAST(CAST(sum(vd.x) AS BIGINT) // count(*) AS BIGINT) AS c
-         |       FROM vd JOIN a10 USING (vec_id)
-         |       GROUP BY 1, vd.d),
-         |a1 AS (SELECT vec_id, code1 FROM (
-         |    SELECT vd.vec_id, c1.code1,
-         |           row_number() OVER (PARTITION BY vd.vec_id
-         |             ORDER BY sum((vd.x - c1.c)*(vd.x - c1.c)), c1.code1) AS rn
-         |    FROM vd JOIN c1 ON vd.d = c1.d
-         |    GROUP BY vd.vec_id, c1.code1 QUALIFY rn = 1)),
-         |rd AS (SELECT vd.vec_id, vd.d, vd.x - c1.c + 2097152 AS rx
-         |       FROM vd JOIN a1 USING (vec_id)
-         |       JOIN c1 ON c1.code1 = a1.code1 AND c1.d = vd.d),
-         |s2 AS (SELECT vec_id,
-         |         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR) || 'r'), vec_id) - 1 AS code2
-         |       FROM n QUALIFY code2 < 4),
-         |c20 AS (SELECT s2.code2, rd.d, rd.rx AS c
-         |        FROM rd JOIN s2 USING (vec_id)),
-         |b10 AS (SELECT vec_id, code2 FROM (
-         |    SELECT rd.vec_id, c20.code2,
-         |           row_number() OVER (PARTITION BY rd.vec_id
-         |             ORDER BY sum((rd.rx - c20.c)*(rd.rx - c20.c)), c20.code2) AS rn
-         |    FROM rd JOIN c20 ON rd.d = c20.d
-         |    GROUP BY rd.vec_id, c20.code2 QUALIFY rn = 1)),
-         |c2 AS (SELECT b10.code2, rd.d,
-         |              CAST(CAST(sum(rd.rx) AS BIGINT) // count(*) AS BIGINT) AS c
-         |       FROM rd JOIN b10 USING (vec_id)
-         |       GROUP BY 1, rd.d),
-         |b2 AS (SELECT vec_id, code2 FROM (
-         |    SELECT rd.vec_id, c2.code2,
-         |           row_number() OVER (PARTITION BY rd.vec_id
-         |             ORDER BY sum((rd.rx - c2.c)*(rd.rx - c2.c)), c2.code2) AS rn
-         |    FROM rd JOIN c2 ON rd.d = c2.d
-         |    GROUP BY rd.vec_id, c2.code2 QUALIFY rn = 1)),
-         |comb AS (SELECT c1.code1, c2.code2, c1.d, c1.c + c2.c - 2097152 AS cc
-         |         FROM c1 JOIN c2 ON c1.d = c2.d),
-         |qd AS (SELECT vec_id AS query_id, d, x FROM vd WHERE vec_id % 100 = 0),
-         |t AS (SELECT qd.query_id, comb.code1, comb.code2,
-         |             CAST(sum((qd.x - comb.cc)*(qd.x - comb.cc)) AS BIGINT) AS adist
-         |      FROM qd JOIN comb ON qd.d = comb.d
-         |      GROUP BY 1, 2, 3),
-         |codes AS (SELECT a1.vec_id, a1.code1, b2.code2
-         |          FROM a1 JOIN b2 USING (vec_id)),
-         |dist AS (SELECT t.query_id, codes.vec_id, t.adist
-         |         FROM codes JOIN t ON codes.code1 = t.code1 AND codes.code2 = t.code2
-         |         WHERE codes.vec_id <> t.query_id),
-         |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adist, vec_id) AS rnk
-         |      FROM dist)""".stripMargin
-
   /** The IVFADC chain with an optional candidate predicate: the filter
     * restricts the code-index side of the ADC join (search-time
     * filtered search), never the training CTEs — mirroring
@@ -4554,8 +4282,6 @@ object SparkEntry {
          |             row_number() OVER (PARTITION BY query_id
          |               ORDER BY adist, vec_id) AS rnk
          |      FROM dist)""".stripMargin
-
-  private lazy val ivfpqBaseSql = ivfpqBaseSqlFor("TRUE")
 
   /** The IVFADC chain with nCells derived from COUNT(*) — the
     * `q_semdedup_hier` ±1-corrected-sqrt contract applied to the
@@ -4862,46 +4588,15 @@ object SparkEntry {
        |       r.query_id, CAST(r.rnk AS BIGINT) AS rnk, r.neighbor_id
        |FROM res r JOIN winner w ON w.method = '$winner'""".stripMargin
 
-  /** PQ certified-training + ADC replay, parameterized by subspace
-    * width (dims per subspace) and per-subspace centroid count — the
-    * demo point is (32, 4); the high-fidelity gated point q_pq_hi is
-    * (4, 64) (r15). */
+  /** PQ certified-training + ADC replay through `dist` (query →
+    * candidate ADC distance), parameterized by subspace width (dims per
+    * subspace) and per-subspace centroid count — the gated point
+    * q_pq_hi is (4, 64) (r15). */
   private def pqBaseSqlFor(subWidth: Int, ksub: Int): String =
     s"""WITH n AS ($quantizedSql),
        |vd AS (SELECT vec_id, generate_subscripts(q,1)-1 AS d,
        |              unnest(q) + 1048576 AS x FROM n),
-       |${pqChainSql(subWidth, ksub)}""".stripMargin
-
-  /** OPQ-P replay (`q_pq_opq`): the per-dim integer dispersion score
-    * over the deterministic md5-sample, the (score DESC, d) rank, the
-    * round-robin deal of ranked dims across subspaces, then the SAME
-    * certified PQ chain over the PERMUTED dim index — position
-    * (rnk % m)·subWidth + rnk // m holds original dim d0, mirroring
-    * `Similarity.opqPermutation` exactly. */
-  private def opqBaseSqlFor(m: Int, subWidth: Int, ksub: Int,
-                            sampleN: Int): String =
-    s"""WITH n AS ($quantizedSql),
-       |vd0 AS (SELECT vec_id, generate_subscripts(q,1)-1 AS d0,
-       |               unnest(q) + 1048576 AS x FROM n),
-       |samp AS (SELECT vec_id FROM n
-       |         ORDER BY md5(CAST(vec_id AS VARCHAR) || 'v'), vec_id
-       |         LIMIT $sampleN),
-       |sc AS (SELECT d0, count(*) AS nn, sum(x) AS sx, sum(x*x) AS sxx
-       |       FROM vd0 JOIN samp USING (vec_id) GROUP BY d0),
-       |pm AS (SELECT d0,
-       |              (rnk % $m) * $subWidth + (rnk // $m) AS d
-       |       FROM (SELECT d0, row_number() OVER
-       |               (ORDER BY (nn*sxx - sx*sx) DESC, d0) - 1 AS rnk
-       |             FROM sc)),
-       |vd AS (SELECT vd0.vec_id, pm.d AS d, vd0.x
-       |       FROM vd0 JOIN pm USING (d0)),
-       |${pqChainSql(subWidth, ksub)}""".stripMargin
-
-  /** The certified PQ chain from the `vd` (vec_id, d, x) CTE through
-    * `dist` (query → candidate ADC distance) — shared by the plain
-    * (contiguous-slice) and OPQ-P (permuted-dim) oracles. */
-  private def pqChainSql(subWidth: Int, ksub: Int): String =
-    s"""vs AS (SELECT vec_id, d, d // $subWidth AS s, x FROM vd),
+       |vs AS (SELECT vec_id, d, d // $subWidth AS s, x FROM vd),
        |seeds AS (SELECT vec_id,
        |            row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS code
        |          FROM n QUALIFY code < $ksub),
@@ -4934,8 +4629,6 @@ object SparkEntry {
        |         FROM a2 JOIN adc ON a2.s = adc.s AND a2.code = adc.code
        |         WHERE a2.vec_id <> adc.query_id
        |         GROUP BY 1, 2)""".stripMargin
-
-  private lazy val pqBaseSql = pqBaseSqlFor(32, 4)
 
   /** DuckDB replay of the SQ8 code table + symmetric code-space scan
     * (Similarity.sq8CodeTable / sq8TopK): per-dim (mn, mx) bounds over

@@ -1,13 +1,17 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
+
 /** The ANN ladder's SERVING-POLICY surface in one place (r18, VERDICT
   * task 2): each rung's serving constants (quantizer shape, probe/walk
   * parameters, rerank depth), its cross-scale certified recall floor,
-  * and its closed-form work-unit cost — defined ONCE and read by
+  * its closed-form work-unit cost and its serve function — defined
+  * ONCE and read by
   *
-  *  - the rung implementations (`SparkEntry.queries` call sites and
-  *    `Similarity.annRecall`'s harness trainings),
-  *  - the engine side of `q_ann_frontier`, and
+  *  - `Similarity.annServe` (the rung's own serve function, picked by
+  *    [[choose]]) and `Similarity.annRecall`'s harness trainings,
+  *  - the engine side of `q_ann_frontier` and `q_ann_recall`, and
   *  - the DuckDB oracle (the cost CASE is GENERATED from the same
   *    expression tree via [[Cost.sql]]).
   *
@@ -55,23 +59,9 @@ object AnnPolicy {
     "harness IVF cell count and LSH bucket count must agree: the " +
       "b16 cost symbol is one bucket size shared by both rungs")
 
-  /** PQ demo point (oracle-portability vehicle): m=2 subspaces of 4
-    * codes; the high-fidelity gated point (q_pq_hi / q_pq_opq) is
-    * m=16, ksub=64. */
-  val pqDemoM = 2
-  val pqDemoKsub = 4
+  /** The high-fidelity PQ point (q_pq_hi): m=16 subspaces of 64 codes. */
   val pqHiM = 16
   val pqHiKsub = 64
-
-  /** RQ demo point: L=2 additive stages of 4 codes. */
-  val rqDemoL = 2
-  val rqDemoK = 4
-
-  /** IVFADC demo point: 4 cells, 2 probed, m=2 residual subspaces. */
-  val ivfpqDemoCells = 4
-  val ivfpqDemoProbe = 2
-  val ivfpqDemoM = 2
-  val ivfpqDemoKsub = 4
 
   /** IVFADC auto point (q_ivfpq_auto, r17 re-point): m=16 residual
     * subspaces of 64 codes on sqrt(n/64) cells with sqrt(c) probing. */
@@ -155,48 +145,87 @@ object AnnPolicy {
   private val h = Sym("h"); private val bm = Sym("bm")
   private val b16 = Sym("b16")
 
+  /** A rung's serve function: (embeddings, queryPred, k, env) →
+    * (query_id, rnk, neighbor_id, …) at the rung's operating point;
+    * `env` is the corpus's [[env]] map (auto cells, probes, hops). */
+  type Serve = (DataFrame, Column, Int, Map[String, Long]) => DataFrame
+
   /** One ANN rung: its harness/query method name, the cross-scale
     * CERTIFIED recall floor in milli-recall (the minimum of the per-SF
     * half-measured floors — the recall a serving policy can RELY on at
-    * any gated scale), and its serve-time cost expression. */
-  final case class AnnRung(method: String, floorMilli: Long, cost: Cost)
+    * any gated scale), its serve-time cost expression, and the serve
+    * function `Similarity.annServe` runs when the rung is chosen. */
+  final case class AnnRung(method: String, floorMilli: Long, cost: Cost,
+                           serve: Serve)
+
+  import Similarity.{autoGraphBeam, autoGraphHops, autoIvfCells,
+    autoIvfProbe, ivfRqTopKMulti, ivfTopK, ivfpqTopK, knnGraph,
+    knnGraphSearch, lshTopK, lshTopKMulti, pqTopK, sq8TopK, sq8TopKRerank}
 
   /** The frontier's rung table. Floors are re-pinned when a rung
     * re-points (see BUILD_NOTES); cost constants reference the serving
     * vals above, so a re-point cannot leave the policy surface stale. */
   val rungs: Seq[AnnRung] = Seq(
     // bucket + `bits` Hamming-1 probes, each a b16-sized bucket scan
-    AnnRung("lsh", 350L, q * L(harnessLshBits + 1) * b16),
+    AnnRung("lsh", 350L, q * L(harnessLshBits + 1) * b16,
+      (e, p, k, _) => lshTopK(e, p, k, harnessLshBits)),
     // `tables` tables, 1 bucket each
-    AnnRung("lsh_multi", 380L, q * L(harnessLshTables) * b16),
+    AnnRung("lsh_multi", 380L, q * L(harnessLshTables) * b16,
+      (e, p, k, _) => lshTopKMulti(e, p, k, harnessLshBits, harnessLshTables)),
     // cells centroid distances + probed-cell scans
     AnnRung("ivf", 420L,
-      q * L(harnessIvfCells) + q * L(harnessIvfProbe) * b16),
-    AnnRung("pq", 7L, L(pqDemoM) * q * n),
-    AnnRung("pq_rerank", 37L, L(pqDemoM) * q * n + L(rerankPool) * q),
-    AnnRung("pq_hi", 220L, L(pqHiM) * q * n),
-    AnnRung("pq_opq", 220L, L(pqHiM) * q * n),
-    AnnRung("rq", 2L, L(rqDemoL) * q * n),
-    AnnRung("rq_rerank", 25L, L(rqDemoL) * q * n + L(rerankPool) * q),
-    // demo cells/probe: probe/cells of the corpus, m LUT lookups each
-    AnnRung("ivfpq", 7L,
-      q * L(ivfpqDemoCells) +
-        q * (n / L(ivfpqDemoCells / ivfpqDemoProbe)) * L(ivfpqDemoM)),
-    AnnRung("ivfpq_rerank", 30L,
-      q * L(ivfpqDemoCells) +
-        q * (n / L(ivfpqDemoCells / ivfpqDemoProbe)) * L(ivfpqDemoM) +
-        L(rerankPool) * q),
-    AnnRung("sq8", 700L, L(dims) * q * n),
-    AnnRung("sq8_rerank", 900L, L(dims) * q * n + L(rerankPool) * q),
+      q * L(harnessIvfCells) + q * L(harnessIvfProbe) * b16,
+      (e, p, k, _) => ivfTopK(e, p, k, harnessIvfCells, harnessIvfProbe)),
+    AnnRung("pq_hi", 220L, L(pqHiM) * q * n,
+      (e, p, k, _) => pqTopK(e, p, k, pqHiM, pqHiKsub, 1)),
+    AnnRung("sq8", 700L, L(dims) * q * n,
+      (e, p, k, _) => sq8TopK(e, p, k)),
+    AnnRung("sq8_rerank", 900L, L(dims) * q * n + L(rerankPool) * q,
+      (e, p, k, _) => sq8TopKRerank(e, p, k, rerankPool)),
     AnnRung("ivfpq_auto", 170L,
-      q * c + q * p2 * (n / c) * L(ivfpqAutoM)),
+      q * c + q * p2 * (n / c) * L(ivfpqAutoM),
+      (e, p, k, env) => ivfpqTopK(e, p, k, env("c").toInt, env("p2").toInt,
+        ivfpqAutoM, ivfpqAutoKsub, 1)),
     // L LUT lookups per candidate in the probed cells
     AnnRung("ivfrq_auto", 85L,
-      q * c + q * p2 * (n / c) * L(ivfrqAutoKs.length)),
+      q * c + q * p2 * (n / c) * L(ivfrqAutoKs.length),
+      (e, p, k, env) => ivfRqTopKMulti(e, p, k, env("c").toInt,
+        env("p2").toInt, ivfrqAutoKs, 1)),
     // the node's own list: one lookup
-    AnnRung("knn_graph", 57L, q * L(kGraph)),
+    AnnRung("knn_graph", 57L, q * L(kGraph),
+      (e, p, k, _) => knnGraph(e, kGraph, graphRounds)
+        .join(e.filter(p).select(col("vec_id")), Seq("vec_id"), "left_semi")
+        .filter(col("rnk") <= k)
+        .withColumnRenamed("vec_id", "query_id")),
     // beam walk: hops x beam nodes, kGraph edges each, + entry seeding
-    AnnRung("knn_graph_search", 310L, q * (h * bm * L(kGraph) + bm)))
+    AnnRung("knn_graph_search", 310L, q * (h * bm * L(kGraph) + bm),
+      (e, p, k, env) => knnGraphSearch(e, p, k, kGraph, graphRounds,
+        hops = env("h").toInt, beam = env("bm").toInt)))
+
+  /** The policy's parameter environment for a corpus of `n` vectors
+    * queried by `q` of them: the integers the cost trees evaluate over,
+    * every one a COUNT(*)-derived auto value (the oracle re-derives the
+    * same numbers via its integer threshold chains). */
+  def env(n: Long, q: Long): Map[String, Long] = {
+    val c = autoIvfCells(n)
+    Map("n" -> n, "q" -> q, "c" -> c.toLong,
+      "p2" -> autoIvfProbe(c).toLong, "h" -> autoGraphHops(n).toLong,
+      "bm" -> autoGraphBeam(n).toLong,
+      "b16" -> math.max(1L, n / harnessIvfCells))
+  }
+
+  /** The serving policy — "the cheapest rung whose CERTIFIED recall ≥
+    * `floorMilli`": the minimum cost over the rungs meeting the floor
+    * (tie-break: floor DESC, method ASC — the winner is on the Pareto
+    * frontier by construction: anything dominating it would also meet
+    * the floor more cheaply). An unsatisfiable floor fails loudly. */
+  def choose(env: Map[String, Long], floorMilli: Long): AnnRung = {
+    val eligible = rungs.filter(_.floorMilli >= floorMilli)
+    require(eligible.nonEmpty,
+      s"no ANN rung certifies recall >= $floorMilli milli " +
+        s"(max certified: ${rungs.map(_.floorMilli).max})")
+    eligible.minBy(r => (r.cost.eval(env), -r.floorMilli, r.method))
+  }
 
   /** Engine-side cost of one rung (clamped double eval — see header). */
   def costUnits(method: String, env: Map[String, Long]): Long =

@@ -523,16 +523,16 @@ object Dedup {
     * dominant serving cost, and the piece that slowed in r17's bench
     * context once the span family's corpus-scale memo blocks became
     * session-resident alongside it. The PRUNED pair frame is keyed by
-    * the metric's own prune expression (its SQL rendering), so each
-    * (corpus, n, cap, metric-threshold) serves repeat reads from one
-    * checkpointed candidate set — the persisted-index probe shape the
-    * rest of the dedup family already has. Prune-before-checkpoint is
-    * preserved: what is stored is the post-prune set. */
+    * the metric (`op`) and its `threshold` — the prune expression is a
+    * function of the two — so each (corpus, n, cap, metric-threshold)
+    * serves repeat reads from one checkpointed candidate set — the
+    * persisted-index probe shape the rest of the dedup family already
+    * has. Prune-before-checkpoint is preserved: what is stored is the
+    * post-prune set. */
   private def invertedCandidatesMemo(docs: DataFrame, n: Int, maxDocFreq: Int,
-                                     op: String, prune: Column): DataFrame =
-    IndexMemo.of[DataFrame]("ngram_cand", docs,
-      (n, maxDocFreq, op,
-        org.apache.spark.sql.GraftSqlBridge.expression(prune).sql)) {
+                                     op: String, threshold: Double,
+                                     prune: Column): DataFrame =
+    IndexMemo.of[DataFrame]("ngram_cand", docs, (n, maxDocFreq, op, threshold)) {
       invertedCandidates(docs, n, maxDocFreq, op, prune)
     }
 
@@ -555,7 +555,7 @@ object Dedup {
     // hot term dropped); the hot intersect never runs, and the pair
     // never reaches checkpoint storage, if it cannot qualify.
     val cand = invertedCandidatesMemo(docs, n, maxDocFreq,
-      "ngramJaccardPairsInverted",
+      "ngramJaccardPairsInverted", minJaccard,
       interUpperBound.cast("double") * (1.0 + minJaccard)
         >= lit(minJaccard) * (col("n_a") + col("n_b")).cast("double"))
     cand
@@ -615,7 +615,7 @@ object Dedup {
     // Prune before checkpoint: C >= t ⟺ inter >= t*min(|A|,|B|), and
     // inter <= interUpperBound — necessary condition, result unchanged.
     val cand = invertedCandidatesMemo(docs, n, maxDocFreq,
-      "ngramContainmentPairs",
+      "ngramContainmentPairs", minContainment,
       interUpperBound.cast("double")
         >= lit(minContainment) * least(col("n_a"), col("n_b")).cast("double"))
     cand

@@ -84,13 +84,6 @@ object Sampling {
         sqrt(lit(nMin.toDouble) / col("n_before").cast("double")).as("frac"))
   }
 
-  /** Stratified deterministic sample: the SAME per-key rule inside
-    * every stratum — stratum sizes stay proportional without a
-    * per-stratum pass (keys are uniform within strata). */
-  def stratifiedSample(df: DataFrame, keyCol: String, strataCol: String,
-                       pct: Int): DataFrame =
-    deterministicSample(df, keyCol, pct)
-
   /** Per-stratum sampling fractions — the rebalancing primitive for
     * training mixes (e.g. downsample the dominant language, keep all
     * of a rare one). Same deterministic per-key rule; a stratum absent

@@ -6,14 +6,12 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`).
   *
-  * Two cosine paths:
-  *  - `quantizedCosine`: elements are floor-quantized to 1e-6 integers;
-  *    dot products and norms are then EXACT bigint arithmetic, so the
-  *    cosine double is bit-identical in any engine and any partition
-  *    order — this is what the DuckDB-oracle queries use. floor() has
-  *    no round-half ambiguity, unlike any float-sum + round scheme.
-  *  - `doubleCosine`: plain double fold — the fast production path
-  *    (unit-tested against the quantized one to 1e-6).
+  * Cosine path: elements are floor-quantized to 1e-6 integers
+  * (`quantize`); dot products and norms are then EXACT bigint
+  * arithmetic, so the cosine double is bit-identical in any engine and
+  * any partition order — this is what the DuckDB-oracle queries use.
+  * floor() has no round-half ambiguity, unlike any float-sum + round
+  * scheme.
   *
   * Scale design: brute-force top-k is a broadcast of the (tiny) query
   * set against the candidate scan — no shuffle of candidates — followed
@@ -220,13 +218,11 @@ object Similarity {
     * answer set (the gated `q_ann_topk` and the recall harness's truth
     * side), so it is computed once per session and every method
     * addition to the harness reuses it instead of re-scanning the
-    * corpus (r14 verdict #4). Keyed on the RAW embeddings plan + the
-    * predicate's canonical SQL + k, the same discipline as the trained
-    * index memos. */
+    * corpus (r14 verdict #4). Keyed on the FILTERED embeddings plan
+    * (the query set) + k, so each predicate gets its own entry. */
   def bruteForceTopKMemo(embeddings: DataFrame, queryPred: Column,
                          k: Int): DataFrame =
-    graft.functions.IndexMemo("bf_truth", embeddings,
-      (org.apache.spark.sql.GraftSqlBridge.expression(queryPred).sql, k)) {
+    graft.functions.IndexMemo("bf_truth", embeddings.filter(queryPred), k) {
       bruteForceTopK(embeddings, queryPred, k).localCheckpoint()
     }
 
@@ -417,15 +413,6 @@ object Similarity {
       .select(col("label"), col("d").cast("long").as("d"),
         (col("_sx").cast("double") / col("n").cast("double")).as("centroid"),
         col("n"))
-
-  /** Fast double-precision cosine (production path; not used by oracle
-    * queries because double sum order is engine-dependent). Runs
-    * through the native fused `CosineF64` expression — dot and both
-    * norms in ONE codegen'd loop, replacing the three interpreted
-    * higher-order-function folds this used to spell. */
-  def doubleCosine(a: String, b: String): Column =
-    graft.plans.CosineF64.cosine_f64(
-      col(a).cast("array<double>"), col(b).cast("array<double>"))
 
   /** Hyperplane sign for plane index `j` (0..63) at an exploded
     * dimension row carrying md5(d) parsed into four 32-bit words
@@ -925,7 +912,7 @@ object Similarity {
     * two-level IVF fix, under the same integer fixed-point discipline
     * (+2^20 shift, `sum div count` centroids, exact int64 distances,
     * md5 seeds — level 2 salts with 'h', decorrelated from level 1
-    * like rqTrain's 'r' — lexicographic argmin ties), so DuckDB
+    * like IVF-RQ's 'r' — lexicographic argmin ties), so DuckDB
     * replays BOTH levels bit-exactly (`q_semdedup_hier`).
     *
     * Returns (vec_id, cell_id) with cell_id = g·k2 + sub. Memoized
@@ -1408,40 +1395,6 @@ object Similarity {
       k, "adist")
   }
 
-  /** Residual quantization (RQ): two-stage ADDITIVE vector
-    * quantization — stage 1 trains a `k1`-centroid codebook over the
-    * FULL vector with the `kmeansFixedPoint` integer discipline
-    * (+2^20-shifted 1e6-quantized dims, integer `sum div count`
-    * centroids, exact int64 squared distances, md5-ordered seeds,
-    * lexicographic argmin ties); stage 2 trains a `k2`-centroid
-    * codebook on the stage-1 RESIDUALS (x − c1, re-shifted by +2^21 so
-    * every stage-2 operand stays non-negative and truncating/flooring
-    * integer division coincide across engines). Each vector encodes as
-    * (code1, code2) and reconstructs as c1[code1] + c2[code2] —
-    * k1·k2 effective reconstruction cells for k1+k2 training cost,
-    * the compression ladder PQ climbs by SPLITTING dims and RQ climbs
-    * by STACKING stages. DuckDB replays both stages bit-exactly
-    * (`q_rq_topk`).
-    *
-    * Stage-2 seeds order by md5(vec_id || 'r') — decorrelated from
-    * stage 1's md5(vec_id) order, mirrored verbatim in the oracle.
-    *
-    * Scale shape: both stages are the pqTrain loop — centroids stay
-    * k·dims rows, localCheckpointed and BROADCAST into every
-    * assignment join, so the corpus never shuffles for training;
-    * the residual frame is one broadcast join over the checkpointed
-    * dims. Returns (codes, cents1, cents2): codes = (vec_id, code1,
-    * code2); each cents = (codeN, d, c) on global dim index d from the
-    * FINAL update (codes are the final assignment against it). */
-  def rqTrain(embeddings: DataFrame, k1: Int, k2: Int,
-              iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(iters >= 1, s"rqTrain needs at least one iteration, got $iters")
-    // Memoized per (quantized input plan, k1, k2, iters) — see pqTrain.
-    val e = ensureQuantized(embeddings)
-    IndexMemo.of[(DataFrame, DataFrame, DataFrame)]("rq_train", e, (k1, k2, iters))(
-      rqTrainCompute(e, k1, k2, iters))
-  }
-
   /** Deterministic per-salt seed table shared by the multi-stage
     * fixed-point trainers: for each salt, the `maxK` ids with smallest
     * md5(vec_id || salt), coded 0..maxK-1 in (_h, vec_id) order —
@@ -1614,152 +1567,24 @@ object Similarity {
     }
   }
 
-  private def rqTrainCompute(e: DataFrame, k1: Int, k2: Int,
-                             iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shift2 = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
-    val v = e.select(col("vec_id"), col("q"))
-    // LAZY: the first full-scan consumer (the seed-vector collect, or
-    // fpStage's seed collect past the cap) materializes the blocks
-    val va = v.select(col("vec_id"),
-        expr(s"transform(q, x -> x + ${shift}L)").as("xa"))
-      .localCheckpoint(eager = false)
-    // both stages' seeds in one bounded top-k pass (see seedTable);
-    // salts "" / "r" keep the md5 picks bit-identical to the r18 form.
-    // r20: LOCAL (|salts|·maxK id rows) — both stages' seed fetches
-    // broadcast a LocalRelation slice instead of re-running the
-    // corpus-wide TopK subtree per broadcast build
-    val seeds = localFrame(seedTable(v, Seq("", "r"), math.max(k1, k2)))
-    // residual-chain seed replay (see ivfRqTrainMulti): one collect
-    // fetches BOTH stages' seed vectors off va; stage 2's residual
-    // seeds are replayed driver-side (exact Long algebra), so its
-    // per-stage seed-collect job is gone. Past the literal cap the
-    // fpStage join/collect spelling engages unchanged.
-    val replay = math.max(k1, k2) <= litCentCap
-    def idsOf(salt: String, k: Int): Seq[(Long, Int)] =
-      seeds.filter(col("salt") === salt && col("code") < k)
-        .select(col("vec_id"), col("code")).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val (ids1, ids2) =
-      if (replay) (idsOf("", k1), idsOf("r", k2)) else (Nil, Nil)
-    val tracked: Map[Long, Seq[Long]] =
-      if (replay && (ids1 ++ ids2).nonEmpty)
-        va.filter(col("vec_id").isin((ids1 ++ ids2).map(_._1).distinct: _*))
-          .select(col("vec_id"), col("xa")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-      else Map.empty
-    def vecsOf(ids: Seq[(Long, Int)], f: Seq[Long] => Seq[Long]) =
-      if (!replay) None
-      else Some(ids.map { case (id, code) => (code, f(tracked(id))) }.sortBy(_._1))
-    val (a1, c1) = fpStage(
-      seeds.filter(col("salt") === "" && col("code") < k1)
-        .withColumnRenamed("code", "code1"), va, "code1", k1, iters,
-      seedVecs = vecsOf(ids1, identity))
-    // residual arrays: x − c1[code1] + 2^21 — a1 is lazy and carries
-    // xa; the LAZY checkpoint materializes inside stage 2's update
-    // job (no separate eager assignment/checkpoint job) and the frame
-    // keeps code1 for the final code table
-    val c1Local = if (replay && tracked.nonEmpty) centsLocalOf(c1, "code1") else Nil
-    val ra = a1.join(broadcast(centArraysLocal(c1, "code1")), Seq("code1"))
-      .select(col("vec_id"), col("code1"),
-        expr(s"zip_with(xa, ca, (x, c) -> x - c + ${shift2}L)").as("xa"))
-      .localCheckpoint(eager = false)
-    val (b2, c2) = fpStage(
-      seeds.filter(col("salt") === "r" && col("code") < k2)
-        .withColumnRenamed("code", "code2"),
-      ra.select(col("vec_id"), col("xa")), "code2", k2, iters,
-      seedVecs = vecsOf(ids2, xa => residualLocal(c1Local, xa, shift2)))
-    // codes: stage-1 codes off the residual frame; the lazy stage-2
-    // assignment materializes inside this checkpoint
-    (ra.select(col("vec_id"), col("code1"))
-      .join(b2.select(col("vec_id"), col("code2")), Seq("vec_id"))
-      .localCheckpoint(), c1, c2)
-  }
-
-  /** RQ top-k by ADC: candidate reconstruction is c1[code1] +
-    * c2[code2], so dist(q, cand) = Σ_d (x_d − c1_d − c2_d + 2^21)² —
-    * precomputed EXACTLY per (query, code1, code2) over the combined
-    * centroid table (k1·k2·dims rows, dictionary-sized). Unlike PQ's
-    * m-entry partial-distance sum, a candidate's distance is then ONE
-    * broadcast-lookup join on its (code1, code2) — no aggregation on
-    * the candidate side at all; the codes table (the compressed index)
-    * scans map-side straight into the per-query top-k window. All
-    * integer arithmetic: approximate vs true distance (RQ's contract)
-    * but deterministically so, hence oracle-gateable. */
-  def rqSearchIndex(queries: DataFrame, codes: DataFrame, cents1: DataFrame,
-                    cents2: DataFrame, k: Int): DataFrame = {
-    val shift = 1048576L
-    val shift2 = 2097152L
-    val comb = cents1.select(col("code1"), col("d"), col("c").as("_c1"))
-      .join(cents2.select(col("code2"), col("d"), col("c").as("_c2")), Seq("d"))
-      .select(col("code1"), col("code2"), col("d"),
-        (col("_c1") + col("_c2") - shift2).as("cc"))
-    val qd = ensureQuantized(queries)
-      .select(col("vec_id").as("query_id"), posexplode(col("q")).as(Seq("d", "qx")))
-      .select(col("query_id"), col("d"), (col("qx") + shift).as("x"))
-    val adc = qd.join(broadcast(comb), Seq("d"))
-      .groupBy(col("query_id"), col("code1"), col("code2"))
-      .agg(sum((col("x") - col("cc")) * (col("x") - col("cc"))).as("adist"))
-    topKAsc(codes.join(broadcast(adc), Seq("code1", "code2"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist")),
-      k, "adist")
-  }
-
-  /** Train + search in one call (the `q_rq_topk` shape; composes
-    * `rqTrain` and `rqSearchIndex` the way `pqTopK` composes PQ's). */
-  def rqTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-             k1: Int, k2: Int, iters: Int): DataFrame = {
-    val (codes, c1, c2) = rqTrain(embeddings, k1, k2, iters)
-    rqSearchIndex(ensureQuantized(embeddings).filter(queryPred), codes, c1, c2, k)
-  }
-
-  /** RQ + exact re-rank: the additive-code ADC pool refined by exact
-    * quantized cosine through the shared `exactRerank` stage — the
-    * refine sibling of `pqTopKRerank`/`ivfpqTopKRerank` for the
-    * residual-quantized index. */
-  def rqTopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
-                   k1: Int, k2: Int, iters: Int, pool: Int): DataFrame = {
-    require(pool >= k, s"rerank pool $pool must be >= k=$k")
-    val e = ensureQuantized(embeddings)
-    exactRerank(e, queryPred, rqTopK(e, queryPred, pool, k1, k2, iters), k)
-  }
-
-  /** IVF-RQ — the probed scale sibling of the FLAT `rqTopK` scan
-    * (FAISS's IVF,RQ shape): a coarse quantizer of `nCells` centroids
-    * partitions the corpus into inverted lists, and the two-stage
-    * ADDITIVE residual codebooks are trained on the residuals to each
-    * vector's coarse centroid. A query probes its `nProbe` nearest
-    * cells and scores ONLY those cells' codes — with `autoIvfCells`
-    * sizing (nlist ~ √n) probed work grows ~√n per query, closing the
-    * quantizer-family symmetry (PQ has `ivfpqTopK`, SQ8 `ivfSq8TopK`;
-    * RQ's flat scan measured exponent 1.01 at the 32× decade).
+  /** IVF-RQ (FAISS's IVF,RQ shape): a coarse quantizer of `nCells`
+    * centroids partitions the corpus into inverted lists, and L
+    * ADDITIVE residual codebooks (stage widths `ks`) are trained on the
+    * residuals to each vector's coarse centroid. A query probes its
+    * `nProbe` nearest cells and scores ONLY those cells' codes — with
+    * `autoIvfCells` sizing (nlist ~ √n) probed work grows ~√n per
+    * query. Every training runs the certified fixed-point discipline
+    * through the shared `fpStage` (md5-ordered seeds — coarse by
+    * md5(vec_id), stage s by md5(vec_id || 'r'·s); lexicographic argmin
+    * ties), so DuckDB replays build and search bit-exactly
+    * (`q_ivfrq_auto`).
     *
-    * All three trainings run the certified fixed-point discipline
-    * through the shared `fpStage` (+2^20-shifted dims; residuals
-    * re-shifted +2^21; residuals-of-residuals +2^22; integer `sum div
-    * count` centroids; exact int64 squared L2; md5-ordered seeds —
-    * coarse by md5(vec_id), stage 1 by md5(vec_id || 'r'), stage 2 by
-    * md5(vec_id || 'rr'); lexicographic argmin ties), so DuckDB
-    * replays the whole build and search bit-exactly (`q_ivfrq_auto`).
-    *
-    * The two-stage entry point delegates to `ivfRqTopKMulti` (the
-    * L-stage LUT-ADC form below), whose distances are bit-identical
-    * to the r16 combined-table implementation for L = 2 — exact int64
-    * algebra, ‖q_r − recon‖² = ‖q_r‖² − 2⟨q_r, recon⟩ + ‖recon‖². */
-  def ivfRqTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                nCells: Int, nProbe: Int, k1: Int, k2: Int,
-                iters: Int): DataFrame =
-    ivfRqTopKMulti(embeddings, queryPred, k, nCells, nProbe,
-      Seq(k1, k2), iters)
-
-  /** L-stage IVF-RQ with the scalable LUT-form ADC. The 2-stage form
-    * above computed each candidate's distance against a COMBINED
-    * (code1, code2) table — exact, but k1·…·kL rows, so dead beyond
-    * ~3 stages, and 2–3 additive stages measurably cap recall ~0.09
-    * on this corpus (r17 lab). Real residual quantizers run 4–16
-    * stages; the standard ADC for that regime expands the distance
-    * instead of materializing combinations:
+    * LUT-form ADC: a COMBINED (code1, …, codeL) distance table is
+    * exact but k1·…·kL rows, so dead beyond ~3 stages, and 2–3
+    * additive stages measurably cap recall ~0.09 on this corpus (r17
+    * lab). Real residual quantizers run 4–16 stages; the standard ADC
+    * for that regime expands the distance instead of materializing
+    * combinations:
     *
     *   ‖q_r − Σ_s c_s‖² = ‖q_r‖² − 2·Σ_s ⟨q_r, c_s⟩ + ‖Σ_s c_s‖²
     *
@@ -1770,9 +1595,8 @@ object Similarity {
     * combined table folded in implicitly). A candidate's distance is
     * L broadcast LUT lookups summed + its stored norm — all int64
     * exact (operands ≤ 2^22, dots ≤ 2^50), so for L = 2 this returns
-    * BIT-IDENTICAL distances to the combined-table form and the
-    * existing oracle replays unchanged; for L > 2 the DuckDB unroll
-    * mirrors the same expansion. Stage-s codebooks train in the
+    * BIT-IDENTICAL distances to the combined-table form; the DuckDB
+    * unroll mirrors the same expansion. Stage-s codebooks train in the
     * +2^(20+s) shifted frame (non-negative operands keep the integer
     * `sum div count` centroid update floor-division-exact in both
     * engines); seeds md5(vec_id || 'r'·s). Residual magnitudes shrink
@@ -1784,7 +1608,7 @@ object Similarity {
     require(nProbe >= 1 && nProbe <= nCells, s"bad nProbe=$nProbe of $nCells cells")
     require(ks.nonEmpty && ks.forall(_ >= 1), s"bad stage sizes $ks")
     val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shiftR = 2097152L  // 2^21 residual re-shift (see rqTrain)
+    val shiftR = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
     val e = ensureQuantized(embeddings)
     val (codesLong, rnorm, cc, cadj) =
       IndexMemo.of[(DataFrame, DataFrame, DataFrame, DataFrame)](
@@ -1959,15 +1783,6 @@ object Similarity {
     (codesLong, rnorm, cc, cadj)
   }
 
-  /** IVF-RQ + exact re-rank: the cell-restricted additive-code pool
-    * refined by exact quantized cosine — the refine sibling of
-    * `ivfpqTopKRerank` for the residual-quantized index. */
-  def ivfRqTopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
-                      nCells: Int, nProbe: Int, k1: Int, k2: Int,
-                      iters: Int, pool: Int): DataFrame =
-    ivfRqTopKMultiRerank(embeddings, queryPred, k, nCells, nProbe,
-      Seq(k1, k2), iters, pool)
-
   /** L-stage IVF-RQ + exact re-rank: the probed LUT-ADC pool refined
     * by exact quantized cosine (rides `ivfRqTopKMulti`'s memoized
     * training). */
@@ -1996,7 +1811,7 @@ object Similarity {
     * `sum div count` centroids; exact int64 squared L2; md5-ordered
     * seeds — coarse by md5(vec_id), PQ by md5(vec_id || 'p');
     * lexicographic argmin ties), so DuckDB replays the whole index
-    * build and search bit-exactly (`q_ivfpq_topk`).
+    * build and search bit-exactly (`q_ivfpq_auto`).
     *
     * Scale shape: centroids and codebooks stay dictionary-sized,
     * localCheckpointed and BROADCAST into every assignment join — the
@@ -2012,7 +1827,7 @@ object Similarity {
     require(iters >= 1, s"ivfpqTopK needs at least one iteration, got $iters")
     require(nProbe >= 1 && nProbe <= nCells, s"bad nProbe=$nProbe of $nCells cells")
     val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shift2 = 2097152L  // 2^21 residual re-shift (see rqTrain)
+    val shift2 = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
     val e = ensureQuantized(embeddings)
     // Memoized per (quantized input plan, nCells, m, ksub, iters) —
     // the trained IVFADC index (codes + coarse centroids + residual
@@ -2023,11 +1838,10 @@ object Similarity {
         ivfpqTrainCompute(e, nCells, m, ksub, iters))
     // --- search ---
     // consumed per chunk (cell ranking + residuals); memoized per
-    // (corpus plan, predicate) so repeat serves over the same query
-    // set skip the materialization job (r19, the annPolicyEnv
-    // discipline — query-side, so bounded by |Q|·dims rows)
-    val qd = IndexMemo("ivfpq_qd", e,
-      org.apache.spark.sql.GraftSqlBridge.expression(queryPred).sql) {
+    // query-set plan so repeat serves over the same query set skip the
+    // materialization job (r19 — query-side, so bounded by |Q|·dims
+    // rows)
+    val qd = IndexMemo("ivfpq_qd", e.filter(queryPred), ()) {
       e.filter(queryPred)
         .select(col("vec_id").as("query_id"), posexplode(col("q")).as(Seq("d", "qx")))
         .select(col("query_id"), col("d"), (col("qx") + shift).as("x"))
@@ -2116,7 +1930,7 @@ object Similarity {
   private def ivfpqTrainCompute(e: DataFrame, nCells: Int, m: Int, ksub: Int,
                                 iters: Int): (DataFrame, DataFrame, DataFrame, Int) = {
     val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shift2 = 2097152L  // 2^21 residual re-shift (see rqTrain)
+    val shift2 = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
     val v = e.select(col("vec_id"), col("q"))
     val dims = v.select(size(col("q"))).head().getInt(0)
     require(dims % m == 0, s"$dims dims not divisible into $m subspaces")
@@ -2306,124 +2120,6 @@ object Similarity {
     (codes, cc, pc, subDim)
   }
 
-  /** PQ search with exact re-ranking — the production retrieval shape
-    * (FAISS's IVFPQ-then-refine): ADC proposes a `pool`-sized
-    * candidate set per query off the compressed code index (cheap,
-    * approximate), then the pool's TRUE vectors are fetched and
-    * re-ranked by exact quantized cosine. Recall ≈ the pool's ADC
-    * recall@pool (much higher than ADC@k), precision of the final
-    * order is exact.
-    *
-    * Scale shape: only ≤ |Q|·pool candidate IDS leave the ADC stage;
-    * their vectors are fetched by a broadcast-semi-join against the
-    * embedding scan (the full corpus is scanned once, never shuffled),
-    * and the pool-sized vector set broadcasts back onto the pairs. */
-  def pqTopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
-                   m: Int, ksub: Int, iters: Int, pool: Int): DataFrame = {
-    require(pool >= k, s"rerank pool $pool must be >= k=$k")
-    val e = ensureQuantized(embeddings)
-    exactRerank(e, queryPred,
-      pqTopK(e, queryPred, pool, m, ksub, iters), k)
-  }
-
-  /** OPQ-P — the PRESCRIBED-PERMUTATION form of Optimized Product
-    * Quantization (Ge, He, Ke, Sun, "Optimized Product Quantization
-    * for Approximate Nearest Neighbor Search", CVPR 2013 §4: before
-    * learning a free rotation, OPQ's cheap first rung permutes
-    * dimensions so every subspace carries comparable variance —
-    * contiguous slicing can trap all of a corpus's signal in one
-    * codebook, which ksub centroids then under-quantize while the
-    * other codebooks quantize noise).
-    *
-    * The permutation is learned with the same integer fixed-point
-    * discipline as the codebooks, so DuckDB replays it end-to-end:
-    *  - per-dimension dispersion over a DETERMINISTIC bounded sample
-    *    (the `sampleN` vectors with smallest md5(vec_id || 'v');
-    *    sampling for rotation/permutation training is standard —
-    *    FAISS trains OPQ on a sample too);
-    *  - the score is the exact integer n·Σx² − (Σx)² over +2^20-
-    *    shifted dims: with sampleN ≤ 1024 and x < 2^21, Σx < 2^31,
-    *    (Σx)² < 2^62 and n·Σx² < 2^62 — int64-safe by construction
-    *    (the require below pins the bound);
-    *  - dims sort by (score DESC, d ASC) and are DEALT round-robin
-    *    across the m subspaces (rank p → subspace p mod m, slot
-    *    p div m): each subspace receives one dim from every
-    *    variance stratum — the balancing OPQ-P prescribes.
-    *
-    * Squared L2 is permutation-invariant, so true distances — hence
-    * brute-force ground truth — are unchanged; only the SUBSPACE
-    * GROUPING the codebooks see differs. Returns the permuted global
-    * index: position s·subDim + slot holds original dim `perm(...)`.
-    * Dims-sized metadata (one collect of `dims` rows — the SQ8-bounds
-    * class); memoized per (corpus plan, m, sampleN). */
-  def opqPermutation(embeddings: DataFrame, m: Int,
-                     sampleN: Int = 1024): Array[Int] = {
-    require(sampleN >= 1 && sampleN <= 1024,
-      s"sampleN=$sampleN outside [1, 1024] — the integer variance score " +
-        "n*sum(x^2) - sum(x)^2 is int64-safe only up to 1024 samples")
-    val e = ensureQuantized(embeddings)
-    IndexMemo.of[Array[Int]]("opq_perm", e, (m, sampleN)) {
-      val dims = e.select(size(col("q"))).head().getInt(0)
-      require(dims % m == 0, s"$dims dims not divisible into $m subspaces")
-      val subDim = dims / m
-      val sample = e
-        .select(col("vec_id"), col("q"),
-          md5(concat(col("vec_id").cast("string"), lit("v"))).as("_h"))
-        .orderBy(col("_h"), col("vec_id")).limit(sampleN)
-      val ranked = sample
-        .select(posexplode(expr("transform(q, x -> x + 1048576L)")).as(Seq("d", "x")))
-        .groupBy(col("d"))
-        .agg(count(lit(1)).as("nn"), sum(col("x")).as("sx"),
-          sum(col("x") * col("x")).as("sxx"))
-        .select(col("d"),
-          (col("nn") * col("sxx") - col("sx") * col("sx")).as("score"))
-        .orderBy(col("score").desc, col("d").asc)
-        .collect() // dims rows — metadata, the SQ8-bounds class
-      val perm = new Array[Int](dims)
-      ranked.zipWithIndex.foreach { case (r, p) =>
-        perm((p % m) * subDim + p / m) = r.getInt(0)
-      }
-      perm
-    }
-  }
-
-  /** The corpus with OPQ-permuted quantized vectors: position i of
-    * the new `q` holds original dim perm(i). `nq` (the exact squared
-    * norm) is permutation-invariant; ALL other input columns (label,
-    * …) are carried through unchanged so a queryPred/candPred
-    * referencing them keeps pqTopK's predicate contract under
-    * opqPqTopK. */
-  private def opqPermute(e: DataFrame, perm: Array[Int]): DataFrame =
-    e.withColumn("q", array(perm.map(d => col("q").getItem(d)): _*))
-
-  /** PQ ADC top-k over the OPQ-P-permuted corpus: learn the variance-
-    * balancing permutation, then run the UNCHANGED certified PQ chain
-    * (same seeds, same fixed-point Lloyd, same ADC) on permuted
-    * vectors — `q_pq_opq`. Same scale shape as `pqTopK`; the
-    * permutation itself costs one sample aggregation. */
-  def opqPqTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                m: Int, ksub: Int, iters: Int,
-                sampleN: Int = 1024): DataFrame = {
-    val e = ensureQuantized(embeddings)
-    pqTopK(opqPermute(e, opqPermutation(e, m, sampleN)),
-      queryPred, k, m, ksub, iters)
-  }
-
-  /** IVFADC + exact re-rank: the coarse-probed ADC scan proposes a
-    * `pool`-sized candidate set, exact quantized cosine orders the
-    * final top-k — the same refine step as `pqTopKRerank`, applied to
-    * the cell-restricted index (the full FAISS IVFPQ,R serving stack).
-    * Same scale shape as its parts: only the pool's vectors are
-    * fetched (broadcast semi-join), the corpus scans once. */
-  def ivfpqTopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
-                      nCells: Int, nProbe: Int, m: Int, ksub: Int,
-                      iters: Int, pool: Int): DataFrame = {
-    require(pool >= k, s"rerank pool $pool must be >= k=$k")
-    val e = ensureQuantized(embeddings)
-    exactRerank(e, queryPred,
-      ivfpqTopK(e, queryPred, pool, nCells, nProbe, m, ksub, iters), k)
-  }
-
   /** Shared refine stage: exact quantized cosine over an approximate
     * method's (query_id, neighbor_id) candidate pool. The pool ids are
     * checkpointed (one materialization of the proposer's plan), pool
@@ -2576,10 +2272,8 @@ object Similarity {
     sel
   }
 
-  /** The frontier's derived-parameter environment for a corpus: the
-    * integers `AnnPolicy`'s cost trees evaluate over, every one a
-    * COUNT(*)-derived auto value (the oracle re-derives the same
-    * numbers via its integer threshold chains). */
+  /** The frontier's derived-parameter environment for a corpus:
+    * `AnnPolicy.env` over the corpus size and the query count. */
   def annPolicyEnv(embeddings: DataFrame, queryPred: Column): Map[String, Long] = {
     // Memoized per (corpus plan, predicate SQL) — r19, VERDICT r18
     // task 4: every annServe call paid TWO count() jobs before
@@ -2588,79 +2282,28 @@ object Similarity {
     // like the trained indexes (collected Longs, fully materialized).
     IndexMemo.of[Map[String, Long]]("ann_policy_env", embeddings,
       org.apache.spark.sql.GraftSqlBridge.expression(queryPred).sql) {
-      val n = embeddings.count()
-      val q = embeddings.filter(queryPred).count()
-      val c = autoIvfCells(n)
-      Map("n" -> n, "q" -> q, "c" -> c.toLong,
-        "p2" -> autoIvfProbe(c).toLong, "h" -> autoGraphHops(n).toLong,
-        "bm" -> autoGraphBeam(n).toLong,
-        "b16" -> math.max(1L, n / AnnPolicy.harnessIvfCells))
+      AnnPolicy.env(embeddings.count(), embeddings.filter(queryPred).count())
     }
   }
 
   /** Policy-dispatching serve (r18, VERDICT #6): the executable form of
-    * `q_ann_frontier`'s policy read — "the cheapest method whose
-    * CERTIFIED recall ≥ `recallFloorMilli`". Evaluates every rung's
-    * cost tree over the corpus's COUNT(*)-derived parameters, picks the
-    * minimum among rungs meeting the floor (tie-break: floor DESC,
-    * method ASC — the winner is on the Pareto frontier by construction:
-    * anything dominating it would also meet the floor more cheaply),
-    * and dispatches to that rung's serving function at its AnnPolicy
-    * operating point. Returns (method, cost_units, floor_milli,
-    * query_id, rnk, neighbor_id) — method-independent schema, so a
-    * re-point or a different winner at a different corpus size is a
-    * VALUE change the oracle replays, not a schema break. */
+    * `q_ann_frontier`'s policy read — `AnnPolicy.choose` picks the
+    * cheapest rung whose CERTIFIED recall ≥ `recallFloorMilli` over the
+    * corpus's COUNT(*)-derived parameters, and the rung's own serve
+    * function runs at its AnnPolicy operating point. Returns (method,
+    * cost_units, floor_milli, query_id, rnk, neighbor_id) —
+    * method-independent schema, so a re-point or a different winner at
+    * a different corpus size is a VALUE change the oracle replays, not
+    * a schema break. */
   def annServe(embeddings: DataFrame, queryPred: Column, k: Int,
                recallFloorMilli: Long): DataFrame = {
-    import graft.functions.{AnnPolicy => P}
     val env = annPolicyEnv(embeddings, queryPred)
-    val eligible = P.rungs.filter(_.floorMilli >= recallFloorMilli)
-    require(eligible.nonEmpty,
-      s"no ANN rung certifies recall >= $recallFloorMilli milli " +
-        s"(max certified: ${P.rungs.map(_.floorMilli).max})")
-    val chosen = eligible.minBy(r => (r.cost.eval(env), -r.floorMilli, r.method))
-    val c = env("c").toInt; val p2 = env("p2").toInt
-    val res = chosen.method match {
-      case "lsh" => lshTopK(embeddings, queryPred, k, P.harnessLshBits)
-      case "lsh_multi" =>
-        lshTopKMulti(embeddings, queryPred, k, P.harnessLshBits, P.harnessLshTables)
-      case "ivf" =>
-        ivfTopK(embeddings, queryPred, k, P.harnessIvfCells, P.harnessIvfProbe)
-      case "pq" => pqTopK(embeddings, queryPred, k, P.pqDemoM, P.pqDemoKsub, 1)
-      case "pq_rerank" =>
-        pqTopKRerank(embeddings, queryPred, k, P.pqDemoM, P.pqDemoKsub, 1, P.rerankPool)
-      case "pq_hi" => pqTopK(embeddings, queryPred, k, P.pqHiM, P.pqHiKsub, 1)
-      case "pq_opq" => opqPqTopK(embeddings, queryPred, k, P.pqHiM, P.pqHiKsub, 1)
-      case "rq" => rqTopK(embeddings, queryPred, k, P.rqDemoK, P.rqDemoK, 1)
-      case "rq_rerank" =>
-        rqTopKRerank(embeddings, queryPred, k, P.rqDemoK, P.rqDemoK, 1, P.rerankPool)
-      case "ivfpq" =>
-        ivfpqTopK(embeddings, queryPred, k, P.ivfpqDemoCells, P.ivfpqDemoProbe,
-          P.ivfpqDemoM, P.ivfpqDemoKsub, 1)
-      case "ivfpq_rerank" =>
-        ivfpqTopKRerank(embeddings, queryPred, k, P.ivfpqDemoCells, P.ivfpqDemoProbe,
-          P.ivfpqDemoM, P.ivfpqDemoKsub, 1, P.rerankPool)
-      case "sq8" => sq8TopK(embeddings, queryPred, k)
-      case "sq8_rerank" => sq8TopKRerank(embeddings, queryPred, k, P.rerankPool)
-      case "ivfpq_auto" =>
-        ivfpqTopK(embeddings, queryPred, k, c, p2, P.ivfpqAutoM, P.ivfpqAutoKsub, 1)
-      case "ivfrq_auto" =>
-        ivfRqTopKMulti(embeddings, queryPred, k, c, p2, P.ivfrqAutoKs, 1)
-      case "knn_graph" =>
-        knnGraph(embeddings, P.kGraph, P.graphRounds)
-          .join(embeddings.filter(queryPred).select(col("vec_id")),
-            Seq("vec_id"), "left_semi")
-          .filter(col("rnk") <= k)
-          .withColumnRenamed("vec_id", "query_id")
-      case "knn_graph_search" =>
-        knnGraphSearch(embeddings, queryPred, k, P.kGraph, P.graphRounds,
-          hops = env("h").toInt, beam = env("bm").toInt)
-      case other => throw new IllegalStateException(s"no dispatch for rung $other")
-    }
-    res.select(lit(chosen.method).as("method"),
-      lit(chosen.cost.eval(env)).as("cost_units"),
-      lit(chosen.floorMilli).as("floor_milli"),
-      col("query_id"), col("rnk"), col("neighbor_id"))
+    val chosen = AnnPolicy.choose(env, recallFloorMilli)
+    chosen.serve(embeddings, queryPred, k, env)
+      .select(lit(chosen.method).as("method"),
+        lit(chosen.cost.eval(env)).as("cost_units"),
+        lit(chosen.floorMilli).as("floor_milli"),
+        col("query_id"), col("rnk"), col("neighbor_id"))
   }
 
   /** Measured ANN recall: joins each approximate method's top-k against
@@ -2672,14 +2315,14 @@ object Similarity {
     * across runs and partitionings. */
   def annRecall(embeddings: DataFrame, queryPred: Column, k: Int,
                 bits: Int, tables: Int, nCells: Int, nProbe: Int): DataFrame =
-    // Memoized per (corpus plan, predicate, params): TWO gated queries
-    // read the harness now (q_ann_recall's flags and q_ann_frontier's
-    // recall_ok), and the 17-method scoring aggregation is identical
-    // for both — one run per session (r17; the trainings inside were
-    // already memo-shared, this collapses the scoring pass too).
-    IndexMemo("ann_recall", embeddings,
-      (org.apache.spark.sql.GraftSqlBridge.expression(queryPred).sql,
-        k, bits, tables, nCells, nProbe)) {
+    // Memoized per (query-set plan, params): TWO gated queries read the
+    // harness (q_ann_recall's flags and q_ann_frontier's recall_ok),
+    // and the per-method scoring aggregation is identical for both —
+    // one run per session (r17; the trainings inside were already
+    // memo-shared, this collapses the scoring pass too). Keyed on the
+    // FILTERED plan, so each predicate gets its own entry.
+    IndexMemo("ann_recall", embeddings.filter(queryPred),
+      (k, bits, tables, nCells, nProbe)) {
       annRecallCompute(embeddings, queryPred, k, bits, tables, nCells,
         nProbe).localCheckpoint()
     }
@@ -2702,7 +2345,7 @@ object Similarity {
     // bits), so the old 10M-row checkpoint write and the
     // 10M×10M hits join are gone.
     // The independent training pipelines (ground truth, LSH bucketing,
-    // the four quantizer trainings) fan out CONCURRENTLY: each is a
+    // the quantizer and graph trainings) fan out CONCURRENTLY: each is a
     // deterministic memoized index build whose cost at harness scale is
     // job-scheduling gaps, not data (2k vectors), and IndexMemo's
     // per-key compute locks exist precisely so distinct index builds
@@ -2718,13 +2361,12 @@ object Similarity {
     // combined result. A hung job can no longer hang the query forever:
     // the single await is bounded, and a timeout takes the same
     // cancel+shutdown path.
-    // 16 threads: one per independent training pipeline (13 trainings
-    // + truth + buckets + slack) — r19: at 12, the last trainings
-    // queued behind the first wave even though every chain is
+    // 16 threads: at least one per independent training pipeline —
+    // r19: with fewer threads than pipelines the last trainings queued
+    // behind the first wave even though every chain is
     // driver-latency-bound (tiny jobs), so extra concurrency is free
-    // on any executor width; measured frontier cold-wall win on 32
-    // cores, no change in results (each build is deterministic and
-    // memo-locked).
+    // on any executor width; no change in results (each build is
+    // deterministic and memo-locked).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     implicit val ec: scala.concurrent.ExecutionContextExecutorService =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -2737,8 +2379,8 @@ object Similarity {
         "annRecall concurrent index training", interruptOnCancel = true)
       body
     }
-    val (truth, nTruth, buckets, pqAll, rqAll, ivfpqAll, sq8All, pqHiAll,
-         opqAll, ivfAutoAll, ivfRqAutoAll, knnAll, knnSearchAll) = try {
+    val (truth, nTruth, buckets, sq8All, pqHiAll, ivfAutoAll, ivfRqAutoAll,
+         knnAll, knnSearchAll) = try {
       val fTruth = training {
         val t = bruteForceTopKMemo(embeddings, queryPred, k)
           .select(col("query_id"), col("neighbor_id"), lit(true).as("is_truth"))
@@ -2746,36 +2388,14 @@ object Similarity {
         (t, t.count())
       }
       val fBuckets = training { lshBucketsMulti(embeddings, bits, tables) }
-      val fPq = training {
-        pqTopK(embeddings, queryPred, 5 * k,
-            m = AnnPolicy.pqDemoM, ksub = AnnPolicy.pqDemoKsub, iters = 1)
-          .localCheckpoint()
-      }
-      val fRq = training {
-        rqTopK(embeddings, queryPred, 5 * k,
-            k1 = AnnPolicy.rqDemoK, k2 = AnnPolicy.rqDemoK, iters = 1)
-          .localCheckpoint()
-      }
-      val fIvfpq = training {
-        ivfpqTopK(embeddings, queryPred, 5 * k,
-            nCells = AnnPolicy.ivfpqDemoCells, nProbe = AnnPolicy.ivfpqDemoProbe,
-            m = AnnPolicy.ivfpqDemoM, ksub = AnnPolicy.ivfpqDemoKsub, iters = 1)
-          .localCheckpoint()
-      }
       val fSq8 = training { sq8TopK(embeddings, queryPred, 5 * k).localCheckpoint() }
       val fPqHi = training {
         pqTopK(embeddings, queryPred, 5 * k,
             m = AnnPolicy.pqHiM, ksub = AnnPolicy.pqHiKsub, iters = 1)
           .localCheckpoint()
       }
-      // pq_opq / ivfpq_auto (r15): the OPQ-P permuted index at
-      // q_pq_opq's served shape and the corpus-sized IVFADC at
-      // q_ivfpq_auto's — both memo-share with their gated queries
-      val fOpq = training {
-        opqPqTopK(embeddings, queryPred, 5 * k,
-            m = AnnPolicy.pqHiM, ksub = AnnPolicy.pqHiKsub, iters = 1)
-          .localCheckpoint()
-      }
+      // ivfpq_auto (r15): the corpus-sized IVFADC at q_ivfpq_auto's
+      // served shape — memo-shares its training with the gated query
       val fIvfAuto = training {
         val c = autoIvfCells(embeddings.count())
         ivfpqTopK(embeddings, queryPred, 5 * k, nCells = c,
@@ -2805,8 +2425,8 @@ object Similarity {
             hops = autoGraphHops(n), beam = autoGraphBeam(n))
           .localCheckpoint()
       }
-      val all = Seq[Future[Any]](fTruth, fBuckets, fPq, fRq, fIvfpq, fSq8,
-        fPqHi, fOpq, fIvfAuto, fIvfRqAuto, fKnn, fKnnSearch)
+      val all = Seq[Future[Any]](fTruth, fBuckets, fSq8, fPqHi, fIvfAuto,
+        fIvfRqAuto, fKnn, fKnnSearch)
       val firstFailure = Promise[Seq[Any]]()
       // Complete the race promise BEFORE shutting the pool down —
       // listeners registered on a drained executor would be rejected
@@ -2822,13 +2442,10 @@ object Similarity {
         Future.firstCompletedOf(Seq(Future.sequence(all), firstFailure.future))(
           scala.concurrent.ExecutionContext.parasitic),
         Duration(30, "minutes"))
-      val Seq(tn, b, p, r, i, s, ph, oq, ia, irq, kg, kgs) =
-        res.asInstanceOf[Seq[Any]]
+      val Seq(tn, b, s, ph, ia, irq, kg, kgs) = res.asInstanceOf[Seq[Any]]
       val (t, n) = tn.asInstanceOf[(DataFrame, Long)]
-      (t, n, b.asInstanceOf[DataFrame], p.asInstanceOf[DataFrame],
-        r.asInstanceOf[DataFrame], i.asInstanceOf[DataFrame],
-        s.asInstanceOf[DataFrame], ph.asInstanceOf[DataFrame],
-        oq.asInstanceOf[DataFrame], ia.asInstanceOf[DataFrame],
+      (t, n, b.asInstanceOf[DataFrame], s.asInstanceOf[DataFrame],
+        ph.asInstanceOf[DataFrame], ia.asInstanceOf[DataFrame],
         irq.asInstanceOf[DataFrame], kg.asInstanceOf[DataFrame],
         kgs.asInstanceOf[DataFrame])
     } catch { case e: Throwable =>
@@ -2839,10 +2456,11 @@ object Similarity {
     val qIds = emb.filter(queryPred).select(col("vec_id"))
     // EVERY method pipeline below takes the RAW `embeddings` frame,
     // not the harness's quantized checkpoint: the trained-index memos
-    // (lsh_buckets_multi, pq_train, rq_train, ivfpq_train, sq8_codes)
-    // key on the `ensureQuantized(input)` PLAN, and only the raw frame
-    // plans `sameResult` with what the gated q_lsh_topk_multi /
-    // q_pq_* / q_rq_* / q_ivfpq_* / q_sq8_* queries pass — so the
+    // (lsh_buckets_multi, pq_train, ivfpq_train, ivfrq_train,
+    // sq8_codes) key on the `ensureQuantized(input)` PLAN, and only the
+    // raw frame plans `sameResult` with what the gated
+    // q_lsh_topk_multi / q_pq_hi / q_ivfpq_auto / q_ivfrq_auto /
+    // q_sq8_* queries pass — so the
     // whole suite trains each index ONCE (this harness runs first
     // alphabetically and the serving queries ride it warm). Feeding
     // `emb` would fork a second, unshared training of every index
@@ -2897,51 +2515,24 @@ object Similarity {
     // exactly one, so ivf pairs need no dedup either.
     val ivfPairs = probeCells.join(assigned, Seq("cell_id"))
       .select(col("query_id"), col("neighbor_id"))
-    // pq: the ADC top-k IS the candidate set (exactly k ids per query);
-    // recall@k = |ADC top-k ∩ true top-k| / |true top-k|. Params are
-    // the SERVED operating point (q_pq_topk's m=2, ksub=4, iters=1):
-    // the harness certifies the recall of the configuration the gated
-    // queries actually run, and its training memo-shares with them.
-    val pqPairs = pqAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    // pq_rerank: the harness's shared true-cosine scoring of the FULL
-    // 5k-pool candidate set IS the exact re-rank — its recall equals
-    // pqTopKRerank(pool = 5k)'s by construction.
-    val pqRerankPairs = pqAll.select(col("query_id"), col("neighbor_id"))
-    // rq: two-stage residual codebooks at q_rq_topk's served point
-    // (k1 = k2 = 4, iters = 1), single-lookup ADC top-k.
-    val rqPairs = rqAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    val rqRerankPairs = rqAll.select(col("query_id"), col("neighbor_id"))
-    // ivfpq: IVFADC at pq's exact bit budget and q_ivfpq_topk's served
-    // point (nCells=4, nProbe=2, m=2, ksub=4) — PQ on RESIDUALS,
-    // measuring the Jégou residual-quantization gain over flat pq
-    // head-to-head. The 5k ADC pool doubles as ivfpq_rerank's
-    // candidate set (the shared true-cosine ranking below IS the
-    // exact refine), mirroring pq / pq_rerank.
-    val ivfpqPairs = ivfpqAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    val ivfpqRerankPairs = ivfpqAll.select(col("query_id"), col("neighbor_id"))
     // sq8: scalar-quantized (8-bit affine per-dim) symmetric code-space
     // top-k — the cheap rung of the compression ladder (one min/max
-    // training pass vs the Lloyd loops above). The 5k code-space pool
-    // doubles as sq8_rerank's candidate set, mirroring pq / pq_rerank.
+    // training pass vs the Lloyd loops of the other quantizers). The
+    // 5k code-space pool doubles as sq8_rerank's candidate set: the
+    // harness's shared true-cosine scoring of the FULL pool IS the
+    // exact re-rank, so its recall equals sq8TopKRerank(pool = 5k)'s
+    // by construction.
     val sq8Pairs = sq8All.filter(col("rnk") <= k)
       .select(col("query_id"), col("neighbor_id"))
     val sq8RerankPairs = sq8All.select(col("query_id"), col("neighbor_id"))
     // pq_hi: the HIGH-FIDELITY PQ operating point (m=16, ksub=64,
-    // iters=1 — q_pq_hi's served config, 96 code bits vs the 4-bit
-    // demo point): raw ADC recall >= 0.5 at the sf0.01 gate, the
-    // measured answer to "compressed but coarse" (r15; the full
-    // bits/recall curve is in BUILD_NOTES).
+    // iters=1 — q_pq_hi's served config, 96 code bits): the ADC top-k
+    // IS the candidate set; raw ADC recall >= 0.5 at the sf0.01 gate
+    // (r15; the full bits/recall curve is in BUILD_NOTES).
     val pqHiPairs = pqHiAll.filter(col("rnk") <= k)
       .select(col("query_id"), col("neighbor_id"))
-    // pq_opq: OPQ-P at pq_hi's bit budget — the variance-balanced
-    // permutation's measured recall head-to-head with contiguous
-    // slicing. ivfpq_auto: the corpus-sized coarse quantizer
-    // (q_ivfpq_auto's served shape).
-    val opqPairs = opqAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
+    // ivfpq_auto: the corpus-sized coarse quantizer (q_ivfpq_auto's
+    // served shape).
     val ivfAutoPairs = ivfAutoAll.filter(col("rnk") <= k)
       .select(col("query_id"), col("neighbor_id"))
     // ivfrq_auto: the probed residual quantizer (q_ivfrq_auto's shape)
@@ -2958,16 +2549,9 @@ object Similarity {
     val cand = lshPairs.withColumn("method", lit("lsh"))
       .unionByName(multiPairs.withColumn("method", lit("lsh_multi")))
       .unionByName(ivfPairs.withColumn("method", lit("ivf")))
-      .unionByName(pqPairs.withColumn("method", lit("pq")))
-      .unionByName(pqRerankPairs.withColumn("method", lit("pq_rerank")))
-      .unionByName(rqPairs.withColumn("method", lit("rq")))
-      .unionByName(rqRerankPairs.withColumn("method", lit("rq_rerank")))
-      .unionByName(ivfpqPairs.withColumn("method", lit("ivfpq")))
-      .unionByName(ivfpqRerankPairs.withColumn("method", lit("ivfpq_rerank")))
       .unionByName(sq8Pairs.withColumn("method", lit("sq8")))
       .unionByName(sq8RerankPairs.withColumn("method", lit("sq8_rerank")))
       .unionByName(pqHiPairs.withColumn("method", lit("pq_hi")))
-      .unionByName(opqPairs.withColumn("method", lit("pq_opq")))
       .unionByName(ivfAutoPairs.withColumn("method", lit("ivfpq_auto")))
       .unionByName(ivfRqAutoPairs.withColumn("method", lit("ivfrq_auto")))
       .unionByName(knnPairs.withColumn("method", lit("knn_graph")))
@@ -3004,10 +2588,7 @@ object Similarity {
     // Left-join from a literal method list so a method with an empty
     // candidate set still emits its (zero-recall) row, as the old
     // union-of-aggregates shape did.
-    Seq("lsh", "lsh_multi", "ivf", "pq", "pq_rerank", "pq_hi", "pq_opq",
-        "rq", "rq_rerank", "ivfpq", "ivfpq_rerank", "ivfpq_auto",
-        "ivfrq_auto", "knn_graph", "knn_graph_search",
-        "sq8", "sq8_rerank").toDF("method")
+    AnnPolicy.rungs.map(_.method).toDF("method")
       .join(hits, Seq("method"), "left")
       .select(col("method"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),

@@ -84,98 +84,6 @@ object DotI64 {
       "dot_i64", exprs => DotI64(exprs(0), exprs(1)), "built-in")
 }
 
-/** Native fused cosine over two ARRAY<DOUBLE> columns: dot product and
-  * BOTH squared norms accumulate in ONE primitive loop, then
-  * dot/sqrt(na*nb) — replacing the three interpreted higher-order-
-  * function folds of the formula's naive spelling (one aggregate per
-  * term) with a single codegen'd pass over each array. This is the
-  * production (float) sibling of DotI64's quantized path; not used by
-  * oracle queries (double accumulation order is engine-specific), unit
-  * tested against the quantized cosine instead.
-  *
-  * Degenerate inputs yield NULL, matching the SQL fold this replaces
-  * (Spark's Divide returns NULL on a zero divisor with ANSI off, and
-  * zip_with pads mismatched lengths with NULL, nulling the sum):
-  * NULL array, length mismatch, a NULL element, or a zero-norm vector
-  * all produce NULL — never NaN, which Spark's nan-safe ordering would
-  * rank ABOVE every real cosine in a top-k. */
-case class CosineF64(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(org.apache.spark.sql.types.DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cosine_f64 requires two ARRAY<DOUBLE> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cosine_f64"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = x.getDouble(i); val yi = y.getDouble(i)
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) null
-    else dot / math.sqrt(na * nb)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $xi = $a.getDouble($i);
-         |    double $yi = $b.getDouble($i);
-         |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |  }
-         |  if (!${ev.isNull}) {
-         |    if ($na == 0.0 || $nb == 0.0) { ${ev.isNull} = true; }
-         |    else { ${ev.value} = $dot / java.lang.Math.sqrt($na * $nb); }
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-object CosineF64 {
-  def cosine_f64(a: Column, b: Column): Column =
-    GraftSqlBridge.column(CosineF64(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_f64", exprs => CosineF64(exprs(0), exprs(1)), "built-in")
-}
-
 /** Native integer squared L2 distance over two ARRAY<BIGINT> columns:
   * Σ (aᵢ − bᵢ)² in one primitive long loop.
   *
@@ -364,11 +272,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
           classOf[DotI64].getName, "dot_i64"),
         (exprs: Seq[Expression]) => DotI64(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_f64"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[CosineF64].getName, "cosine_f64"),
-        (exprs: Seq[Expression]) => CosineF64(exprs(0), exprs(1))))
     e.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("sqdist_i64"),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

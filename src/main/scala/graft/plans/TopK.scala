@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
   * aggregate's NaN-last behavior is the contract (pinned by the
   * SourcesAndPlansSpec NaN test, deterministic incl. ties and
   * repartition), and the gated queries additionally keep their keys
-  * NaN-free (cosine_f64 degenerates to NULL, never NaN). Memory:
+  * NaN-free. Memory:
   * O(k) per group — the heap never holds more than k rows, unlike
   * collect_list+slice. */
 case class TopK(

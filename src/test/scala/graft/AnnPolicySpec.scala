@@ -24,12 +24,7 @@ class AnnPolicySpec extends AnyFunSuite {
     assert(c("lsh_multi") == q * AnnPolicy.harnessLshTables * b16)
     assert(c("ivf") ==
       q * AnnPolicy.harnessIvfCells + q * AnnPolicy.harnessIvfProbe * b16)
-    assert(c("pq") == AnnPolicy.pqDemoM * q * n)
-    assert(c("pq_rerank") == AnnPolicy.pqDemoM * q * n + AnnPolicy.rerankPool * q)
     assert(c("pq_hi") == AnnPolicy.pqHiM * q * n)
-    assert(c("rq") == AnnPolicy.rqDemoL * q * n)
-    assert(c("ivfpq") == q * AnnPolicy.ivfpqDemoCells +
-      q * (n / (AnnPolicy.ivfpqDemoCells / AnnPolicy.ivfpqDemoProbe)) * AnnPolicy.ivfpqDemoM)
     assert(c("sq8") == AnnPolicy.dims.toLong * q * n)
     assert(c("ivfpq_auto") == q * cc + q * p2 * (n / cc) * AnnPolicy.ivfpqAutoM)
     assert(c("ivfrq_auto") == q * cc + q * p2 * (n / cc) * AnnPolicy.ivfrqAutoKs.length)
@@ -92,8 +87,35 @@ class AnnPolicySpec extends AnyFunSuite {
     AnnPolicy.rungs.foreach { r =>
       assert(floors.contains(s"('${r.method}', ${r.floorMilli})"), r.method)
     }
-    // 17 rungs on the board
-    assert(AnnPolicy.rungs.size == 17)
-    assert(AnnPolicy.rungs.map(_.method).distinct.size == 17)
+    // 10 rungs on the board
+    assert(AnnPolicy.rungs.size == 10)
+    assert(AnnPolicy.rungs.map(_.method).distinct.size == 10)
+  }
+
+  test("choose: cheapest floor-meeting rung, ties to the higher floor; unsatisfiable floors fail") {
+    assert(AnnPolicy.choose(env, 0L).method == "knn_graph")
+    assert(AnnPolicy.choose(env, 400L).method == "ivf")
+    assert(AnnPolicy.choose(env, 700L).method == "sq8")
+    assert(AnnPolicy.choose(env, 900L).method == "sq8_rerank")
+    // q = 0 zeroes every cost: the tie goes to the highest floor
+    assert(AnnPolicy.choose(env ++ Map("q" -> 0L), 0L).method == "sq8_rerank")
+    val ex = intercept[IllegalArgumentException](AnnPolicy.choose(env, 901L))
+    assert(ex.getMessage.contains("no ANN rung certifies"))
+  }
+
+  test("the rungs choose can pick, over n = 2..1e12 and q in {1, n/100}, at every floor") {
+    // every n up to 1,000, then a 1-2-5 grid up to 1e12
+    val grid = (2L to 1000L) ++ (3 to 12).flatMap { e =>
+      val p = math.pow(10, e).toLong
+      Seq(p, 2 * p, 5 * p).filter(_ <= 1000000000000L)
+    }
+    val floors = AnnPolicy.rungs.map(_.floorMilli).distinct
+    val chosen = (for {
+      n <- grid
+      q <- Seq(1L, math.max(1L, n / 100))
+      f <- floors
+    } yield AnnPolicy.choose(AnnPolicy.env(n, q), f).method).toSet
+    assert(chosen == Set("ivf", "knn_graph", "knn_graph_search", "lsh_multi",
+      "sq8", "sq8_rerank"), s"chosen set drifted: $chosen")
   }
 }

@@ -564,6 +564,18 @@ class DedupSpec extends SparkSpec {
     assert(jac.isEmpty, s"jaccard should miss the subset pair: $jac")
   }
 
+  test("the candidate memo keys on the threshold: a lower one after a higher one keeps its pairs") {
+    // the candidate set is pruned at the metric's threshold before it
+    // is memoized, so a call at a lower threshold must not read the
+    // set pruned at a higher one
+    val d = docs((11L, near1), (12L, near2), (13L, other))
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(Dedup.ngramJaccardPairsInverted(d, 3, 0.95)).isEmpty)
+    assert(pairs(Dedup.ngramJaccardPairsInverted(d, 3, 0.1)) == Set((11L, 12L)))
+    assert(pairs(Dedup.ngramContainmentPairs(d, 3, 0.95)).isEmpty)
+    assert(pairs(Dedup.ngramContainmentPairs(d, 3, 0.1)) == Set((11L, 12L)))
+  }
+
   test("hot-shingle cap bounds candidates; survivors keep exact uncapped jaccard") {
     // docs 3..8 are identical (every shared shingle has df=6); docs 1,2
     // share rare (df=2) shingles. With maxDocFreq=2 the identical
@@ -1579,70 +1591,6 @@ class SimilaritySpec extends SparkSpec {
       s"reference-unseen bigrams must count as OOV with 0 probability: $out")
   }
 
-  test("rqTrain encodes every vector with one (code1, code2); duplicates agree") {
-    val e = emb(
-      (0L, Seq(1f, 0f, 0f, 1f), 0),
-      (1L, Seq(1f, 0f, 0f, 1f), 0),   // exact duplicate of 0
-      (2L, Seq(0f, 1f, 1f, 0f), 0),
-      (3L, Seq(0f, 0.9f, 0.9f, 0f), 0))
-    val (codes, c1, c2) = graft.functions.Similarity.rqTrain(e, k1 = 2, k2 = 2, iters = 1)
-    val byVec = codes.collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2))).toMap
-    assert(byVec.keySet == Set(0L, 1L, 2L, 3L), "every vector encodes exactly once")
-    assert(byVec(0L) == byVec(1L), "identical vectors must encode identically")
-    // both codebooks only hold codes below their k
-    assert(c1.collect().map(_.getInt(0)).forall(c => c >= 0 && c < 2))
-    assert(c2.collect().map(_.getInt(0)).forall(c => c >= 0 && c < 2))
-  }
-
-  test("rqTopK ranks the duplicate of the query first; distances non-decreasing") {
-    val e = emb(
-      (0L, Seq(1f, 0f, 1f, 0f), 0),
-      (1L, Seq(1f, 0f, 1f, 0f), 0),
-      (2L, Seq(0f, 1f, 0f, 1f), 0),
-      (3L, Seq(0f, 1f, 0f, 1f), 0))
-    val out = graft.functions.Similarity
-      .rqTopK(e, col("vec_id") === 0, k = 3, k1 = 2, k2 = 2, iters = 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.length == 3)
-    val (rnk1, n1, d1) = out.head
-    assert(rnk1 == 1L && n1 == 1L && d1 == 0L,
-      s"query's duplicate must rank first at ADC distance 0: ${out.toSeq}")
-    assert(out.map(_._3).toSeq == out.map(_._3).sorted.toSeq)
-  }
-
-  test("rqTrain codes are partition-invariant (integer-exact fixpoint)") {
-    val e = emb((0L to 19L).map(i =>
-      (i, Seq(i.toFloat / 20f, 1f - i.toFloat / 20f, (i % 5).toFloat / 5f, 0.5f), 0)): _*)
-    val (c1, _, _) = graft.functions.Similarity.rqTrain(e, 2, 3, 2)
-    val (c2, _, _) = graft.functions.Similarity.rqTrain(e.repartition(7), 2, 3, 2)
-    val s1 = c1.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(_._1)
-    val s2 = c2.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(_._1)
-    assert(s1.toSeq == s2.toSeq)
-  }
-
-  test("rq reconstruction beats stage 1 alone: residual stage never hurts") {
-    // RQ's ADC distance uses c1+c2; with c2 trained on residuals the
-    // summed reconstruction error over the corpus must be <= the
-    // stage-1-only error (stage 2 could at worst learn centroid ~shift2
-    // = zero residual).
-    val e = emb((0L to 15L).map(i =>
-      (i, Seq((i % 4).toFloat / 4f, 1f - (i % 4).toFloat / 4f,
-        (i % 3).toFloat / 3f, (i % 5).toFloat / 5f), 0)): _*)
-    val (codes, c1, c2) = graft.functions.Similarity.rqTrain(e, 2, 2, 2)
-    val q = graft.functions.Similarity.quantized(e)
-      .select(col("vec_id"), posexplode(col("q")).as(Seq("d", "qx")))
-      .select(col("vec_id"), col("d"), (col("qx") + 1048576L).as("x"))
-    val withCodes = q.join(codes, Seq("vec_id"))
-    val e1 = withCodes.join(c1.withColumnRenamed("c", "c1v"), Seq("code1", "d"))
-      .select(sum(pow(col("x") - col("c1v"), 2)).cast("double")).head().getDouble(0)
-    val e2 = withCodes.join(c1.withColumnRenamed("c", "c1v"), Seq("code1", "d"))
-      .join(c2.withColumnRenamed("c", "c2v"), Seq("code2", "d"))
-      .select(sum(pow(col("x") - col("c1v") - (col("c2v") - 2097152L), 2)).cast("double"))
-      .head().getDouble(0)
-    assert(e2 <= e1, s"residual stage must not increase reconstruction error: $e2 > $e1")
-  }
-
   test("ivfpqTopK ranks the query's duplicate first at ADC distance 0 at convergence") {
     // two tight groups: coarse cells converge onto them, residuals
     // collapse to ~0, so a duplicate's ADC distance is 0 and it wins
@@ -1688,15 +1636,15 @@ class SimilaritySpec extends SparkSpec {
   test("ivfRqTopK ranks the query's duplicate first at ADC distance 0 at convergence") {
     // two tight groups: coarse cells converge onto them, residuals
     // collapse to ~0, both additive stages encode them identically,
-    // so a duplicate's single-lookup ADC distance is 0 and it wins
+    // so a duplicate's ADC distance is 0 and it wins (the L = 2 form)
     val e = emb(
       (0L, Seq(1f, 0f, 1f, 0f), 0),
       (1L, Seq(1f, 0f, 1f, 0f), 0),
       (2L, Seq(0f, 1f, 0f, 1f), 0),
       (3L, Seq(0f, 1f, 0f, 1f), 0))
     val out = graft.functions.Similarity
-      .ivfRqTopK(e, col("vec_id") === 0, k = 3, nCells = 2, nProbe = 2,
-        k1 = 2, k2 = 2, iters = 2)
+      .ivfRqTopKMulti(e, col("vec_id") === 0, k = 3, nCells = 2, nProbe = 2,
+        ks = Seq(2, 2), iters = 2)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.nonEmpty)
     val (rnk1, n1, d1) = out.head
@@ -1709,8 +1657,8 @@ class SimilaritySpec extends SparkSpec {
     val e = emb((0L to 19L).map(i =>
       (i, Seq(i.toFloat / 20f, 1f - i.toFloat / 20f, (i % 5).toFloat / 5f, 0.5f), 0)): _*)
     def run(df: org.apache.spark.sql.DataFrame) = graft.functions.Similarity
-      .ivfRqTopK(df, col("vec_id") % 7 === 0, 5, nCells = 2, nProbe = 2,
-        k1 = 2, k2 = 2, iters = 2)
+      .ivfRqTopKMulti(df, col("vec_id") % 7 === 0, 5, nCells = 2, nProbe = 2,
+        ks = Seq(2, 2), iters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       .sortBy(t => (t._1, t._2))
     assert(run(e) == run(e.repartition(7)))
@@ -1721,8 +1669,8 @@ class SimilaritySpec extends SparkSpec {
       (i, Seq((i % 3).toFloat / 3f, 1f - (i % 3).toFloat / 3f,
         (i % 4).toFloat / 4f, 0.25f), 0)): _*)
     val out = graft.functions.Similarity
-      .ivfRqTopK(e, col("vec_id") === 0, k = 5, nCells = 3, nProbe = 3,
-        k1 = 3, k2 = 3, iters = 1)
+      .ivfRqTopKMulti(e, col("vec_id") === 0, k = 5, nCells = 3, nProbe = 3,
+        ks = Seq(3, 3), iters = 1)
       .collect()
     assert(out.length == 5, s"all cells probed -> full top-k: got ${out.length}")
   }
@@ -1826,7 +1774,10 @@ class SimilaritySpec extends SparkSpec {
       (pairs & truth).size.toDouble / truth.size
     val graph = Similarity.knnGraph(e, 10, 2).filter(pred).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivfpqRr = Similarity.ivfpqTopKRerank(e, pred, 10, 4, 2, 2, 4, 1, 50)
+    // an exact re-rank of a 50-pool keeps every true top-10 member of
+    // the pool in its top 10, so the rerank point's recall IS the
+    // ADC pool's recall
+    val ivfpqRr = Similarity.ivfpqTopK(e, pred, 50, 4, 2, 2, 4, 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val (gRec, iRec) = (recall(graph), recall(ivfpqRr))
     info(f"knn_graph=$gRec%.3f ivfpq_rerank=$iRec%.3f")
@@ -1894,15 +1845,15 @@ class SimilaritySpec extends SparkSpec {
       (got & truth).size.toDouble / truth.size
     }
     val hits0 = graft.functions.IndexMemo.hitsFor("ivfrq_train")
-    val raw = recall(Similarity.ivfRqTopK(e, pred, 10,
-      nCells = c, nProbe = math.min(2, c), k1 = 4, k2 = 4, iters = 1))
-    val rr = recall(Similarity.ivfRqTopKRerank(e, pred, 10,
-      nCells = c, nProbe = math.min(2, c), k1 = 4, k2 = 4, iters = 1, pool = 50))
+    val raw = recall(Similarity.ivfRqTopKMulti(e, pred, 10,
+      nCells = c, nProbe = math.min(2, c), ks = Seq(4, 4), iters = 1))
+    val rr = recall(Similarity.ivfRqTopKMultiRerank(e, pred, 10,
+      nCells = c, nProbe = math.min(2, c), ks = Seq(4, 4), iters = 1, pool = 50))
     info(f"ivfrq sf0.001: raw=$raw%.3f rerank=$rr%.3f")
     assert(rr >= raw, f"exact rerank must not lose recall: $rr%.3f < $raw%.3f")
     // the rerank's proposer rides the SAME trained index (memo hit)
     assert(graft.functions.IndexMemo.hitsFor("ivfrq_train") > hits0,
-      "ivfRqTopKRerank must reuse the memoized IVF-RQ training")
+      "the rerank must reuse the memoized IVF-RQ training")
   }
 
   test("hardNegatives returns nearest DIFFERENT-label rows only") {
@@ -2053,13 +2004,8 @@ class SimilaritySpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val out = Similarity.annRecall(e, col("vec_id") % 100 === 0, 10, 4, 4, 16, 4)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    assert(out.keySet == Set("lsh", "lsh_multi", "ivf", "pq", "pq_rerank",
-      "pq_hi", "pq_opq", "rq", "rq_rerank", "ivfpq", "ivfpq_rerank",
-      "ivfpq_auto", "ivfrq_auto", "knn_graph", "knn_graph_search", "sq8", "sq8_rerank"))
-    // re-ranking a 5k ADC pool can only help: recall is monotone
-    assert(out("pq_rerank")._3 >= out("pq")._3)
-    assert(out("ivfpq_rerank")._3 >= out("ivfpq")._3)
-    assert(out("rq_rerank")._3 >= out("rq")._3)
+    assert(out.keySet == graft.functions.AnnPolicy.rungs.map(_.method).toSet)
+    // re-ranking a 5k code-space pool can only help: recall is monotone
     assert(out("sq8_rerank")._3 >= out("sq8")._3)
     val nTruth = out("lsh")._2
     assert(nTruth > 0 && out.values.forall(_._2 == nTruth),
@@ -2068,31 +2014,18 @@ class SimilaritySpec extends SparkSpec {
     // (deterministic md5 hashing + fixed testdata → exact): a
     // retrieval regression fails RED here, it doesn't drift in prose.
     // Keep in sync with the BUILD_NOTES "ANN recall trend" table.
-    // The quantizer floors are low by construction: at the served
-    // 4-bit budgets (pq m=2×ksub=4 ≡ rq 4+4 ≡ ivfpq's residual codes)
-    // a 64-dim space compresses 512×, so the ADC ranking mostly
-    // certifies non-collapse; the exact 5k-pool re-rank then lifts
-    // each base ~4-8× (the refine step carrying the serving recall),
-    // and ivfpq additionally buys the ~nCells/nProbe scan reduction
-    // at scale, which flat pq cannot.
     // sq8's floor is the highest: 8 bits PER DIM (512 bits/vector) —
     // near-lossless by design, it buys memory locality (byte codes)
     // rather than deep compression, and its 5k-pool exact re-rank
     // recovers recall 1.0 on this corpus.
-    // r13: the harness measures the SERVED operating points (m=2/
-    // ksub=4, k1=k2=4, nCells=4/nProbe=2 — the gated queries' params,
-    // memo-shared trainings) instead of a richer config nothing
-    // serves; the quantizer pins dropped accordingly. The small served
-    // code budgets (4-bit pq codes) are the oracle-replayability
-    // trade, and the LADDER still certifies: rerank lifts every base
-    // ~4-8x, sq8's 512-bit codes stay near-lossless.
+    // r13: the harness measures the SERVED operating points (the gated
+    // queries' params, memo-shared trainings) instead of a richer
+    // config nothing serves.
     // pq_hi (r15): the high-fidelity PQ point (m=16, ksub=64 — 96 code
     // bits) — the raw-ADC >= 0.5 serving rung; measured 0.500 on this
     // corpus, pinned at the measured value per this block's discipline.
     val floors = Map("lsh" -> 0.38, "lsh_multi" -> 0.54, "ivf" -> 0.52,
-      "pq" -> 0.04, "pq_rerank" -> 0.22, "pq_hi" -> 0.50, "pq_opq" -> 0.52,
-      "rq" -> 0.02, "rq_rerank" -> 0.16,
-      "ivfpq" -> 0.02, "ivfpq_rerank" -> 0.18, "ivfpq_auto" -> 0.48,
+      "pq_hi" -> 0.50, "ivfpq_auto" -> 0.48,
       // ivfrq_auto (r18): re-pointed to 8 additive stages x 16 codes
       // (AnnPolicy.ivfrqAutoKs) — measured 0.26 on this corpus (0.18
       // at r17's 4x64, 0.04 at the r16 2-stage 4x4 point)
@@ -2125,11 +2058,7 @@ class SimilaritySpec extends SparkSpec {
       "lsh" -> ids(Similarity.lshTopK(e, pred, k, bits)),
       "lsh_multi" -> ids(Similarity.lshTopKMulti(e, pred, k, bits, tables)),
       "ivf" -> ids(Similarity.ivfTopK(e, pred, k, nCells, nProbe)),
-      "pq" -> ids(Similarity.pqTopK(e, pred, k, 2, 4, 1)),
-      "pq_rerank" -> ids(Similarity.pqTopKRerank(e, pred, k, 2, 4, 1, 5 * k)),
       "pq_hi" -> ids(Similarity.pqTopK(e, pred, k, 16, 64, 1)),
-      "rq" -> ids(Similarity.rqTopK(e, pred, k, 4, 4, 1)),
-      "ivfpq" -> ids(Similarity.ivfpqTopK(e, pred, k, 4, 2, 2, 4, 1)),
       "sq8" -> ids(Similarity.sq8TopK(e, pred, k)),
       "sq8_rerank" -> ids(Similarity.sq8TopKRerank(e, pred, k, 5 * k)))
     val fast = Similarity.annRecall(e, pred, k, bits, tables, nCells, nProbe)
@@ -2171,7 +2100,9 @@ class SimilaritySpec extends SparkSpec {
       .filter(col("a.vec_id") < col("b.vec_id"))
       .select(
         (col("a.nq").cast("double")).as("na"),
-        Similarity.doubleCosine("a.v", "b.v").as("dc"),
+        expr("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (acc, v) -> acc + v)" +
+          " / sqrt(aggregate(a.v, 0D, (acc, v) -> acc + v * v)" +
+          " * aggregate(b.v, 0D, (acc, v) -> acc + v * v))").as("dc"),
         expr("aggregate(zip_with(a.q, b.q, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)")
           .cast("double").as("dot"),
         col("b.nq").cast("double").as("nb"))
@@ -2179,86 +2110,6 @@ class SimilaritySpec extends SparkSpec {
       .select("dc", "qc").collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-5))
-  }
-
-  // --- OPQ-P: variance-balancing dim permutation (q_pq_opq) ---
-
-  /** Anisotropic fixture: all signal lives in the FIRST subspace's
-    * contiguous dims (0..subDim-1); the rest are near-constant noise.
-    * Contiguous PQ slicing traps every informative dim in one
-    * ksub-centroid codebook; OPQ-P deals them across subspaces. */
-  private def anisotropic(n: Int, dims: Int, signalDims: Int): DataFrame = {
-    val rnd = new scala.util.Random(42)
-    val rows = (0L until n.toLong).map { id =>
-      val v = Array.tabulate(dims) { d =>
-        if (d < signalDims) (rnd.nextFloat() * 2f - 1f)
-        else 1e-4f * ((id + d) % 3).toFloat
-      }
-      (id, v.toSeq, 0)
-    }
-    emb(rows: _*)
-  }
-
-  test("opqPermutation: a permutation that deals top-variance dims across subspaces") {
-    val e = anisotropic(64, 8, 4)
-    val m = 2
-    val perm = Similarity.opqPermutation(e, m)
-    assert(perm.sorted.toSeq == (0 until 8), s"not a permutation: ${perm.toSeq}")
-    // deterministic: a second call (memo or not) yields the same deal
-    assert(Similarity.opqPermutation(e, m).toSeq == perm.toSeq)
-    // the 4 signal dims (0..3) out-score the noise dims, so the
-    // round-robin deal puts exactly 2 of them in each subspace —
-    // contiguous slicing would put all 4 in subspace 0
-    val bySub = perm.grouped(4).toSeq // subDim = 4
-    bySub.foreach { sub =>
-      assert(sub.count(_ < 4) == 2,
-        s"subspace ${sub.toSeq} should hold exactly 2 signal dims (perm ${perm.toSeq})")
-    }
-  }
-
-  test("opqPqTopK beats contiguous PQ recall on the anisotropic corpus") {
-    val e = anisotropic(200, 8, 4).localCheckpoint()
-    val qp = col("vec_id") % 20 === 0
-    val truth = Similarity.bruteForceTopK(e, qp, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    def recall(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      (got & truth).size.toDouble / truth.size
-    }
-    val plain = recall(Similarity.pqTopK(e, qp, 5, m = 2, ksub = 4, iters = 1))
-    val opq = recall(Similarity.opqPqTopK(e, qp, 5, m = 2, ksub = 4, iters = 1))
-    info(f"anisotropic recall: plain=$plain%.3f opq=$opq%.3f")
-    // all 4 informative dims sit in subspace 0, so plain PQ's 4 codes
-    // carry the whole signal (subspace 1 quantizes noise); the deal
-    // gives each codebook 2 signal dims -> 16 effective signal codes
-    assert(opq > plain,
-      f"OPQ-P must beat contiguous slicing here: opq=$opq%.3f plain=$plain%.3f")
-  }
-
-  test("opqPqTopK on the corpus: same ground truth, measured recall pinned") {
-    // permutation invariance of L2 => the brute-force truth is shared;
-    // on this near-isotropic corpus the permutation is ~neutral — the
-    // pin records the measured value (fixed testdata, md5-deterministic)
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val qp = col("vec_id") % 100 === 0
-    val truth = Similarity.bruteForceTopK(e, qp, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = Similarity.opqPqTopK(e, qp, 10, m = 16, ksub = 64, iters = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val rec = (got & truth).size.toDouble / truth.size
-    info(f"q_pq_opq sf0.001 raw recall: $rec%.3f")
-    assert(rec >= 0.25, f"opq recall collapsed: $rec%.3f") // half the measured 0.50-class rung
-  }
-
-  test("opqPqTopK keeps pqTopK's predicate contract: non-vector columns survive the permute") {
-    // the permuted frame must carry label (etc.) through, so a
-    // queryPred referencing it analyzes — the q_ann_filtered-style
-    // calling convention (r15 narrowed the permute to (vec_id, q, nq)
-    // and such predicates failed analysis)
-    val e = anisotropic(100, 8, 4)
-    val got = Similarity.opqPqTopK(e, col("label") === 0 && col("vec_id") % 20 === 0,
-      5, m = 2, ksub = 4, iters = 1).collect()
-    assert(got.nonEmpty)
   }
 
   test("pqSearchIndex drops a corrupted code instead of ranking it first") {
@@ -2308,6 +2159,57 @@ class SimilaritySpec extends SparkSpec {
       Similarity.annServe(e, pred, 10, 2000L)
     }
     assert(ex.getMessage.contains("no ANN rung certifies"))
+  }
+
+  private def sf0001 = Tables.embeddings(spark, "/root/testdata/sf0.001")
+
+  test("every rung in AnnPolicy.rungs serves through its own serve function") {
+    val e = sf0001
+    val pred = col("vec_id") % 100 === 0
+    val qIds = e.filter(pred).select(col("vec_id")).collect().map(_.getLong(0)).toSet
+    val env = graft.functions.AnnPolicy.env(e.count(), qIds.size.toLong)
+    val k = graft.functions.AnnPolicy.k
+    graft.functions.AnnPolicy.rungs.foreach { r =>
+      val rows = r.serve(e, pred, k, env)
+        .select(col("query_id"), col("rnk"), col("neighbor_id")).collect()
+      val perQuery = rows.groupBy(_.getLong(0))
+      assert(perQuery.keySet == qIds, s"${r.method}: rows for ${perQuery.keySet}, want $qIds")
+      perQuery.foreach { case (q, rs) =>
+        assert(rs.length <= k, s"${r.method}: query $q got ${rs.length} rows")
+        assert(rs.forall(x => x.getLong(1) >= 1 && x.getLong(1) <= k), s"${r.method}: rnk")
+      }
+    }
+  }
+
+  // Memos over a query set key on the FILTERED plan: under Spark 4.1 a
+  // functions-API predicate renders to the same SQL string whatever it
+  // says, so a key on that string hands one predicate's rows to another.
+  private val otherPred = col("vec_id") % 50 === 1
+
+  test("bf_truth memo keys on the predicate: a second query set gets its own truth") {
+    val e = sf0001
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    Similarity.bruteForceTopKMemo(e, col("vec_id") % 100 === 0, 10).count()
+    assert(rows(Similarity.bruteForceTopKMemo(e, otherPred, 10)) ==
+      rows(Similarity.bruteForceTopK(e, otherPred, 10)))
+  }
+
+  test("ivfpq_qd memo keys on the predicate: a second query set gets its own queries") {
+    val e = sf0001
+    def qids(df: DataFrame) = df.select(col("query_id")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    Similarity.ivfpqTopK(e, col("vec_id") % 100 === 0, 10, 4, 2, 2, 4, 1).count()
+    assert(qids(Similarity.ivfpqTopK(e, otherPred, 10, 4, 2, 2, 4, 1)) ==
+      e.filter(otherPred).select(col("vec_id")).collect().map(_.getLong(0)).toSet)
+  }
+
+  test("ann_recall memo keys on the predicate: n_truth follows the query set") {
+    val e = sf0001
+    def nTruth(p: org.apache.spark.sql.Column) =
+      Similarity.annRecall(e, p, 10, 4, 4, 16, 4).select(col("n_truth")).head().getLong(0)
+    Seq(col("vec_id") % 100 === 0, otherPred).foreach { p =>
+      assert(nTruth(p) == Similarity.bruteForceTopK(e, p, 10).count())
+    }
   }
 
   test("seedTable picks == the per-stage TakeOrdered md5 ranking (r19 trainer reshape)") {
@@ -2360,7 +2262,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("residual-chain seed replay == per-stage collect (r20 trainer action cut)") {
-    // The multi-stage trainers (rqTrainCompute / ivfRqTrainMulti) no
+    // The multi-stage trainer (ivfRqTrainMulti) no
     // longer re-collect each stage's seed vectors from the residual
     // frame: the driver replays the residual chain for the tracked
     // seed ids (argminLocal + residualLocal — the exact Long algebra
@@ -2381,7 +2283,7 @@ class SimilaritySpec extends SparkSpec {
     val seeds1 = seeds.filter(col("salt") === "" && col("code") < k1)
       .withColumnRenamed("code", "code1")
     val (a1, c1) = Similarity.fpStage(seeds1, va, "code1", k1, 1)
-    // cluster residuals (the rqTrainCompute spelling)
+    // cluster residuals (the ivfRqTrainMulti spelling)
     val c1Arr = c1.groupBy(col("code1"))
       .agg(expr("array_sort(collect_list(struct(d, c)))").as("_dc"))
       .select(col("code1"), expr("transform(_dc, x -> x.c)").as("ca"))

@@ -40,11 +40,6 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_percentiles_custom" -> 1,      // custom agg partials -> one exchange
     "q_simhash64_neardup" -> 2,       // vote agg feeds checkpoint; band join + distinct
     "q_simhash64_wide" -> 2,          // combi-table join off the same checkpoint + distinct
-    "q_rq_topk" -> 4,                 // ADC table agg + per-query window; codes
-                                      // read checkpoints, candidates never shuffle
-    "q_ivfpq_topk" -> 4,              // probe window + ADC agg + per-(query,cand)
-                                      // agg + top-k window; the code index scans
-                                      // map-side against the broadcast ADC table
     "q_decontaminate" -> 4,           // train-shingle distinct+count keyed on doc_id; bench side broadcasts
     "q_repetition" -> 5,              // (doc,tok)/(doc,2gram) aggs + doc-keyed join, nothing global
     "q_chunking" -> 0,                // pure map-side: tokenize + explode, NO shuffle at any size
@@ -229,25 +224,16 @@ class ShuffleBudgetSpec extends SparkSpec {
                                       // key distinct + final group agg
                                       // (bloom build is its own tiny
                                       // job at construction time)
-    "q_pq_topk" -> 3,                 // ADC table agg + per-(query,
-                                      // cand) code-sum agg + top-k
-                                      // window; training shuffles live
-                                      // in checkpointed jobs
     "q_ngram_novelty" -> 2,           // distinct (doc, digest) rows are
                                       // checkpointed; first-occurrence
                                       // agg + per-doc ownership agg
-    "q_pq_hi" -> 3,                   // q_pq_topk's exact shape at the
-                                      // high-fidelity (m=16, ksub=64)
-                                      // point — wider codebooks change
-                                      // row counts, never the plan
-    "q_pq_opq" -> 3,                  // OPQ-P: the permutation trains
-                                      // eagerly (sample agg + dims
-                                      // collect); the emitted search
-                                      // plan is q_pq_hi's
-    "q_ivfpq_auto" -> 4,              // q_ivfpq_topk's plan with the
-                                      // COUNT(*)-derived cell count —
-                                      // auto-sizing changes params,
-                                      // never the plan shape
+    "q_pq_hi" -> 3,                   // ADC table agg + per-(query,
+                                      // cand) code-sum agg + top-k
+                                      // window; training shuffles live
+                                      // in checkpointed jobs
+    "q_ivfpq_auto" -> 4,              // probe window + ADC agg + per-(query,cand)
+                                      // agg + top-k window; the code index scans
+                                      // map-side against the broadcast ADC table
     "q_ivf_sq8_auto" -> 4,            // probe window + top-k agg; the
                                       // code scan reads the memoized
                                       // (codes x cells) checkpoint
@@ -257,10 +243,6 @@ class ShuffleBudgetSpec extends SparkSpec {
                                       // eager jobs over checkpointed
                                       // stage frames; the emitted plan
                                       // is a 7-row LocalRelation
-    "q_pq_rerank" -> 3,               // ADC pool is checkpointed; pool
-                                      // id distinct + the semi-join
-                                      // id exchange + final rerank
-                                      // window (vectors broadcast)
     "q_sq8_topk" -> 1,                // byte-code index reads the memoized
                                       // checkpoint, queries broadcast —
                                       // ONE bounded TopK agg exchange
@@ -282,13 +264,6 @@ class ShuffleBudgetSpec extends SparkSpec {
                                       // sides + dup distinct + final
                                       // cell summary agg — all id-keyed,
                                       // raw embeddings move once
-    "q_rq_rerank" -> 3,               // mirror of q_pq_rerank: RQ pool is
-                                      // checkpointed; pool id distinct +
-                                      // semi-join id exchange + final
-                                      // rerank window (vectors broadcast)
-    "q_ivfpq_rerank" -> 3,            // same refine shape: IVFADC pool
-                                      // checkpoint + distinct + semi-join
-                                      // + rerank window
     "q_quality_calibrated" -> 3,      // globalRank's range partition is
                                       // checkpointed; the _pid rank
                                       // window subtree feeds BOTH the

@@ -68,23 +68,6 @@ class DotI64Spec extends SparkSpec {
     intercept[Exception] { df.select(DotI64.dot_i64(col("a"), col("b"))).head() }
   }
 
-  test("native fused cosine: known geometry, SQL registration, null") {
-    import graft.plans.CosineF64
-    val df = Seq(
-      (Array(1.0, 0.0), Some(Array(1.0, 0.0))),   // identical -> 1.0
-      (Array(1.0, 0.0), Some(Array(0.0, 1.0))),   // orthogonal -> 0.0
-      (Array(1.0, 0.0), Some(Array(-2.0, 0.0))),  // opposite -> -1.0
-      (Array(1.0, 0.0), Option.empty[Array[Double]])
-    ).toDF("a", "b")
-    val out = df.select(CosineF64.cosine_f64(col("a"), col("b")).as("c")).collect()
-    assert(out(0).getDouble(0) == 1.0)
-    assert(out(1).getDouble(0) == 0.0)
-    assert(out(2).getDouble(0) == -1.0)
-    assert(out(3).isNullAt(0))
-    CosineF64.register(spark)
-    assert(df.limit(1).selectExpr("cosine_f64(a, b)").head().getDouble(0) == 1.0)
-  }
-
   test("top_k SQL registration: literal k, smallest-first structs") {
     import graft.plans.TopK
     TopK.register(spark)
@@ -139,21 +122,5 @@ class DotI64Spec extends SparkSpec {
     assert(ids(nan, 2) == List(2L, 9L), "real keys must crowd out NaN")
     assert(ids(nan, 3) == List(2L, 9L, 10L), "NaN ranks last, id breaks the NaN tie")
     assert(ids(nan.repartition(5), 3) == List(2L, 9L, 10L), "repartition-invariant")
-  }
-
-  test("fused cosine degenerates to NULL, never NaN (zero norm, length mismatch)") {
-    import graft.plans.CosineF64
-    val df = Seq(
-      (Array(0.0, 0.0), Array(1.0, 0.0)),       // zero-norm left
-      (Array(1.0, 0.0), Array(0.0, 0.0)),       // zero-norm right
-      (Array(1.0, 2.0, 3.0), Array(1.0, 2.0))   // length mismatch
-    ).toDF("a", "b")
-    val out = df.select(CosineF64.cosine_f64(col("a"), col("b")).as("c")).collect()
-    out.zipWithIndex.foreach { case (r, i) =>
-      assert(r.isNullAt(0), s"row $i must be NULL (a NaN would outrank real cosines)")
-    }
-    // a zero vector must NOT survive a threshold filter or win a top-k
-    assert(df.select(CosineF64.cosine_f64(col("a"), col("b")).as("c"))
-      .filter(col("c") >= 0.0).count() == 0)
   }
 }
