@@ -136,7 +136,6 @@ object ReportUpsert {
 
   def mergeIntoPartitioned(dir: String, incoming: DataFrame): Unit = withWriterLock(dir) {
     val spark = incoming.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val merged =
       if (Fs.exists(dir)) {
         val touchedDf = incoming.select(col("begin_date")).distinct()
@@ -160,9 +159,11 @@ object ReportUpsert {
         merge(existingTouched, incoming)
       } else incoming
     // Dynamic mode: Overwrite replaces only the partitions present in
-    // `merged` (exactly the touched dates).
+    // `merged` (exactly the touched dates). Set on this write alone, so
+    // the caller's session keeps its own overwrite mode.
     merged.write
       .partitionBy("begin_date")
+      .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .parquet(dir)
   }

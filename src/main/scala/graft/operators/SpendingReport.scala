@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The reference's whole compute surface — the period spending report —
   * re-expressed as composable Spark plans over a long-form transactions
@@ -279,37 +280,75 @@ object SpendingReport {
   /** Full report assembly (transformer.py:229-243 + P2's details
     * projection at :283): one row; ordered map-likes persisted as
     * arrays of (key,total) structs so output hashing is deterministic.
+    *
+    * Every column folds from ONE exact aggregate, `cells` = the decimal
+    * sum and row count per (txn_date, category, vendor). A decimal sum
+    * of cell sums is the sum of the rows, so each value is the same
+    * double the building blocks above (`globalSummary`, `keyTotals`,
+    * `zeroImputedMean`, `pctChangeLatest`, `top5Asc`, `uniqueKeySets`)
+    * produce, without their nine re-scans of the input:
+    *  - one global aggregate over `cells` gives the totals, the date
+    *    range, the distinct key sets and the date facts: the number of
+    *    distinct dates (a null date counts as one, as `distinct().count()`
+    *    counts it) and the two latest dates in the pct-change window's
+    *    order (asc, nulls first);
+    *  - per key, one groupBy over `cells` crossed with those date facts
+    *    gives the total, the zero-imputed mean (total / #dates, the same
+    *    IEEE division) and the latest and predecessor sums of pct_change;
+    *  - `spending_per_*` sorts (total, key) structs inside the array
+    *    instead of a `globalRank`; `top_5_vendors` is its first five.
+    * Kept quirk: `denseGrid`'s equi-join never matches a null date or a
+    * null key, so a cell with either counts as 0 in `pct_change` (a null
+    * key's pct_change is 0) while it still counts in totals and means.
     */
   def report(tx: DataFrame): DataFrame = {
-    val g = globalSummary(tx)
-    val catTotals = keyTotals(tx, "category")
-      .orderBy(col("rank_asc")).select(struct(col("category"), col("total")).as("kv"))
-      .agg(collect_list(col("kv")).as("spending_per_category"))
-    val venTotals = keyTotals(tx, "vendor")
-      .orderBy(col("rank_asc")).select(struct(col("vendor"), col("total")).as("kv"))
-      .agg(collect_list(col("kv")).as("spending_per_vendor"))
-    val catPct = pctChangeLatest(tx, "category")
-      .select(struct(col("category"), col("pct_change")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("pct_change_category"))
-    val venPct = pctChangeLatest(tx, "vendor")
-      .select(struct(col("vendor"), col("pct_change")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("pct_change_vendor"))
-    val catMean = zeroImputedMean(tx, "category")
-      .select(struct(col("category"), col("mean_amount")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("avg_category"))
-    val venMean = zeroImputedMean(tx, "vendor")
-      .select(struct(col("vendor"), col("mean_amount")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("avg_vendor"))
-    val top5 = top5Asc(tx, "vendor")
-      .select(struct(col("vendor"), col("total")).as("kv"))
-      .agg(collect_list(col("kv")).as("top_5_vendors"))
-    val uniq = uniqueKeySets(tx)
+    val cells = tx.groupBy(col("txn_date"), col("category"), col("vendor"))
+      .agg(sum(amt2).as("cell"), count(lit(1)).as("n"))
+    val g = cells.agg(
+        sum(col("cell")).cast("double").as("total_spent"),
+        coalesce(sum(col("n")), lit(0L)).as("total_transactions"),
+        min(col("txn_date")).as("begin_date"),
+        max(col("txn_date")).as("end_date"),
+        sort_array(collect_set(col("category"))).as("unique_categories"),
+        sort_array(collect_set(col("vendor"))).as("unique_vendors"),
+        sort_array(collect_set(col("txn_date")), asc = false).as("_dates"),
+        max(col("txn_date").isNull).as("_null_date"))
+      .withColumn("n_categories", size(col("unique_categories")).cast("long"))
+      .withColumn("n_vendors", size(col("unique_vendors")).cast("long"))
+    // the lag window sorts dates asc nulls first: the latest is the max
+    // date (null only when every date is), the predecessor the second
+    // largest; a null predecessor, or none, reads as 0 either way
+    val dateFacts = g.select(
+      (size(col("_dates")) + coalesce(col("_null_date").cast("int"), lit(0)))
+        .cast("double").as("_n_dates"),
+      col("end_date").as("_latest"),
+      try_element_at(col("_dates"), lit(2)).as("_pred"))
 
-    // All sides are single-row aggregates -> broadcast-nested-loop cross
-    // joins of 1x1 rows; cost is the underlying aggs, not the joins.
-    val row = g.crossJoin(uniq).crossJoin(catTotals).crossJoin(venTotals)
-      .crossJoin(catPct).crossJoin(venPct).crossJoin(catMean).crossJoin(venMean)
-      .crossJoin(top5)
+    def perKey(key: String): DataFrame = {
+      def sumAt(date: String) =
+        coalesce(sum(when(col("txn_date") === col(date), col("cell"))).cast("double"), lit(0.0))
+      val keyed = cells.crossJoin(dateFacts).groupBy(col(key), col("_n_dates"))
+        .agg(moneySum(col("cell")).as("total"), sumAt("_latest").as("_cur"),
+          sumAt("_pred").as("_prev"))
+      val pct = when(col(key).isNull || col("_prev") === 0.0, lit(0.0))
+        .otherwise((col("_cur") - col("_prev")) / col("_prev"))
+      keyed.agg(
+        transform(sort_array(collect_list(struct(col("total"), col(key).as("_k")))),
+          kv => struct(kv("_k").as(key), kv("total").as("total"))).as(s"spending_per_$key"),
+        sort_array(collect_list(struct(col(key), pct.as("pct_change"))))
+          .as(s"pct_change_$key"),
+        sort_array(collect_list(struct(col(key),
+          (col("total") / col("_n_dates")).as("mean_amount")))).as(s"avg_$key"))
+    }
+
+    // single-row sides -> broadcast-nested-loop cross joins of 1x1 rows
+    val row = g.crossJoin(perKey("category")).crossJoin(perKey("vendor"))
+      .select(col("total_spent"), col("total_transactions"), col("begin_date"),
+        col("end_date"), col("unique_categories"), col("n_categories"),
+        col("unique_vendors"), col("n_vendors"), col("spending_per_category"),
+        col("spending_per_vendor"), col("pct_change_category"), col("pct_change_vendor"),
+        col("avg_category"), col("avg_vendor"),
+        slice(col("spending_per_vendor"), 1, 5).as("top_5_vendors"))
 
     // P2: details = report minus (begin_date, end_date, fi_summary).
     val detailCols = Seq("total_spent", "total_transactions",
@@ -327,21 +366,25 @@ object SpendingReport {
   }
 
   /** Report + fi_summary enrichment (driver-side single-row step,
-    * §2.10): collects the one report row, renders the executive summary
-    * via the supplied function (deterministic stub by default), and
-    * returns the final file_details-shaped row. */
+    * §2.10): collects the one report row once, renders the executive
+    * summary via the supplied function (deterministic stub by default),
+    * and returns the final file_details-shaped row as a local one-row
+    * frame, so nothing stays cached and later reads re-run no job. */
   def enriched(tx: DataFrame,
                summarize: ReportFields => String = Summarizer.stub): DataFrame = {
-    val r = report(tx).cache()
-    val row = r.select("begin_date", "end_date", "total_spent",
-      "total_transactions", "unique_categories").head()
+    val r = report(tx)
+    val Array(row) = r.collect()
+    val at = row.fieldIndex _
+    require(!row.isNullAt(at("begin_date")), "no transactions to report")
     val fields = ReportFields(
-      beginDate = row.getDate(0).toString,
-      endDate = row.getDate(1).toString,
-      totalSpent = row.getDouble(2),
-      totalTransactions = row.getLong(3),
-      topCategories = row.getSeq[String](4))
-    r.withColumn("fi_summary", lit(summarize(fields)))
+      beginDate = row.getDate(at("begin_date")).toString,
+      endDate = row.getDate(at("end_date")).toString,
+      totalSpent = row.getDouble(at("total_spent")),
+      totalTransactions = row.getLong(at("total_transactions")),
+      topCategories = row.getSeq[String](at("unique_categories")))
+    r.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(row.toSeq :+ summarize(fields))),
+      r.schema.add("fi_summary", StringType))
   }
 
   /** Robust per-key stats: the mean of values inside the key's own

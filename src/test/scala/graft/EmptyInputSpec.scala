@@ -29,6 +29,11 @@ class EmptyInputSpec extends SparkSpec {
     assert(SpendingReport.top5Asc(emptyTx, "vendor").count() == 0)
   }
 
+  test("enriched on zero transactions fails with a named error") {
+    val e = intercept[IllegalArgumentException](SpendingReport.enriched(emptyTx))
+    assert(e.getMessage.contains("no transactions to report"))
+  }
+
   test("merge with an empty incoming batch keeps existing rows") {
     val existing = Seq(("2024-01-01", 10.0, "e", 5L))
       .toDF("dt", "total_spent", "version", "total_transactions")

@@ -1,0 +1,51 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.operators.{ReportUpsert, SpendingReport}
+
+/** Job-count contracts, the sibling of `ShuffleBudgetSpec`: the number
+  * of Spark jobs an operation runs, counted by a listener. On small
+  * inputs the cost of the report path is its chain of sequential small
+  * jobs, and unlike wall time the count is deterministic, so a change
+  * that adds a job shows here exactly. */
+class JobBudgetSpec extends SparkSpec {
+  private val sf = "/root/testdata/sf0.001"
+  private val Tag = "graft.jobBudget"
+
+  /** Jobs `body` submits from this thread (and the threads Spark runs
+    * its stages and broadcasts on, which inherit the local property). */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Tag) == tag)) n.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setLocalProperty(Tag, tag)
+    try body finally sc.setLocalProperty(Tag, null)
+    ListenerBus.drain(sc)
+    sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("report(tx).collect() on sf0.001: job count") {
+    val tx = Tables.transactions(spark, sf)
+    // 12 = the one-aggregate fold; the nine-way composition it
+    // replaced ran 63 (globalRank three times, two eager counts)
+    assert(jobs(SpendingReport.report(tx).collect()) == 12)
+  }
+
+  test("one enriched + mergeInto cycle: job count") {
+    val tx = Tables.transactions(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/reports"
+    ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx.filter("txn_date < DATE'2024-01-02'")))
+    // 16 = the report's 12 + the upsert's read, merge and write; the
+    // nine-way report with its cached row ran 68
+    assert(jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx))) == 16)
+  }
+}

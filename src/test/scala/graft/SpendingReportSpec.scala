@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Date
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.functions.{col, collect_list, current_date, expr, parse_json,
+  sort_array, struct, substring_index, sum, to_json}
 import graft.operators.SpendingReport
 
 /** Per-operator semantics from SURVEY.md §2 over tiny literal frames,
@@ -184,6 +185,121 @@ class SpendingReportSpec extends SparkSpec {
     assert(vSpent == 145.0)
     val enriched = SpendingReport.enriched(tx)
     assert(enriched.select("fi_summary").head().getString(0).nonEmpty)
+    // the local frame carries the collected row unchanged, variant included
+    assert(enriched.schema.dropRight(1) == r.schema.fields.toSeq)
+    assert(view(enriched.drop("fi_summary")) == view(r))
+  }
+
+  /** The report as nine single-row sub-reports cross-joined, each over
+    * the raw input: the composition `SpendingReport.report` replaced,
+    * kept here as the reference its one-aggregate fold must equal. */
+  private def nineWay(tx: DataFrame): DataFrame = {
+    val g = SpendingReport.globalSummary(tx)
+    val catTotals = SpendingReport.keyTotals(tx, "category")
+      .orderBy(col("rank_asc")).select(struct(col("category"), col("total")).as("kv"))
+      .agg(collect_list(col("kv")).as("spending_per_category"))
+    val venTotals = SpendingReport.keyTotals(tx, "vendor")
+      .orderBy(col("rank_asc")).select(struct(col("vendor"), col("total")).as("kv"))
+      .agg(collect_list(col("kv")).as("spending_per_vendor"))
+    val catPct = SpendingReport.pctChangeLatest(tx, "category")
+      .select(struct(col("category"), col("pct_change")).as("kv"))
+      .agg(sort_array(collect_list(col("kv"))).as("pct_change_category"))
+    val venPct = SpendingReport.pctChangeLatest(tx, "vendor")
+      .select(struct(col("vendor"), col("pct_change")).as("kv"))
+      .agg(sort_array(collect_list(col("kv"))).as("pct_change_vendor"))
+    val catMean = SpendingReport.zeroImputedMean(tx, "category")
+      .select(struct(col("category"), col("mean_amount")).as("kv"))
+      .agg(sort_array(collect_list(col("kv"))).as("avg_category"))
+    val venMean = SpendingReport.zeroImputedMean(tx, "vendor")
+      .select(struct(col("vendor"), col("mean_amount")).as("kv"))
+      .agg(sort_array(collect_list(col("kv"))).as("avg_vendor"))
+    val top5 = SpendingReport.top5Asc(tx, "vendor")
+      .select(struct(col("vendor"), col("total")).as("kv"))
+      .agg(collect_list(col("kv")).as("top_5_vendors"))
+    val uniq = SpendingReport.uniqueKeySets(tx)
+    val row = g.crossJoin(uniq).crossJoin(catTotals).crossJoin(venTotals)
+      .crossJoin(catPct).crossJoin(venPct).crossJoin(catMean).crossJoin(venMean)
+      .crossJoin(top5)
+    val detailCols = Seq("total_spent", "total_transactions",
+      "unique_categories", "unique_vendors", "spending_per_category",
+      "pct_change_category", "avg_category", "spending_per_vendor",
+      "pct_change_vendor", "avg_vendor", "top_5_vendors")
+    row.withColumn("details", to_json(struct(detailCols.map(col): _*)))
+      .withColumn("details_variant", parse_json(to_json(struct(detailCols.map(col): _*))))
+      .withColumn("id", expr("uuid()"))
+      .withColumn("created_at", current_date())
+  }
+
+  /** `n` monthly upload summaries landed as JSON and extracted the way
+    * the scheduled fold reads them: vendor keys `category/vNN`. */
+  private def landedUploads(n: Int): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_uploads")
+    val rnd = new scala.util.Random(n)
+    val vendors = for (c <- Seq("dining", "groceries", "rent", "travel"); v <- 0 until 4)
+      yield f"$c/v$v%02d"
+    (0 until n).foreach { m =>
+      val start = java.time.LocalDate.of(2021, 1, 1).plusMonths(m.toLong)
+      val lines = rnd.shuffle(vendors).take(4 + rnd.nextInt(9)).sorted
+        .map(v => v -> f"${100 + rnd.nextInt(50000)}%d.${rnd.nextInt(100)}%02d")
+      val body = s"""{"upload_id": $m, "begin_date": "$start", """ +
+        s""""end_date": "${start.plusMonths(1).minusDays(1)}", "total_spent": 1.0, """ +
+        s""""total_transactions": ${lines.size}, "spending_per_vendor": """ +
+        lines.map { case (v, a) => s""""$v": $a""" }.mkString("{", ", ", "}") + "}"
+      java.nio.file.Files.writeString(dir.resolve(s"u$m.json"), body + "\n")
+    }
+    graft.sources.UploadSource.transactionsFromSummaries(
+      graft.sources.UploadSource.uploadSummaries(spark, dir.toString), "spending_per_vendor")
+      .select(col("txn_date"), substring_index(col("key"), "/", 1).as("category"),
+        col("key").as("vendor"), col("amount"))
+  }
+
+  /** A report's rows without the per-run `id` and `created_at`, the
+    * variant as its JSON, each with its whole-row JSON (exact doubles). */
+  private def view(r: DataFrame): Seq[(org.apache.spark.sql.Row, String)] =
+    r.drop("id", "created_at")
+      .withColumn("variant_json", to_json(col("details_variant")))
+      .drop("details_variant")
+      .select(col("*"), to_json(struct(col("*"))).as("all_json"))
+      .collect().map(row => (row, row.getAs[String]("all_json"))).toSeq
+
+  private def txOf(rows: (Option[String], Option[String], Option[String], Option[Double])*) =
+    rows.toDF("dt", "category", "vendor", "amount")
+      .selectExpr("to_date(dt) AS txn_date", "category", "vendor", "amount")
+
+  test("fused report equals the nine-way composition") {
+    val testdata = "/root/testdata"
+    val (a, b, c) = (Some("2024-01-01"), Some("2024-01-02"), Some("2024-01-03"))
+    val inputs = Seq(
+      "spec frame" -> tx,
+      "one date" -> tx.filter($"txn_date" === lit(d("2024-01-01"))),
+      // v1/v2 and food/rent tie on total; toys's only amount is null
+      "ties and a null amount" -> txOf(
+        (a, Some("food"), Some("v1"), Some(5.0)), (a, Some("rent"), Some("v2"), Some(5.0)),
+        (b, Some("food"), Some("v2"), Some(2.5)), (b, Some("rent"), Some("v1"), Some(2.5)),
+        (b, Some("toys"), Some("v3"), None), (c, Some("food"), Some("v1"), Some(0.1)),
+        (c, Some("rent"), Some("v2"), Some(7.25))),
+      "null dates" -> txOf(
+        (None, Some("food"), Some("v1"), Some(3.0)), (a, Some("food"), Some("v1"), Some(4.0)),
+        (None, Some("rent"), Some("v2"), Some(9.5)), (b, Some("rent"), Some("v2"), Some(1.5)),
+        (b, Some("food"), Some("v2"), Some(6.0))),
+      "only a null date" -> txOf(
+        (None, Some("food"), Some("v1"), Some(3.0)), (None, Some("rent"), Some("v2"), Some(1.0))),
+      "null keys" -> txOf(
+        (a, None, Some("v1"), Some(3.0)), (b, None, None, Some(4.0)),
+        (b, Some("food"), None, Some(2.0)), (c, Some("food"), Some("v1"), Some(8.0)),
+        (c, None, None, Some(1.0))),
+      "empty" -> txOf(),
+      "26 landed uploads" -> landedUploads(26)) ++
+      Seq("sf0.001", "sf0.01", "sf0.1").map(s => s -> Tables.transactions(spark, s"$testdata/$s"))
+    inputs.foreach { case (name, in) =>
+      val fused = SpendingReport.report(in)
+      val ref = nineWay(in)
+      def types(r: DataFrame) = r.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+      assert(types(fused) == types(ref), s"$name: schema")
+      val (got, want) = (view(fused), view(ref))
+      assert(got.length == 1, s"$name: report must be one row, got ${got.length}")
+      assert(got == want, s"$name: fused ${got.map(_._2)} vs nine-way ${want.map(_._2)}")
+    }
   }
 
   test("unpivot round-trips the pivot (dense grid preserved)") {

@@ -84,6 +84,29 @@ class UpsertSpec extends SparkSpec {
       "a partition outside the batch's dates must be untouched")
   }
 
+  test("mergeIntoPartitioned leaves the session's overwrite mode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val base = java.nio.file.Files.createTempDirectory("graft_mode").toString
+      ReportUpsert.mergeIntoPartitioned(base + "/reports",
+        reports(("2024-01-01", 10.0, "v1", 5L)))
+      assert(spark.conf.get(key) == "static", "the sink must not change the session conf")
+      // a later static partitioned overwrite still replaces the whole table
+      val table = base + "/table"
+      reports(("2024-01-01", 1.0, "a", 1L), ("2024-01-02", 2.0, "a", 1L))
+        .write.partitionBy("begin_date").mode("overwrite").parquet(table)
+      reports(("2024-01-02", 3.0, "b", 1L))
+        .write.partitionBy("begin_date").mode("overwrite").parquet(table)
+      val out = spark.read.parquet(table).collect().map(_.getAs[String]("version")).toSeq
+      assert(out == Seq("b"), s"static overwrite kept untouched partitions: $out")
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("MERGE sinks are single-writer: held lock fails fast, released after a batch") {
     val base = java.nio.file.Files.createTempDirectory("graft_lock").toString
     val localDir = base + "/reports"
