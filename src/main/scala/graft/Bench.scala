@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver-run benchmark: times every SparkEntry query on
+/** Driver-run benchmark: times every `SparkEntry.board` query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
@@ -44,21 +42,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Sketch UDAF aggregations (KLL/theta/HLL) run under
-      // ObjectHashAggregate, whose sort-based fallback triggers at a
-      // DEFAULT of 128 distinct groups per task -- our per-day slice
-      // sketches exceed that on every map partition, silently turning
-      // a hash aggregation into a full sort of the fact (measured
-      // super-linear at the 32x scale probe, r15). 64k groups of
-      // KB-sized sketch buffers is comfortably in-memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // Optional isolation filter (comma-separated query names): run a
+    // subset back-to-back for regression triage without the full-suite
+    // cache/contention profile. Unset = all queries (the driver's mode).
+    // Checked before the session starts: an unknown name throws.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val selected = SparkEntry.select(only)
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Ambient machine state BEFORE the bench itself generates load —
@@ -115,25 +106,21 @@ object Bench {
       materialize(Tables.events(spark, sfDir).groupBy("event_type").count())
     } catch { case _: Throwable => () }
 
-    // Optional isolation filter (comma-separated query names): run a
-    // subset back-to-back for regression triage without the full-suite
-    // cache/contention profile. Unset = all queries (the driver's mode).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Scale-up mode: exclude the demo-tier queries (SparkEntry.demo —
+    // Scale-up mode: exclude the demo-tier queries (`QueryDef.demo` —
     // oracle-portability vehicles whose shapes deliberately don't
     // scale) so a larger-SF run isn't dominated by a known demo.
     val skipDemo = sys.env.get("SPARK_GRAFT_SKIP_DEMO").exists(v => v == "1" || v == "true")
+    val demo = SparkEntry.board.filter(_.demo).map(_.name).toSet
 
     // Failures are recorded, never swallowed: a query that cannot plan
     // or execute shows up in the "errors" map (and on stderr) instead
     // of silently inflating apparent coverage with a near-zero timing.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .filterNot { case (name, _) => skipDemo && SparkEntry.demo(name) }
-      .map { case (name, fn) =>
+    val results = selected.sortBy(_.name)
+      .filterNot(q => skipDemo && q.demo)
+      .map { q =>
+      val name = q.name
       val t0 = System.nanoTime()
-      val err = try { materialize(fn(spark, sfDir)); None }
+      val err = try { materialize(q.run(spark, sfDir)); None }
                 catch { case e: Throwable => Some(e.toString.replaceAll("\\s+", " ").take(300)) }
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] $name%-28s $sec%9.3f s" + err.map("  FAILED: " + _).getOrElse(""))
@@ -155,14 +142,14 @@ object Bench {
     val top10 =
       if (rep2Full)
         results.filter(_._3.isEmpty)
-          .filterNot { case (n, _, _) => SparkEntry.demo(n) }
+          .filterNot { case (n, _, _) => demo(n) }
           .sortBy(-_._2).map(_._1)
       else results.filter(_._3.isEmpty).sortBy(-_._2).take(10).map(_._1)
     val rep2Errs = scala.collection.mutable.Map.empty[String, String]
     val rep2 = top10.flatMap { name =>
       val h0 = graft.functions.IndexMemo.hits
       val t0 = System.nanoTime()
-      try { materialize(SparkEntry.queries(name)(spark, sfDir))
+      try { materialize(SparkEntry.query(name).run(spark, sfDir))
             Some(name -> ((System.nanoTime() - t0) / 1e9,
               graft.functions.IndexMemo.hits > h0)) }
       catch { case e: Throwable =>
@@ -199,12 +186,12 @@ object Bench {
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Headline split: `value` (everything run, backward-comparable)
     // plus `value_serving` (scale-representative queries only) and
-    // `value_demo` (the SparkEntry.demo oracle-portability vehicles,
+    // `value_demo` (the demo-tier oracle-portability vehicles,
     // whose shapes deliberately don't scale). The gate number for
     // round-over-round comparison is value_serving — see BASELINE.md —
     // and the artifact records the demo-set membership it excluded, so
     // a SKIP_DEMO total is self-describing without reading the source.
-    val demoRun = results.filter { case (n, _, _) => SparkEntry.demo(n) }
+    val demoRun = results.filter { case (n, _, _) => demo(n) }
     val valueDemo = demoRun.map(_._2).sum
     val valueServing = total - valueDemo
     val demoJson = demoRun.map(_._1).sorted.map(jstr).mkString("[", ",", "]")
@@ -220,7 +207,7 @@ object Bench {
     val min2Json = min2.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val valueServingMin2 = min2
-      .filterNot { case (n, _) => SparkEntry.demo(n) }.map(_._2).sum
+      .filterNot { case (n, _) => demo(n) }.map(_._2).sum
     // End-of-suite probe: the same fixed work re-timed after the bench
     // generated its own load has died down; probe_ratio far from 1
     // (or either probe far from the committed artifacts' band) marks a

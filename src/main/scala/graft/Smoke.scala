@@ -6,20 +6,7 @@ import org.apache.spark.sql.SparkSession
   * the row count plus a readable slice of the report. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // Sketch UDAF aggregations (KLL/theta/HLL) run under
-      // ObjectHashAggregate, whose sort-based fallback triggers at a
-      // DEFAULT of 128 distinct groups per task -- our per-day slice
-      // sketches exceed that on every map partition, silently turning
-      // a hash aggregation into a full sort of the fact (measured
-      // super-linear at the 32x scale probe, r15). 64k groups of
-      // KB-sized sketch buffers is comfortably in-memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("upsert")) upsertProbe(spark)
     else if (args.headOption.contains("stream")) streamProbe(spark)
@@ -34,7 +21,7 @@ object Smoke {
     else if (args.headOption.contains("curate")) curateProbe(spark,
       args.lift(1).getOrElse("/root/testdata/sf0.001"))
     else if (args.headOption.contains("explain")) {
-      val df = SparkEntry.queries(args(1))(spark, args.lift(2).getOrElse("/root/testdata/sf0.01"))
+      val df = SparkEntry.query(args(1)).run(spark, args.lift(2).getOrElse("/root/testdata/sf0.01"))
       df.write.format("noop").mode("overwrite").save()
       println(df.queryExecution.executedPlan.toString)
     }
@@ -45,7 +32,7 @@ object Smoke {
       // (localCheckpoint per stage), so the job count IS the critical
       // path being optimized. Queries run in order in ONE JVM (memo
       // sharing mirrors the suite); pass a single query for a cold read.
-      val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+      val queries = SparkEntry.select(Some(args(1)))
       val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
       val verbose = sys.env.get("SMOKE_JOBS_VERBOSE").contains("1")
       val jobs = new java.util.concurrent.atomic.AtomicLong
@@ -66,13 +53,14 @@ object Smoke {
             println(f"[job] ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s  ${sites.getOrDefault(je.jobId, "")}")
           }
       })
-      names.foreach { q =>
+      queries.foreach { q =>
         val j0 = jobs.get(); val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        // listener events are async — give the bus a beat to drain
-        Thread.sleep(300)
-        println(f"[jobs] $q%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s  ${jobs.get() - j0}%5d jobs")
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        // listener events are async — wait until the bus has delivered
+        // every job start posted so far
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        println(f"[jobs] ${q.name}%-28s $sec%8.3f s  ${jobs.get() - j0}%5d jobs")
       }
     }
     else if (args.headOption.contains("plans")) {
@@ -81,17 +69,16 @@ object Smoke {
       // count, join strategy, PushedFilters/ReadSchema — as files a
       // reviewer without Spark can diff). Queries: comma-separated names
       // in args(1); outDir args(2); sf dir args(3).
-      val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+      val queries = SparkEntry.select(Some(args(1)))
       val outDir = java.nio.file.Paths.get(args.lift(2).getOrElse("plans/r19"))
       val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
       java.nio.file.Files.createDirectories(outDir)
-      names.foreach { q =>
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
+      queries.foreach { q =>
+        val txt = q.run(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(outDir.resolve(s"$q.txt"),
-          txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[plans] wrote ${outDir.resolve(s"$q.txt")} (${txt.length} chars)")
+        val out = outDir.resolve(s"${q.name}.txt")
+        java.nio.file.Files.write(out, txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        println(s"[plans] wrote $out (${txt.length} chars)")
       }
     }
     else if (args.headOption.contains("audit")) auditProbe(spark,
@@ -115,44 +102,8 @@ object Smoke {
     }
     else if (args.headOption.contains("compactscale")) compactScaleProbe(spark,
       args.lift(1).map(_.toLong).getOrElse(200000L))
-    else if (args.headOption.contains("ivfrqlab")) ivfRqLab(spark,
-      args.lift(1).getOrElse("/root/testdata/sf0.001"))
-    else if (args.headOption.contains("graphlab")) graphLab(spark,
-      args.lift(1).getOrElse("/root/testdata/sf0.001"))
-    else if (args.headOption.contains("graphbuildprof")) {
-      // stage-level timing of the kNN-graph BUILD (r17 task 4 lab)
-      val stages = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long, Long)]()
-      val stageDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val d = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
-          js.stageIds.foreach(id => stageDesc.put(id, d))
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s).getOrElse(0L)
-          val m = si.taskMetrics
-          val site = Option(stageDesc.get(si.stageId)).filter(_.nonEmpty)
-            .getOrElse(si.name.trim.take(60))
-          stages.put(si.stageId, (site.take(90), ms,
-            m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled + m.diskBytesSpilled))
-        }
-      })
-      val t0 = System.nanoTime()
-      val n = graft.functions.Similarity.knnGraph(
-        Tables.embeddings(spark, args.lift(1).getOrElse("/root/testdata/sf0.01")), 10, 2).count()
-      println(f"GRAPHBUILD total=${(System.nanoTime() - t0) / 1e9}%.1f s rows=$n")
-      import scala.jdk.CollectionConverters._
-      stages.asScala.toSeq.sortBy(-_._2._2).take(20).foreach { case (id, (nm, ms, sw, sp)) =>
-        println(f"STAGE $id%4d ${ms / 1000.0}%7.1fs shufW=${sw / 1e9}%6.2fGB spill=${sp / 1e9}%6.2fGB $nm")
-      }
-    }
     else if (args.headOption.contains("count")) {
-      val n = SparkEntry.queries(args(1))(spark,
+      val n = SparkEntry.query(args(1)).run(spark,
         args.lift(2).getOrElse("/root/testdata/sf0.01")).count()
       println(s"COUNT[${args(1)}]=$n")
     }
@@ -179,57 +130,6 @@ object Smoke {
       println("DETAILS=" + df.select("details").head().getString(0).take(600))
     }
     spark.stop()
-  }
-
-  /** Parameter-sweep lab for the kNN-graph serving read (r17 task 2):
-    * measures recall@10 of `knnGraphSearch` against the brute-force
-    * cosine truth across (hops, beam, kGraph, rounds), plus the
-    * exact-L2-scan ceiling (the walk ranks by L2; truth is cosine —
-    * no L2 walk can beat the exact L2 scan's overlap with the cosine
-    * top-k). */
-  private def graphLab(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.Similarity
-    val emb = Tables.embeddings(spark, dir)
-    val pred = col("vec_id") % 100 === 0
-    val n = emb.count()
-    val truth = Similarity.bruteForceTopKMemo(emb, pred, 10)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
-    val nTruth = truth.count()
-    def rec(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val hits = df.filter(col("rnk") <= 10)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id")).count()
-      println(f"GRAPHLAB n=$n%-7d cfg=$label%-30s recall=${hits.toDouble / nTruth}%.3f sec=${(System.nanoTime() - t0) / 1e9}%7.2f")
-    }
-    // exact L2 scan = the ceiling of any L2-ranked walk
-    rec("L2_exact_ceiling") {
-      val e = Similarity.quantized(emb).localCheckpoint()
-      val q = e.filter(pred).select(col("vec_id").as("query_id"), col("q").as("qa"))
-      val c = e.select(col("vec_id").as("neighbor_id"), col("q").as("ca"))
-      val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          expr("aggregate(zip_with(qa, ca, (x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v)").as("adist"))
-      scored.withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("adist"), col("neighbor_id"))))
-    }
-    val hA = Similarity.autoGraphHops(n)
-    val bA = Similarity.autoGraphBeam(n)
-    def recG(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val hits = df.filter(pred)
-        .select(col("vec_id").as("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id")).count()
-      println(f"GRAPHLAB n=$n%-7d cfg=$label%-30s recall=${hits.toDouble / nTruth}%.3f sec=${(System.nanoTime() - t0) / 1e9}%7.2f")
-    }
-    recG("graph_r2 (node lists)")(Similarity.knnGraph(emb, 10, 2))
-    recG("graph_r3 (node lists)")(Similarity.knnGraph(emb, 10, 3))
-    rec(s"search_r2_h${hA}_b$bA (gated)")(
-      Similarity.knnGraphSearch(emb, pred, 10, 10, 2, hA, bA))
-    rec(s"search_r3_h${hA}_b$bA")(
-      Similarity.knnGraphSearch(emb, pred, 10, 10, 3, hA, bA))
   }
 
   /** Small-files probe-cost measurement (`Smoke compactscale [rows]`,
@@ -295,56 +195,6 @@ object Smoke {
       println(f"COMPACTSCALE gens=$gens%-3d files_before=$f0%-4d files_after=$f1%-3d " +
         f"probe_before=$b1%6.2f/$b2%5.2f s probe_after=$a1%6.2f/$a2%5.2f s")
     }
-  }
-
-  /** Parameter-sweep lab for the IVF-RQ serving point (r17 task 1,
-    * extended r18 with the L8x16 / L8x32 / L6x64 rows): measures
-    * recall@10 against the brute-force truth across stage/probe
-    * settings, so the gated operating point is picked from data
-    * rather than guessed. Throwaway-cheap: every row retrains at its
-    * own params (distinct memo keys). */
-  private def ivfRqLab(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.Similarity
-    val emb = Tables.embeddings(spark, dir)
-    val pred = col("vec_id") % 100 === 0
-    val n = emb.count()
-    val c = Similarity.autoIvfCells(n)
-    val truth = Similarity.bruteForceTopKMemo(emb, pred, 10)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
-    val nTruth = truth.count()
-    def rec(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val hits = df.filter(col("rnk") <= 10)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(truth, Seq("query_id", "neighbor_id")).count()
-      println(f"IVFRQLAB n=$n%-7d cells=$c%-3d cfg=$label%-28s recall=${hits.toDouble / nTruth}%.3f sec=${(System.nanoTime() - t0) / 1e9}%7.2f")
-    }
-    val sp = math.max(2, math.ceil(math.sqrt(c.toDouble)).toInt).min(c)
-    rec(s"ivfrq_L4x64_p$sp (r17 gated)")(
-      Similarity.ivfRqTopKMulti(emb, pred, 10, c, sp, Seq.fill(4)(64), 1))
-    // the SERVED point reads AnnPolicy.ivfrqAutoKs (r19, VERDICT r18
-    // item: the exact literal-drift class the config killed elsewhere
-    // survived in this diagnostic) — the other rows are deliberate
-    // non-served sweep points
-    rec(s"ivfrq_L${graft.functions.AnnPolicy.ivfrqAutoKs.length}" +
-        s"x${graft.functions.AnnPolicy.ivfrqAutoKs.head}_p$sp (served)")(
-      Similarity.ivfRqTopKMulti(emb, pred, 10, c, sp,
-        graft.functions.AnnPolicy.ivfrqAutoKs, 1))
-    rec(s"ivfrq_L8x32_p$sp")(
-      Similarity.ivfRqTopKMulti(emb, pred, 10, c, sp, Seq.fill(8)(32), 1))
-    rec(s"ivfrq_L6x64_p$sp")(
-      Similarity.ivfRqTopKMulti(emb, pred, 10, c, sp, Seq.fill(6)(64), 1))
-    rec(s"ivfpq_m2k4_p2 (gated)")(
-      Similarity.ivfpqTopK(emb, pred, 10, c, math.min(2, c), 2, 4, 1))
-    rec(s"ivfpq_m16k64_p$sp")(
-      Similarity.ivfpqTopK(emb, pred, 10, c, sp, 16, 64, 1))
-    rec(s"ivfpq_m16k64_p2")(
-      Similarity.ivfpqTopK(emb, pred, 10, c, math.min(2, c), 16, 64, 1))
-    rec(s"ivfsq8_p2 (gated)")(
-      Similarity.ivfSq8TopK(emb, pred, 10, c, math.min(2, c), 2))
-    rec(s"ivfsq8_p$sp")(
-      Similarity.ivfSq8TopK(emb, pred, 10, c, sp, 2))
   }
 
   /** Empirical scale validation (VERDICT r7 #2): generate synthetic
@@ -797,16 +647,17 @@ object Smoke {
       nLabels = 20 * factor), "embeddings")
   }
 
-  /** Plan audit over EVERY SparkEntry query: shuffle exchanges, scans,
+  /** Plan audit over EVERY board query: shuffle exchanges, scans,
     * whole-stage-codegen spans, broadcast joins, and pushed filters —
     * the per-query evidence behind the 100 TB shuffle-budget story.
     * Counts come from the pre-execution physical plan (stable, not
     * AQE-rewritten), so they are comparable across runs. */
   private def auditProbe(spark: SparkSession, sfDir: String): Unit = {
     println(f"${"query"}%-28s ${"exch"}%5s ${"bcast"}%5s ${"scan"}%5s ${"wscg"}%5s ${"pushed"}%6s")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.board.sortBy(_.name).foreach { q =>
+      val name = q.name
       try {
-        val df = fn(spark, sfDir)
+        val df = q.run(spark, sfDir)
         // structural counts from the PRE-execution plan (stable, the
         // same numbers ShuffleBudgetSpec pins)
         val lines = df.queryExecution.executedPlan.toString.linesIterator.toSeq
@@ -901,18 +752,17 @@ object Smoke {
     // comma-separated names time a FAMILY sequentially in one JVM —
     // the only way to observe cross-query IndexMemo sharing (each name
     // alone in a fresh JVM retrains the shared interior)
-    val names = name.split(",").map(_.trim).filter(_.nonEmpty)
+    val queries = SparkEntry.select(Some(name))
     (1 to reps).foreach { i =>
       var total = 0.0
-      names.foreach { n =>
+      queries.foreach { q =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         total += sec
-        println(f"TIME[$n][$i] $sec%.2f s")
+        println(f"TIME[${q.name}][$i] $sec%.2f s")
       }
-      if (names.length > 1) println(f"TIME[family][$i] $total%.2f s")
+      if (queries.length > 1) println(f"TIME[family][$i] $total%.2f s")
     }
   }
 

@@ -1,50 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each `SparkEntry.board` query's result →
+  * parquet, plus oracle_sql.json (the whole board's oracles, keys
+  * sorted), for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Sketch UDAF aggregations (KLL/theta/HLL) run under
-      // ObjectHashAggregate, whose sort-based fallback triggers at a
-      // DEFAULT of 128 distinct groups per task -- our per-day slice
-      // sketches exceed that on every map partition, silently turning
-      // a hash aggregation into a full sort of the fact (measured
-      // super-linear at the 32x scale probe, r15). 64k groups of
-      // KB-sized sketch buffers is comfortably in-memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // Builder-side iteration aid: run only the named queries (comma-sep;
+    // an unknown name throws). The driver never sets this, so the gate
+    // always sees the full surface.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Round-open drift guard: an input TYPE change must announce itself
     // here, not as 60 AnalysisExceptions at the correctness gate.
     // Footer-only, so this costs milliseconds.
     Tables.warnDrift(spark, sfDir, "verify")
-    // Builder-side iteration aid: run only the named queries (comma-sep).
-    // The driver never sets this, so the gate always sees the full surface.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
-    def q(s: String): String = Json.str(s)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.board.sortBy(_.name)
+      .map(q => s"${Json.str(q.name)}: ${Json.str(q.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (no UDFs), so they inline into whole-stage codegen and scale as pure
   * map-side work — no shuffle at any size.
   *
-  * Every operator has an exactly-matching DuckDB oracle (SparkEntry):
+  * Every operator has an exactly-matching DuckDB oracle (TextQueries):
   * token boundaries, regex classes, and arithmetic are chosen to be
   * engine-portable (int-division-free, no post-FP rounding).
   */

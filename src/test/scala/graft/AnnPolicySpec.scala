@@ -53,11 +53,11 @@ class AnnPolicySpec extends AnyFunSuite {
 
   test("certified floors ARE the min of the per-SF half-measured floors (no hand-sync drift)") {
     // AnnPolicy.floorMilli is documented as the minimum of
-    // SparkEntry.perSfQuantFloors across the gated SFs; a re-point
+    // SimilarityQueries.perSfQuantFloors across the gated SFs; a re-point
     // that updates one table and not the other mis-certifies the
     // policy surface with no oracle to catch it (both sides are
     // engine constants) — this pin closes that gap.
-    val perSf = SparkEntry.perSfQuantFloors.values.toSeq
+    val perSf = graft.board.SimilarityQueries.perSfQuantFloors.values.toSeq
     val quantMin: Map[String, Long] = perSf.flatten
       .groupBy(_._1)
       .map { case (m, fs) =>

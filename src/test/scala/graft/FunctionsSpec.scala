@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Dedup, IndexMemo, Similarity, TextAnalysis}
@@ -292,7 +293,7 @@ class NormalizeTextSpec extends SparkSpec {
 
 class ApproxDistinctSpec extends SparkSpec {
   test("HLL approx distinct within documented bound at sf0.01 (gated flags)") {
-    val r = SparkEntry.queries("q_approx_distinct")(spark, "/root/testdata/sf0.01").head()
+    val r = SparkEntry.query("q_approx_distinct").run(spark, "/root/testdata/sf0.01").head()
     // the within-bound flags ARE the gate (|approx-exact| <= 10% of
     // exact); the DuckDB oracle hashes them against literal 1s
     assert(r.getAs[Long]("vendors_ok") == 1L,
@@ -1371,18 +1372,6 @@ class DedupSpec extends SparkSpec {
       override def onFailure(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    def drainAndRead(): Int = {
-      // listener events are delivered async; wait until the count is
-      // stable for a beat (bounded, deterministic on an idle session)
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        if (actions == last) stable += 1 else { stable = 0; last = actions }
-      }
-      actions
-    }
     def run(rpc: Int): (Map[Long, Long], Int) = {
       actions = 0
       spark.listenerManager.register(ql)
@@ -1394,7 +1383,9 @@ class DedupSpec extends SparkSpec {
         val got = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"),
             partitions = 1, roundsPerCheck = rpc)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        (got, drainAndRead())
+        // listener events are delivered async, on the shared bus
+        ListenerBus.drain(spark.sparkContext)
+        (got, actions)
       } finally spark.listenerManager.unregister(ql)
     }
     val (perRound, actsPerRound) = run(1)

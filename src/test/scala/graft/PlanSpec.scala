@@ -188,7 +188,7 @@ class PlanSpec extends SparkSpec {
     // audit must read it once (one fk projection through a left-join
     // chain + one aggregate), not once per relation side — at 100 TB
     // the fact scan IS the query's cost
-    val p = plan(SparkEntry.queries("q_ref_integrity")(spark, sf))
+    val p = plan(SparkEntry.query("q_ref_integrity").run(spark, sf))
     val liScans = p.linesIterator.count(l =>
       l.contains("Scan parquet") && l.contains("lineitem.parquet"))
     assert(liScans == 1, s"lineitem must scan once, got $liScans:\n$p")

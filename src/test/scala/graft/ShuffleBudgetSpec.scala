@@ -12,7 +12,7 @@ class ShuffleBudgetSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def shuffles(name: String): Int =
-    SparkEntry.queries(name)(spark, sf)
+    SparkEntry.query(name).run(spark, sf)
       .queryExecution.executedPlan.toString
       .linesIterator.count(l => l.contains("Exchange hashpartitioning")
         || l.contains("Exchange rangepartitioning")

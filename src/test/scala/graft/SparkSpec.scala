@@ -7,21 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * run sequentially under sbt's default test execution). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Sketch UDAF aggregations (KLL/theta/HLL) run under
-      // ObjectHashAggregate, whose sort-based fallback triggers at a
-      // DEFAULT of 128 distinct groups per task -- our per-day slice
-      // sketches exceed that on every map partition, silently turning
-      // a hash aggregation into a full sort of the fact (measured
-      // super-linear at the 32x scale probe, r15). 64k groups of
-      // KB-sized sketch buffers is comfortably in-memory.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

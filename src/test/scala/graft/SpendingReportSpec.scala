@@ -135,7 +135,7 @@ class SpendingReportSpec extends SparkSpec {
 
   test("exact-moment variance agrees with Spark's var_samp to FP tolerance") {
     val sf = "/root/testdata/sf0.001"
-    val ours = SparkEntry.queries("q_spend_stats")(spark, sf).collect()
+    val ours = SparkEntry.query("q_spend_stats").run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getAs[Double]("mean_amount"), r.getAs[Double]("var_amount"))).toMap
     val builtin = Tables.transactions(spark, sf).groupBy($"category")
       .agg(org.apache.spark.sql.functions.avg($"amount").as("m"),
@@ -151,7 +151,7 @@ class SpendingReportSpec extends SparkSpec {
 
   test("approx_percentile rank-bound flags all pass (gated against literal-1 oracle)") {
     val sf = "/root/testdata/sf0.001"
-    val rows = SparkEntry.queries("q_approx_percentiles")(spark, sf).collect()
+    val rows = SparkEntry.query("q_approx_percentiles").run(spark, sf).collect()
     assert(rows.nonEmpty)
     // the ok-flags encode the sketch's documented rank guarantee
     // (count(< v) <= (p+δ)n AND count(<= v) >= (p-δ)n, δ = 0.005);

@@ -10,7 +10,7 @@ class VariantSpec extends SparkSpec {
 
   test("variant_get extraction matches the JSON-string path bit-for-bit") {
     def canon(name: String) =
-      SparkEntry.queries(name)(spark, sf).collect()
+      SparkEntry.query(name).run(spark, sf).collect()
         .map(r => (r.getDate(0).toString, r.getDouble(1), r.getLong(2)))
         .sortBy(_._1).toSeq
     val v = canon("q_variant_extract")

@@ -34,7 +34,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     ap.add_argument("--expect", type=int, default=None,
-                    help="expected number of gated queries (SparkEntry.queries size)")
+                    help="expected number of gated queries (SparkEntry.board size)")
     ap.add_argument("--verify-dir", default=None,
                     help="a Verify outDir; its oracle_sql.json gives the expected size")
     args = ap.parse_args()
