@@ -650,8 +650,12 @@ object Smoke {
   /** Plan audit over EVERY board query: shuffle exchanges, scans,
     * whole-stage-codegen spans, broadcast joins, and pushed filters —
     * the per-query evidence behind the 100 TB shuffle-budget story.
-    * Counts come from the pre-execution physical plan (stable, not
-    * AQE-rewritten), so they are comparable across runs. */
+    * exch, bcast, scan and pushed come from the pre-execution physical
+    * plan (stable, not AQE-rewritten), so they are comparable across
+    * runs; wscg is read from the AQE final plan and can differ by a
+    * span between runs of the same code (seen on q_dup_triangles and
+    * q_minhash_probe_store at sf0.01), so a one-span wscg diff is not
+    * a plan change. */
   private def auditProbe(spark: SparkSession, sfDir: String): Unit = {
     println(f"${"query"}%-28s ${"exch"}%5s ${"bcast"}%5s ${"scan"}%5s ${"wscg"}%5s ${"pushed"}%6s")
     SparkEntry.board.sortBy(_.name).foreach { q =>

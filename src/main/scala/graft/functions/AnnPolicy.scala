@@ -145,10 +145,15 @@ object AnnPolicy {
   private val h = Sym("h"); private val bm = Sym("bm")
   private val b16 = Sym("b16")
 
-  /** A rung's serve function: (embeddings, queryPred, k, env) →
+  /** A rung's serve function: (embeddings, queryPred, k, env, cap) →
     * (query_id, rnk, neighbor_id, …) at the rung's operating point;
-    * `env` is the corpus's [[env]] map (auto cells, probes, hops). */
-  type Serve = (DataFrame, Column, Int, Map[String, Long]) => DataFrame
+    * `env` is the corpus's [[env]] map (auto cells, probes, hops) and
+    * `cap` the driver-resident corpus cap the sq8 and ivf rungs take
+    * (`Similarity.localServeCap`; the other rungs ignore it). */
+  trait Serve {
+    def apply(e: DataFrame, p: Column, k: Int, env: Map[String, Long],
+              cap: Long = Similarity.localServeCap): DataFrame
+  }
 
   /** One ANN rung: its harness/query method name, the cross-scale
     * CERTIFIED recall floor in milli-recall (the minimum of the per-SF
@@ -168,38 +173,38 @@ object AnnPolicy {
   val rungs: Seq[AnnRung] = Seq(
     // bucket + `bits` Hamming-1 probes, each a b16-sized bucket scan
     AnnRung("lsh", 350L, q * L(harnessLshBits + 1) * b16,
-      (e, p, k, _) => lshTopK(e, p, k, harnessLshBits)),
+      (e, p, k, _, _) => lshTopK(e, p, k, harnessLshBits)),
     // `tables` tables, 1 bucket each
     AnnRung("lsh_multi", 380L, q * L(harnessLshTables) * b16,
-      (e, p, k, _) => lshTopKMulti(e, p, k, harnessLshBits, harnessLshTables)),
+      (e, p, k, _, _) => lshTopKMulti(e, p, k, harnessLshBits, harnessLshTables)),
     // cells centroid distances + probed-cell scans
     AnnRung("ivf", 420L,
       q * L(harnessIvfCells) + q * L(harnessIvfProbe) * b16,
-      (e, p, k, _) => ivfTopK(e, p, k, harnessIvfCells, harnessIvfProbe)),
+      (e, p, k, _, cap) => ivfTopK(e, p, k, harnessIvfCells, harnessIvfProbe, cap = cap)),
     AnnRung("pq_hi", 220L, L(pqHiM) * q * n,
-      (e, p, k, _) => pqTopK(e, p, k, pqHiM, pqHiKsub, 1)),
+      (e, p, k, _, _) => pqTopK(e, p, k, pqHiM, pqHiKsub, 1)),
     AnnRung("sq8", 700L, L(dims) * q * n,
-      (e, p, k, _) => sq8TopK(e, p, k)),
+      (e, p, k, _, cap) => sq8TopK(e, p, k, cap = cap)),
     AnnRung("sq8_rerank", 900L, L(dims) * q * n + L(rerankPool) * q,
-      (e, p, k, _) => sq8TopKRerank(e, p, k, rerankPool)),
+      (e, p, k, _, cap) => sq8TopKRerank(e, p, k, rerankPool, cap)),
     AnnRung("ivfpq_auto", 170L,
       q * c + q * p2 * (n / c) * L(ivfpqAutoM),
-      (e, p, k, env) => ivfpqTopK(e, p, k, env("c").toInt, env("p2").toInt,
+      (e, p, k, env, _) => ivfpqTopK(e, p, k, env("c").toInt, env("p2").toInt,
         ivfpqAutoM, ivfpqAutoKsub, 1)),
     // L LUT lookups per candidate in the probed cells
     AnnRung("ivfrq_auto", 85L,
       q * c + q * p2 * (n / c) * L(ivfrqAutoKs.length),
-      (e, p, k, env) => ivfRqTopKMulti(e, p, k, env("c").toInt,
+      (e, p, k, env, _) => ivfRqTopKMulti(e, p, k, env("c").toInt,
         env("p2").toInt, ivfrqAutoKs, 1)),
     // the node's own list: one lookup
     AnnRung("knn_graph", 57L, q * L(kGraph),
-      (e, p, k, _) => knnGraph(e, kGraph, graphRounds)
+      (e, p, k, _, _) => knnGraph(e, kGraph, graphRounds)
         .join(e.filter(p).select(col("vec_id")), Seq("vec_id"), "left_semi")
         .filter(col("rnk") <= k)
         .withColumnRenamed("vec_id", "query_id")),
     // beam walk: hops x beam nodes, kGraph edges each, + entry seeding
     AnnRung("knn_graph_search", 310L, q * (h * bm * L(kGraph) + bm),
-      (e, p, k, env) => knnGraphSearch(e, p, k, kGraph, graphRounds,
+      (e, p, k, env, _) => knnGraphSearch(e, p, k, kGraph, graphRounds,
         hops = env("h").toInt, beam = env("bm").toInt)))
 
   /** The policy's parameter environment for a corpus of `n` vectors

@@ -1257,6 +1257,99 @@ object Similarity {
       .select(col("vec_id"), col("s"), col("_m.code").as("code"))
   }
 
+  /** The quantized corpus (`quantized(e)`'s rows: every input column
+    * plus `q` and `nq`) resident on the driver, for the sq8 and ivf
+    * serve rungs below `localServeCap`. `frame` is a LocalRelation, so
+    * a filter or projection over it folds on the driver
+    * (ConvertToLocalRelation) and a predicate picks rows with no Spark
+    * job; `ids`, `q` and `nq` hold the same rows as arrays, the
+    * operands of the driver kernels. */
+  private[graft] final class LocalCorpus(val frame: DataFrame, val ids: Array[Long],
+                                         val q: Array[Array[Long]], val nq: Array[Long]) {
+    /** Positions of the rows `pred` selects, in corpus order. */
+    def matching(pred: Column): Array[Int] = {
+      val hit = frame.filter(pred).select(col("vec_id")).collect().map(_.getLong(0)).toSet
+      ids.indices.filter(i => hit(ids(i))).toArray
+    }
+
+    /** `sq8CodeTable`'s codes and their squared norms, row-aligned:
+      * per-dim (mn, mx) over every row holding the dim, then
+      * `(x − mn)·255 div (mx − mn)`, 0 on a constant dim — the same
+      * Long algebra, overflow-checked like ANSI Spark's. */
+    lazy val sq8: (Array[Array[Long]], Array[Long]) = {
+      val width = if (q.isEmpty) 0 else q.map(_.length).max
+      val mn = Array.tabulate(width)(d => q.filter(_.length > d).map(_(d)).min)
+      val mx = Array.tabulate(width)(d => q.filter(_.length > d).map(_(d)).max)
+      val c = q.map(_.zipWithIndex.map { case (x, d) =>
+        if (mx(d) > mn(d))
+          Math.multiplyExact(Math.subtractExact(x, mn(d)), 255L) / Math.subtractExact(mx(d), mn(d))
+        else 0L })
+      (c, c.map(v => dotLocal(v, v)))
+    }
+  }
+
+  /** The corpus `e` (already quantized) as a [[LocalCorpus]], or None
+    * when it is not below `cap` vectors × dims — then the Spark plans
+    * serve it. Built once per (session, corpus plan, cap) by ONE
+    * bounded collect of at most `cap / AnnPolicy.dims + 1` rows, so the
+    * driver never holds much more than the cap. A corpus the kernels
+    * could not replay exactly (a non-BIGINT, null or repeated `vec_id`,
+    * a null vector or element) is served by the Spark plans too. */
+  private[graft] def localCorpus(e: DataFrame, cap: Long = localServeCap): Option[LocalCorpus] =
+    IndexMemo.of[Option[LocalCorpus]]("local_corpus", e, cap) {
+      import org.apache.spark.sql.types.LongType
+      val schema = e.schema
+      val rowCap = (math.max(0L, cap) / AnnPolicy.dims).min(Int.MaxValue - 1L).toInt
+      val (iId, iQ, iN) = (schema.fieldIndex("vec_id"), schema.fieldIndex("q"), schema.fieldIndex("nq"))
+      lazy val rows = e.limit(rowCap + 1).collect()
+      lazy val ids = rows.map(_.getLong(iId))
+      lazy val q = rows.map(_.getSeq[Long](iQ).toArray)
+      val fits = schema(iId).dataType == LongType && rows.length <= rowCap &&
+        rows.forall(r => !r.isNullAt(iId) && !r.isNullAt(iQ) && !r.getSeq[Any](iQ).contains(null)) &&
+        ids.distinct.length == ids.length && q.map(_.length.toLong).sum < cap
+      if (!fits) None
+      else Some(new LocalCorpus(e.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+        ids, q, rows.map(_.getLong(iN))))
+    }
+
+  /** `DotI64` on the driver: the plain (wrapping) Long sum over the
+    * shorter length. */
+  private def dotLocal(a: Array[Long], b: Array[Long]): Long = {
+    val n = math.min(a.length, b.length)
+    var acc = 0L; var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** Positions of the `k` smallest of candidates `0 until n` under the
+    * strict total order `lt`, ascending: `TopK`'s bounded heap on the
+    * driver (the order is total, so the pick is the aggregate's). */
+  private def smallestK(n: Int, k: Int)(lt: (Int, Int) => Boolean): Array[Int] = {
+    val top = new Array[Int](math.max(0, math.min(k, n)))
+    var size = 0; var i = 0
+    while (i < n && top.nonEmpty) {
+      if (size < top.length || lt(i, top(size - 1))) {
+        var j = math.min(size, top.length - 1)
+        while (j > 0 && lt(i, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+        top(j) = i
+        size = math.min(size + 1, top.length)
+      }
+      i += 1
+    }
+    top
+  }
+
+  /** A driver kernel's (query_id, rnk, neighbor_id, score) rows as a
+    * LocalRelation frame: projections over it and its collect run no
+    * Spark job either. */
+  private def localAnswer(lc: LocalCorpus, rows: Seq[org.apache.spark.sql.Row],
+                          score: String, scoreType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    lc.frame.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      Seq("query_id", "rnk", "neighbor_id").map(StructField(_, LongType)) :+
+        StructField(score, scoreType)))
+  }
+
   /** Scalar quantization (SQ8 — FAISS's ScalarQuantizer QT_8bit shape):
     * per-dimension affine 8-bit codes, `c = (x - mn_d) * 255 div
     * (mx_d - mn_d)` over the exact integer quantized grid, with the
@@ -1272,10 +1365,12 @@ object Similarity {
     * norm. Memoized per corpus plan like the other trained indexes;
     * the bounds (dims-sized — metadata) collect to the driver and ride
     * the code construction as literals, so encoding is ONE map-side
-    * pass over the vector scan: no shuffle at any corpus size. */
-  def sq8CodeTable(embeddings: DataFrame): DataFrame = {
+    * pass over the vector scan: no shuffle at any corpus size. Below
+    * `cap` the codes come from the driver-resident corpus
+    * (`LocalCorpus.sq8`) as a LocalRelation: no job at all. */
+  def sq8CodeTable(embeddings: DataFrame, cap: Long = localServeCap): DataFrame = {
     val e = ensureQuantized(embeddings)
-    IndexMemo.of[DataFrame]("sq8_codes", e, ()) {
+    IndexMemo.of[DataFrame]("sq8_codes", e, cap)(localCorpus(e, cap).fold {
       val bounds = e.select(posexplode(col("q")).as(Seq("d", "x")))
         .groupBy(col("d")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
         .orderBy(col("d")).collect()
@@ -1291,7 +1386,15 @@ object Similarity {
         .withColumn("ncc", normQ("c"))
         .select(col("vec_id"), col("c"), col("ncc"))
         .localCheckpoint()
-    }
+    } { lc =>
+      import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+      val (c, ncc) = lc.sq8
+      e.sparkSession.createDataFrame(
+        java.util.Arrays.asList(lc.ids.indices.map(i =>
+          org.apache.spark.sql.Row(lc.ids(i), c(i).toSeq, ncc(i))): _*),
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("c", ArrayType(LongType)), StructField("ncc", LongType))))
+    })
   }
 
   /** SQ8 top-k by symmetric code-space squared distance: both sides
@@ -1306,11 +1409,21 @@ object Similarity {
     * every vector store exposes): the predicate restricts the CODE
     * SCAN via a semi join on the filtered corpus ids BEFORE any
     * distance is computed — never post-filtering an unfiltered top-k,
-    * so the k survivors are the true top-k among matching rows. */
+    * so the k survivors are the true top-k among matching rows.
+    * Below `cap` vectors × dims the corpus is driver-resident
+    * (`localCorpus`) and `sq8Local` scores it with the same algebra
+    * and tie-breaks: no Spark job, a LocalRelation answer. */
   def sq8TopK(embeddings: DataFrame, queryPred: Column, k: Int,
-              candPred: Option[Column] = None): DataFrame = {
+              candPred: Option[Column] = None,
+              cap: Long = localServeCap): DataFrame = {
     val e = ensureQuantized(embeddings)
-    val codes = sq8CodeTable(e)
+    localCorpus(e, cap).fold(sq8TopKPlan(e, queryPred, k, candPred, cap))(
+      sq8Local(_, queryPred, k, candPred))
+  }
+
+  private def sq8TopKPlan(e: DataFrame, queryPred: Column, k: Int,
+                          candPred: Option[Column], cap: Long): DataFrame = {
+    val codes = sq8CodeTable(e, cap)
     val qIds = e.filter(queryPred).select(col("vec_id"))
     val q = codes.join(broadcast(qIds), Seq("vec_id"), "left_semi")
       .select(col("vec_id").as("query_id"), col("c").as("qc"), col("ncc").as("qn"))
@@ -1324,14 +1437,33 @@ object Similarity {
       k, "adist")
   }
 
+  /** `sq8TopKPlan` over the driver-resident corpus: each query's
+    * `qn + cn − 2·qc·cc` against every (candPred-selected) other row,
+    * the k smallest by (adist, neighbor_id) — `topKAsc`'s order. */
+  private def sq8Local(lc: LocalCorpus, queryPred: Column, k: Int,
+                       candPred: Option[Column]): DataFrame = {
+    require(k >= 1, s"top_k needs k >= 1, got $k")
+    val (c, ncc) = lc.sq8
+    val cands = candPred.fold(lc.ids.indices.toArray)(lc.matching)
+    val rows = lc.matching(queryPred).toSeq.flatMap { qi =>
+      val m = cands.filter(j => lc.ids(j) != lc.ids(qi))
+      val d = m.map(j => Math.subtractExact(Math.addExact(ncc(qi), ncc(j)),
+        Math.multiplyExact(2L, dotLocal(c(qi), c(j)))))
+      smallestK(m.length, k)((a, b) => d(a) < d(b) || (d(a) == d(b) && lc.ids(m(a)) < lc.ids(m(b))))
+        .zipWithIndex.map { case (a, r) =>
+          org.apache.spark.sql.Row(lc.ids(qi), r + 1L, lc.ids(m(a)), d(a)) }
+    }
+    localAnswer(lc, rows, "adist", org.apache.spark.sql.types.LongType)
+  }
+
   /** SQ8 + exact re-rank: the code-space scan proposes a `pool`-sized
     * candidate set, exact quantized cosine orders the final top-k —
     * the same refine stage as the PQ/RQ/IVFPQ siblings. */
   def sq8TopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
-                    pool: Int): DataFrame = {
+                    pool: Int, cap: Long = localServeCap): DataFrame = {
     require(pool >= k, s"rerank pool $pool must be >= k=$k")
     val e = ensureQuantized(embeddings)
-    exactRerank(e, queryPred, sq8TopK(e, queryPred, pool), k)
+    exactRerank(e, queryPred, sq8TopK(e, queryPred, pool, cap = cap), k)
   }
 
   /** IVF-SQ8 (FAISS's IVF,SQ8): the coarse quantizer partitions the
@@ -1447,6 +1579,18 @@ object Similarity {
     * literal-centroid path" pins it by driving both through `litCap`),
     * so the cap is a pure plan choice. */
   private[graft] val litCentCap = 256
+
+  /** Max corpus size, in vectors × dims (quantized longs), that the
+    * sq8 and ivf serve rungs hold resident on the driver
+    * (`localCorpus`): a corpus below it is collected once per session
+    * and served by driver kernels with no Spark job; at or above it
+    * the Spark plans run. 2^20 is 16,383 vectors of `AnnPolicy.dims`
+    * = 64 dims: 8 MB of quantized longs in the kernels' arrays, as much
+    * again for the sq8 codes, plus the LocalRelation's rows (the input
+    * columns). Like `litCentCap`, a pure plan choice: both sides return
+    * identical rows (LocalServeSpec drives both through the `cap`
+    * parameter of the serve functions). */
+  private[graft] val localServeCap: Long = 1L << 20
 
   private[graft] def fpStage(seeds: DataFrame, vecs: DataFrame,
                       codeName: String, k: Int, iters: Int,
@@ -2151,9 +2295,14 @@ object Similarity {
     * one broadcast-join pass and search cost drops by ~nCells/nProbe.
     * `trainIters` = 0 uses raw corpus seeds as centroids; > 0 runs
     * Lloyd's k-means first. Returns (query_id, rnk, neighbor_id,
-    * cosine). */
+    * cosine). Below `cap` vectors × dims the corpus is driver-resident
+    * (`localCorpus`) and `ivfLocal` assigns, probes and scores it with
+    * the same IEEE cosine and tie-breaks: no Spark job past the trained
+    * centroids' collect. A zero norm (whose cosine divides by zero)
+    * keeps the Spark plan, the reference for that error. */
   def ivfTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-              nCells: Int, nProbe: Int, trainIters: Int = 0): DataFrame = {
+              nCells: Int, nProbe: Int, trainIters: Int = 0,
+              cap: Long = localServeCap): DataFrame = {
     val e = ensureQuantized(embeddings)
     val centroids =
       if (trainIters == 0)
@@ -2165,6 +2314,20 @@ object Similarity {
           .withColumn("cn", expr(
             "aggregate(cv, CAST(0 AS BIGINT), (acc, v) -> acc + v * v)"))
           .select(col("cell_id"), col("cv"), col("cn"))
+    localCorpus(e, cap).flatMap { lc =>
+      val cents =
+        if (trainIters == 0)
+          lc.ids.indices.sortBy(lc.ids(_)).take(nCells).map(i => (lc.ids(i), lc.q(i), lc.nq(i))).toArray
+        else centroids.collect().map(r =>
+          (r.getAs[Number](0).longValue, r.getSeq[Long](1).toArray, r.getLong(2)))
+      if (lc.nq.contains(0L) || cents.exists(_._3 == 0L)) None
+      else Some(ivfLocal(lc, queryPred, k, nProbe, cents))
+    }.getOrElse(ivfTopKPlan(e, queryPred, k, nProbe, centroids))
+  }
+
+  /** `ivfTopK`'s Spark plan over the given (cell_id, cv, cn) centroids. */
+  private def ivfTopKPlan(e: DataFrame, queryPred: Column, k: Int, nProbe: Int,
+                          centroids: DataFrame): DataFrame = {
     def nearestCells(vecs: DataFrame, n: Int): DataFrame = {
       val sims = vecs.crossJoin(broadcast(centroids))
         .withColumn("_sim",
@@ -2204,6 +2367,40 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .dropDuplicates("query_id", "neighbor_id"),
       k, "cosine")
+  }
+
+  /** `ivfTopKPlan` over the driver-resident corpus and the collected
+    * (cell_id, cv, cn) centroids, all norms non-zero. Cells rank by
+    * (sim DESC, cell_id ASC) under Spark's double ordering (NaN
+    * greatest and equal to itself, −0.0 = 0.0): the first is the
+    * assignment's `max_by`, the first `nProbe` the probe window. Each
+    * query's candidates (the probed cells' members but itself, each
+    * once) keep `topKDesc`'s k smallest (−cosine, neighbor_id). */
+  private def ivfLocal(lc: LocalCorpus, queryPred: Column, k: Int, nProbe: Int,
+                       cents: Array[(Long, Array[Long], Long)]): DataFrame = {
+    require(k >= 1, s"top_k needs k >= 1, got $k")
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    def cosine(dot: Long, a: Long, b: Long): Double =
+      dot.toDouble / math.sqrt(a.toDouble * b.toDouble)
+    def cells(i: Int, n: Int): Array[Long] = {
+      val sim = cents.map { case (_, cv, cn) => cosine(dotLocal(lc.q(i), cv), lc.nq(i), cn) }
+      smallestK(cents.length, n) { (a, b) =>
+        val o = compareDoubles(sim(a), sim(b))
+        o > 0 || (o == 0 && cents(a)._1 < cents(b)._1)
+      }.map(cents(_)._1)
+    }
+    val members = lc.ids.indices.groupBy(cells(_, 1).headOption)
+    val rows = lc.matching(queryPred).toSeq.flatMap { qi =>
+      val m = cells(qi, nProbe).flatMap(c => members.getOrElse(Some(c), Nil))
+        .filter(j => lc.ids(j) != lc.ids(qi))
+      val cos = m.map(j => cosine(dotLocal(lc.q(qi), lc.q(j)), lc.nq(qi), lc.nq(j)))
+      smallestK(m.length, k) { (a, b) =>
+        val o = compareDoubles(-cos(a), -cos(b))
+        o < 0 || (o == 0 && lc.ids(m(a)) < lc.ids(m(b)))
+      }.zipWithIndex.map { case (a, r) =>
+        org.apache.spark.sql.Row(lc.ids(qi), r + 1L, lc.ids(m(a)), cos(a)) }
+    }
+    localAnswer(lc, rows, "cosine", org.apache.spark.sql.types.DoubleType)
   }
 
   /** MMR-diversified re-ranking — the RAG retrieval tail: greedy
@@ -2274,17 +2471,18 @@ object Similarity {
 
   /** The frontier's derived-parameter environment for a corpus:
     * `AnnPolicy.env` over the corpus size and the query count. */
-  def annPolicyEnv(embeddings: DataFrame, queryPred: Column): Map[String, Long] = {
-    // Memoized per (corpus plan, predicate SQL) — r19, VERDICT r18
-    // task 4: every annServe call paid TWO count() jobs before
-    // dispatch for integers that change only on ingest; at a serving
-    // cadence that is two cluster jobs per request. Rides IndexMemo
-    // like the trained indexes (collected Longs, fully materialized).
-    IndexMemo.of[Map[String, Long]]("ann_policy_env", embeddings,
-      org.apache.spark.sql.GraftSqlBridge.expression(queryPred).sql) {
-      AnnPolicy.env(embeddings.count(), embeddings.filter(queryPred).count())
+  def annPolicyEnv(embeddings: DataFrame, queryPred: Column,
+                   cap: Long = localServeCap): Map[String, Long] =
+    // Memoized per query-set plan (the FILTERED corpus, like bf_truth
+    // and ann_recall: an expression's `.sql` renders every
+    // functions-API predicate as the same string under Spark 4.1, so
+    // it cannot key the memo). Below `cap` both counts read the
+    // driver-resident corpus — no job; above it, two count() jobs.
+    IndexMemo.of[Map[String, Long]]("ann_policy_env", embeddings.filter(queryPred), cap) {
+      localCorpus(ensureQuantized(embeddings), cap).fold(
+        AnnPolicy.env(embeddings.count(), embeddings.filter(queryPred).count()))(lc =>
+        AnnPolicy.env(lc.ids.length, lc.matching(queryPred).length))
     }
-  }
 
   /** Policy-dispatching serve (r18, VERDICT #6): the executable form of
     * `q_ann_frontier`'s policy read — `AnnPolicy.choose` picks the
@@ -2294,12 +2492,13 @@ object Similarity {
     * cost_units, floor_milli, query_id, rnk, neighbor_id) —
     * method-independent schema, so a re-point or a different winner at
     * a different corpus size is a VALUE change the oracle replays, not
-    * a schema break. */
+    * a schema break. `cap` is the sq8/ivf rungs' `localServeCap`:
+    * below it a warm call (env, rung and answer) runs no Spark job. */
   def annServe(embeddings: DataFrame, queryPred: Column, k: Int,
-               recallFloorMilli: Long): DataFrame = {
-    val env = annPolicyEnv(embeddings, queryPred)
+               recallFloorMilli: Long, cap: Long = localServeCap): DataFrame = {
+    val env = annPolicyEnv(embeddings, queryPred, cap)
     val chosen = AnnPolicy.choose(env, recallFloorMilli)
-    chosen.serve(embeddings, queryPred, k, env)
+    chosen.serve(embeddings, queryPred, k, env, cap)
       .select(lit(chosen.method).as("method"),
         lit(chosen.cost.eval(env)).as("cost_units"),
         lit(chosen.floorMilli).as("floor_milli"),

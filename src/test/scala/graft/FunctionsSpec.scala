@@ -2185,6 +2185,14 @@ class SimilaritySpec extends SparkSpec {
       rows(Similarity.bruteForceTopK(e, otherPred, 10)))
   }
 
+  test("ann_policy_env memo keys on the predicate: q follows the query set") {
+    val e = sf0001
+    val q100 = Similarity.annPolicyEnv(e, col("vec_id") % 100 === 0)("q")
+    val qOther = Similarity.annPolicyEnv(e, otherPred)("q")
+    assert(q100 == e.filter(col("vec_id") % 100 === 0).count())
+    assert(qOther == e.filter(otherPred).count() && qOther != q100)
+  }
+
   test("ivfpq_qd memo keys on the predicate: a second query set gets its own queries") {
     val e = sf0001
     def qids(df: DataFrame) = df.select(col("query_id")).distinct()

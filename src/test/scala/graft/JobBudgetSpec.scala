@@ -3,6 +3,8 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
+import graft.functions.Similarity
 import graft.operators.{ReportUpsert, SpendingReport}
 
 /** Job-count contracts, the sibling of `ShuffleBudgetSpec`: the number
@@ -47,5 +49,21 @@ class JobBudgetSpec extends SparkSpec {
     // 16 = the report's 12 + the upsert's read, merge and write; the
     // nine-way report with its cached row ran 68
     assert(jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx))) == 16)
+  }
+
+  test("annServe on sf0.001: the cold call collects the corpus once; every other call runs no job") {
+    val cold = col("vec_id") % 100 === 0
+    // three memo-cold rounds (IndexMemo keys on the session), each
+    // (cold 400 ‰, cold 700 ‰, warm 700 ‰, warm 400 ‰): only the first
+    // cold call runs a job, the corpus collect, and every round alike
+    val rounds = (1 to 3).map { r =>
+      val e = Tables.embeddings(spark.newSession(), sf)
+      def serve(pred: org.apache.spark.sql.Column, floor: Long) =
+        jobs(Similarity.annServe(e, pred, 10, floor).collect())
+      (serve(cold, 400L), serve(cold, 700L),
+        serve(col("vec_id").isin((1L to 20L).map(_ + 20L * r): _*), 700L),
+        serve(col("vec_id").isin((1L to 20L).map(_ + 100L + 20L * r): _*), 400L))
+    }
+    assert(rounds == Seq.fill(3)((1, 0, 0, 0)), s"per-round job counts: $rounds")
   }
 }

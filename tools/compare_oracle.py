@@ -62,8 +62,18 @@ def close(a, b, tol=1e-9):
         return len(a) == len(b) and all(close(x, y) for x, y in zip(a, b))
     return eq(a, b)
 
+# DuckDB's default memory limit is 80% of RAM. A fixed limit with a temp
+# directory under the output dir lets spillable operators spill to disk
+# and leaves the rest of the machine's memory to the run. The heaviest
+# oracles that pass, q_bpe_apply and q_bpe_fertility, need between 7.4 and
+# 10 GB at sf0.001; q_candidate_stats fails with "failed to pin block"
+# (unspillable state) at any limit a 16 GB host can give, and stays a
+# named FAIL line.
+MEMORY_LIMIT = "10GB"
+
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                 "temp_directory": os.path.join(out_dir, "duckdb_tmp")})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
