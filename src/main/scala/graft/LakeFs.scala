@@ -6,10 +6,9 @@ package graft
   * the Hadoop `FileSystem`/`FileContext` API against the SAME
   * filesystem Spark writes to (r17 ported the OCC sinks off
   * `java.io.File`; r18 hoists the layer here so `Formats` can cross the
-  * same bridge instead of re-growing a local-disk-only copy). Same conf
-  * resolution as `streaming.StoreFs` (which closed the identical r14
-  * gap for the ingest stores): active session's Hadoop conf, bare conf
-  * for session-less callers.
+  * same bridge instead of re-growing a local-disk-only copy). Conf
+  * resolution: active session's Hadoop conf, bare conf for
+  * session-less callers.
   */
 private[graft] object LakeFs {
   import org.apache.hadoop.fs.{FileStatus, Path}

@@ -14,10 +14,6 @@ object Smoke {
       args.lift(2).getOrElse("/root/testdata/sf0.1"), args.lift(3).map(_.toInt).getOrElse(3))
     else if (args.headOption.contains("uploads")) uploadsProbe(spark)
     else if (args.headOption.contains("formats")) formatsProbe(spark)
-    else if (args.headOption.contains("ingest")) ingestProbe(spark)
-    else if (args.headOption.contains("quality")) qualityIngestProbe(spark)
-    else if (args.headOption.contains("media")) mediaIngestProbe(spark)
-    else if (args.headOption.contains("cluster")) clusterIngestProbe(spark)
     else if (args.headOption.contains("curate")) curateProbe(spark,
       args.lift(1).getOrElse("/root/testdata/sf0.001"))
     else if (args.headOption.contains("explain")) {
@@ -88,8 +84,6 @@ object Smoke {
       args.lift(2).map(_.toInt).getOrElse(10))
     else if (args.headOption.contains("annscale")) annScaleProbe(spark,
       args.lift(1).map(_.toLong).getOrElse(2000L))
-    else if (args.headOption.contains("streamscale")) streamScaleProbe(spark,
-      args.lift(1).map(_.toLong).getOrElse(2000L))
     else if (args.headOption.contains("annrecall")) {
       // Per-method measured recall at a given sf dir (the harness the
       // gated q_ann_recall flags and the FunctionsSpec floors read).
@@ -100,8 +94,6 @@ object Smoke {
         .collect().foreach(r => println(
           f"ANNRECALL method=${r.getString(0)}%-14s hits=${r.getLong(1)}%-4d truth=${r.getLong(2)}%-4d recall=${r.getDouble(3)}%.3f"))
     }
-    else if (args.headOption.contains("compactscale")) compactScaleProbe(spark,
-      args.lift(1).map(_.toLong).getOrElse(200000L))
     else if (args.headOption.contains("count")) {
       val n = SparkEntry.query(args(1)).run(spark,
         args.lift(2).getOrElse("/root/testdata/sf0.01")).count()
@@ -130,71 +122,6 @@ object Smoke {
       println("DETAILS=" + df.select("details").head().getString(0).take(600))
     }
     spark.stop()
-  }
-
-  /** Small-files probe-cost measurement (`Smoke compactscale [rows]`,
-    * r18 VERDICT #7): the StoreCompaction scaladoc claims per-file open
-    * + footer cost dominates fragmented probe reads, but no number in
-    * the repo backed it. Fix the TOTAL row count and land the SAME
-    * digest store as 1× / 8× / 64× / 256× `batch=` generations (8 files each —
-    * a streaming sink's per-tick fragmentation); time the ingest-probe
-    * read (a fresh batch's digests anti-joined against the landed
-    * store — `StreamingIngest`'s dedup probe shape) before and after
-    * `compactIngestStore`. Identical rows at every point, so the
-    * before/after delta IS the small-files tax. Two reps each; rep2
-    * removes the FS listing cold-cache component. */
-  private def compactScaleProbe(spark: SparkSession, rows: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.StoreCompaction
-    val base = java.nio.file.Files.createTempDirectory("graft_cscale").toString
-    // fresh digests derived from the SHIFTED id — disjoint from any
-    // landed content, so the anti-join keeps the whole probe batch
-    val probe = graft.sources.Synthetic.documents(spark, 500)
-      .select((col("doc_id") + 10000000L).as("doc_id"))
-      .withColumn("digest", md5(concat(col("doc_id"), lit("_probe"))))
-      .localCheckpoint()
-    def timedProbe(store: String): Double = {
-      val t0 = System.nanoTime()
-      val n = probe.join(
-          spark.read.parquet(s"$store/digests").select(col("digest")),
-          Seq("digest"), "left_anti")
-        .count()
-      require(n == 500, s"probe must survive the anti-join, got $n")
-      (System.nanoTime() - t0) / 1e9
-    }
-    def parquetFiles(store: String): Int =
-      graft.LakeFs.list(s"$store/digests")
-        .flatMap(d => graft.LakeFs.list(d.getPath.toString))
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    // warm-up store: absorb codegen/reader init so the gens=1 row
-    // isn't charged the session's first-parquet-read cost
-    spark.range(8).select(col("id").as("doc_id"), md5(concat(col("id"), lit("w"))).as("digest"))
-      .write.mode("overwrite").parquet(s"$base/warm/digests/batch=0")
-    timedProbe(s"$base/warm"); timedProbe(s"$base/warm")
-    Seq(1, 8, 64, 256).foreach { gens =>
-      val store = s"$base/x$gens"
-      val digests = graft.sources.Synthetic.documents(spark, rows)
-        .select(col("doc_id"), md5(col("text")).as("digest"))
-      // land the fixed corpus as `gens` generations of 8 files each,
-      // plus an untouched frontier dir (the compaction contract)
-      (0 until gens).foreach { g =>
-        digests.filter(pmod(col("doc_id"), lit(gens)) === g)
-          .repartition(8)
-          .write.mode("overwrite").parquet(s"$store/digests/batch=$g")
-      }
-      spark.range(1).select(lit(-1L).as("doc_id"), lit("x").as("digest"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$store/digests/batch=$gens")
-      // docs sub-store: minimal mirror so compactIngestStore's layout holds
-      (0 to gens).foreach(g => spark.range(1).select(lit(g.toLong).as("doc_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$store/docs/batch=$g"))
-      val f0 = parquetFiles(store)
-      val b1 = timedProbe(store); val b2 = timedProbe(store)
-      StoreCompaction.compactIngestStore(spark, store)
-      val f1 = parquetFiles(store)
-      val a1 = timedProbe(store); val a2 = timedProbe(store)
-      println(f"COMPACTSCALE gens=$gens%-3d files_before=$f0%-4d files_after=$f1%-3d " +
-        f"probe_before=$b1%6.2f/$b2%5.2f s probe_after=$a1%6.2f/$a2%5.2f s")
-    }
   }
 
   /** Empirical scale validation (VERDICT r7 #2): generate synthetic
@@ -295,86 +222,6 @@ object Smoke {
     }
   }
 
-  /** Drive the full-history streaming ingest sink end-to-end on real
-    * corpus data: land sf0.001 documents in two waves (the second wave
-    * re-lands half of wave one), run ONE file-source stream through
-    * `StreamingIngest.start`, and print the landed corpus + digest
-    * counts — duplicates across micro-batches must not survive. */
-  /** Drive the streaming MEDIA ingest end-to-end on real corpus-derived
-    * payloads: land sf0.001 documents as binary media in two waves (the
-    * second wave re-lands half of wave one under NEW ids — byte-
-    * identical payloads, the digest-probe path), run ONE file-source
-    * stream through `StreamingMediaIngest.start`, and print corpus +
-    * ledger. Cross-batch dups must not survive, and the ledger must
-    * account every arrival. */
-  private def mediaIngestProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.StreamingMediaIngest
-    val media = graft.multimodal.Multimodal.fromDocuments(
-        Tables.documents(spark, "/root/testdata/sf0.001"))
-      .select("id", "modality", "content")
-    val base = java.nio.file.Files.createTempDirectory("graft_media_probe")
-    val landing = base.toString + "/landing"
-    val store = base.toString + "/store"
-    media.filter(col("id") < 250).coalesce(1).write.parquet(landing)
-    val q = StreamingMediaIngest.start(
-      spark.readStream.schema(media.schema).parquet(landing),
-      store, base.toString + "/ck")
-    q.processAllAvailable()
-    val afterWave1 = StreamingMediaIngest.corpus(spark, store).count()
-    // wave 2: ids 125..374 re-landed under +10000 ids — the first half
-    // byte-duplicates wave-1 payloads and must be probe-rejected
-    media.filter(col("id") >= 125 && col("id") < 375)
-      .withColumn("id", col("id") + 10000)
-      .coalesce(1).write.mode("append").parquet(landing)
-    q.processAllAvailable()
-    // wave 3 (all fresh): gives the store a third committed generation
-    // so the compaction drive below has something to consolidate
-    media.filter(col("id") >= 375 && col("id") < 425)
-      .withColumn("id", col("id") + 10000)
-      .coalesce(1).write.mode("append").parquet(landing)
-    q.processAllAvailable(); q.stop()
-    val n = StreamingMediaIngest.corpus(spark, store).count()
-    println(s"MEDIA_WAVE1=$afterWave1 MEDIA_CORPUS=$n")
-    StreamingMediaIngest.stats(spark, store).orderBy(col("batch"))
-      .collect().foreach(r => println(
-        s"MEDIA_LEDGER batch=${r.getLong(0)} n_in=${r.getLong(1)} " +
-          s"batch_rej=${r.getLong(2)} corpus_rej=${r.getLong(3)} landed=${r.getLong(4)}"))
-    // compaction drive: consolidate the committed generations, then
-    // prove the compacted index still probe-rejects — wave 3 re-lands
-    // wave-1 payloads under fresh ids plus one genuinely new payload
-    def dirs(s: String) = new java.io.File(s"$store/$s").listFiles()
-      .map(_.getName).count(_.startsWith("batch="))
-    val dirsBefore = dirs("fp")
-    // generation-count trigger (r14): three landed generations trip the
-    // every=3 threshold; an under-threshold store must be left alone
-    require(!graft.streaming.StoreCompaction
-        .compactMediaStoreEvery(spark, store, every = dirsBefore + 1),
-      "trigger must no-op below its generation threshold")
-    require(dirs("fp") == dirsBefore, "a no-op trigger must not touch the store")
-    require(graft.streaming.StoreCompaction
-        .compactMediaStoreEvery(spark, store, every = 3),
-      s"$dirsBefore landed generations must trip the every=3 trigger")
-    val dirsAfter = dirs("fp")
-    require(dirsAfter < dirsBefore,
-      s"compaction must consolidate generations (fp dirs $dirsBefore -> $dirsAfter)")
-    val nCompacted = StreamingMediaIngest.corpus(spark, store).count()
-    val frontier = StreamingMediaIngest.maxLandedBatch(store)
-    import spark.implicits._
-    val wave3 = media.filter(col("id") < 50)
-        .withColumn("id", col("id") + 20000)
-      .union(Seq((30000L, "image",
-        Array.tabulate(512)(i => (i * 37 + 11).toByte))).toDF("id", "modality", "content"))
-    StreamingMediaIngest.ingestBatch(wave3, store, frontier + 1, 3)
-    val nAfter = StreamingMediaIngest.corpus(spark, store).count()
-    println(s"MEDIA_COMPACT dirs=$dirsBefore->$dirsAfter corpus=$n->$nCompacted " +
-      s"wave4_in=${wave3.count()} landed_after=$nAfter")
-    require(nCompacted == n, "compaction must not change the corpus")
-    require(nAfter == n + 1,
-      "re-landed wave-1 payloads must probe-reject against the compacted index; " +
-        "only the one new payload lands")
-  }
-
   /** The END-TO-END curation pipeline (`Smoke curate [sfDir]`) — the
     * composition a training-data user actually runs, chained from the
     * gated operators with a per-stage attrition ledger:
@@ -429,118 +276,6 @@ object Smoke {
     require(bins.nonEmpty && bins.values.forall(_._1 > 0), "packing must emit bins")
   }
 
-  /** Drive the streaming cluster-label maintenance end to end (`Smoke
-    * cluster`): ONE file-source stream through
-    * `StreamingClusterIngest.start`, two waves (the second re-lands
-    * half of wave one under new ids — every copy must LAND and get
-    * labeled into its original's cluster), then check the incremental
-    * labeling against the one-shot `connectedComponents(dupPairs(all))`
-    * — the merge-law recurrence, live. */
-  private def clusterIngestProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.StreamingClusterIngest
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_cluster_probe")
-    val landing = base.toString + "/landing"
-    val store = base.toString + "/store"
-    docs.filter(col("doc_id") < 250).coalesce(1).write.parquet(landing)
-    val q = StreamingClusterIngest.start(
-      spark.readStream.schema(docs.select("doc_id", "text").schema).parquet(landing),
-      store, base.toString + "/ck")
-    q.processAllAvailable()
-    val wave1Clustered = StreamingClusterIngest.labels(spark, store).count()
-    // wave 2: ids 0..124 re-landed under +10000 ids — every copy lands
-    // AND joins its original's cluster
-    docs.filter(col("doc_id") < 125).withColumn("doc_id", col("doc_id") + 10000)
-      .coalesce(1).write.mode("append").parquet(landing)
-    q.processAllAvailable(); q.stop()
-    val landed = StreamingClusterIngest.corpus(spark, store).count()
-    val labels = StreamingClusterIngest.labels(spark, store)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val oneShot = graft.functions.Dedup.connectedComponents(
-        graft.functions.Dedup.dupPairs(
-          StreamingClusterIngest.corpus(spark, store), 3, 8, 4, 0.5))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    println(s"CLUSTER_WAVE1_CLUSTERED=$wave1Clustered CLUSTER_LANDED=$landed " +
-      s"CLUSTER_LABELED=${labels.size} ONE_SHOT=${oneShot.size} " +
-      s"MATCH=${labels == oneShot}")
-    require(landed == 375L, s"every arrival must land, got $landed")
-    require(labels == oneShot,
-      "incremental labeling must equal the one-shot closure over the landed corpus")
-    require((0 until 125).forall(i => labels.get(10000L + i).contains(labels.getOrElse(i.toLong, i.toLong))),
-      "each re-landed copy must label into its original's cluster")
-  }
-
-  private def ingestProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.streaming.StreamingIngest
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text", "lang")
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest_probe")
-    val landing = base.toString + "/landing"
-    val store = base.toString + "/store"
-    docs.filter(col("doc_id") < 250).coalesce(1).write.parquet(landing)
-    val q = StreamingIngest.start(
-      spark.readStream.schema(docs.schema).parquet(landing),
-      store, base.toString + "/ck")
-    q.processAllAvailable()
-    val afterWave1 = StreamingIngest.corpus(spark, store).count()
-    // wave 2: docs 125..374 — the first half duplicates wave 1 rows
-    docs.filter(col("doc_id") >= 125 && col("doc_id") < 375)
-      .coalesce(1).write.mode("append").parquet(landing)
-    q.processAllAvailable(); q.stop()
-    val corpus = StreamingIngest.corpus(spark, store)
-    val n = corpus.count()
-    val distinctFp = corpus
-      .select(org.apache.spark.sql.functions.md5(
-        graft.functions.Dedup.canonical(col("text"))).as("fp"))
-      .distinct().count()
-    println(s"INGEST_WAVE1=$afterWave1 INGEST_TOTAL=$n DISTINCT_FP=$distinctFp " +
-      s"DIGEST_STORE=${StreamingIngest.digestStore(spark, store).count()}")
-  }
-
-  /** Drive the quality-gated streaming ingest end to end (`Smoke
-    * quality`): two waves through `StreamingQualityIngest` (wave 2
-    * half-overlaps wave 1, so both reject kinds fire), then print the
-    * per-batch admission ledger and check its contract —
-    * n_in = n_quality_rejected + n_dup_rejected + n_landed per batch,
-    * Σ n_landed = corpus size, and landed docs all score keep=1. */
-  private def qualityIngestProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.{StreamingIngest, StreamingQualityIngest}
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text", "lang")
-    val base = java.nio.file.Files.createTempDirectory("graft_quality_probe")
-    val landing = base.toString + "/landing"
-    val store = base.toString + "/store"
-    docs.filter(col("doc_id") < 250).coalesce(1).write.parquet(landing)
-    val q = StreamingQualityIngest.start(
-      spark.readStream.schema(docs.schema).parquet(landing),
-      store, base.toString + "/ck")
-    q.processAllAvailable()
-    // wave 2: half duplicates of wave 1 -> cross-batch dup rejects
-    docs.filter(col("doc_id") >= 125 && col("doc_id") < 375)
-      .coalesce(1).write.mode("append").parquet(landing)
-    q.processAllAvailable(); q.stop()
-    val ledger = StreamingQualityIngest.stats(spark, store)
-      .orderBy(col("batch")).collect()
-    ledger.foreach(r => println(
-      s"LEDGER batch=${r.getLong(0)} n_in=${r.getLong(1)} " +
-      s"quality_rejected=${r.getLong(2)} dup_rejected=${r.getLong(3)} " +
-      s"landed=${r.getLong(4)}"))
-    val balanced = ledger.forall(r => r.getLong(1) == r.getLong(2) + r.getLong(3) + r.getLong(4))
-    val corpus = StreamingIngest.corpus(spark, store)
-    val landedTotal = ledger.map(_.getLong(4)).sum
-    val gateClean = graft.functions.TextAnalysis.hashedQualityScore(corpus)
-      .filter(col("keep") =!= 1L).count()
-    println(s"LEDGER_BALANCED=$balanced LANDED_TOTAL=$landedTotal " +
-      s"CORPUS=${corpus.count()} GATE_VIOLATIONS=$gateClean")
-    require(balanced, "ledger arithmetic must balance per batch")
-    require(landedTotal == corpus.count(), "ledger landed must equal corpus size")
-    require(gateClean == 0, "no landed doc may fail the quality gate")
-  }
-
   /** Drive the format breadth: CSV/ORC roundtrips of lineitem and a
     * bucketed co-located join, printing the join's exchange count. */
   private def formatsProbe(spark: SparkSession): Unit = {
@@ -591,8 +326,6 @@ object Smoke {
       "fi_summary").show(false)
   }
 
-  /** Time one query in isolation, repeated (rep 1 is cold after a
-    * Bench-style warmup; later reps may hit plan-level caches). */
   /** Scale-up corpus generator (`Smoke gendata <outDir> <factor>
     * [baseSfDir]`): writes a /root/testdata-shaped directory whose
     * FACT tables (orders, lineitem, events) are the base tables
@@ -684,70 +417,8 @@ object Smoke {
     }
   }
 
-  /** Streaming-ingest scale probe (`Smoke streamscale [baseN]`): land
-    * corpora at 1×/10×/32× baseN docs (2/5·baseN vectors — the sf0.1
-    * ratio), then time ONE FIXED tick of each streaming sink against
-    * each landed size: near-dup ingest, cluster-label maintenance,
-    * ANN encode, ANN search. The O(batch)-per-tick claims are
-    * spec-proven; this MEASURES them across corpus decades (the
-    * BUILD_NOTES streaming scale table). The tick batch is identical
-    * at every scale: 500 fresh-content docs / 200 vectors with ids
-    * offset to 10M+, disjoint from any landed corpus. */
-  private def streamScaleProbe(spark: SparkSession, baseN: Long): Unit = {
-    import graft.sources.Synthetic
-    import graft.streaming.{StreamingAnnIngest, StreamingClusterIngest, StreamingGraphIngest, StreamingNearDupIngest}
-    import org.apache.spark.sql.functions.{col, expr, length}
-    val base = java.nio.file.Files.createTempDirectory("graft_sscale").toString
-    val off = 10000000L
-    // fresh unique content derived from the SHIFTED id, so the batch
-    // is neither a dup of any landed doc nor scale-dependent
-    val batchDocs = Synthetic.documents(spark, 500)
-      .withColumn("doc_id", col("doc_id") + off)
-      .withColumn("text", expr(
-        "concat_ws(' ', transform(sequence(0, 45), i -> substring(md5(concat(doc_id, '_f', i)), 1, 8)))"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .localCheckpoint()
-    val batchVecs = Synthetic.embeddings(spark, 200)
-      .withColumn("vec_id", col("vec_id") + off)
-      .localCheckpoint()
-    def timed(label: String, mult: Int)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      println(f"STREAMSCALE mult=$mult%-3d tick=$label%-11s sec=${(System.nanoTime() - t0) / 1e9}%7.2f")
-    }
-    Seq(1, 10, 32).foreach { mult =>
-      val docs = Synthetic.documents(spark, baseN * mult).localCheckpoint()
-      val vecs = Synthetic.embeddings(spark, baseN * 2 / 5 * mult).localCheckpoint()
-      val nd = s"$base/nd_x$mult"
-      StreamingNearDupIngest.ingestBatch(docs, nd, 0, 3, 8, 4, 0.5)
-      timed("neardup", mult)(
-        StreamingNearDupIngest.ingestBatch(batchDocs, nd, 1, 3, 8, 4, 0.5))
-      val cl = s"$base/cl_x$mult"
-      StreamingClusterIngest.ingestBatch(docs, cl, 0, 3, 8, 4, 0.5)
-      timed("cluster", mult)(
-        StreamingClusterIngest.ingestBatch(batchDocs, cl, 1, 3, 8, 4, 0.5))
-      val ann = s"$base/ann_x$mult"
-      StreamingAnnIngest.buildIndex(vecs, ann, m = 2, ksub = 4, iters = 1)
-      timed("ann_encode", mult)(
-        StreamingAnnIngest.ingestBatch(batchVecs, ann, 1))
-      timed("ann_search", mult)(
-        graft.functions.Similarity.pqSearchIndex(
-            batchVecs.limit(20),
-            StreamingAnnIngest.codeIndex(spark, ann),
-            StreamingAnnIngest.centroids(spark, ann), 10)
-          .write.format("noop").mode("overwrite").save())
-      // graph rung (r16): walk-insert tick + serving walk over the
-      // landed graph store
-      val gr = s"$base/gr_x$mult"
-      StreamingGraphIngest.buildIndex(vecs, gr, k = 10, rounds = 2)
-      timed("graph_insert", mult)(
-        StreamingGraphIngest.ingestBatch(batchVecs, gr, 0, 10, 3, 10))
-      timed("graph_serve", mult)(
-        StreamingGraphIngest.search(spark, gr, batchVecs.limit(20), 10, 3, 10)
-          .write.format("noop").mode("overwrite").save())
-    }
-  }
-
+  /** Time one query in isolation, repeated (rep 1 is cold after a
+    * Bench-style warmup; later reps may hit plan-level caches). */
   private def timeProbe(spark: SparkSession, name: String, sfDir: String, reps: Int): Unit = {
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()

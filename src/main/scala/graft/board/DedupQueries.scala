@@ -458,14 +458,13 @@ object DedupQueries {
     },
       minhashProbeSql),
     // the PERSISTED-index form of the probe: land the corpus's sig +
-    // posting rows as `batch=<id>` parquet (the StreamingNearDupIngest
-    // store layout), then probe reading the STORE — gates the on-disk
+    // posting rows as `batch=<id>` parquet (a partitioned signature
+    // store), then probe reading the STORE — gates the on-disk
     // post/batch=* exact-verify path end-to-end. Exact verification
     // makes the result storage-independent, so it shares
     // q_minhash_probe's brute-force oracle.
     QueryDef("q_minhash_probe_store", (s, d) => {
       import org.apache.spark.sql.functions.col
-      import graft.streaming.StreamingNearDupIngest
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") % 3 === 0)
       val batch = docs.filter(col("doc_id") % 5 === 0)
@@ -475,9 +474,9 @@ object DedupQueries {
       Dedup.shinglePostings(corpus, 3)
         .write.mode("overwrite").parquet(s"$dir/post/batch=0")
       Dedup.minhashProbeSigs(
-        StreamingNearDupIngest.sigStore(s, dir, 8).drop("batch"),
+        s.read.parquet(s"$dir/sigs").drop("batch"),
         Dedup.minhashSigTable(batch, 3, 8),
-        StreamingNearDupIngest.postStore(s, dir).drop("batch"),
+        s.read.parquet(s"$dir/post").drop("batch"),
         Dedup.shinglePostings(batch, 3), 8, 4, 0.5)
     },
       // store-backed probe is exact-verified, hence storage-independent:

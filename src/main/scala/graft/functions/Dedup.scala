@@ -115,39 +115,30 @@ object Dedup {
   def incrementalDedup(corpus: DataFrame, batch: DataFrame,
                        expectedCorpusItems: Long = 1L << 20,
                        fpp: Double = 0.01): DataFrame = {
-    val fpOf = md5(canonical(col("text")))
-    incrementalDedupFp(corpus.select(fpOf.as("fp")),
-      batch.withColumn("fp", fpOf), expectedCorpusItems, fpp).drop("fp")
-  }
-
-  /** Digest-level core of `incrementalDedup`: `corpusFp` is the
-    * corpus's digest column (`fp`) alone — what a persistent ingest
-    * store actually keeps — and `batchFp` must already carry its `fp`.
-    * Returns surviving batch rows WITH the digest, so a streaming sink
-    * can append them to both the corpus and the digest store without
-    * rehashing. */
-  def incrementalDedupFp(corpusFp: DataFrame, batchFp: DataFrame,
-                         expectedCorpusItems: Long = 1L << 20,
-                         fpp: Double = 0.01): DataFrame = {
     import graft.plans.Bloom
+    val fpOf = md5(canonical(col("text")))
+    val corpusFp = corpus.select(fpOf.as("fp"))
+    val batchFp = batch.withColumn("fp", fpOf)
     val bloomBin = corpusFp
       .agg(Bloom.bloom_agg(xxhash64(col("fp")), expectedCorpusItems, fpp).as("bf"))
       .head().getAs[Array[Byte]]("bf")
-    if (bloomBin == null) {
-      // Empty corpus aggregates to a NULL sketch: nothing to dedup
-      // against, the whole batch is new.
-      batchFp
-    } else {
-      val candidates = batchFp
-        .filter(Bloom.might_contain(lit(bloomBin), xxhash64(col("fp"))))
-        .select(col("fp")).distinct()
-        .localCheckpoint()
-      val matched = corpusFp
-        .join(broadcast(candidates), Seq("fp"), "left_semi")
-        .distinct()
-        .localCheckpoint()
-      batchFp.join(broadcast(matched), Seq("fp"), "left_anti")
-    }
+    val kept =
+      if (bloomBin == null) {
+        // Empty corpus aggregates to a NULL sketch: nothing to dedup
+        // against, the whole batch is new.
+        batchFp
+      } else {
+        val candidates = batchFp
+          .filter(Bloom.might_contain(lit(bloomBin), xxhash64(col("fp"))))
+          .select(col("fp")).distinct()
+          .localCheckpoint()
+        val matched = corpusFp
+          .join(broadcast(candidates), Seq("fp"), "left_semi")
+          .distinct()
+          .localCheckpoint()
+        batchFp.join(broadcast(matched), Seq("fp"), "left_anti")
+      }
+    kept.drop("fp")
   }
 
   /** Distinct word n-gram shingle sets per document (array form — see
@@ -1142,7 +1133,7 @@ object Dedup {
     * generation cost scales with the BATCH, not the corpus; corpus
     * shingle sets are touched only to verify the (tiny) candidate set,
     * broadcast-joined. Returns (batch_doc, corpus_doc, jaccard) — the
-    * near-dup analog of `incrementalDedupFp`'s exact-digest path. */
+    * near-dup analog of `incrementalDedup`'s exact-digest path. */
   def minhashProbePairs(corpus: DataFrame, batch: DataFrame, n: Int, k: Int,
                         bands: Int, minJaccard: Double): DataFrame = {
     // Both signature tables arrive memoized + checkpointed from
@@ -1153,12 +1144,12 @@ object Dedup {
   }
 
   /** MinHash signature table (doc_id, s0..s{k-1}): the PERSISTED
-    * index of the incremental near-dup path — production appends each
-    * ingest batch's rows to this table on disk and never recomputes
-    * corpus signatures (`streaming/StreamingNearDupIngest` does exactly
-    * that, alongside a posting-row store for the exact verify).
-    * Signatures depend only on a doc's own shingles, so a table
-    * built incrementally equals one built in a single pass. */
+    * index of the incremental near-dup path — it can land on disk
+    * beside a posting-row store for the exact verify and be probed
+    * from there (`q_minhash_probe_store`), so corpus signatures are
+    * never recomputed. Signatures depend only on a doc's own
+    * shingles, so a table built incrementally equals one built in a
+    * single pass. */
   def minhashSigTable(docs: DataFrame, n: Int, k: Int): DataFrame =
     minhashSignatures(docs, n, k)
 
@@ -1742,8 +1733,8 @@ object Dedup {
     docs.join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** Dedup governance ledger — the batch analog of the streaming
-    * ingest's admission ledger: per `by`-group documents/chars in vs
+  /** Dedup governance ledger — an admission ledger over the batch
+    * corpus: per `by`-group documents/chars in vs
     * kept after the exact+near-dup APPLY step ("how much did dedup cut
     * per source?" — the question a 100 TB curation review asks without
     * wanting to scan the corpus). Rides the SAME memoized pair-graph/

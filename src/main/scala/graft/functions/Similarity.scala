@@ -1152,38 +1152,27 @@ object Similarity {
     }
 
   /** ADC search of query VECTORS against an existing (codes, cents)
-    * index — the decoupled form `pqTopK` composes and the streaming
-    * path (`StreamingAnnIngest.searchStream`) reuses per micro-batch:
-    * queries need not come from the indexed corpus. `lutBudget`
-    * overrides the per-broadcast LUT entry budget (tests force tiny
-    * chunks with it; serving uses the 32 MB default). Callers that
-    * KNOW the query set is trigger-bounded far below the budget (the
-    * per-tick streaming path) pass `boundedQueries = true` to skip the
-    * sizing count — the per-tick search stays one job (r17 advice; a
-    * tick genuinely above ~512k queries belongs on the batch API). */
+    * index — the search half of `pqTopK`: queries need not come from
+    * the indexed corpus. `lutBudget` overrides the per-broadcast LUT
+    * entry budget (tests force tiny chunks with it; serving uses the
+    * 32 MB default). */
   def pqSearchIndex(queries: DataFrame, codes: DataFrame, cents: DataFrame,
-                    k: Int, lutBudget: Long = defaultLutEntries,
-                    boundedQueries: Boolean = false): DataFrame = {
+                    k: Int, lutBudget: Long = defaultLutEntries): DataFrame = {
     val shift = 1048576L
     // geometry off the dictionary-sized codebook (one tiny job)
     val g = cents.agg(max(col("s")).cast("int"), max(col("code")).cast("int")).head()
     val m = g.getInt(0) + 1
     val ksub = g.getInt(1) + 1
     val q0 = ensureQuantized(queries)
-    // chunk count from ONE query count (skipped when the caller
-    // declares the batch bounded): |Q|·m·ksub entries over the budget,
-    // split by a deterministic id hash with a hard per-chunk cap
+    // chunk count from ONE query count: |Q|·m·ksub entries over the
+    // budget, split by a deterministic id hash with a hard per-chunk cap
     val chunkRows = math.max(1L, lutBudget / (m.toLong * ksub))
-    val nChunks =
-      if (boundedQueries) 1
-      else memoChunkCount(q0.select(col("vec_id")), "vec_id", chunkRows)
+    val nChunks = memoChunkCount(q0.select(col("vec_id")), "vec_id", chunkRows)
     // the code index in array form (vec_id, carr) — memoized per
     // codes plan: the search-side shape of the stored index. A caller
-    // that already holds the ARRAY form (the streaming ingest's
-    // codeIndex reduces its store straight to it — no per-tick
-    // re-conversion, no memo churn on ever-fresh batch plans) passes
-    // through untouched. Chunks re-scan this checkpointed frame — the
-    // compressed index, the cheapest thing on the path to re-read.
+    // that already holds the ARRAY form passes through untouched.
+    // Chunks re-scan this checkpointed frame — the compressed index,
+    // the cheapest thing on the path to re-read.
     val codesArr =
       if (codes.columns.contains("carr")) codes
       else IndexMemo("pq_codes_arr", codes, ()) {
@@ -1229,32 +1218,6 @@ object Similarity {
       .map(i => searchChunk(
         q0.filter(pmod(xxhash64(col("vec_id")), lit(nChunks.toLong)) === i)))
       .reduce(_.unionByName(_))
-  }
-
-  /** Encode vectors against FIXED PQ centroids — one assignment pass,
-    * no retraining: the ingest form, where newly arrived embeddings
-    * adopt the codebooks the index was built with (retraining would
-    * silently re-code the whole landed corpus). `cents` is pqTrain's
-    * centroid frame (s, code, d, c); broadcast, so the batch never
-    * shuffles its vectors — only (vec, s, code) id-rows aggregate. */
-  def pqEncode(embeddings: DataFrame, cents: DataFrame): DataFrame = {
-    val shift = 1048576L
-    // subspace geometry off the dictionary-sized codebook (one tiny
-    // job over the checkpointed cents — metadata, not data)
-    val g = cents.agg(max(col("s")).cast("int"), max(col("d")).cast("int")).head()
-    val m = g.getInt(0) + 1
-    val subDim = (g.getInt(1) + 1) / m
-    val vs = ensureQuantized(embeddings)
-      .select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> " +
-          s"transform(slice(q, s * $subDim + 1, $subDim), x -> x + ${shift}L))"))
-        .as(Seq("s", "sa")))
-    vs.join(broadcast(centArraysLocal(cents, "s", "code")), Seq("s"))
-      .select(col("vec_id"), col("s"), col("code"),
-        sqDistQ("sa", "ca").as("_dist"))
-      .groupBy(col("vec_id"), col("s"))
-      .agg(min(struct(col("_dist"), col("code"))).as("_m"))
-      .select(col("vec_id"), col("s"), col("_m.code").as("code"))
   }
 
   /** The quantized corpus (`quantized(e)`'s rows: every input column
@@ -3015,27 +2978,14 @@ object Similarity {
   def knnGraphSearch(embeddings: DataFrame, queryPred: Column, k: Int,
                      kGraph: Int, rounds: Int, hops: Int,
                      beam: Int): DataFrame = {
-    val e = ensureQuantized(embeddings)
-    knnGraphSearchIndex(e.filter(queryPred), knnGraph(e, kGraph, rounds),
-      e, k, hops, beam)
-  }
-
-  /** Search against an EXISTING (graph, nodes) index — the decoupled
-    * form `knnGraphSearch` composes and the streaming graph ingest
-    * (`StreamingGraphIngest`) reuses per micro-batch: queries need not
-    * come from the indexed corpus, and the graph/node frames are
-    * whatever the store landed. `graph` is (vec_id, neighbor_id[,…]);
-    * `nodes` is the indexed vectors (vec_id, q[, nq]). */
-  def knnGraphSearchIndex(queries: DataFrame, graph: DataFrame,
-                          nodes: DataFrame, k: Int, hops: Int,
-                          beam: Int): DataFrame = {
     require(hops >= 0 && beam >= 1 && k >= 1,
       s"bad search params: hops=$hops beam=$beam k=$k")
-    val g = graph.select(col("vec_id").as("_gnode"), col("neighbor_id"))
-    val v = ensureQuantized(nodes)
-      .select(col("vec_id").as("node"), col("q").as("na"))
+    val e = ensureQuantized(embeddings)
+    val g = knnGraph(e, kGraph, rounds)
+      .select(col("vec_id").as("_gnode"), col("neighbor_id"))
+    val v = e.select(col("vec_id").as("node"), col("q").as("na"))
       .localCheckpoint()
-    val qs = ensureQuantized(queries)
+    val qs = e.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("q").as("qa"))
       .localCheckpoint()
     val eps = v.select(col("node"),

@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Expressed as one full-outer join on the report key — the relational
   * form of MERGE. The incoming side is a per-period aggregate (tiny:
-  * one row per date range), so Spark broadcasts it against a large
-  * stored table; at 100 TB the stored table is date-partitioned and
-  * dynamic partition pruning rewrites only the touched partitions.
+  * one row per date range), but Spark has no broadcast hash join for a
+  * full outer join: `merge` plans a SortMergeJoin that shuffles BOTH
+  * sides, and those two shuffles are two of `mergeInto`'s four jobs
+  * (`JobBudgetSpec`). At 100 TB the stored table is date-partitioned
+  * and `mergeIntoPartitioned` rewrites only the touched partitions.
   */
 object ReportUpsert {
 

@@ -103,19 +103,47 @@ class AnnPolicySpec extends AnyFunSuite {
     assert(ex.getMessage.contains("no ANN rung certifies"))
   }
 
-  test("the rungs choose can pick, over n = 2..1e12 and q in {1, n/100}, at every floor") {
-    // every n up to 1,000, then a 1-2-5 grid up to 1e12
-    val grid = (2L to 1000L) ++ (3 to 12).flatMap { e =>
+  /** 1-2-5 values from 10^fromExp up to `max`. */
+  private def oneTwoFive(fromExp: Int, max: Long): Seq[Long] =
+    (fromExp to 12).flatMap { e =>
       val p = math.pow(10, e).toLong
-      Seq(p, 2 * p, 5 * p).filter(_ <= 1000000000000L)
-    }
+      Seq(p, 2 * p, 5 * p)
+    }.filter(_ <= max)
+
+  // every n up to 1,000, then a 1-2-5 grid up to 1e12
+  private val nGrid: Seq[Long] = (2L to 1000L) ++ oneTwoFive(3, 1000000000000L)
+
+  /** q on a 1-2-5 grid from 1 up to n, plus n itself. */
+  private def qGrid(n: Long): Seq[Long] = (oneTwoFive(0, n) :+ n).distinct
+
+  test("the rungs choose can pick, over n = 2..1e12 and q on a 1-2-5 grid to n") {
     val floors = AnnPolicy.rungs.map(_.floorMilli).distinct
     val chosen = (for {
-      n <- grid
-      q <- Seq(1L, math.max(1L, n / 100))
+      n <- nGrid
+      q <- qGrid(n)
       f <- floors
     } yield AnnPolicy.choose(AnnPolicy.env(n, q), f).method).toSet
     assert(chosen == Set("ivf", "knn_graph", "knn_graph_search", "lsh_multi",
       "sq8", "sq8_rerank"), s"chosen set drifted: $chosen")
+  }
+
+  test("every cost is linear in q below 2^53, so q cannot move choose's winner") {
+    // each cost tree is q times a q-free term: scaling every rung's
+    // cost by the same q keeps choose's (cost, floor, method) order,
+    // so only the n grid (and the clamp far above it) can change the
+    // winner. Exact in double below 2^53, hence the bound.
+    val points = for {
+      n <- nGrid
+      q <- qGrid(n)
+      r <- AnnPolicy.rungs
+    } yield (r.method, n, q, AnnPolicy.costUnits(r.method, AnnPolicy.env(n, q)))
+    val exact = points.filter(_._4 < (1L << 53))
+    exact.foreach { case (m, n, q, cq) =>
+      assert(cq == q * AnnPolicy.costUnits(m, AnnPolicy.env(n, 1L)),
+        s"$m at n=$n q=$q: cost $cq is not q x the q=1 cost")
+    }
+    // the bound excludes only the extreme corner of the grid
+    assert(exact.size * 10 > points.size * 9,
+      s"only ${exact.size} of ${points.size} points are below 2^53")
   }
 }

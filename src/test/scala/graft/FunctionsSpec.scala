@@ -2106,7 +2106,7 @@ class SimilaritySpec extends SparkSpec {
   test("pqSearchIndex drops a corrupted code instead of ranking it first") {
     // carr=[5] with m=1, ksub=2 gathers out of the dense LUT -> NULL
     // adist; struct-min top-k would rank a NULL FIRST, so the serving
-    // path (streaming search included) must drop the candidate
+    // path must drop the candidate
     val cents = Seq((0, 0, 0, 10L), (0, 0, 1, 10L),
         (0, 1, 0, 90L), (0, 1, 1, 90L))
       .toDF("s", "code", "d", "c")

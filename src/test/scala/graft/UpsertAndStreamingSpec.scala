@@ -308,296 +308,6 @@ class StreamingSpec extends SparkSpec {
     assert(out(1L) == "ping <EMAIL> twice" && out(2L) == "clean text only here")
   }
 
-  test("quality-gated ingest: classifier rejects at the door, dedup after, stats ledger exact") {
-    import spark.implicits._
-    import graft.streaming.{StreamingIngest, StreamingQualityIngest}
-    import graft.functions.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("graft_qingest").toString
-    def df(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-    // learn the classifier's deterministic verdicts for a candidate pool
-    val pool = (0L until 40L).map(i => i -> s"w$i alpha beta gamma token$i")
-    val verdicts = TextAnalysis.hashedQualityScore(df(pool: _*))
-      .collect().map(r => r.getLong(0) -> r.getLong(5)).toMap
-    val keeps = pool.filter(p => verdicts(p._1) == 1L).take(3)
-    val rejects = pool.filter(p => verdicts(p._1) == 0L).take(2)
-    assert(keeps.size == 3 && rejects.size == 2,
-      s"need both verdicts in the pool: ${verdicts.values.groupBy(identity).view.mapValues(_.size).toMap}")
-    // batch 0: 3 keeps + 2 quality-rejects
-    StreamingQualityIngest.gatedBatch(df(keeps ++ rejects: _*), dir, 0L)
-    // batch 1: one landed dup (same text, new id) + one fresh keep + one reject
-    val dupOfKeep = (900L, keeps.head._2)
-    val freshKeep = keeps(1) match { case (_, _) =>
-      pool.filter(p => verdicts(p._1) == 1L)(3) }
-    StreamingQualityIngest.gatedBatch(df(dupOfKeep, freshKeep, rejects.head.copy(_1 = 901L)), dir, 1L)
-    val landed = StreamingIngest.corpus(spark, dir).select("doc_id").as[Long].collect().sorted.toSeq
-    assert(landed == (keeps.map(_._1) :+ freshKeep._1).sorted, s"landed=$landed")
-    val st = StreamingQualityIngest.stats(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    assert(st(0L) == ((5L, 2L, 0L, 3L)), s"batch0 stats: $st")
-    assert(st(1L) == ((3L, 1L, 1L, 1L)), s"batch1 stats: $st")
-    // replay of batch 1 rewrites itself: corpus and ledger unchanged
-    StreamingQualityIngest.gatedBatch(df(dupOfKeep, freshKeep, rejects.head.copy(_1 = 901L)), dir, 1L)
-    assert(StreamingIngest.corpus(spark, dir).count() == 4)
-    assert(StreamingQualityIngest.stats(spark, dir).count() == 2)
-  }
-
-  test("streaming ingest dedups against the full landed corpus, idempotently") {
-    import spark.implicits._
-    import graft.streaming.StreamingIngest
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    def batchDf(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-    // batch 0: in-batch canonical dup (2 of 1) collapses, lowest id wins
-    StreamingIngest.ingestBatch(
-      batchDf(1L -> "alpha beta", 2L -> "Alpha  BETA", 3L -> "gamma delta"), dir, 0L)
-    // batch 1: 10 duplicates batch 0's digest, 11 is new
-    val b1 = batchDf(10L -> "ALPHA beta", 11L -> "epsilon zeta")
-    StreamingIngest.ingestBatch(b1, dir, 1L)
-    def docIds = StreamingIngest.corpus(spark, dir)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(docIds == Seq(1L, 3L, 11L))
-    assert(StreamingIngest.digestStore(spark, dir).count() == 3)
-    // at-least-once replay of batch 1: rewrites itself, no duplicates
-    StreamingIngest.ingestBatch(b1, dir, 1L)
-    assert(docIds == Seq(1L, 3L, 11L))
-    assert(StreamingIngest.digestStore(spark, dir).count() == 3)
-    // a fresh checkpoint (ids reset to 0) against the landed store is
-    // rejected instead of silently overwriting batch 0
-    intercept[IllegalArgumentException] {
-      StreamingIngest.ingestBatch(b1, dir, 0L)
-    }
-    // end-to-end through a real stream in its own store: two file
-    // landings become two micro-batches of ONE query; the second
-    // batch's cross-batch dup is dropped
-    import org.apache.spark.sql.types._
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ingest2").toString
-    val landing = java.nio.file.Files.createTempDirectory("graft_ingest_src")
-    batchDf(20L -> "gamma delta", 21L -> "eta theta").coalesce(1)
-      .write.parquet(landing.toString + "/b")
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType), StructField("lang", StringType)))
-    val q = StreamingIngest.start(
-      spark.readStream.schema(schema).parquet(landing.toString + "/b"),
-      dir2, java.nio.file.Files.createTempDirectory("graft_ingest_ck").toString)
-    q.processAllAvailable()
-    batchDf(30L -> "gamma  DELTA", 31L -> "iota kappa").coalesce(1)
-      .write.mode("append").parquet(landing.toString + "/b")
-    q.processAllAvailable(); q.stop()
-    assert(StreamingIngest.corpus(spark, dir2)
-      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(20L, 21L, 31L))
-  }
-
-  test("streaming NEAR-dup ingest probes the landed signature index, idempotently") {
-    import spark.implicits._
-    import graft.streaming.StreamingNearDupIngest
-    val near1 = "the quick brown fox jumps over the lazy dog again and again"
-    val near2 = "the quick brown fox jumps over the lazy dog again and once"
-    val other = "completely different content with no shared shingles at all here"
-    val fresh = "some entirely new material about streaming signature indexes landing"
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_ingest").toString
-    def batchDf(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-    def ingest(id: Long, rows: (Long, String)*): Unit =
-      StreamingNearDupIngest.ingestBatch(batchDf(rows: _*), dir, id, 3, 8, 4, 0.5)
-    // batch 0: 2 is an in-batch near-dup of 1 -> collapses to 1
-    ingest(0L, 1L -> near1, 2L -> near2, 3L -> other)
-    def docIds = StreamingNearDupIngest.corpus(spark, dir)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(docIds == Seq(1L, 3L))
-    // batch 1: 10 is a near-dup of landed 1 (probe hit -> dropped),
-    // 11 is genuinely new
-    ingest(1L, 10L -> near2, 11L -> fresh)
-    assert(docIds == Seq(1L, 3L, 11L))
-    // signature store grew by exactly the landed docs
-    assert(StreamingNearDupIngest.sigStore(spark, dir, 8)
-      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 11L))
-    // at-least-once replay of batch 1: rewrites itself, no duplicates
-    ingest(1L, 10L -> near2, 11L -> fresh)
-    assert(docIds == Seq(1L, 3L, 11L))
-    // fresh-checkpoint id reset is rejected
-    intercept[IllegalArgumentException] { ingest(0L, 99L -> fresh) }
-    // end-to-end through a real file stream in its own store
-    import org.apache.spark.sql.types._
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_neardup2").toString
-    val landing = java.nio.file.Files.createTempDirectory("graft_neardup_src")
-    batchDf(20L -> near1, 21L -> other).coalesce(1)
-      .write.parquet(landing.toString + "/b")
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val q = StreamingNearDupIngest.start(
-      spark.readStream.schema(schema).parquet(landing.toString + "/b"),
-      dir2, java.nio.file.Files.createTempDirectory("graft_neardup_ck").toString)
-    q.processAllAvailable()
-    batchDf(30L -> near2, 31L -> fresh).coalesce(1)
-      .write.mode("append").parquet(landing.toString + "/b")
-    q.processAllAvailable(); q.stop()
-    assert(StreamingNearDupIngest.corpus(spark, dir2)
-      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(20L, 21L, 31L))
-  }
-
-  test("streaming cluster maintenance: incremental labels == one-shot CC, replay-idempotent") {
-    import spark.implicits._
-    import graft.streaming.StreamingClusterIngest
-    import graft.functions.Dedup
-    val near1 = "the quick brown fox jumps over the lazy dog again and again"
-    val near2 = "the quick brown fox jumps over the lazy dog again and once"
-    val near3 = "the quick brown fox jumps over the lazy dog again and thrice"
-    val other = "completely different content with no shared shingles at all here"
-    val fresh = "some entirely new material about streaming cluster label stores"
-    val dir = java.nio.file.Files.createTempDirectory("graft_cluster_ingest").toString
-    def batchDf(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-    def ingest(id: Long, rows: (Long, String)*): Unit =
-      StreamingClusterIngest.ingestBatch(batchDf(rows: _*), dir, id, 3, 8, 4, 0.5)
-    def labelMap = StreamingClusterIngest.labels(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // wave 0: 1~2 near-dups (internal edge), 3 unrelated, 4 shingle-less
-    ingest(0L, 1L -> near1, 2L -> near2, 3L -> other, 4L -> "tiny")
-    assert(labelMap == Map(1L -> 1L, 2L -> 1L), s"wave0: $labelMap")
-    // wave 1: 10 near-dups the LANDED 2 (cross probe edge -> joins
-    // cluster 1), 11 fresh, 14 an exact copy of the shingle-less 4
-    // (only the digest channel can see it)
-    ingest(1L, 10L -> near3, 11L -> fresh, 14L -> "tiny")
-    assert(labelMap == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 4L -> 4L, 14L -> 4L),
-      s"wave1: $labelMap")
-    // wave 2: 20 bridges cluster 1 again; 21 dups 11 exactly
-    ingest(2L, 20L -> near1, 21L -> fresh)
-    val incr = labelMap
-    // one-shot CC over the union corpus must agree label-for-label
-    val all = batchDf(1L -> near1, 2L -> near2, 3L -> other, 4L -> "tiny",
-      10L -> near3, 11L -> fresh, 14L -> "tiny", 20L -> near1, 21L -> fresh)
-    val oneShot = Dedup.connectedComponents(Dedup.dupPairs(all, 3, 8, 4, 0.5))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(incr == oneShot,
-      s"incremental labeling diverged from the one-shot closure: $incr vs $oneShot")
-    // at-least-once replay of wave 2 rewrites its own generation
-    ingest(2L, 20L -> near1, 21L -> fresh)
-    assert(labelMap == incr)
-    // fresh-checkpoint id reset refused
-    intercept[IllegalArgumentException] { ingest(0L, 99L -> fresh) }
-    // every arrival landed (clusters label, never drop)
-    assert(StreamingClusterIngest.corpus(spark, dir).count() == 9L)
-  }
-
-  test("near-dup ingest refuses a legacy store missing post/; backfill repairs it") {
-    import spark.implicits._
-    import graft.streaming.StreamingNearDupIngest
-    val near1 = "the quick brown fox jumps over the lazy dog again and again"
-    val near2 = "the quick brown fox jumps over the lazy dog again and once"
-    val fresh = "some entirely new material about streaming signature indexes landing"
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_legacy").toString
-    def ingest(id: Long, rows: (Long, String)*): Unit =
-      StreamingNearDupIngest.ingestBatch(
-        rows.toSeq.toDF("doc_id", "text"), dir, id, 3, 8, 4, 0.5)
-    ingest(0L, 1L -> near1, 3L -> fresh)
-    // Simulate a store written before the posting index existed:
-    // sigs/ batches present, post/ gone.
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf); f.delete()
-    }
-    rmrf(new java.io.File(s"$dir/post"))
-    // Probing with an empty posting index would silently verify zero
-    // candidates — the ingest must refuse loudly instead.
-    val e = intercept[IllegalStateException] { ingest(1L, 10L -> near2) }
-    assert(e.getMessage.contains("post/") && e.getMessage.contains("backfill"),
-      s"error must name the missing index and the repair: ${e.getMessage}")
-    // Repair path: rebuild post/ from the landed docs, then the same
-    // batch ingests and the probe catches the cross-batch near-dup.
-    StreamingNearDupIngest.backfillPostings(spark, dir, 3)
-    ingest(1L, 10L -> near2,
-      11L -> "unrelated prose covering backfill repair of shingle stores")
-    assert(StreamingNearDupIngest.corpus(spark, dir)
-      .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 11L))
-  }
-
-  test("streaming MEDIA ingest: fingerprint probe drops near-dup payloads, digests catch windowless dups") {
-    import spark.implicits._
-    import graft.streaming.StreamingMediaIngest
-    val rnd = new scala.util.Random(7)
-    val base = Array.fill(2048)(rnd.nextInt(256).toByte)
-    def corrupt(src: Array[Byte], at: Int): Array[Byte] = {
-      val c = src.clone(); c(at) = (c(at) ^ 0x5a).toByte; c
-    }
-    val unrelated = Array.fill(2048)(rnd.nextInt(256).toByte)
-    val tiny = Array[Byte](9, 9)
-    // A flipped byte perturbs 4 windows; whether that crosses <= 3 bit
-    // margins depends on the base's vote margins at those windows.
-    // Pick corruption positions MEASURED to stay inside the Hamming
-    // budget, so the spec tests the ingest plumbing, not fingerprint
-    // statistics (all inputs fixed-seed, so the choice is stable).
-    val candidates = (0 until 16).map(i => 64 + i * 128)
-    val fps = graft.multimodal.Multimodal.contentFingerprint64(
-        ((-1L, base) +: candidates.map(p => (p.toLong, corrupt(base, p))))
-          .toDF("id", "content"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nearPos = candidates.filter(p =>
-      java.lang.Long.bitCount(fps(-1L) ^ fps(p.toLong)) <= 3)
-    assert(nearPos.size >= 3, s"need 3 within-budget corruption positions, got $nearPos")
-    val Seq(p1, p2, p3) = nearPos.take(3).map(_.toInt).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_media_ingest").toString
-    def ingest(id: Long, rows: (Long, Array[Byte])*): Unit =
-      StreamingMediaIngest.ingestBatch(
-        rows.toSeq.map { case (i, c) => (i, "image", c) }
-          .toDF("id", "modality", "content"), dir, id, 3)
-    def landed = StreamingMediaIngest.corpus(spark, dir)
-      .select("id").as[Long].collect().sorted.toSeq
-    // batch 0: 2 = near-dup of 1 (one flipped byte), 3 = exact copy of
-    // 1, 4 unrelated, 5 windowless -> only 1, 4, 5 land
-    ingest(0L, 1L -> base, 2L -> corrupt(base, p1), 3L -> base.clone(),
-      4L -> unrelated, 5L -> tiny)
-    assert(landed == Seq(1L, 4L, 5L))
-    // batch 1: 10 near-dups landed 1 (fingerprint probe), 11 is
-    // byte-identical to landed 4 (digest probe), 12 duplicates the
-    // windowless 5 (digest-only path), 13 is fresh
-    val fresh13 = Array.fill(2048)(rnd.nextInt(256).toByte)
-    ingest(1L, 10L -> corrupt(base, p2), 11L -> unrelated.clone(),
-      12L -> tiny.clone(), 13L -> fresh13)
-    assert(landed == Seq(1L, 4L, 5L, 13L))
-    // the index is id-table-sized: one row per landed payload, with
-    // fp64 NULL exactly for the windowless one
-    val fp = StreamingMediaIngest.fpStore(spark, dir)
-    assert(fp.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 4L, 5L, 13L))
-    assert(fp.filter(col("fp64").isNull).select("id").as[Long].collect().toSeq == Seq(5L))
-    // admission ledger: every arriving payload accounted to exactly
-    // one outcome, per batch (batch 0: 5 in, 2 within-batch collapses,
-    // 0 corpus hits, 3 landed; batch 1: 4 in, 0, 3 probe hits, 1)
-    val stats = StreamingMediaIngest.stats(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-      .toMap
-    assert(stats(0L) == ((5L, 2L, 0L, 3L)), s"batch 0 ledger: ${stats(0L)}")
-    assert(stats(1L) == ((4L, 0L, 3L, 1L)), s"batch 1 ledger: ${stats(1L)}")
-    stats.values.foreach { case (nIn, nb, nc, nl) => assert(nIn == nb + nc + nl) }
-    // at-least-once replay of batch 1 rewrites itself, no duplicates —
-    // ledger included
-    ingest(1L, 10L -> corrupt(base, p2), 11L -> unrelated.clone(),
-      12L -> tiny.clone(), 13L -> fresh13)
-    assert(landed == Seq(1L, 4L, 5L, 13L))
-    assert(StreamingMediaIngest.stats(spark, dir)
-      .filter(col("batch") === 1L).collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-      == Seq((4L, 0L, 3L, 1L)))
-    // fresh-checkpoint id reset is rejected
-    intercept[IllegalArgumentException] { ingest(0L, 99L -> fresh13) }
-    // end-to-end through a real file stream in its own store
-    import org.apache.spark.sql.types._
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_media2").toString
-    val landing = java.nio.file.Files.createTempDirectory("graft_media_src")
-    Seq((20L, "image", base), (21L, "image", unrelated))
-      .toDF("id", "modality", "content").coalesce(1)
-      .write.parquet(landing.toString + "/b")
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("modality", StringType), StructField("content", BinaryType)))
-    val q = StreamingMediaIngest.start(
-      spark.readStream.schema(schema).parquet(landing.toString + "/b"),
-      dir2, java.nio.file.Files.createTempDirectory("graft_media_ck").toString)
-    q.processAllAvailable()
-    Seq((30L, "image", corrupt(base, p3)), (31L, "image", fresh13))
-      .toDF("id", "modality", "content").coalesce(1)
-      .write.mode("append").parquet(landing.toString + "/b")
-    q.processAllAvailable(); q.stop()
-    assert(StreamingMediaIngest.corpus(spark, dir2)
-      .select("id").as[Long].collect().sorted.toSeq == Seq(20L, 21L, 31L))
-  }
-
   test("streaming windowed agg over events matches batch totals") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
     val stx = StreamingReport.transactionsStream(spark, eventsDir)
