@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
 
 /** J1/P5: the reference's conditional upsert of period reports keyed by
   * `(begin_date, end_date)` (/root/reference/transformer.py:30-132):
@@ -14,9 +18,13 @@ import org.apache.spark.sql.functions._
   * form of MERGE. The incoming side is a per-period aggregate (tiny:
   * one row per date range), but Spark has no broadcast hash join for a
   * full outer join: `merge` plans a SortMergeJoin that shuffles BOTH
-  * sides, and those two shuffles are two of `mergeInto`'s four jobs
-  * (`JobBudgetSpec`). At 100 TB the stored table is date-partitioned
-  * and `mergeIntoPartitioned` rewrites only the touched partitions.
+  * sides. `mergeInto` runs three jobs, those two shuffles and the
+  * write; it reads the stored table with the schema in one part file's
+  * footer (the Spark row metadata the sink's own write recorded), read
+  * on the driver, so no schema-inference job runs. With the report's
+  * four, one extract + fold + upsert cycle runs seven (`JobBudgetSpec`).
+  * At 100 TB the stored table is date-partitioned and
+  * `mergeIntoPartitioned` rewrites only the touched partitions.
   */
 object ReportUpsert {
 
@@ -25,9 +33,19 @@ object ReportUpsert {
     */
   def merge(existing: DataFrame, incoming: DataFrame): DataFrame = {
     val keys = Seq("begin_date", "end_date")
-    val payload = existing.columns.filterNot(keys.contains).toSeq
-    require(payload == incoming.columns.filterNot(keys.contains).toSeq,
+    def payloadOf(df: DataFrame) = df.schema.fields.toSeq.filterNot(f => keys.contains(f.name))
+    val stored = payloadOf(existing)
+    // the same names in the same order with the same types (nullability
+    // aside); a numeric batch column may carry another numeric type (a
+    // decimal literal for a double) and is written as the stored type.
+    // Any other type change would coerce silently in `winner`.
+    def numeric(f: StructField) = f.dataType.isInstanceOf[NumericType]
+    def fits(s: StructField, b: StructField) = s.name == b.name &&
+      (s.dataType.catalogString == b.dataType.catalogString || numeric(s) && numeric(b))
+    val batch = payloadOf(incoming)
+    require(stored.length == batch.length && stored.zip(batch).forall((fits _).tupled),
       "existing/incoming schemas must match")
+    val payload = stored.map(_.name)
     val e = existing.select(col("begin_date"), col("end_date"),
       struct(payload.map(col): _*).as("_e"))
     val i = incoming.select(col("begin_date"), col("end_date"),
@@ -37,8 +55,10 @@ object ReportUpsert {
         col("_i.total_transactions") > col("_e.total_transactions"))
     val winner = when(takeIncoming, col("_i")).otherwise(col("_e"))
     e.join(i, keys, "full_outer")
-      .select(col("begin_date") +: col("end_date") +:
-        payload.map(p => winner.getField(p).as(p)): _*)
+      .select(col("begin_date") +: col("end_date") +: stored.map { f =>
+        val w = winner.getField(f.name)
+        (if (numeric(f)) w.cast(f.dataType) else w).as(f.name)
+      }: _*)
   }
 
   /** Sink form over a parquet reports directory (the driver corpus has
@@ -57,7 +77,7 @@ object ReportUpsert {
     recover(dir)
     val spark = incoming.sparkSession
     val merged =
-      if (Fs.exists(dir)) merge(spark.read.parquet(dir), incoming)
+      if (Fs.exists(dir)) merge(readStored(spark, dir), incoming)
       else incoming
     // Overwrite must not read its own output mid-write: stage to a temp
     // local collect-free checkpoint via a shadow dir swap.
@@ -70,6 +90,23 @@ object ReportUpsert {
       Fs.move(tmp, dir)
       Fs.delete(bak)
     } else Fs.move(tmp, dir)
+  }
+
+  /** The `mergeInto` table, read with the schema stored in its first
+    * part file's footer: the Spark row metadata the sink's write put
+    * there, one footer read on the driver. `spark.read.parquet(dir)`
+    * would infer the same schema in a Spark job. A file without that
+    * metadata (written by another tool) falls back to inference. */
+  private def readStored(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = Fs.list(dir).map(_.getPath).find(_.getName.startsWith("part-")).flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      finally reader.close()
+    }
+    schema.map(json => spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+      .getOrElse(spark.read).parquet(dir)
   }
 
   /** Filesystem layer of the MERGE/OCC sinks — hoisted to the shared

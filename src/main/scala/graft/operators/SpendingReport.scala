@@ -281,74 +281,97 @@ object SpendingReport {
     * projection at :283): one row; ordered map-likes persisted as
     * arrays of (key,total) structs so output hashing is deterministic.
     *
-    * Every column folds from ONE exact aggregate, `cells` = the decimal
-    * sum and row count per (txn_date, category, vendor). A decimal sum
-    * of cell sums is the sum of the rows, so each value is the same
+    * One scan of the input feeds one chain of three aggregates (four
+    * Spark jobs: three shuffles and the collect), with every sum an
+    * exact decimal cast to double once, so each value is the same
     * double the building blocks above (`globalSummary`, `keyTotals`,
     * `zeroImputedMean`, `pctChangeLatest`, `top5Asc`, `uniqueKeySets`)
-    * produce, without their nine re-scans of the input:
-    *  - one global aggregate over `cells` gives the totals, the date
-    *    range, the distinct key sets and the date facts: the number of
-    *    distinct dates (a null date counts as one, as `distinct().count()`
-    *    counts it) and the two latest dates in the pct-change window's
-    *    order (asc, nulls first);
-    *  - per key, one groupBy over `cells` crossed with those date facts
-    *    gives the total, the zero-imputed mean (total / #dates, the same
-    *    IEEE division) and the latest and predecessor sums of pct_change;
-    *  - `spending_per_*` sorts (total, key) structs inside the array
-    *    instead of a `globalRank`; `top_5_vendors` is its first five.
+    * produce:
+    *  - E1: each transaction becomes three `(kind, key)` rows, kind
+    *    `category`, `vendor` and `all` (whose key is null), grouped by
+    *    `(kind, key, txn_date)` into cells (decimal sum, row count);
+    *  - E2: per `(kind, key)`, the total, the row count, the number of
+    *    cells (for kind `all`: the distinct dates, a null date counting
+    *    as one, as `distinct().count()` counts it), the first date and
+    *    the two latest non-null dates with their sums;
+    *  - E3: one global aggregate collects the per-key structs.
+    * The final projection reads the latest date L and its predecessor
+    * P (the pct-change window's order: asc, nulls first) from kind
+    * `all`'s two latest dates. A key's dates are a subset of all dates,
+    * so its cell at L, if any, is its latest date, and its cell at P,
+    * if any, is its latest or second latest: its two latest dates
+    * suffice for `pct_change`. The zero-imputed mean is total / #dates
+    * (the same IEEE division); `spending_per_*` sorts (total, key)
+    * structs inside the array and `top_5_vendors` is its first five.
     * Kept quirk: `denseGrid`'s equi-join never matches a null date or a
     * null key, so a cell with either counts as 0 in `pct_change` (a null
     * key's pct_change is 0) while it still counts in totals and means.
     */
   def report(tx: DataFrame): DataFrame = {
-    val cells = tx.groupBy(col("txn_date"), col("category"), col("vendor"))
-      .agg(sum(amt2).as("cell"), count(lit(1)).as("n"))
-    val g = cells.agg(
-        sum(col("cell")).cast("double").as("total_spent"),
-        coalesce(sum(col("n")), lit(0L)).as("total_transactions"),
-        min(col("txn_date")).as("begin_date"),
-        max(col("txn_date")).as("end_date"),
-        sort_array(collect_set(col("category"))).as("unique_categories"),
-        sort_array(collect_set(col("vendor"))).as("unique_vendors"),
-        sort_array(collect_set(col("txn_date")), asc = false).as("_dates"),
-        max(col("txn_date").isNull).as("_null_date"))
-      .withColumn("n_categories", size(col("unique_categories")).cast("long"))
-      .withColumn("n_vendors", size(col("unique_vendors")).cast("long"))
+    val kinds = explode(array(
+      struct(lit("category").as("kind"), col("category").as("key")),
+      struct(lit("vendor").as("kind"), col("vendor").as("key")),
+      struct(lit("all").as("kind"), lit(null).cast(StringType).as("key"))))
+    val cells = tx.select(col("txn_date"), amt2.as("amt"), kinds.as("k"))
+      .groupBy(col("k.kind").as("kind"), col("k.key").as("key"), col("txn_date"))
+      .agg(sum(col("amt")).as("cell"), count(lit(1)).as("n"))
+    val keyed = cells.groupBy(col("kind"), col("key")).agg(
+      moneySum(col("cell")).as("total"),
+      sum(col("n")).as("n"),
+      count(lit(1)).as("n_cells"),
+      min(col("txn_date")).as("begin"),
+      // a null per-date sum (only null amounts) reads as 0, as the dense
+      // grid's fill does
+      slice(sort_array(collect_list(when(col("txn_date").isNotNull, struct(
+        col("txn_date").as("d"),
+        coalesce(col("cell").cast("double"), lit(0.0)).as("s")))), asc = false), 1, 2)
+        .as("top2"))
+    // sorted by (total, key): the order of spending_per_*
+    def keysOf(kind: String) = sort_array(collect_list(when(col("kind") === kind,
+      struct(col("total"), col("key"), col("top2"))))).as(kind)
+    val folded = keyed.agg(
+      max(when(col("kind") === "all", struct(col("total"), col("n"), col("n_cells"),
+        col("begin"), col("top2")))).as("all"),
+      keysOf("category"), keysOf("vendor"),
+      sort_array(collect_list(when(col("kind") === "category", col("key")))).as("unique_categories"),
+      sort_array(collect_list(when(col("kind") === "vendor", col("key")))).as("unique_vendors"))
+
+    def date(top2: Column, i: Int) = try_element_at(top2, lit(i)).getField("d")
+    def sumAt(top2: Column, i: Int) = try_element_at(top2, lit(i)).getField("s")
     // the lag window sorts dates asc nulls first: the latest is the max
-    // date (null only when every date is), the predecessor the second
-    // largest; a null predecessor, or none, reads as 0 either way
-    val dateFacts = g.select(
-      (size(col("_dates")) + coalesce(col("_null_date").cast("int"), lit(0)))
-        .cast("double").as("_n_dates"),
-      col("end_date").as("_latest"),
-      try_element_at(col("_dates"), lit(2)).as("_pred"))
-
-    def perKey(key: String): DataFrame = {
-      def sumAt(date: String) =
-        coalesce(sum(when(col("txn_date") === col(date), col("cell"))).cast("double"), lit(0.0))
-      val keyed = cells.crossJoin(dateFacts).groupBy(col(key), col("_n_dates"))
-        .agg(moneySum(col("cell")).as("total"), sumAt("_latest").as("_cur"),
-          sumAt("_pred").as("_prev"))
-      val pct = when(col(key).isNull || col("_prev") === 0.0, lit(0.0))
-        .otherwise((col("_cur") - col("_prev")) / col("_prev"))
-      keyed.agg(
-        transform(sort_array(collect_list(struct(col("total"), col(key).as("_k")))),
-          kv => struct(kv("_k").as(key), kv("total").as("total"))).as(s"spending_per_$key"),
-        sort_array(collect_list(struct(col(key), pct.as("pct_change"))))
-          .as(s"pct_change_$key"),
-        sort_array(collect_list(struct(col(key),
-          (col("total") / col("_n_dates")).as("mean_amount")))).as(s"avg_$key"))
+    // non-null date, the predecessor the second; a null or missing one
+    // matches no cell, so it reads as 0
+    val latest = date(col("all.top2"), 1)
+    val pred = date(col("all.top2"), 2)
+    val nDates = col("all.n_cells").cast("double")
+    def fields(key: String): Seq[Column] = {
+      def pct(k: Column) = {
+        val t = k("top2")
+        val cur = when(date(t, 1) === latest, sumAt(t, 1)).otherwise(lit(0.0))
+        val prev = when(date(t, 1) === pred, sumAt(t, 1))
+          .when(date(t, 2) === pred, sumAt(t, 2)).otherwise(lit(0.0))
+        when(k("key").isNull || prev === 0.0, lit(0.0)).otherwise((cur - prev) / prev)
+      }
+      def perKey(name: String, value: Column => Column) =
+        transform(col(key), k => struct(k("key").as(key), value(k).as(name)))
+      Seq(
+        perKey("total", _("total")).as(s"spending_per_$key"),
+        sort_array(perKey("pct_change", pct)).as(s"pct_change_$key"),
+        sort_array(perKey("mean_amount", _("total") / nDates)).as(s"avg_$key"))
     }
-
-    // single-row sides -> broadcast-nested-loop cross joins of 1x1 rows
-    val row = g.crossJoin(perKey("category")).crossJoin(perKey("vendor"))
-      .select(col("total_spent"), col("total_transactions"), col("begin_date"),
-        col("end_date"), col("unique_categories"), col("n_categories"),
-        col("unique_vendors"), col("n_vendors"), col("spending_per_category"),
-        col("spending_per_vendor"), col("pct_change_category"), col("pct_change_vendor"),
-        col("avg_category"), col("avg_vendor"),
-        slice(col("spending_per_vendor"), 1, 5).as("top_5_vendors"))
+    val Seq(spendCat, pctCat, avgCat) = fields("category")
+    val Seq(spendVen, pctVen, avgVen) = fields("vendor")
+    val row = folded.select(
+        col("all.total").as("total_spent"),
+        coalesce(col("all.n"), lit(0L)).as("total_transactions"),
+        col("all.begin").as("begin_date"),
+        latest.as("end_date"),
+        col("unique_categories"),
+        size(col("unique_categories")).cast("long").as("n_categories"),
+        col("unique_vendors"),
+        size(col("unique_vendors")).cast("long").as("n_vendors"),
+        spendCat, spendVen, pctCat, pctVen, avgCat, avgVen)
+      .withColumn("top_5_vendors", slice(col("spending_per_vendor"), 1, 5))
 
     // P2: details = report minus (begin_date, end_date, fi_summary).
     val detailCols = Seq("total_spent", "total_transactions",

@@ -37,18 +37,25 @@ class JobBudgetSpec extends SparkSpec {
 
   test("report(tx).collect() on sf0.001: job count") {
     val tx = Tables.transactions(spark, sf)
-    // 12 = the one-aggregate fold; the nine-way composition it
-    // replaced ran 63 (globalRank three times, two eager counts)
-    assert(jobs(SpendingReport.report(tx).collect()) == 12)
+    // 4 = three shuffles (cells, per key, global) and the collect; the
+    // three-consumer fold before ran 12, the nine-way composition 63
+    assert(jobs(SpendingReport.report(tx).collect()) == 4)
+  }
+
+  test("report(tx).collect(): the job count grows with neither input size nor key count") {
+    val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
+    val inputs = Seq(Tables.transactions(spark, sf01), TestRefs.landedUploads(spark, 26))
+    assert(inputs.map(tx => jobs(SpendingReport.report(tx).collect())) == Seq(4, 4))
   }
 
   test("one enriched + mergeInto cycle: job count") {
     val tx = Tables.transactions(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/reports"
     ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx.filter("txn_date < DATE'2024-01-02'")))
-    // 16 = the report's 12 + the upsert's read, merge and write; the
-    // nine-way report with its cached row ran 68
-    assert(jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx))) == 16)
+    // 7 = the report's 4 + the upsert's two merge shuffles and write
+    // (the stored schema comes from a footer, with no inference job);
+    // 16 before, and the nine-way report with its cached row ran 68
+    assert(jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx))) == 7)
   }
 
   test("annServe on sf0.001: the cold call collects the corpus once; every other call runs no job") {

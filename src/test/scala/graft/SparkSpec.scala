@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, substring_index}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites
@@ -41,4 +42,27 @@ object TestRefs {
     (p: (String, String), q: (String, String)) => {
       val c = utf8Cmp(p._1, q._1); if (c != 0) c else utf8Cmp(p._2, q._2)
     }
+
+  /** `n` monthly upload summaries landed as JSON and extracted the way
+    * the scheduled fold reads them: vendor keys `category/vNN`. */
+  def landedUploads(spark: SparkSession, n: Int): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_uploads")
+    val rnd = new scala.util.Random(n)
+    val vendors = for (c <- Seq("dining", "groceries", "rent", "travel"); v <- 0 until 4)
+      yield f"$c/v$v%02d"
+    (0 until n).foreach { m =>
+      val start = java.time.LocalDate.of(2021, 1, 1).plusMonths(m.toLong)
+      val lines = rnd.shuffle(vendors).take(4 + rnd.nextInt(9)).sorted
+        .map(v => v -> f"${100 + rnd.nextInt(50000)}%d.${rnd.nextInt(100)}%02d")
+      val body = s"""{"upload_id": $m, "begin_date": "$start", """ +
+        s""""end_date": "${start.plusMonths(1).minusDays(1)}", "total_spent": 1.0, """ +
+        s""""total_transactions": ${lines.size}, "spending_per_vendor": """ +
+        lines.map { case (v, a) => s""""$v": $a""" }.mkString("{", ", ", "}") + "}"
+      java.nio.file.Files.writeString(dir.resolve(s"u$m.json"), body + "\n")
+    }
+    graft.sources.UploadSource.transactionsFromSummaries(
+      graft.sources.UploadSource.uploadSummaries(spark, dir.toString), "spending_per_vendor")
+      .select(col("txn_date"), substring_index(col("key"), "/", 1).as("category"),
+        col("key").as("vendor"), col("amount"))
+  }
 }

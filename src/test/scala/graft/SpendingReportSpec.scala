@@ -3,7 +3,7 @@ package graft
 import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, collect_list, current_date, expr, parse_json,
-  sort_array, struct, substring_index, sum, to_json}
+  sort_array, struct, sum, to_json}
 import graft.operators.SpendingReport
 
 /** Per-operator semantics from SURVEY.md §2 over tiny literal frames,
@@ -230,29 +230,6 @@ class SpendingReportSpec extends SparkSpec {
       .withColumn("created_at", current_date())
   }
 
-  /** `n` monthly upload summaries landed as JSON and extracted the way
-    * the scheduled fold reads them: vendor keys `category/vNN`. */
-  private def landedUploads(n: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_uploads")
-    val rnd = new scala.util.Random(n)
-    val vendors = for (c <- Seq("dining", "groceries", "rent", "travel"); v <- 0 until 4)
-      yield f"$c/v$v%02d"
-    (0 until n).foreach { m =>
-      val start = java.time.LocalDate.of(2021, 1, 1).plusMonths(m.toLong)
-      val lines = rnd.shuffle(vendors).take(4 + rnd.nextInt(9)).sorted
-        .map(v => v -> f"${100 + rnd.nextInt(50000)}%d.${rnd.nextInt(100)}%02d")
-      val body = s"""{"upload_id": $m, "begin_date": "$start", """ +
-        s""""end_date": "${start.plusMonths(1).minusDays(1)}", "total_spent": 1.0, """ +
-        s""""total_transactions": ${lines.size}, "spending_per_vendor": """ +
-        lines.map { case (v, a) => s""""$v": $a""" }.mkString("{", ", ", "}") + "}"
-      java.nio.file.Files.writeString(dir.resolve(s"u$m.json"), body + "\n")
-    }
-    graft.sources.UploadSource.transactionsFromSummaries(
-      graft.sources.UploadSource.uploadSummaries(spark, dir.toString), "spending_per_vendor")
-      .select(col("txn_date"), substring_index(col("key"), "/", 1).as("category"),
-        col("key").as("vendor"), col("amount"))
-  }
-
   /** A report's rows without the per-run `id` and `created_at`, the
     * variant as its JSON, each with its whole-row JSON (exact doubles). */
   private def view(r: DataFrame): Seq[(org.apache.spark.sql.Row, String)] =
@@ -269,6 +246,21 @@ class SpendingReportSpec extends SparkSpec {
   test("fused report equals the nine-way composition") {
     val testdata = "/root/testdata"
     val (a, b, c) = (Some("2024-01-01"), Some("2024-01-02"), Some("2024-01-03"))
+    // the top-two-dates edges; c is the latest date, b its predecessor.
+    // toys's cell on c is a null amount after 3.0 on b; gym's only cell
+    // is a null amount on c
+    val nullOnLatest = txOf(
+      (a, Some("food"), Some("v1"), Some(2.0)), (b, Some("food"), Some("v1"), Some(4.0)),
+      (b, Some("toys"), Some("v2"), Some(3.0)), (c, Some("food"), Some("v1"), Some(1.0)),
+      (c, Some("toys"), Some("v3"), None), (c, Some("gym"), Some("v2"), None))
+    // rent (and v2) only on a, before the predecessor: cur = prev = 0
+    val onlyOlder = txOf(
+      (a, Some("food"), Some("v1"), Some(2.0)), (a, Some("rent"), Some("v2"), Some(9.0)),
+      (b, Some("food"), Some("v1"), Some(4.0)), (c, Some("food"), Some("v1"), Some(6.0)))
+    // rent (and v2) only on the predecessor b: cur = 0, prev = 5
+    val onlyPred = txOf(
+      (a, Some("food"), Some("v1"), Some(2.0)), (b, Some("food"), Some("v1"), Some(4.0)),
+      (b, Some("rent"), Some("v2"), Some(5.0)), (c, Some("food"), Some("v1"), Some(6.0)))
     val inputs = Seq(
       "spec frame" -> tx,
       "one date" -> tx.filter($"txn_date" === lit(d("2024-01-01"))),
@@ -289,7 +281,10 @@ class SpendingReportSpec extends SparkSpec {
         (b, Some("food"), None, Some(2.0)), (c, Some("food"), Some("v1"), Some(8.0)),
         (c, None, None, Some(1.0))),
       "empty" -> txOf(),
-      "26 landed uploads" -> landedUploads(26)) ++
+      "a null amount on the latest date" -> nullOnLatest,
+      "a key only on an older date" -> onlyOlder,
+      "a key only on the predecessor" -> onlyPred,
+      "26 landed uploads" -> TestRefs.landedUploads(spark, 26)) ++
       Seq("sf0.001", "sf0.01", "sf0.1").map(s => s -> Tables.transactions(spark, s"$testdata/$s"))
     inputs.foreach { case (name, in) =>
       val fused = SpendingReport.report(in)
@@ -300,6 +295,12 @@ class SpendingReportSpec extends SparkSpec {
       assert(got.length == 1, s"$name: report must be one row, got ${got.length}")
       assert(got == want, s"$name: fused ${got.map(_._2)} vs nine-way ${want.map(_._2)}")
     }
+    def pct(in: DataFrame, category: String): Any = SpendingReport.report(in)
+      .selectExpr(s"filter(pct_change_category, x -> x.category = '$category')[0].pct_change")
+      .head().get(0)
+    assert(pct(nullOnLatest, "toys") == -1.0 && pct(nullOnLatest, "gym") == 0.0)
+    assert(pct(onlyOlder, "rent") == 0.0)
+    assert(pct(onlyPred, "rent") == -1.0)
   }
 
   test("unpivot round-trips the pivot (dense grid preserved)") {

@@ -35,6 +35,25 @@ class UpsertSpec extends SparkSpec {
     assert(out.length == 1 && out.head.getAs[String]("version") == "v1")
   }
 
+  test("mergeInto: a mismatched batch fails by name and leaves the table alone") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mismatch").toString + "/reports"
+    ReportUpsert.mergeInto(dir, reports(("2024-01-01", 10.0, "v1", 5L)))
+    def files = new java.io.File(dir).listFiles().map(f => f.getName -> f.lastModified()).toSet
+    def rows = spark.read.parquet(dir).collect().map(_.toSeq).toSeq
+    val (filesBefore, rowsBefore) = (files, rows)
+    // the stored guard column grows, so a matching batch would update
+    val batch = reports(("2024-01-01", 12.0, "v2", 9L))
+    Seq("a dropped column" -> batch.drop("version"),
+      "an extra column" -> batch.withColumn("extra", lit(1)),
+      "a changed type" -> batch.withColumn("total_transactions",
+        col("total_transactions").cast("string"))
+    ).foreach { case (name, bad) =>
+      val e = intercept[IllegalArgumentException](ReportUpsert.mergeInto(dir, bad))
+      assert(e.getMessage.contains("existing/incoming schemas must match"), s"$name: $e")
+      assert(files == filesBefore && rows == rowsBefore, s"$name: the table changed")
+    }
+  }
+
   test("mergeInto recovers from every crash point of the dir swap") {
     // r17: driven through a scheme-qualified file: URI so the whole
     // swap/recover sequence exercises the Hadoop FileSystem path (the

@@ -3,7 +3,12 @@
 outDir, run the matching oracle SQL in DuckDB over the sfDir parquet tables,
 sort columns by name, sort rows, and compare values exactly (with a
 float-tolerance report so we can distinguish hard mismatches from low-bit
-noise). Usage: compare_oracle.py <sfDir> <outDir>
+noise). Usage: compare_oracle.py <sfDir> <outDir> [query ...]
+
+With query names after the two dirs, only those queries are compared (a
+name not in outDir/oracle_sql.json is an error); with none, every query
+in oracle_sql.json is, and one without an output dir fails as
+MISSING_OUTPUT.
 """
 import sys, os, json, glob, math
 import duckdb
@@ -71,16 +76,19 @@ def close(a, b, tol=1e-9):
 # named FAIL line.
 MEMORY_LIMIT = "10GB"
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=()):
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(set(names) - set(oracle))
+    if unknown:
+        sys.exit(f"compare_oracle: not in {out_dir}/oracle_sql.json: {', '.join(unknown)}")
     con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
                                  "temp_directory": os.path.join(out_dir, "duckdb_tmp")})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
-    for name in sorted(oracle):
+    for name in sorted(names or oracle):
         qdir = f"{out_dir}/{name}"
         files = glob.glob(f"{qdir}/*.parquet")
         if not files:
@@ -117,4 +125,6 @@ def main(sf_dir, out_dir):
     return 0 if ok == len(results) else 1
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3:]))
