@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** The ANN ladder's SERVING-POLICY surface in one place (r18, VERDICT
@@ -155,17 +155,28 @@ object AnnPolicy {
               cap: Long = Similarity.localServeCap): DataFrame
   }
 
+  /** A rung's driver kernel over the driver-resident corpus (below
+    * `Similarity.localServeCap`): (corpus, positions of the rows the
+    * query predicate matched, k) → the (query_id, rnk, neighbor_id, …)
+    * rows its Spark plan returns, or None when that plan must answer. */
+  trait LocalServe {
+    def apply(lc: Similarity.LocalCorpus, hits: Array[Int], k: Int): Option[Seq[Row]]
+  }
+
   /** One ANN rung: its harness/query method name, the cross-scale
     * CERTIFIED recall floor in milli-recall (the minimum of the per-SF
     * half-measured floors — the recall a serving policy can RELY on at
-    * any gated scale), its serve-time cost expression, and the serve
-    * function `Similarity.annServe` runs when the rung is chosen. */
+    * any gated scale), its serve-time cost expression, the serve
+    * function `Similarity.annServe` runs when the rung is chosen, and
+    * the driver kernel it runs instead below the cap, if the rung has
+    * one. */
   final case class AnnRung(method: String, floorMilli: Long, cost: Cost,
-                           serve: Serve)
+                           serve: Serve, local: Option[LocalServe] = None)
 
   import Similarity.{autoGraphBeam, autoGraphHops, autoIvfCells,
-    autoIvfProbe, ivfRqTopKMulti, ivfTopK, ivfpqTopK, knnGraph,
-    knnGraphSearch, lshTopK, lshTopKMulti, pqTopK, sq8TopK, sq8TopKRerank}
+    autoIvfProbe, ivfLocal, ivfRqTopKMulti, ivfTopK, ivfpqTopK, knnGraph,
+    knnGraphSearch, lshTopK, lshTopKMulti, pqTopK, sq8Local, sq8RerankLocal,
+    sq8TopK, sq8TopKRerank}
 
   /** The frontier's rung table. Floors are re-pinned when a rung
     * re-points (see BUILD_NOTES); cost constants reference the serving
@@ -180,13 +191,16 @@ object AnnPolicy {
     // cells centroid distances + probed-cell scans
     AnnRung("ivf", 420L,
       q * L(harnessIvfCells) + q * L(harnessIvfProbe) * b16,
-      (e, p, k, _, cap) => ivfTopK(e, p, k, harnessIvfCells, harnessIvfProbe, cap = cap)),
+      (e, p, k, _, cap) => ivfTopK(e, p, k, harnessIvfCells, harnessIvfProbe, cap = cap),
+      Some((lc, hits, k) => ivfLocal(lc, hits, k, harnessIvfProbe, lc.firstById(harnessIvfCells)))),
     AnnRung("pq_hi", 220L, L(pqHiM) * q * n,
       (e, p, k, _, _) => pqTopK(e, p, k, pqHiM, pqHiKsub, 1)),
     AnnRung("sq8", 700L, L(dims) * q * n,
-      (e, p, k, _, cap) => sq8TopK(e, p, k, cap = cap)),
+      (e, p, k, _, cap) => sq8TopK(e, p, k, cap = cap),
+      Some((lc, hits, k) => Some(sq8Local(lc, hits, k)))),
     AnnRung("sq8_rerank", 900L, L(dims) * q * n + L(rerankPool) * q,
-      (e, p, k, _, cap) => sq8TopKRerank(e, p, k, rerankPool, cap)),
+      (e, p, k, _, cap) => sq8TopKRerank(e, p, k, rerankPool, cap),
+      Some((lc, hits, k) => sq8RerankLocal(lc, hits, k, rerankPool))),
     AnnRung("ivfpq_auto", 170L,
       q * c + q * p2 * (n / c) * L(ivfpqAutoM),
       (e, p, k, env, _) => ivfpqTopK(e, p, k, env("c").toInt, env("p2").toInt,

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`).
   *
@@ -1221,19 +1222,69 @@ object Similarity {
   }
 
   /** The quantized corpus (`quantized(e)`'s rows: every input column
-    * plus `q` and `nq`) resident on the driver, for the sq8 and ivf
-    * serve rungs below `localServeCap`. `frame` is a LocalRelation, so
-    * a filter or projection over it folds on the driver
-    * (ConvertToLocalRelation) and a predicate picks rows with no Spark
-    * job; `ids`, `q` and `nq` hold the same rows as arrays, the
-    * operands of the driver kernels. */
+    * plus `q` and `nq`) resident on the driver, for the sq8, sq8_rerank
+    * and ivf serve rungs below `localServeCap`. `frame` is a
+    * LocalRelation over the same rows, the one a predicate is analyzed
+    * against; `ids`, `q` and `nq` hold them as arrays, the operands of
+    * the driver kernels. The ivf cell membership of each centroid set
+    * is kept here too (`members`), so it is assigned once per corpus. */
   private[graft] final class LocalCorpus(val frame: DataFrame, val ids: Array[Long],
                                          val q: Array[Array[Long]], val nq: Array[Long]) {
-    /** Positions of the rows `pred` selects, in corpus order. */
+    /** Positions of the rows `pred` selects, in corpus order, with no
+      * Spark job and no optimizer run: the analyzed condition is bound
+      * to the frame's rows and evaluated by `InterpretedPredicate`
+      * initialized at partition 0 — what ConvertToLocalRelation does to
+      * a filter over a LocalRelation, so the rows are the ones
+      * `frame.filter(pred)` returns. A condition that rule would not
+      * fold as analyzed (an unevaluable or subquery expression, or one
+      * the optimizer must first replace) runs `frame.filter(pred)` as a
+      * query instead. */
     def matching(pred: Column): Array[Int] = {
-      val hit = frame.filter(pred).select(col("vec_id")).collect().map(_.getLong(0)).toSet
-      ids.indices.filter(i => hit(ids(i))).toArray
+      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences,
+        InterpretedPredicate, RuntimeReplaceable, SubqueryExpression, Unevaluable}
+      import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+      val filtered = frame.filter(pred)
+      filtered.queryExecution.analyzed match {
+        case Filter(cond, rel: LocalRelation) if !cond.exists {
+            case _: AttributeReference => false
+            case _: Unevaluable | _: SubqueryExpression | _: RuntimeReplaceable => true
+            case _ => false
+          } =>
+          val p = InterpretedPredicate(BindReferences.bindReference(cond, rel.output))
+          p.initialize(0)
+          rel.data.iterator.zipWithIndex.collect { case (r, i) if p.eval(r) => i }.toArray
+        case _ =>
+          val hit = filtered.select(col("vec_id")).collect().map(_.getLong(0)).toSet
+          ids.indices.filter(i => hit(ids(i))).toArray
+      }
     }
+
+    /** Whether some vector has norm 0: its cosine divides by zero, which
+      * the cosine rungs leave to their Spark plans to raise. */
+    lazy val zeroNorm: Boolean = nq.contains(0L)
+
+    /** The first `n` rows by id, as (id, q, nq): `ivfTopK`'s untrained
+      * (trainIters = 0) centroids. */
+    def firstById(n: Int): Array[(Long, Array[Long], Long)] =
+      byId.take(n).map(i => (ids(i), q(i), nq(i)))
+    private lazy val byId = ids.indices.sortBy(ids(_)).toArray
+
+    private val memberMemo =
+      scala.collection.mutable.LinkedHashMap.empty[Seq[(Long, Seq[Long])], Map[Long, Array[Int]]]
+
+    /** Each cell's member positions under the centroids `cents`, kept
+      * per centroid set (ids and vectors; the last 8 sets): `assign`
+      * maps a position to its cell and runs once per set. */
+    def members(cents: Array[(Long, Array[Long], Long)])(assign: Int => Long): Map[Long, Array[Int]] =
+      memberMemo.synchronized {
+        val key = cents.toSeq.sortBy(_._1).map(c => (c._1, c._2.toSeq))
+        memberMemo.getOrElse(key, {
+          val m = ids.indices.toArray.groupBy(assign)
+          if (memberMemo.size >= 8) memberMemo.remove(memberMemo.head._1)
+          memberMemo(key) = m
+          m
+        })
+      }
 
     /** `sq8CodeTable`'s codes and their squared norms, row-aligned:
       * per-dim (mn, mx) over every row holding the dim, then
@@ -1271,7 +1322,7 @@ object Similarity {
         rows.forall(r => !r.isNullAt(iId) && !r.isNullAt(iQ) && !r.getSeq[Any](iQ).contains(null)) &&
         ids.distinct.length == ids.length && q.map(_.length.toLong).sum < cap
       if (!fits) None
-      else Some(new LocalCorpus(e.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      else Some(new LocalCorpus(rowsFrame(e.sparkSession, rows.toSeq, schema.fields.toSeq),
         ids, q, rows.map(_.getLong(iN))))
     }
 
@@ -1302,16 +1353,24 @@ object Similarity {
     top
   }
 
-  /** A driver kernel's (query_id, rnk, neighbor_id, score) rows as a
-    * LocalRelation frame: projections over it and its collect run no
-    * Spark job either. */
-  private def localAnswer(lc: LocalCorpus, rows: Seq[org.apache.spark.sql.Row],
-                          score: String, scoreType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    lc.frame.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
-      Seq("query_id", "rnk", "neighbor_id").map(StructField(_, LongType)) :+
-        StructField(score, scoreType)))
+  /** The (query_id, rnk, neighbor_id) fields of a top-k answer over
+    * `lc`, with the nullability its Spark plan has: the ids are the
+    * corpus's `vec_id`s, and `rnk` is a `posexplode` position plus one. */
+  private def rankFields(lc: LocalCorpus): Seq[StructField] = {
+    val idNullable = lc.frame.schema("vec_id").nullable
+    Seq(StructField("query_id", LongType, idNullable),
+      StructField("rnk", LongType, nullable = false), StructField("neighbor_id", LongType, idNullable))
   }
+
+  /** Driver rows as a LocalRelation frame: its collect runs no Spark job. */
+  private def rowsFrame(spark: SparkSession, rows: Seq[Row], fields: Seq[StructField]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+
+  /** A driver kernel's (query_id, rnk, neighbor_id, score) rows over
+    * `lc`, with the schema of the rung's Spark plan. */
+  private def localAnswer(lc: LocalCorpus, rows: Seq[Row],
+                          score: String, scoreType: DataType): DataFrame =
+    rowsFrame(lc.frame.sparkSession, rows, rankFields(lc) :+ StructField(score, scoreType))
 
   /** Scalar quantization (SQ8 — FAISS's ScalarQuantizer QT_8bit shape):
     * per-dimension affine 8-bit codes, `c = (x - mn_d) * 255 div
@@ -1350,13 +1409,10 @@ object Similarity {
         .select(col("vec_id"), col("c"), col("ncc"))
         .localCheckpoint()
     } { lc =>
-      import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
       val (c, ncc) = lc.sq8
-      e.sparkSession.createDataFrame(
-        java.util.Arrays.asList(lc.ids.indices.map(i =>
-          org.apache.spark.sql.Row(lc.ids(i), c(i).toSeq, ncc(i))): _*),
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("c", ArrayType(LongType)), StructField("ncc", LongType))))
+      rowsFrame(e.sparkSession, lc.ids.indices.map(i => Row(lc.ids(i), c(i).toSeq, ncc(i))),
+        Seq(StructField("vec_id", LongType),
+          StructField("c", org.apache.spark.sql.types.ArrayType(LongType)), StructField("ncc", LongType)))
     })
   }
 
@@ -1380,8 +1436,10 @@ object Similarity {
               candPred: Option[Column] = None,
               cap: Long = localServeCap): DataFrame = {
     val e = ensureQuantized(embeddings)
-    localCorpus(e, cap).fold(sq8TopKPlan(e, queryPred, k, candPred, cap))(
-      sq8Local(_, queryPred, k, candPred))
+    localCorpus(e, cap).fold(sq8TopKPlan(e, queryPred, k, candPred, cap)) { lc =>
+      localAnswer(lc, sq8Local(lc, lc.matching(queryPred), k, candPred.map(lc.matching)),
+        "adist", LongType)
+    }
   }
 
   private def sq8TopKPlan(e: DataFrame, queryPred: Column, k: Int,
@@ -1400,33 +1458,55 @@ object Similarity {
       k, "adist")
   }
 
-  /** `sq8TopKPlan` over the driver-resident corpus: each query's
-    * `qn + cn − 2·qc·cc` against every (candPred-selected) other row,
-    * the k smallest by (adist, neighbor_id) — `topKAsc`'s order. */
-  private def sq8Local(lc: LocalCorpus, queryPred: Column, k: Int,
-                       candPred: Option[Column]): DataFrame = {
+  /** `sq8TopKPlan` over the driver-resident corpus, for the query rows
+    * at positions `hits`, as (query_id, rnk, neighbor_id, adist) rows. */
+  private[graft] def sq8Local(lc: LocalCorpus, hits: Array[Int], k: Int,
+                              cands: Option[Array[Int]] = None): Seq[Row] = {
     require(k >= 1, s"top_k needs k >= 1, got $k")
-    val (c, ncc) = lc.sq8
-    val cands = candPred.fold(lc.ids.indices.toArray)(lc.matching)
-    val rows = lc.matching(queryPred).toSeq.flatMap { qi =>
-      val m = cands.filter(j => lc.ids(j) != lc.ids(qi))
-      val d = m.map(j => Math.subtractExact(Math.addExact(ncc(qi), ncc(j)),
-        Math.multiplyExact(2L, dotLocal(c(qi), c(j)))))
-      smallestK(m.length, k)((a, b) => d(a) < d(b) || (d(a) == d(b) && lc.ids(m(a)) < lc.ids(m(b))))
-        .zipWithIndex.map { case (a, r) =>
-          org.apache.spark.sql.Row(lc.ids(qi), r + 1L, lc.ids(m(a)), d(a)) }
+    val all = cands.getOrElse(lc.ids.indices.toArray)
+    hits.toSeq.flatMap { qi =>
+      val (nb, d) = sq8Nearest(lc, qi, k, all)
+      nb.indices.map(r => Row(lc.ids(qi), r + 1L, lc.ids(nb(r)), d(r)))
     }
-    localAnswer(lc, rows, "adist", org.apache.spark.sql.types.LongType)
+  }
+
+  /** Query position `qi`'s `qn + cn − 2·qc·cc` against every other
+    * position of `cands`: the positions of the k smallest by (adist,
+    * neighbor_id) — `topKAsc`'s order — ascending, and their adists. */
+  private def sq8Nearest(lc: LocalCorpus, qi: Int, k: Int,
+                         cands: Array[Int]): (Array[Int], Array[Long]) = {
+    val (c, ncc) = lc.sq8
+    val m = cands.filter(_ != qi)
+    val d = m.map(j => Math.subtractExact(Math.addExact(ncc(qi), ncc(j)),
+      Math.multiplyExact(2L, dotLocal(c(qi), c(j)))))
+    val top = smallestK(m.length, k)((a, b) => d(a) < d(b) || (d(a) == d(b) && lc.ids(m(a)) < lc.ids(m(b))))
+    (top.map(m), top.map(d))
   }
 
   /** SQ8 + exact re-rank: the code-space scan proposes a `pool`-sized
     * candidate set, exact quantized cosine orders the final top-k —
-    * the same refine stage as the PQ/RQ/IVFPQ siblings. */
+    * the same refine stage as the PQ/RQ/IVFPQ siblings. Below `cap`
+    * both stages run on the driver (`sq8RerankLocal`): no Spark job. */
   def sq8TopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
                     pool: Int, cap: Long = localServeCap): DataFrame = {
     require(pool >= k, s"rerank pool $pool must be >= k=$k")
     val e = ensureQuantized(embeddings)
-    exactRerank(e, queryPred, sq8TopK(e, queryPred, pool, cap = cap), k)
+    localCorpus(e, cap).flatMap(lc =>
+      sq8RerankLocal(lc, lc.matching(queryPred), k, pool).map(localAnswer(lc, _, "cosine", DoubleType)))
+      .getOrElse(exactRerank(e, queryPred, sq8TopK(e, queryPred, pool, cap = cap), k))
+  }
+
+  /** `sq8TopKRerank` over the driver-resident corpus: each query's
+    * `sq8Local` pool of `pool` rows, re-ranked by `cosineTopK`. None on
+    * a zero norm, whose cosine `exactRerank`'s plan raises. */
+  private[graft] def sq8RerankLocal(lc: LocalCorpus, hits: Array[Int], k: Int,
+                                    pool: Int): Option[Seq[Row]] = {
+    require(pool >= k && k >= 1, s"rerank needs pool $pool >= k=$k >= 1")
+    if (lc.zeroNorm) None
+    else {
+      val all = lc.ids.indices.toArray
+      Some(hits.toSeq.flatMap(qi => cosineTopK(lc, qi, sq8Nearest(lc, qi, pool, all)._1, k)))
+    }
   }
 
   /** IVF-SQ8 (FAISS's IVF,SQ8): the coarse quantizer partitions the
@@ -2279,12 +2359,10 @@ object Similarity {
           .select(col("cell_id"), col("cv"), col("cn"))
     localCorpus(e, cap).flatMap { lc =>
       val cents =
-        if (trainIters == 0)
-          lc.ids.indices.sortBy(lc.ids(_)).take(nCells).map(i => (lc.ids(i), lc.q(i), lc.nq(i))).toArray
+        if (trainIters == 0) lc.firstById(nCells)
         else centroids.collect().map(r =>
           (r.getAs[Number](0).longValue, r.getSeq[Long](1).toArray, r.getLong(2)))
-      if (lc.nq.contains(0L) || cents.exists(_._3 == 0L)) None
-      else Some(ivfLocal(lc, queryPred, k, nProbe, cents))
+      ivfLocal(lc, lc.matching(queryPred), k, nProbe, cents).map(localAnswer(lc, _, "cosine", DoubleType))
     }.getOrElse(ivfTopKPlan(e, queryPred, k, nProbe, centroids))
   }
 
@@ -2332,38 +2410,50 @@ object Similarity {
       k, "cosine")
   }
 
-  /** `ivfTopKPlan` over the driver-resident corpus and the collected
-    * (cell_id, cv, cn) centroids, all norms non-zero. Cells rank by
-    * (sim DESC, cell_id ASC) under Spark's double ordering (NaN
-    * greatest and equal to itself, −0.0 = 0.0): the first is the
-    * assignment's `max_by`, the first `nProbe` the probe window. Each
+  /** `ivfTopKPlan` over the driver-resident corpus and the given
+    * (cell_id, cv, cn) centroids, for the query rows at positions
+    * `hits`; None on a zero norm, whose cosine the plan raises. Cells
+    * rank by (sim DESC, cell_id ASC) under Spark's double ordering: the
+    * first is the assignment's `max_by`, kept per centroid set by
+    * `LocalCorpus.members`; the first `nProbe` the probe window. Each
     * query's candidates (the probed cells' members but itself, each
-    * once) keep `topKDesc`'s k smallest (−cosine, neighbor_id). */
-  private def ivfLocal(lc: LocalCorpus, queryPred: Column, k: Int, nProbe: Int,
-                       cents: Array[(Long, Array[Long], Long)]): DataFrame = {
-    require(k >= 1, s"top_k needs k >= 1, got $k")
+    * once) rank by `cosineTopK`. */
+  private[graft] def ivfLocal(lc: LocalCorpus, hits: Array[Int], k: Int, nProbe: Int,
+                              cents: Array[(Long, Array[Long], Long)]): Option[Seq[Row]] =
+    if (lc.zeroNorm || cents.exists(_._3 == 0L)) None
+    else {
+      require(k >= 1, s"top_k needs k >= 1, got $k")
+      import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+      def cells(i: Int, n: Int): Array[Long] = {
+        val sim = cents.map { case (_, cv, cn) => cosineLocal(dotLocal(lc.q(i), cv), lc.nq(i), cn) }
+        smallestK(cents.length, n) { (a, b) =>
+          val o = compareDoubles(sim(a), sim(b))
+          o > 0 || (o == 0 && cents(a)._1 < cents(b)._1)
+        }.map(cents(_)._1)
+      }
+      // no centroid: no cell to probe, so no candidate
+      val members = if (cents.isEmpty) Map.empty[Long, Array[Int]] else lc.members(cents)(cells(_, 1).head)
+      Some(hits.toSeq.flatMap { qi =>
+        cosineTopK(lc, qi, cells(qi, nProbe).flatMap(members.getOrElse(_, Array.empty[Int])).filter(_ != qi), k)
+      })
+    }
+
+  /** `dot / sqrt(a · b)` in doubles: the plans' cosine, bit for bit. */
+  private def cosineLocal(dot: Long, a: Long, b: Long): Double =
+    dot.toDouble / math.sqrt(a.toDouble * b.toDouble)
+
+  /** Query position `qi`'s exact quantized cosine against candidate
+    * positions `m` (each once, `qi` not among them), all norms
+    * non-zero: `topKDesc`'s k smallest (−cosine, neighbor_id) under
+    * Spark's double ordering (NaN greatest and equal to itself, −0.0 =
+    * 0.0), as (query_id, rnk, neighbor_id, cosine) rows. */
+  private def cosineTopK(lc: LocalCorpus, qi: Int, m: Array[Int], k: Int): Seq[Row] = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    def cosine(dot: Long, a: Long, b: Long): Double =
-      dot.toDouble / math.sqrt(a.toDouble * b.toDouble)
-    def cells(i: Int, n: Int): Array[Long] = {
-      val sim = cents.map { case (_, cv, cn) => cosine(dotLocal(lc.q(i), cv), lc.nq(i), cn) }
-      smallestK(cents.length, n) { (a, b) =>
-        val o = compareDoubles(sim(a), sim(b))
-        o > 0 || (o == 0 && cents(a)._1 < cents(b)._1)
-      }.map(cents(_)._1)
-    }
-    val members = lc.ids.indices.groupBy(cells(_, 1).headOption)
-    val rows = lc.matching(queryPred).toSeq.flatMap { qi =>
-      val m = cells(qi, nProbe).flatMap(c => members.getOrElse(Some(c), Nil))
-        .filter(j => lc.ids(j) != lc.ids(qi))
-      val cos = m.map(j => cosine(dotLocal(lc.q(qi), lc.q(j)), lc.nq(qi), lc.nq(j)))
-      smallestK(m.length, k) { (a, b) =>
-        val o = compareDoubles(-cos(a), -cos(b))
-        o < 0 || (o == 0 && lc.ids(m(a)) < lc.ids(m(b)))
-      }.zipWithIndex.map { case (a, r) =>
-        org.apache.spark.sql.Row(lc.ids(qi), r + 1L, lc.ids(m(a)), cos(a)) }
-    }
-    localAnswer(lc, rows, "cosine", org.apache.spark.sql.types.DoubleType)
+    val cos = m.map(j => cosineLocal(dotLocal(lc.q(qi), lc.q(j)), lc.nq(qi), lc.nq(j)))
+    smallestK(m.length, k) { (a, b) =>
+      val o = compareDoubles(-cos(a), -cos(b))
+      o < 0 || (o == 0 && lc.ids(m(a)) < lc.ids(m(b)))
+    }.toSeq.zipWithIndex.map { case (a, r) => Row(lc.ids(qi), r + 1L, lc.ids(m(a)), cos(a)) }
   }
 
   /** MMR-diversified re-ranking — the RAG retrieval tail: greedy
@@ -2433,19 +2523,21 @@ object Similarity {
   }
 
   /** The frontier's derived-parameter environment for a corpus:
-    * `AnnPolicy.env` over the corpus size and the query count. */
+    * `AnnPolicy.env` over the corpus size and the query count. Below
+    * `cap` both counts read the driver-resident corpus: no job and no
+    * memo entry (the predicate's evaluation is the whole cost). */
   def annPolicyEnv(embeddings: DataFrame, queryPred: Column,
                    cap: Long = localServeCap): Map[String, Long] =
-    // Memoized per query-set plan (the FILTERED corpus, like bf_truth
-    // and ann_recall: an expression's `.sql` renders every
-    // functions-API predicate as the same string under Spark 4.1, so
-    // it cannot key the memo). Below `cap` both counts read the
-    // driver-resident corpus — no job; above it, two count() jobs.
-    IndexMemo.of[Map[String, Long]]("ann_policy_env", embeddings.filter(queryPred), cap) {
-      localCorpus(ensureQuantized(embeddings), cap).fold(
-        AnnPolicy.env(embeddings.count(), embeddings.filter(queryPred).count()))(lc =>
-        AnnPolicy.env(lc.ids.length, lc.matching(queryPred).length))
-    }
+    localCorpus(ensureQuantized(embeddings), cap).fold(annPolicyEnvPlan(embeddings, queryPred, cap))(
+      lc => AnnPolicy.env(lc.ids.length, lc.matching(queryPred).length))
+
+  /** `annPolicyEnv` at or above `cap`: two count() jobs, memoized per
+    * query-set plan (the FILTERED corpus, like bf_truth and ann_recall:
+    * an expression's `.sql` renders every functions-API predicate as
+    * the same string under Spark 4.1, so it cannot key the memo). */
+  private def annPolicyEnvPlan(embeddings: DataFrame, queryPred: Column, cap: Long): Map[String, Long] =
+    IndexMemo.of[Map[String, Long]]("ann_policy_env", embeddings.filter(queryPred), cap)(
+      AnnPolicy.env(embeddings.count(), embeddings.filter(queryPred).count()))
 
   /** Policy-dispatching serve (r18, VERDICT #6): the executable form of
     * `q_ann_frontier`'s policy read — `AnnPolicy.choose` picks the
@@ -2455,17 +2547,41 @@ object Similarity {
     * cost_units, floor_milli, query_id, rnk, neighbor_id) —
     * method-independent schema, so a re-point or a different winner at
     * a different corpus size is a VALUE change the oracle replays, not
-    * a schema break. `cap` is the sq8/ivf rungs' `localServeCap`:
-    * below it a warm call (env, rung and answer) runs no Spark job. */
+    * a schema break.
+    *
+    * `cap` is the driver-resident corpus cap (`localServeCap`). Below
+    * it a call looks the corpus up once, evaluates `queryPred` once
+    * (`LocalCorpus.matching`), and hands the matched positions to both
+    * the policy's counts and the chosen rung's driver kernel
+    * (`AnnRung.local`: sq8, sq8_rerank, ivf), whose rows are the answer
+    * as one LocalRelation: no Spark job, and the caller's collect is
+    * the call's only executed query. A rung with no driver kernel, or a
+    * kernel that declines (a zero norm), runs its Spark plan. At or
+    * above the cap the env is `annPolicyEnv`'s memoized counts and the
+    * rung's Spark plan answers. */
   def annServe(embeddings: DataFrame, queryPred: Column, k: Int,
                recallFloorMilli: Long, cap: Long = localServeCap): DataFrame = {
-    val env = annPolicyEnv(embeddings, queryPred, cap)
-    val chosen = AnnPolicy.choose(env, recallFloorMilli)
-    chosen.serve(embeddings, queryPred, k, env, cap)
-      .select(lit(chosen.method).as("method"),
-        lit(chosen.cost.eval(env)).as("cost_units"),
-        lit(chosen.floorMilli).as("floor_milli"),
-        col("query_id"), col("rnk"), col("neighbor_id"))
+    def served(chosen: AnnPolicy.AnnRung, env: Map[String, Long]): DataFrame =
+      chosen.serve(embeddings, queryPred, k, env, cap)
+        .select(lit(chosen.method).as("method"),
+          lit(chosen.cost.eval(env)).as("cost_units"),
+          lit(chosen.floorMilli).as("floor_milli"),
+          col("query_id"), col("rnk"), col("neighbor_id"))
+    localCorpus(ensureQuantized(embeddings), cap).fold {
+      val env = annPolicyEnvPlan(embeddings, queryPred, cap)
+      served(AnnPolicy.choose(env, recallFloorMilli), env)
+    } { lc =>
+      val hits = lc.matching(queryPred)
+      val env = AnnPolicy.env(lc.ids.length, hits.length)
+      val chosen = AnnPolicy.choose(env, recallFloorMilli)
+      // the rung's (method, cost_units, floor_milli) literals, then the top-k
+      val head = Seq(chosen.method, chosen.cost.eval(env), chosen.floorMilli)
+      val fields = Seq(StructField("method", StringType, nullable = false),
+        StructField("cost_units", LongType, nullable = false),
+        StructField("floor_milli", LongType, nullable = false)) ++ rankFields(lc)
+      chosen.local.flatMap(_(lc, hits, k)).fold(served(chosen, env))(rows =>
+        rowsFrame(lc.frame.sparkSession, rows.map(r => Row.fromSeq(head ++ r.toSeq.take(3))), fields))
+    }
   }
 
   /** Measured ANN recall: joins each approximate method's top-k against

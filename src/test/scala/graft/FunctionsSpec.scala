@@ -2187,10 +2187,14 @@ class SimilaritySpec extends SparkSpec {
 
   test("ann_policy_env memo keys on the predicate: q follows the query set") {
     val e = sf0001
-    val q100 = Similarity.annPolicyEnv(e, col("vec_id") % 100 === 0)("q")
-    val qOther = Similarity.annPolicyEnv(e, otherPred)("q")
-    assert(q100 == e.filter(col("vec_id") % 100 === 0).count())
-    assert(qOther == e.filter(otherPred).count() && qOther != q100)
+    // the memo is kept at or above the driver-resident cap (cap 0); below
+    // it (the default) the counts are read from the resident corpus
+    for (cap <- Seq(0L, Similarity.localServeCap)) {
+      val q100 = Similarity.annPolicyEnv(e, col("vec_id") % 100 === 0, cap)("q")
+      val qOther = Similarity.annPolicyEnv(e, otherPred, cap)("q")
+      assert(q100 == e.filter(col("vec_id") % 100 === 0).count())
+      assert(qOther == e.filter(otherPred).count() && qOther != q100)
+    }
   }
 
   test("ivfpq_qd memo keys on the predicate: a second query set gets its own queries") {
@@ -2338,15 +2342,21 @@ class SimilaritySpec extends SparkSpec {
     // equality instead: a memo hit returns the CACHED Map object
     // itself, which is exactly "zero sizing jobs recomputed". This is
     // local to this test and immune to any concurrent traffic.
+    // The memo is kept where the counts are count() jobs: at or above
+    // the driver-resident cap (cap 0 here). Below it the counts come
+    // from the resident corpus and no entry is written.
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val pred = col("vec_id") % 97 === 0 // distinct pred: cold memo key
-    val env1 = Similarity.annPolicyEnv(e, pred)
+    val env1 = Similarity.annPolicyEnv(e, pred, 0L)
     assert(env1("n") > 0 && env1("q") > 0)
     // same frame, fresh-but-equal predicate (the serve pattern:
     // annServe is called repeatedly over the session's corpus frame)
-    val env2 = Similarity.annPolicyEnv(e, col("vec_id") % 97 === 0)
+    val env2 = Similarity.annPolicyEnv(e, col("vec_id") % 97 === 0, 0L)
     assert(env2.asInstanceOf[AnyRef] eq env1.asInstanceOf[AnyRef],
       "second call must return the memoized env object — a hit computes nothing")
+    val below = Similarity.annPolicyEnv(e, col("vec_id") % 97 === 0)
+    assert(below == env1 && !(below.asInstanceOf[AnyRef] eq env1.asInstanceOf[AnyRef]),
+      "below the cap the env equals the counted one and is not the memo's")
   }
 }
 

@@ -3,6 +3,9 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.col
 import graft.functions.Similarity
 import graft.operators.{ReportUpsert, SpendingReport}
@@ -73,4 +76,36 @@ class JobBudgetSpec extends SparkSpec {
     }
     assert(rounds == Seq.fill(3)((1, 0, 0, 0)), s"per-round job counts: $rounds")
   }
+
+  /** (jobs, executed queries) of `body` on `session`: each action or
+    * write is one query, counted by a listener on that session. */
+  private def jobsAndQueries(session: SparkSession)(body: => Unit): (Int, Int) = {
+    val n = new AtomicInteger
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = n.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = n.incrementAndGet()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    session.listenerManager.register(l)
+    try {
+      val j = jobs(body)
+      ListenerBus.drain(spark.sparkContext)
+      (j, n.get)
+    } finally session.listenerManager.unregister(l)
+  }
+
+  for (data <- Seq(sf, s"${new java.io.File(sf).getParent}/sf0.1"))
+    test(s"a warm annServe call on ${new java.io.File(data).getName} is its caller's one query, with no job, at every driver rung") {
+      val e = Tables.embeddings(spark.newSession(), data)
+      def serve(ids: Seq[Long], floor: Long) = jobsAndQueries(e.sparkSession)(
+        Similarity.annServe(e, col("vec_id").isin(ids: _*), 10, floor).collect())
+      serve(Seq(0L, 100L), 700L) // cold: the corpus collect
+      // the 700 ‰ call answers by sq8, 400 ‰ by ivf, 900 ‰ by sq8_rerank;
+      // the predicate is evaluated on the driver, not by a query
+      val warm = Seq(700L, 400L, 900L).zipWithIndex.map { case (floor, i) =>
+        floor -> serve((1L to 20L).map(_ * 7 + i), floor)
+      }
+      assert(warm == Seq(700L -> (0, 1), 400L -> (0, 1), 900L -> (0, 1)),
+        s"per-call (jobs, queries): $warm")
+    }
 }

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, expr, lit, when}
+import org.apache.spark.sql.types.StructType
 import graft.functions.Similarity
 
-/** The sq8 and ivf serve rungs answer from a driver-resident corpus
-  * below `Similarity.localServeCap` and from Spark plans at or above
-  * it: a pure plan choice, so both sides must return identical rows
-  * (or fail with the same error). cap = 0 forces the Spark side. */
+/** The sq8, sq8_rerank and ivf serve rungs answer from a
+  * driver-resident corpus below `Similarity.localServeCap` and from
+  * Spark plans at or above it: a pure plan choice, so both sides must
+  * return identical rows with the same schema (or fail with the same
+  * error). cap = 0 forces the Spark side. */
 class LocalServeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,15 +24,21 @@ class LocalServeSpec extends SparkSpec {
     "ivfTopK(trainIters 0)" -> (c => Similarity.ivfTopK(e, pred, k, 16, 4, 0, c)),
     "ivfTopK(trainIters 2)" -> (c => Similarity.ivfTopK(e, pred, k, 16, 4, 2, c)),
     "annServe(400)" -> (c => Similarity.annServe(e, pred, k, 400L, c)),
-    "annServe(700)" -> (c => Similarity.annServe(e, pred, k, 700L, c)))
+    "annServe(700)" -> (c => Similarity.annServe(e, pred, k, 700L, c)),
+    "annServe(900)" -> (c => Similarity.annServe(e, pred, k, 900L, c)))
 
-  /** Sorted rows, or the root error conditions of the failure (AQE
-    * wraps the same root error differently from run to run, and may
-    * add a cancelled sibling stage's, so two failures agree when they
-    * share a root condition). */
-  private def outcome(df: => DataFrame): Either[Set[String], Seq[Seq[Any]]] =
-    try Right(df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001")))
-    catch { case t: Throwable => Left(rootConditions(t)) }
+  /** The frame's schema, if it was built, and its sorted rows, or the
+    * root error conditions of the failure (AQE wraps the same root
+    * error differently from run to run, and may add a cancelled
+    * sibling stage's, so two failures agree when they share a root
+    * condition). */
+  private def outcome(df: => DataFrame): (Option[StructType], Either[Set[String], Seq[Seq[Any]]]) =
+    try {
+      val d = df
+      (Some(d.schema),
+        try Right(d.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001")))
+        catch { case t: Throwable => Left(rootConditions(t)) })
+    } catch { case t: Throwable => (None, Left(rootConditions(t))) }
 
   private def rootConditions(t: Throwable): Set[String] = {
     val inner = (Option(t.getCause).toSeq ++ t.getSuppressed).flatMap(rootConditions).toSet
@@ -43,16 +51,19 @@ class LocalServeSpec extends SparkSpec {
   private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
-  /** Asserts both sides agree on every call; returns the outcomes. */
+  /** Asserts both sides agree on every call, in rows and in schema
+    * (names, types, nullability); returns the outcomes. */
   private def sameBothSides(e: DataFrame, pred: Column, k: Int): Map[String, Either[Set[String], Seq[Seq[Any]]]] =
     calls(e, pred, k).map { case (name, f) =>
-      val local = outcome(f(Similarity.localServeCap))
-      val plan = outcome(f(0L))
+      val (localSchema, local) = outcome(f(Similarity.localServeCap))
+      val (planSchema, plan) = outcome(f(0L))
       val agree = (local, plan) match {
         case (Left(a), Left(b)) => (a intersect b).nonEmpty
         case _ => local == plan
       }
       assert(agree, s"$name: the two sides of the cap differ: $local vs $plan")
+      assert(localSchema.isEmpty || planSchema.isEmpty || localSchema == planSchema,
+        s"$name: the two sides' schemas differ: $localSchema vs $planSchema")
       name -> local
     }.toMap
 
@@ -65,7 +76,10 @@ class LocalServeSpec extends SparkSpec {
       assert(Similarity.localCorpus(q, 0L).isEmpty)
       Seq[Long => DataFrame](c => Similarity.sq8TopK(e, pred, 10, cap = c),
           c => Similarity.ivfTopK(e, pred, 10, 16, 4, cap = c),
-          c => Similarity.annServe(e, pred, 10, 700L, c)).foreach { f =>
+          c => Similarity.sq8TopKRerank(e, pred, 10, 50, c),
+          c => Similarity.annServe(e, pred, 10, 400L, c),
+          c => Similarity.annServe(e, pred, 10, 700L, c),
+          c => Similarity.annServe(e, pred, 10, 900L, c)).foreach { f =>
         assert(isLocal(f(Similarity.localServeCap)) && !isLocal(f(0L)),
           "the default cap serves from the driver, cap 0 from a Spark plan")
       }
@@ -77,6 +91,47 @@ class LocalServeSpec extends SparkSpec {
       }
       sameBothSides(e, col("vec_id") === 0, 600)
     }
+  }
+
+  test("predicate shapes: an id set, a label, NULL on some rows, none, all, and ones only a query can evaluate") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val ids = (0 until 20).map(i => 23L * i + 7)
+    val shapes = Seq(
+      "20-id isin" -> col("vec_id").isin(ids: _*),
+      "label" -> (col("label") === 3),
+      "NULL on two rows in three" -> when(col("vec_id") % 3 === 0, col("vec_id") % 7 === 0),
+      "no match" -> (col("label") > 100),
+      "lit(true)" -> lit(true),
+      // the optimizer must rewrite these before a row can be tested, so
+      // the driver runs them as a query over the resident corpus
+      "subquery" -> expr("vec_id IN (SELECT id * 31 FROM range(0, 12))"),
+      "runtime-replaced nvl" -> expr("nvl(label, 0) * 0 + vec_id % 50 = 1"))
+    shapes.foreach { case (shape, pred) =>
+      val want: Set[Any] = e.filter(pred).select("vec_id").collect().map(_.getLong(0)).toSet
+      val got = sameBothSides(e, pred, 10)
+      // every query has a neighbor in sq8's full scan; an ivf query
+      // may find none in its probed cells
+      assert(got("sq8TopK").map(_.map(_.head).toSet) == Right(want), s"$shape: the wrong queries")
+      got.foreach { case (name, rows) =>
+        val queried = rows.map(_.map(r => r(if (name.startsWith("annServe")) 3 else 0)).toSet)
+        assert(queried.exists(_.subsetOf(want)), s"$shape / $name: answers the wrong queries")
+      }
+    }
+  }
+
+  test("a repeated ivf call (its cells kept on the corpus) returns the same rows") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val a = col("vec_id") % 100 === 0
+    val b = col("vec_id").isin(3L, 150L, 299L, 444L)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    Seq[Column => DataFrame](p => Similarity.ivfTopK(e, p, 10, 16, 4),
+        p => Similarity.ivfTopK(e, p, 10, 16, 4, 2), p => Similarity.annServe(e, p, 10, 400L))
+      .foreach { f =>
+        val first = rows(f(a))
+        assert(first.nonEmpty)
+        assert(rows(f(b)).nonEmpty)
+        assert(rows(f(a)) == first, "a repeat call answers differently")
+      }
   }
 
   test("edge corpora: empty, constant, zero-norm; k beyond the candidates") {
