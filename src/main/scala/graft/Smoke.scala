@@ -125,17 +125,16 @@ object Smoke {
   }
 
   /** Empirical scale validation (VERDICT r7 #2): generate synthetic
-    * documents/embeddings at 1× and `factor`× (same schemas and planted
-    * duplicate structure as `sources.Synthetic` documents), then
-    * measure (a) candidate-pair counts of every banded dedup family
-    * via `Dedup.candidateDiagnostics` and (b) wall time of the four
-    * headline scale queries — so the "candidates stay ~linear, the
+    * documents at 1× and `factor`× (same schema and planted duplicate
+    * structure as `sources.Synthetic` documents), then measure (a)
+    * candidate-pair counts of every banded dedup family via
+    * `Dedup.candidateDiagnostics` and (b) wall time of the three
+    * headline dedup scale queries — so the "candidates stay ~linear, the
     * banded joins never go quadratic" claims in PLANS.md are measured,
     * not just argued from plan shape. Corpora land as parquet first
     * (the real scan shape) under a temp dir. */
   private def scaleProbe(spark: SparkSession, nBase: Long, factor: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.{Dedup, Similarity}
+    import graft.functions.Dedup
     import graft.sources.Synthetic
     val base = java.nio.file.Files.createTempDirectory("graft_scale").toString
     def timed(label: String, mult: Int)(f: => Long): Unit = {
@@ -145,13 +144,9 @@ object Smoke {
     }
     Seq(1, factor).foreach { mult =>
       val nDocs = nBase * mult
-      val nVecs = nBase * 2 / 5 * mult // the sf0.1 docs:embeddings ratio
       Synthetic.documents(spark, nDocs).write.mode("overwrite")
         .parquet(s"$base/x$mult/documents.parquet")
-      Synthetic.embeddings(spark, nVecs).write.mode("overwrite")
-        .parquet(s"$base/x$mult/embeddings.parquet")
       val docs = spark.read.parquet(s"$base/x$mult/documents.parquet")
-      val emb = spark.read.parquet(s"$base/x$mult/embeddings.parquet")
       // auto caps (the production defaults: floor 1000 keeps oracle
       // fixtures exact) vs explicit 64 (the binding regime a 1000×
       // corpus reaches naturally — boilerplate buckets/postings there
@@ -169,8 +164,6 @@ object Smoke {
         Dedup.simhash64NearDupPairs(docs).count())
       timed("dedup_corpus", mult)(
         Dedup.dedupCorpus(docs, 3, 8, 4, 0.5).count())
-      timed("pq_topk", mult)(
-        Similarity.pqTopK(emb, col("vec_id") % 100 === 0, 10, 2, 4, 1).count())
     }
   }
 
@@ -211,8 +204,6 @@ object Smoke {
       timed("ivf_pinned")(Similarity.ivfTopK(emb, pred, 10, 16, 4).count())
       timed("ivf_auto")(Similarity.ivfTopK(emb, pred, 10,
         Similarity.autoSemDedupK(n), 4).count())
-      timed("pq_topk")(Similarity.pqTopK(emb, pred, 10, 4, 16, 1).count())
-      timed("ivfpq_topk")(Similarity.ivfpqTopK(emb, pred, 10, 16, 4, 4, 16, 1).count())
       timed("sq8_topk")(Similarity.sq8TopK(emb, pred, 10).count())
       // flat auto semDedup (k = n/64 cells: n²/64 assignment work) vs
       // the two-level assignment (k1 = k2 = √(n/64): n·2√(n/64)) —

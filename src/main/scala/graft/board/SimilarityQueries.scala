@@ -151,7 +151,7 @@ object SimilarityQueries {
       import org.apache.spark.sql.functions._
       // Floors recalibrated r14 (advice): the served operating points
       // are fixed and md5-deterministic per corpus, so each driver SF
-      // gets its OWN quantizer floors at HALF that scale's measured
+      // gets its OWN graph-rung floors at HALF that scale's measured
       // recall (BUILD_NOTES "ANN recall trend (r13)") instead of one
       // collapse-only cross-scale min, so a real retrieval regression
       // fails the oracle gate, not only the exact FunctionsSpec pins.
@@ -282,21 +282,8 @@ object SimilarityQueries {
          |                        neighbor_id ASC) AS rnk
          |      FROM p)
          |SELECT query_id, rnk, neighbor_id, cosine FROM r WHERE rnk <= 10""".stripMargin),
-    // filtered search over the COMPRESSED indexes (r14): the same
-    // metadata predicate restricts the code-index scan before any
-    // ADC distance — the trained index is shared with the unfiltered
-    // siblings (search-time argument, not a training one)
-    QueryDef("q_ann_filtered_ivfpq", (s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.ivfpqTopK(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, nCells = 4, nProbe = 2,
-        m = 2, ksub = 4, iters = 1, candPred = Some(col("label") % 2 === 0))
-    },
-      // the same IVFADC chain with the candidate predicate restricting
-      // the code side of the ADC join — filtered search, shared index
-      s"""${ivfpqBaseSqlFor("label % 2 = 0")}
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin),
+    // filtered search over the SQ8 code index: the same metadata
+    // predicate restricts the code scan before any distance
     QueryDef("q_ann_filtered_sq8", (s, d) => {
       import org.apache.spark.sql.functions.col
       Similarity.sq8TopK(Tables.embeddings(s, d),
@@ -304,58 +291,6 @@ object SimilarityQueries {
     },
       s"""${sq8BaseSqlFor("label % 2 = 0")}
          |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin),
-    // the HIGH-FIDELITY PQ operating point (r15, closes r14 verdict
-    // #3): m=16 subspaces × 64 centroids = 96 code bits (21× raw
-    // compression) — raw ADC recall 0.54 at the sf0.01 gate
-    // (0.50/0.445 at sf0.001/sf0.1; half-measured floors pinned in
-    // q_ann_recall), so the compressed serving story
-    // has a measured >= 0.5-recall rung. Same certified-iteration
-    // training chain, replayed by the oracle at the wider shape.
-    QueryDef("q_pq_hi", (s, d) => {
-      import org.apache.spark.sql.functions.col
-      Similarity.pqTopK(Tables.embeddings(s, d),
-        col("vec_id") % 100 === 0, 10, m = 16, ksub = 64, iters = 1)
-    },
-      // the high-fidelity PQ point: the SAME certified chain at
-      // subWidth=4 / ksub=64 (96 code bits — see q_pq_hi's comment)
-      s"""${pqBaseSqlFor(4, 64)},
-         |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adist, vec_id) AS rnk
-         |      FROM dist)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist
-         |FROM r WHERE rnk <= 10""".stripMargin),
-    // the SCALE path of IVFADC (the autoLshBits pattern applied to the
-    // coarse quantizer): nCells <= fixed is the LSH-bits scale trap —
-    // cells grow linearly with the corpus and nProbe cells approach a
-    // constant FRACTION of it. nCells auto-sizes to ~sqrt(n/64)
-    // (FAISS's nlist ~ sqrt(n) rule, same +-1-corrected-sqrt integer
-    // contract as q_semdedup_hier — the oracle derives the SAME count
-    // from COUNT(*), cardinality-robust); probed work grows ~sqrt(n).
-    QueryDef("q_ivfpq_auto", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val e = Tables.embeddings(s, d)
-      val c = Similarity.autoIvfCells(e.count())
-      // r17: re-pointed from (m=2, ksub=4, nProbe=2) — recall
-      // 0.04/0.06/0.01, the same fixed-probe + tiny-codebook disease
-      // IVF-RQ had — to the high-fidelity residual point (m=16,
-      // ksub=64, 96 code bits on coarse residuals) with sqrt(c)
-      // probing: measured 0.48/0.54/0.355 across the SFs, ABOVE flat
-      // pq_hi at sf0.1 (0.22) — the Jegou residual-quantization gain,
-      // now visible at the gated operating point. The 4-bit point
-      // lives on in q_ann_filtered_ivfpq.
-      Similarity.ivfpqTopK(e, col("vec_id") % 100 === 0, graft.functions.AnnPolicy.k,
-        nCells = c, nProbe = Similarity.autoIvfProbe(c),
-        m = graft.functions.AnnPolicy.ivfpqAutoM, ksub = graft.functions.AnnPolicy.ivfpqAutoKsub, iters = 1)
-        .withColumn("n_cells", lit(c.toLong))
-    },
-      // the auto-sized IVFADC chain: nCells derived from COUNT(*) via
-      // the +-1-corrected-sqrt contract (q_semdedup_hier's pattern),
-      // nProbe = LEAST(2, nCells) — cardinality-robust at any SF
-      s"""$ivfpqAutoSql
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist,
-         |       (SELECT CAST(k AS BIGINT) FROM ki) AS n_cells
          |FROM r WHERE rnk <= 10""".stripMargin),
     // SQ8 scalar quantization (FAISS QT_8bit shape): per-dim affine
     // 8-bit codes from ONE min/max training pass, symmetric code-space
@@ -415,64 +350,6 @@ object SimilarityQueries {
       // integer probe centroids from the final membership, SQ8 code
       // distance within probed cells
       ivfSq8AutoSql),
-    // IVF-RQ at AUTO cell count: the probed residual quantizer (the
-    // flat RQ scan measured exponent 1.01 at 32x) — certified coarse chain,
-    // EIGHT additive 16-code residual stages (r17 fixed the ADC to the
-    // L-stage LUT expansion and gated 4x64 at 0.18/0.30/0.13; the r18
-    // tri-scale lab shows 8x16 above it at every SF — 0.26/0.40/0.17 —
-    // so the serving point moves, one edit in AnnPolicy.ivfrqAutoKs),
-    // per-stage dot LUTs + stored reconstruction norms within
-    // each query's probed cells. nProbe scales with the cell count
-    // (max(2, ceil(sqrt(c))), capped at c) instead of the r16 fixed 2,
-    // so the probed fraction no longer collapses as cells grow. The
-    // oracle derives the same cell count AND probe count from
-    // COUNT(*). Closes the quantizer symmetry: PQ/SQ8/RQ each carry a
-    // sqrt(n)-celled probe.
-    QueryDef("q_ivfrq_auto", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val e = Tables.embeddings(s, d)
-      val c = Similarity.autoIvfCells(e.count())
-      Similarity.ivfRqTopKMulti(e, col("vec_id") % 100 === 0, graft.functions.AnnPolicy.k,
-        nCells = c, nProbe = Similarity.autoIvfProbe(c),
-        ks = graft.functions.AnnPolicy.ivfrqAutoKs, iters = 1)
-        .withColumn("n_cells", lit(c.toLong))
-    },
-      // IVF-RQ at auto cell count: certified coarse chain, additive
-      // residual codebooks (seeds md5(vec_id || 'r') / md5(vec_id ||
-      // 'rr')), per-cell query residuals, combined-table ADC within
-      // probed cells only
-      s"""$ivfRqAutoBaseSql
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, adist,
-         |       (SELECT CAST(k AS BIGINT) FROM ki) AS n_cells
-         |FROM r WHERE rnk <= 10""".stripMargin),
-    // IVF-RQ + exact re-rank: the probed additive-code pool (50)
-    // refined by exact quantized cosine (the full IVF,RQ,R stack)
-    QueryDef("q_ivfrq_rerank", (s, d) => {
-      import org.apache.spark.sql.functions._
-      val e = Tables.embeddings(s, d)
-      val c = Similarity.autoIvfCells(e.count())
-      Similarity.ivfRqTopKMultiRerank(e, col("vec_id") % 100 === 0, graft.functions.AnnPolicy.k,
-        nCells = c, nProbe = Similarity.autoIvfProbe(c),
-        ks = graft.functions.AnnPolicy.ivfrqAutoKs, iters = 1, pool = graft.functions.AnnPolicy.rerankPool)
-    },
-      // IVF-RQ + exact re-rank: the probed additive-code pool (50)
-      // refined by exact quantized cosine
-      s"""$ivfRqAutoBaseSql,
-         |pool AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 50),
-         |x AS (SELECT p.query_id, p.neighbor_id,
-         |             CAST(list_sum(list_transform(list_zip(qq.q, cc.q), z -> z[1] * z[2])) AS BIGINT) AS dot,
-         |             qq.nq AS qn, cc.nq AS cn
-         |      FROM pool p
-         |      JOIN n qq ON qq.vec_id = p.query_id
-         |      JOIN n cc ON cc.vec_id = p.neighbor_id),
-         |f AS (SELECT query_id, neighbor_id,
-         |             CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) AS cosine,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qn AS DOUBLE) * CAST(cn AS DOUBLE)) DESC,
-         |                        neighbor_id ASC) AS rnk
-         |      FROM x)
-         |SELECT query_id, CAST(rnk AS BIGINT) AS rnk, neighbor_id, cosine
-         |FROM f WHERE rnk <= 10""".stripMargin),
     // deterministic kNN-graph (NN-descent, WWW 2011): LSH-seeded
     // per-node top-k lists refined by 2 fixed neighbor-of-neighbor
     // rounds over the undirected graph — the graph-search serving
@@ -646,19 +523,16 @@ object SimilarityQueries {
       semDedupHierDynSql),
   )
 
-  /** Per-SF half-measured quantizer floors for `q_ann_recall` — each
-    * driver scale gets its own floor at HALF that scale's measured
-    * recall. `AnnPolicy.floorMilli` per rung is the MINIMUM of these
+  /** Per-SF half-measured floors of the graph rungs for
+    * `q_ann_recall` — each driver scale gets its own floor at HALF that
+    * scale's measured recall. `AnnPolicy.floorMilli` per rung is the MINIMUM of these
     * across the SFs (the cross-scale certified floor); AnnPolicySpec
     * re-derives that relationship so a re-point cannot update one
     * table and silently strand the other. */
   private[graft] val perSfQuantFloors: Map[String, Seq[(String, Double)]] = Map(
-    "sf0.001" -> Seq(("pq_hi", 0.25), ("ivfpq_auto", 0.24),
-    ("ivfrq_auto", 0.13), ("knn_graph", 0.12), ("knn_graph_search", 0.46)),
-    "sf0.01" -> Seq(("pq_hi", 0.27), ("ivfpq_auto", 0.27),
-    ("ivfrq_auto", 0.20), ("knn_graph", 0.11), ("knn_graph_search", 0.44)),
-    "sf0.1" -> Seq(("pq_hi", 0.22), ("ivfpq_auto", 0.17),
-    ("ivfrq_auto", 0.085), ("knn_graph", 0.057), ("knn_graph_search", 0.31)))
+    "sf0.001" -> Seq(("knn_graph", 0.12), ("knn_graph_search", 0.46)),
+    "sf0.01" -> Seq(("knn_graph", 0.11), ("knn_graph_search", 0.44)),
+    "sf0.1" -> Seq(("knn_graph", 0.057), ("knn_graph_search", 0.31)))
 
   /** Unrolled greedy-MMR oracle (mirror of `Similarity.mmrRerank`,
     * poolK=20, outK=5, λ=1/2): pick 1 is pure relevance; each later
@@ -707,94 +581,6 @@ object SimilarityQueries {
        |$steps
        |SELECT query_id, pos, neighbor_id, mmr_score FROM sel5""".stripMargin
   }
-
-  /** The IVFADC chain with an optional candidate predicate: the filter
-    * restricts the code-index side of the ADC join (search-time
-    * filtered search), never the training CTEs — mirroring
-    * `Similarity.ivfpqTopK(candPred)` exactly. `"TRUE"` reduces to the
-    * unfiltered chain. */
-  private def ivfpqBaseSqlFor(candWhere: String, extraCtes: String = "",
-                              cells: String = "4", probe: String = "2",
-                              subWidth: Int = 32, ksub: Int = 4) =
-    s"""WITH $extraCtes n AS ($quantizedSql),
-         |vd AS (SELECT vec_id, generate_subscripts(q,1)-1 AS d,
-         |              unnest(q) + 1048576 AS x FROM n),
-         |cs AS (SELECT vec_id,
-         |         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell_id
-         |       FROM n QUALIFY cell_id < $cells),
-         |cc0 AS (SELECT cs.cell_id, vd.d, vd.x AS c
-         |        FROM vd JOIN cs USING (vec_id)),
-         |ca1 AS (SELECT vec_id, cell_id FROM (
-         |    SELECT vd.vec_id, cc0.cell_id,
-         |           row_number() OVER (PARTITION BY vd.vec_id
-         |             ORDER BY sum((vd.x - cc0.c)*(vd.x - cc0.c)), cc0.cell_id) AS rn
-         |    FROM vd JOIN cc0 ON vd.d = cc0.d
-         |    GROUP BY vd.vec_id, cc0.cell_id QUALIFY rn = 1)),
-         |cc1 AS (SELECT ca1.cell_id, vd.d,
-         |              CAST(CAST(sum(vd.x) AS BIGINT) // count(*) AS BIGINT) AS c
-         |       FROM vd JOIN ca1 USING (vec_id)
-         |       GROUP BY 1, vd.d),
-         |ca AS (SELECT vec_id, cell_id FROM (
-         |    SELECT vd.vec_id, cc1.cell_id,
-         |           row_number() OVER (PARTITION BY vd.vec_id
-         |             ORDER BY sum((vd.x - cc1.c)*(vd.x - cc1.c)), cc1.cell_id) AS rn
-         |    FROM vd JOIN cc1 ON vd.d = cc1.d
-         |    GROUP BY vd.vec_id, cc1.cell_id QUALIFY rn = 1)),
-         |rd AS (SELECT vd.vec_id, vd.d // $subWidth AS s, vd.d,
-         |              vd.x - cc1.c + 2097152 AS rx
-         |       FROM vd JOIN ca USING (vec_id)
-         |       JOIN cc1 ON cc1.cell_id = ca.cell_id AND cc1.d = vd.d),
-         |ps AS (SELECT vec_id,
-         |         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR) || 'p'), vec_id) - 1 AS code
-         |       FROM n QUALIFY code < $ksub),
-         |pc0 AS (SELECT rd.s, ps.code, rd.d, rd.rx AS c
-         |        FROM rd JOIN ps USING (vec_id)),
-         |pa1 AS (SELECT vec_id, s, code FROM (
-         |    SELECT rd.vec_id, rd.s, pc0.code,
-         |           row_number() OVER (PARTITION BY rd.vec_id, rd.s
-         |             ORDER BY sum((rd.rx - pc0.c)*(rd.rx - pc0.c)), pc0.code) AS rn
-         |    FROM rd JOIN pc0 ON rd.s = pc0.s AND rd.d = pc0.d
-         |    GROUP BY rd.vec_id, rd.s, pc0.code QUALIFY rn = 1)),
-         |pc1 AS (SELECT pa1.s, pa1.code, rd.d,
-         |              CAST(CAST(sum(rd.rx) AS BIGINT) // count(*) AS BIGINT) AS c
-         |       FROM rd JOIN pa1 ON rd.vec_id = pa1.vec_id AND rd.s = pa1.s
-         |       GROUP BY 1, 2, rd.d),
-         |pa2 AS (SELECT vec_id, s, code FROM (
-         |    SELECT rd.vec_id, rd.s, pc1.code,
-         |           row_number() OVER (PARTITION BY rd.vec_id, rd.s
-         |             ORDER BY sum((rd.rx - pc1.c)*(rd.rx - pc1.c)), pc1.code) AS rn
-         |    FROM rd JOIN pc1 ON rd.s = pc1.s AND rd.d = pc1.d
-         |    GROUP BY rd.vec_id, rd.s, pc1.code QUALIFY rn = 1)),
-         |qd AS (SELECT vec_id AS query_id, d, x FROM vd WHERE vec_id % 100 = 0),
-         |qc AS (SELECT qd.query_id, cc1.cell_id,
-         |              sum((qd.x - cc1.c)*(qd.x - cc1.c)) AS cd
-         |       FROM qd JOIN cc1 ON qd.d = cc1.d GROUP BY 1, 2),
-         |probe AS (SELECT query_id, cell_id FROM (
-         |    SELECT query_id, cell_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cd, cell_id) AS rn FROM qc) WHERE rn <= $probe),
-         |qrd AS (SELECT p.query_id, p.cell_id, qd.d // $subWidth AS s, qd.d,
-         |               qd.x - cc1.c + 2097152 AS rqx
-         |        FROM probe p
-         |        JOIN qd ON qd.query_id = p.query_id
-         |        JOIN cc1 ON cc1.cell_id = p.cell_id AND cc1.d = qd.d),
-         |adc AS (SELECT qrd.query_id, qrd.cell_id, pc1.s, pc1.code,
-         |               sum((qrd.rqx - pc1.c)*(qrd.rqx - pc1.c)) AS pd
-         |        FROM qrd JOIN pc1 ON pc1.s = qrd.s AND pc1.d = qrd.d
-         |        GROUP BY 1, 2, 3, 4),
-         |codes AS (SELECT pa2.vec_id, ca.cell_id, pa2.s, pa2.code
-         |          FROM pa2 JOIN ca USING (vec_id)),
-         |dist AS (SELECT adc.query_id, codes.vec_id,
-         |                CAST(sum(adc.pd) AS BIGINT) AS adist
-         |         FROM codes JOIN adc ON codes.cell_id = adc.cell_id
-         |           AND codes.s = adc.s AND codes.code = adc.code
-         |         WHERE codes.vec_id <> adc.query_id
-         |           AND codes.vec_id IN (SELECT vec_id FROM n WHERE $candWhere)
-         |         GROUP BY 1, 2),
-         |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-         |             row_number() OVER (PARTITION BY query_id
-         |               ORDER BY adist, vec_id) AS rnk
-         |      FROM dist)""".stripMargin
 
   /** IVF-SQ8 replay (`q_ivf_sq8_auto`): auto cell count from COUNT(*),
     * the certified 2-iteration coarse k-means (seeds → assign vs seed
@@ -874,170 +660,6 @@ object SimilarityQueries {
        |FROM r WHERE rnk <= 10""".stripMargin
   }
 
-  /** The IVFADC chain with nCells derived from COUNT(*) — the
-    * `q_semdedup_hier` ±1-corrected-sqrt contract applied to the
-    * coarse quantizer (`Similarity.autoIvfCells`): kr = the correctly-
-    * rounded float estimate of √(n/64), ki the exact smallest c with
-    * 64·c² ≥ n. nProbe = LEAST(2, c) keeps the tiny-corpus gate legal
-    * (c = 1 at sf0.001). */
-  private lazy val ivfpqAutoSql: String = {
-    val k = "(SELECT k FROM ki)"
-    ivfpqBaseSqlFor("TRUE",
-      extraCtes =
-        s"""inn AS (SELECT count(*) AS n FROM embeddings),
-           |ikr AS (SELECT GREATEST(1, CAST(ceil(sqrt(CAST(n AS DOUBLE) / 64.0)) AS BIGINT)) AS kr, n FROM inn),
-           |ki AS (SELECT CASE WHEN kr > 1 AND 64*(kr-1)*(kr-1) >= n THEN kr - 1
-           |                   WHEN 64*kr*kr < n THEN kr + 1
-           |                   ELSE kr END AS k FROM ikr),""".stripMargin,
-      cells = k,
-      probe = s"LEAST(GREATEST(2, CAST(ceil(sqrt(CAST($k AS DOUBLE))) AS BIGINT)), $k)",
-      subWidth = graft.functions.AnnPolicy.dims / graft.functions.AnnPolicy.ivfpqAutoM,
-      ksub = graft.functions.AnnPolicy.ivfpqAutoKsub)
-  }
-
-  /** IVF-RQ replay (`q_ivfrq_auto` / `q_ivfrq_rerank`): auto cell
-    * count from COUNT(*) (the ±1-corrected-sqrt contract), the
-    * certified 1-iteration coarse chain (seeds md5(vec_id)), then
-    * ks.length additive residual stages (stage s: input residuals in
-    * the +2^(20+s) frame, seeds md5(vec_id || 'r'·s)), generated as
-    * one CTE block per stage by `ivfRqMultiBaseSql`. Probing and the
-    * LUT-form ADC mirror `Similarity.ivfRqTopKMulti` bit-exactly:
-    * nProbe = LEAST(GREATEST(2, ceil(√cells)), cells) nearest cells
-    * by exact integer L2, per-(query, cell, stage, code) dot LUTs
-    * against the shift-adjusted codebooks, and a candidate's distance
-    * = ‖q_r‖² − 2·Σ_s dot + its stored reconstruction norm — through
-    * the ranked candidate CTE `r`. Serving point r18: 8 stages × 16
-    * codes (AnnPolicy.ivfrqAutoKs — the CTE loop generates one block
-    * per stage), iters = 1. */
-  private lazy val ivfRqAutoBaseSql: String =
-    ivfRqMultiBaseSql(graft.functions.AnnPolicy.ivfrqAutoKs)
-
-  private def ivfRqMultiBaseSql(ks: Seq[Int]): String = {
-    val k = "(SELECT k FROM ki)"
-    val probeExpr =
-      s"LEAST(GREATEST(2, CAST(ceil(sqrt(CAST($k AS DOUBLE))) AS BIGINT)), $k)"
-    // one certified fixed-point stage (seeds → assign-vs-seed-vectors
-    // → integer-mean update → final assign), exactly fpStage(iters=1)
-    val stageCtes = ks.zipWithIndex.map { case (kS, i) =>
-      val s = i + 1
-      val salt = "r" * s
-      val rd = s"rd$s"
-      val next =
-        if (s == ks.length) ""
-        else {
-          val frameShift = 1048576L * (1L << (s + 1)) // 2^(21+s)
-          s""",
-             |rd${s + 1} AS MATERIALIZED (SELECT $rd.vec_id, $rd.d, $rd.rx - c$s.c + $frameShift AS rx
-             |        FROM $rd JOIN a$s USING (vec_id)
-             |        JOIN c$s ON c$s.code = a$s.code AND c$s.d = $rd.d)""".stripMargin
-        }
-      s"""s$s AS (SELECT vec_id,
-         |         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR) || '$salt'), vec_id) - 1 AS code
-         |       FROM n QUALIFY code < $kS),
-         |c${s}0 AS MATERIALIZED (SELECT s$s.code, $rd.d, $rd.rx AS c FROM $rd JOIN s$s USING (vec_id)),
-         |a${s}0 AS MATERIALIZED (SELECT vec_id, code FROM (
-         |    SELECT $rd.vec_id, c${s}0.code,
-         |           row_number() OVER (PARTITION BY $rd.vec_id
-         |             ORDER BY sum(($rd.rx - c${s}0.c)*($rd.rx - c${s}0.c)), c${s}0.code) AS rn
-         |    FROM $rd JOIN c${s}0 ON $rd.d = c${s}0.d
-         |    GROUP BY $rd.vec_id, c${s}0.code QUALIFY rn = 1)),
-         |c$s AS MATERIALIZED (SELECT a${s}0.code, $rd.d,
-         |              CAST(CAST(sum($rd.rx) AS BIGINT) // count(*) AS BIGINT) AS c
-         |       FROM $rd JOIN a${s}0 USING (vec_id) GROUP BY 1, $rd.d),
-         |a$s AS MATERIALIZED (SELECT vec_id, code FROM (
-         |    SELECT $rd.vec_id, c$s.code,
-         |           row_number() OVER (PARTITION BY $rd.vec_id
-         |             ORDER BY sum(($rd.rx - c$s.c)*($rd.rx - c$s.c)), c$s.code) AS rn
-         |    FROM $rd JOIN c$s ON $rd.d = c$s.d
-         |    GROUP BY $rd.vec_id, c$s.code QUALIFY rn = 1))""".stripMargin + next
-    }.mkString(",\n")
-    // shift-adjusted codebooks: stage 1 as trained (the +2^21 frame),
-    // stage s >= 2 minus its 2^(20+s) frame shift
-    val cadjSql = ks.indices.map { i =>
-      val s = i + 1
-      if (s == 1) s"SELECT 1 AS s, code, d, c FROM c1"
-      else s"SELECT $s AS s, code, d, c - ${1048576L * (1L << s)} AS c FROM c$s"
-    }.mkString("\n       |         UNION ALL ")
-    val codesSql = ks.indices.map { i =>
-      val s = i + 1
-      s"SELECT vec_id, $s AS s, code FROM a$s"
-    }.mkString("\n       |               UNION ALL ")
-    s"""WITH inn AS (SELECT count(*) AS n FROM embeddings),
-       |ikr AS (SELECT GREATEST(1, CAST(ceil(sqrt(CAST(n AS DOUBLE) / 64.0)) AS BIGINT)) AS kr, n FROM inn),
-       |ki AS (SELECT CASE WHEN kr > 1 AND 64*(kr-1)*(kr-1) >= n THEN kr - 1
-       |                   WHEN 64*kr*kr < n THEN kr + 1
-       |                   ELSE kr END AS k FROM ikr),
-       |n AS MATERIALIZED ($quantizedSql),
-       |vd AS MATERIALIZED (SELECT vec_id, generate_subscripts(q,1)-1 AS d,
-       |              unnest(q) + 1048576 AS x FROM n),
-       |cs AS (SELECT vec_id,
-       |         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell_id
-       |       FROM n QUALIFY cell_id < $k),
-       |cc0 AS (SELECT cs.cell_id, vd.d, vd.x AS c FROM vd JOIN cs USING (vec_id)),
-       |ca1 AS (SELECT vec_id, cell_id FROM (
-       |    SELECT vd.vec_id, cc0.cell_id,
-       |           row_number() OVER (PARTITION BY vd.vec_id
-       |             ORDER BY sum((vd.x - cc0.c)*(vd.x - cc0.c)), cc0.cell_id) AS rn
-       |    FROM vd JOIN cc0 ON vd.d = cc0.d
-       |    GROUP BY vd.vec_id, cc0.cell_id QUALIFY rn = 1)),
-       |cc1 AS MATERIALIZED (SELECT ca1.cell_id, vd.d,
-       |              CAST(CAST(sum(vd.x) AS BIGINT) // count(*) AS BIGINT) AS c
-       |       FROM vd JOIN ca1 USING (vec_id) GROUP BY 1, vd.d),
-       |ca AS MATERIALIZED (SELECT vec_id, cell_id FROM (
-       |    SELECT vd.vec_id, cc1.cell_id,
-       |           row_number() OVER (PARTITION BY vd.vec_id
-       |             ORDER BY sum((vd.x - cc1.c)*(vd.x - cc1.c)), cc1.cell_id) AS rn
-       |    FROM vd JOIN cc1 ON vd.d = cc1.d
-       |    GROUP BY vd.vec_id, cc1.cell_id QUALIFY rn = 1)),
-       |rd1 AS MATERIALIZED (SELECT vd.vec_id, vd.d, vd.x - cc1.c + 2097152 AS rx
-       |       FROM vd JOIN ca USING (vec_id)
-       |       JOIN cc1 ON cc1.cell_id = ca.cell_id AND cc1.d = vd.d),
-       |$stageCtes,
-       |cadj AS MATERIALIZED ($cadjSql),
-       |codes AS MATERIALIZED (SELECT a.vec_id, ca.cell_id, a.s, a.code
-       |          FROM ($codesSql) a
-       |          JOIN ca USING (vec_id)),
-       |rnd AS (SELECT codes.vec_id, cadj.d, sum(cadj.c) AS rc
-       |        FROM codes JOIN cadj ON cadj.s = codes.s AND cadj.code = codes.code
-       |        GROUP BY 1, 2),
-       |rnorm AS (SELECT vec_id, CAST(sum(rc*rc) AS BIGINT) AS rnorm
-       |          FROM rnd GROUP BY 1),
-       |qd AS (SELECT vec_id AS query_id, d, x FROM vd WHERE vec_id % 100 = 0),
-       |qc AS (SELECT qd.query_id, cc1.cell_id,
-       |              sum((qd.x - cc1.c)*(qd.x - cc1.c)) AS cd
-       |       FROM qd JOIN cc1 ON qd.d = cc1.d GROUP BY 1, 2),
-       |probe AS (SELECT query_id, cell_id FROM (
-       |    SELECT query_id, cell_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |             ORDER BY cd, cell_id) AS rn FROM qc)
-       |    WHERE rn <= $probeExpr),
-       |qrd AS MATERIALIZED (SELECT p.query_id, p.cell_id, qd.d, qd.x - cc1.c + 2097152 AS rx
-       |        FROM probe p
-       |        JOIN qd ON qd.query_id = p.query_id
-       |        JOIN cc1 ON cc1.cell_id = p.cell_id AND cc1.d = qd.d),
-       |qn AS (SELECT query_id, cell_id, CAST(sum(rx*rx) AS BIGINT) AS qn
-       |       FROM qrd GROUP BY 1, 2),
-       |lut AS MATERIALIZED (SELECT qrd.query_id, qrd.cell_id, cadj.s, cadj.code,
-       |               CAST(sum(qrd.rx * cadj.c) AS BIGINT) AS dot
-       |        FROM qrd JOIN cadj ON qrd.d = cadj.d GROUP BY 1, 2, 3, 4),
-       |sd AS (SELECT l.query_id, co.vec_id, co.cell_id,
-       |              CAST(sum(l.dot) AS BIGINT) AS sdot
-       |       FROM codes co
-       |       JOIN lut l ON co.cell_id = l.cell_id AND co.s = l.s
-       |         AND co.code = l.code
-       |       WHERE co.vec_id <> l.query_id
-       |       GROUP BY 1, 2, 3),
-       |dist AS (SELECT sd.query_id, sd.vec_id,
-       |                CAST(qn.qn - 2*sd.sdot + rnorm.rnorm AS BIGINT) AS adist
-       |         FROM sd
-       |         JOIN qn ON qn.query_id = sd.query_id AND qn.cell_id = sd.cell_id
-       |         JOIN rnorm ON rnorm.vec_id = sd.vec_id),
-       |r AS (SELECT query_id, vec_id AS neighbor_id, adist,
-       |             row_number() OVER (PARTITION BY query_id
-       |               ORDER BY adist, vec_id) AS rnk
-       |      FROM dist)""".stripMargin
-  }
-
   /** Shared CTE block deriving the policy parameters (prm) and every
     * rung's cost (costs) from COUNT(*) — the frontier's core, reused by
     * the `q_ann_serve*` choice replay (r18). Ends with the `costs` CTE;
@@ -1048,18 +670,13 @@ object SimilarityQueries {
       .mkString("\n            ")
     s"""prm0 AS (SELECT count(*) AS n FROM embeddings),
        |qq AS (SELECT count(*) AS q FROM embeddings WHERE vec_id % 100 = 0),
-       |ikr AS (SELECT GREATEST(1, CAST(ceil(sqrt(CAST(n AS DOUBLE) / 64.0)) AS BIGINT)) AS kr, n FROM prm0),
-       |ki AS (SELECT CASE WHEN kr > 1 AND 64*(kr-1)*(kr-1) >= n THEN kr - 1
-       |                   WHEN 64*kr*kr < n THEN kr + 1
-       |                   ELSE kr END AS c FROM ikr),
        |gp AS (SELECT CASE $pChain
        |            ELSE 62 END AS p FROM prm0),
-       |prm AS (SELECT prm0.n, qq.q, ki.c,
-       |               LEAST(GREATEST(2, CAST(ceil(sqrt(CAST(ki.c AS DOUBLE))) AS BIGINT)), ki.c) AS p2,
+       |prm AS (SELECT prm0.n, qq.q,
        |               GREATEST(10, 3 * gp.p) AS bm,
        |               LEAST(6, GREATEST(3, (gp.p + 1) // 2)) AS h,
        |               GREATEST(1, prm0.n // ${graft.functions.AnnPolicy.harnessIvfCells}) AS b16
-       |        FROM prm0, qq, ki, gp),
+       |        FROM prm0, qq, gp),
        |costs AS (SELECT m.method, m.floor_milli,
        |       ${graft.functions.AnnPolicy.costSqlCase} AS cost_units
        |       FROM (VALUES ${graft.functions.AnnPolicy.floorsSqlValues}) AS m(method, floor_milli), prm)""".stripMargin
@@ -1100,48 +717,6 @@ object SimilarityQueries {
        |       CAST(w.floor_milli AS BIGINT) AS floor_milli,
        |       r.query_id, CAST(r.rnk AS BIGINT) AS rnk, r.neighbor_id
        |FROM res r JOIN winner w ON w.method = '$winner'""".stripMargin
-
-  /** PQ certified-training + ADC replay through `dist` (query →
-    * candidate ADC distance), parameterized by subspace width (dims per
-    * subspace) and per-subspace centroid count — the gated point
-    * q_pq_hi is (4, 64) (r15). */
-  private def pqBaseSqlFor(subWidth: Int, ksub: Int): String =
-    s"""WITH n AS ($quantizedSql),
-       |vd AS (SELECT vec_id, generate_subscripts(q,1)-1 AS d,
-       |              unnest(q) + 1048576 AS x FROM n),
-       |vs AS (SELECT vec_id, d, d // $subWidth AS s, x FROM vd),
-       |seeds AS (SELECT vec_id,
-       |            row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS code
-       |          FROM n QUALIFY code < $ksub),
-       |c0 AS (SELECT vs.s, se.code, vs.d, vs.x AS c
-       |       FROM vs JOIN seeds se USING (vec_id)),
-       |a1 AS (SELECT vec_id, s, code FROM (
-       |    SELECT vs.vec_id, vs.s, c0.code,
-       |           row_number() OVER (PARTITION BY vs.vec_id, vs.s
-       |             ORDER BY sum((vs.x - c0.c)*(vs.x - c0.c)), c0.code) AS rn
-       |    FROM vs JOIN c0 ON vs.s = c0.s AND vs.d = c0.d
-       |    GROUP BY vs.vec_id, vs.s, c0.code QUALIFY rn = 1)),
-       |c1 AS (SELECT a1.s, a1.code, vs.d,
-       |              CAST(CAST(sum(vs.x) AS BIGINT) // count(*) AS BIGINT) AS c
-       |       FROM vs JOIN a1 ON vs.vec_id = a1.vec_id AND vs.s = a1.s
-       |       GROUP BY 1, 2, vs.d),
-       |a2 AS (SELECT vec_id, s, code FROM (
-       |    SELECT vs.vec_id, vs.s, c1.code,
-       |           row_number() OVER (PARTITION BY vs.vec_id, vs.s
-       |             ORDER BY sum((vs.x - c1.c)*(vs.x - c1.c)), c1.code) AS rn
-       |    FROM vs JOIN c1 ON vs.s = c1.s AND vs.d = c1.d
-       |    GROUP BY vs.vec_id, vs.s, c1.code QUALIFY rn = 1)),
-       |qd AS (SELECT vec_id AS query_id, d, d // $subWidth AS s, x
-       |       FROM vd WHERE vec_id % 100 = 0),
-       |adc AS (SELECT qd.query_id, c1.s, c1.code,
-       |               sum((qd.x - c1.c)*(qd.x - c1.c)) AS pd
-       |        FROM qd JOIN c1 ON qd.s = c1.s AND qd.d = c1.d
-       |        GROUP BY 1, 2, 3),
-       |dist AS (SELECT adc.query_id, a2.vec_id,
-       |                CAST(sum(adc.pd) AS BIGINT) AS adist
-       |         FROM a2 JOIN adc ON a2.s = adc.s AND a2.code = adc.code
-       |         WHERE a2.vec_id <> adc.query_id
-       |         GROUP BY 1, 2)""".stripMargin
 
   /** The SQ8 chain with an optional candidate predicate on the code
     * scan — mirroring `Similarity.sq8TopK(candPred)`. */

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** The ANN ladder's SERVING-POLICY surface in one place (r18, VERDICT
-  * task 2): each rung's serving constants (quantizer shape, probe/walk
-  * parameters, rerank depth), its cross-scale certified recall floor,
+  * task 2): each rung's serving constants (probe/walk parameters,
+  * rerank depth), its cross-scale certified recall floor,
   * its closed-form work-unit cost and its serve function — defined
   * ONCE and read by
   *
@@ -15,10 +15,8 @@ import org.apache.spark.sql.functions.col
   *  - the DuckDB oracle (the cost CASE is GENERATED from the same
   *    expression tree via [[Cost.sql]]).
   *
-  * Before this, the frontier hand-duplicated m/ksub/L/probe literals in
-  * both the Scala cost map and the SQL mirror; r17 re-pointed
-  * `q_ivfpq_auto` and had to re-sync them by hand — a silent mis-rank
-  * risk for the policy surface. Now a re-point is one edit here.
+  * A re-point is one edit here: no serving literal is duplicated in
+  * the cost trees or the oracle SQL.
   *
   * Cost arithmetic (r17 ADVICE): evaluated in DOUBLE with a clamp at
   * 2^62 on BOTH sides — Scala `Long` wraps silently around n≈3e9 in
@@ -44,8 +42,8 @@ object AnnPolicy {
   /** embeddings dimensionality — SQ8's per-dim code scan cost. */
   val dims = 64
 
-  /** harness LSH: 4 hyperplane bits (16 buckets), 1 bucket + `bits`
-    * Hamming-1 probes; multi-probe form runs `tables` tables. */
+  /** harness LSH (`lsh_multi`): 4 hyperplane bits (16 buckets) per
+    * table, `tables` tables, one bucket probed in each. */
   val harnessLshBits = 4
   val harnessLshTables = 4
 
@@ -58,24 +56,6 @@ object AnnPolicy {
   require(harnessIvfCells == (1 << harnessLshBits),
     "harness IVF cell count and LSH bucket count must agree: the " +
       "b16 cost symbol is one bucket size shared by both rungs")
-
-  /** The high-fidelity PQ point (q_pq_hi): m=16 subspaces of 64 codes. */
-  val pqHiM = 16
-  val pqHiKsub = 64
-
-  /** IVFADC auto point (q_ivfpq_auto, r17 re-point): m=16 residual
-    * subspaces of 64 codes on sqrt(n/64) cells with sqrt(c) probing. */
-  val ivfpqAutoM = 16
-  val ivfpqAutoKsub = 64
-
-  /** IVF-RQ auto point: additive residual stage widths. r18 re-point
-    * to 8 stages x 16 codes — the r17 lab table already showed L8x16
-    * above the gated L4x64 at the same sqrt(c) probe budget, and the
-    * tri-scale sweep confirms it at EVERY SF (0.26/0.40/0.17 vs
-    * 0.18/0.30/0.13): finer additive refinement beats wider per-stage
-    * codebooks at equal 2^32 code space. Serve cost is L LUT lookups
-    * per candidate (8 vs 4 — reflected in the cost tree below). */
-  val ivfrqAutoKs: Seq[Int] = Seq.fill(8)(16)
 
   /** kNN-graph: per-node list depth and NN-descent round count; the
     * serving walk derives beam/hops from COUNT(*)
@@ -93,7 +73,6 @@ object AnnPolicy {
     * construction. Symbols (all BIGINT columns of the oracle's `prm`
     * CTE / entries of the engine's env map):
     *   n   corpus size              q    query count
-    *   c   auto IVF cell count      p2   auto probe count (sqrt c)
     *   h   auto graph hops          bm   auto graph beam
     *   b16 harness bucket size max(1, n / harnessIvfCells)
     *       (= 2^harnessLshBits buckets — one number for both rungs)
@@ -141,13 +120,12 @@ object AnnPolicy {
 
   import Cost.{Lit => L, Sym}
   private val n = Sym("n"); private val q = Sym("q")
-  private val c = Sym("c"); private val p2 = Sym("p2")
   private val h = Sym("h"); private val bm = Sym("bm")
   private val b16 = Sym("b16")
 
   /** A rung's serve function: (embeddings, queryPred, k, env, cap) →
     * (query_id, rnk, neighbor_id, …) at the rung's operating point;
-    * `env` is the corpus's [[env]] map (auto cells, probes, hops) and
+    * `env` is the corpus's [[env]] map (graph hops and beam) and
     * `cap` the driver-resident corpus cap the sq8 and ivf rungs take
     * (`Similarity.localServeCap`; the other rungs ignore it). */
   trait Serve {
@@ -173,18 +151,14 @@ object AnnPolicy {
   final case class AnnRung(method: String, floorMilli: Long, cost: Cost,
                            serve: Serve, local: Option[LocalServe] = None)
 
-  import Similarity.{autoGraphBeam, autoGraphHops, autoIvfCells,
-    autoIvfProbe, ivfLocal, ivfRqTopKMulti, ivfTopK, ivfpqTopK, knnGraph,
-    knnGraphSearch, lshTopK, lshTopKMulti, pqTopK, sq8Local, sq8RerankLocal,
+  import Similarity.{autoGraphBeam, autoGraphHops, ivfLocal, ivfTopK,
+    knnGraph, knnGraphSearch, lshTopKMulti, sq8Local, sq8RerankLocal,
     sq8TopK, sq8TopKRerank}
 
   /** The frontier's rung table. Floors are re-pinned when a rung
     * re-points (see BUILD_NOTES); cost constants reference the serving
     * vals above, so a re-point cannot leave the policy surface stale. */
   val rungs: Seq[AnnRung] = Seq(
-    // bucket + `bits` Hamming-1 probes, each a b16-sized bucket scan
-    AnnRung("lsh", 350L, q * L(harnessLshBits + 1) * b16,
-      (e, p, k, _, _) => lshTopK(e, p, k, harnessLshBits)),
     // `tables` tables, 1 bucket each
     AnnRung("lsh_multi", 380L, q * L(harnessLshTables) * b16,
       (e, p, k, _, _) => lshTopKMulti(e, p, k, harnessLshBits, harnessLshTables)),
@@ -193,23 +167,12 @@ object AnnPolicy {
       q * L(harnessIvfCells) + q * L(harnessIvfProbe) * b16,
       (e, p, k, _, cap) => ivfTopK(e, p, k, harnessIvfCells, harnessIvfProbe, cap = cap),
       Some((lc, hits, k) => ivfLocal(lc, hits, k, harnessIvfProbe, lc.firstById(harnessIvfCells)))),
-    AnnRung("pq_hi", 220L, L(pqHiM) * q * n,
-      (e, p, k, _, _) => pqTopK(e, p, k, pqHiM, pqHiKsub, 1)),
     AnnRung("sq8", 700L, L(dims) * q * n,
       (e, p, k, _, cap) => sq8TopK(e, p, k, cap = cap),
       Some((lc, hits, k) => Some(sq8Local(lc, hits, k)))),
     AnnRung("sq8_rerank", 900L, L(dims) * q * n + L(rerankPool) * q,
       (e, p, k, _, cap) => sq8TopKRerank(e, p, k, rerankPool, cap),
       Some((lc, hits, k) => sq8RerankLocal(lc, hits, k, rerankPool))),
-    AnnRung("ivfpq_auto", 170L,
-      q * c + q * p2 * (n / c) * L(ivfpqAutoM),
-      (e, p, k, env, _) => ivfpqTopK(e, p, k, env("c").toInt, env("p2").toInt,
-        ivfpqAutoM, ivfpqAutoKsub, 1)),
-    // L LUT lookups per candidate in the probed cells
-    AnnRung("ivfrq_auto", 85L,
-      q * c + q * p2 * (n / c) * L(ivfrqAutoKs.length),
-      (e, p, k, env, _) => ivfRqTopKMulti(e, p, k, env("c").toInt,
-        env("p2").toInt, ivfrqAutoKs, 1)),
     // the node's own list: one lookup
     AnnRung("knn_graph", 57L, q * L(kGraph),
       (e, p, k, _, _) => knnGraph(e, kGraph, graphRounds)
@@ -225,13 +188,10 @@ object AnnPolicy {
     * queried by `q` of them: the integers the cost trees evaluate over,
     * every one a COUNT(*)-derived auto value (the oracle re-derives the
     * same numbers via its integer threshold chains). */
-  def env(n: Long, q: Long): Map[String, Long] = {
-    val c = autoIvfCells(n)
-    Map("n" -> n, "q" -> q, "c" -> c.toLong,
-      "p2" -> autoIvfProbe(c).toLong, "h" -> autoGraphHops(n).toLong,
+  def env(n: Long, q: Long): Map[String, Long] =
+    Map("n" -> n, "q" -> q, "h" -> autoGraphHops(n).toLong,
       "bm" -> autoGraphBeam(n).toLong,
       "b16" -> math.max(1L, n / harnessIvfCells))
-  }
 
   /** The serving policy — "the cheapest rung whose CERTIFIED recall ≥
     * `floorMilli`": the minimum cost over the rungs meeting the floor

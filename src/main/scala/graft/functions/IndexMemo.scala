@@ -69,7 +69,7 @@ private[graft] object IndexMemo {
     * serialize, so it trains once. A semantic-hash collision merely
     * over-serializes two unrelated builds — never a correctness issue.
     * Nested `of` calls only ever go from an outer index to a strictly
-    * finer one (ivfpq -> pq codebooks, pairs -> postings), never back,
+    * finer one (pairs -> postings), never back,
     * so the lock graph is acyclic — no deadlock. Both monitors are
     * reentrant for the self-nested case. Lock entries of stopped
     * sessions are pruned alongside the entry sweep in `lookup`, and

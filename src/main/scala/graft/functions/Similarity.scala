@@ -52,22 +52,6 @@ object Similarity {
     cents.groupBy(keys.map(col): _*)
       .agg(expr("transform(array_sort(collect_list(struct(d, c))), p -> p.c)").as("ca"))
 
-  /** Rebuild a DICTIONARY-sized frame (centroid / seed tables — k·dims
-    * or |salts|·maxK rows by construction, NEVER corpus-scale) as a
-    * LocalRelation with identical schema and values (r20, guide §1.2
-    * step 1 + §5): the collect is the same one eager job the
-    * localCheckpoint it replaces would have run, but every downstream
-    * BroadcastExchange over the frame (or a projection of it) now
-    * builds from a LocalTableScan with NO Spark job, and Catalyst
-    * constant-folds/prunes over it instead of planning exchanges
-    * inside broadcast-build subtrees. All values are exact
-    * (BIGINT/INT/strings), so the rebuilt frame is bit-identical. */
-  private def localFrame(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
   /** `centArrays` computed on the DRIVER: group the (keys…, d, c) rows
     * by the key tuple, order each group's values by d ascending, and
     * emit (keys…, ca) as a LocalRelation. d is unique within a group,
@@ -95,51 +79,6 @@ object Similarity {
       java.util.Arrays.asList(grouped: _*), schema)
   }
 
-  /** Driver-side (code, centroid-array) view of a per-dim centroid
-    * frame — `centArraysLocal`'s grouping without the re-wrap into a
-    * LocalRelation. The input is always a LocalRelation (fpStage's
-    * literal path builds centroids driver-side), so the collect runs
-    * NO Spark job; values are the exact Longs the cluster holds. */
-  private[graft] def centsLocalOf(cents: DataFrame, codeName: String): Seq[(Int, Seq[Long])] =
-    cents.select(col(codeName), col("d"), col("c")).collect()
-      .groupBy(_.getInt(0)).toSeq
-      .map { case (code, rs) =>
-        (code, rs.map(r => (r.getInt(1), r.getLong(2)))
-          .sortBy(_._1).map(_._2).toSeq) }
-      .sortBy(_._1)
-
-  /** Driver replica of the literal-path assignment argmin —
-    * lexicographic (dist, code) minimum with SqDistI64's plain Long
-    * algebra, bit-identical to `least(struct(sqdist_i64(xa, ca),
-    * code))` (ties on dist break to the smaller code; codes are
-    * distinct so the order is total). */
-  private[graft] def argminLocal(cents: Seq[(Int, Seq[Long])], xa: Seq[Long]): Int = {
-    var bestCode = Int.MaxValue
-    var bestDist = Long.MaxValue
-    cents.foreach { case (code, ca) =>
-      var acc = 0L; var i = 0; val n = xa.length
-      while (i < n) { val d = xa(i) - ca(i); acc += d * d; i += 1 }
-      if (acc < bestDist || (acc == bestDist && code < bestCode)) {
-        bestDist = acc; bestCode = code
-      }
-    }
-    bestCode
-  }
-
-  /** Driver replica of one residual step: xa ← xa − cents[argmin] +
-    * frameShift — the exact `zip_with(xa, ca, (x, c) -> x - c + F)`
-    * the cluster applies after each stage's assignment. Used by the
-    * residual-chain seed replay (multi-stage trainers keep the next
-    * stage's ≤k seed vectors driver-side instead of re-collecting
-    * them from the checkpointed residual frame — one less Spark
-    * action per stage; bit-identical by the shared integer algebra,
-    * spec-pinned against the collect path). */
-  private[graft] def residualLocal(cents: Seq[(Int, Seq[Long])], xa: Seq[Long],
-                            frameShift: Long): Seq[Long] = {
-    val ca = cents(cents.indexWhere(_._1 == argminLocal(cents, xa)))._2
-    xa.zip(ca).map { case (x, c) => x - c + frameShift }
-  }
-
   /** Embeddings with quantized vector + its exact squared norm. */
   def quantized(embeddings: DataFrame): DataFrame =
     embeddings
@@ -155,7 +94,7 @@ object Similarity {
 
   /** Per-query bounded top-k via the native `graft.plans.TopK`
     * aggregate, ascending by (`distCol`, neighbor_id) — the scale
-    * shape shared by every ADC/distance search: partial aggregation
+    * shape shared by every code-distance search: partial aggregation
     * collapses each map task to <= k rows per query BEFORE the
     * exchange, so the shuffle carries |Q|·k answer rows where the
     * rank-window idiom ships and sorts every scored candidate. */
@@ -584,7 +523,7 @@ object Similarity {
     * (cell_id, centroid ARRAY<DOUBLE>). Seeds = the k lowest vec_ids. */
   def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): DataFrame =
     // Memoized per (input plan, k, iters): centroids are k×dims
-    // corpus-derived state shared by every IVF consumer — see pqTrain.
+    // corpus-derived state shared by every IVF consumer.
     IndexMemo("kmeans_cents", embeddings, (k, iters))(
       kmeansCentroidsCompute(embeddings, k, iters))
 
@@ -668,9 +607,17 @@ object Similarity {
     * membership itself (SemDeDup's cluster blocking), same integer
     * discipline so DuckDB replays it. Memoized per (input plan, k,
     * iters) like every trained index. */
-  def kmeansFixedPointAssign(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
+  def kmeansFixedPointAssign(embeddings: DataFrame, k: Int, iters: Int): DataFrame =
+    kmeansFixedPointAssign(embeddings, k, iters, litCentCap)
+
+  /** `kmeansFixedPointAssign` with the literal-spelling cap as a test
+    * seam: specs pass a `litCap` below k to drive the broadcast-join
+    * spelling on a small corpus. The cap is in the memo key, so the two
+    * spellings never share an entry. */
+  private[graft] def kmeansFixedPointAssign(embeddings: DataFrame, k: Int, iters: Int,
+                                            litCap: Int): DataFrame = {
     require(iters >= 1, s"kmeansFixedPointAssign needs at least one iteration, got $iters")
-    IndexMemo("kmeans_fp_assign", embeddings, (k, iters)) {
+    IndexMemo("kmeans_fp_assign", embeddings, (k, iters, litCap)) {
       val shift = 1048576L
       val v = ensureQuantized(embeddings).select(col("vec_id"), col("q"))
       // vectors as +2^20-shifted arrays — the ONE materialization;
@@ -685,14 +632,15 @@ object Similarity {
       // (bit-identical to the TakeOrdered + window form it replaces)
       val seeds = seedTable(v, Seq(""), k)
         .select(col("vec_id"), col("code").as("cell_id"))
-      if (k <= litCentCap) {
+      if (k <= litCap) {
         // r20 (guide §2.4, §1.2 step 1): centroids live driver-side
         // between iterations, the assignment is a MAP-ONLY argmin over
         // k literal centroid arrays — the per-iteration corpus
         // exchange (partial-min rows carrying xa through a
         // groupBy(vec_id) shuffle) is gone. least(struct(_dist,
         // cell_id)) is the same lexicographic min as min(struct(_dist,
-        // cell_id, …)); see fpStage's literal path. One corpus-scan
+        // cell_id, …)): the trailing struct fields there are
+        // per-vector constants that never break a tie. One corpus-scan
         // collect fetches the seed vectors (the pass the
         // broadcast(cents) build ran before).
         def argmin(cents: Seq[(Int, Seq[Long])]): Column = {
@@ -856,7 +804,7 @@ object Similarity {
     * FIXED nCells is the LSH-bits scale trap — cells grow linearly
     * with the corpus, so probing nProbe of them approaches scanning a
     * constant fraction of all codes. With c ~ √(n/targetCell) the
-    * probed code count grows as ~√n (`q_ivfpq_auto`). */
+    * probed code count grows as ~√n (`q_ivf_sq8_auto`). */
   def autoIvfCells(nVecs: Long, targetCell: Int = 64): Int =
     autoSemDedupHierK(nVecs, targetCell)
 
@@ -906,7 +854,7 @@ object Similarity {
     * exponent on the r12 scale board). Here level 1 trains k1 coarse
     * cells (n·k1), then level 2 trains k2 sub-cells PER coarse cell
     * JOINTLY — the coarse id `g` rides every key (seeds, assignment,
-    * update), the pqTrain subspace trick, so all k1 sub-codebooks cost
+    * update), so all k1 sub-codebooks cost
     * ONE k-means' exchanges and each vector scores only its own
     * cell's k2 centroids (n·k2). With k1 = k2 = √(n/64) the total
     * assignment work is n^1.5/8 vs flat's n²/64 — the classic
@@ -993,232 +941,6 @@ object Similarity {
       else { val k = autoSemDedupHierK(embeddings.count()); (k, k) }
     semDedupWithAssign(embeddings,
       kmeansHierAssign(embeddings, k1e, k2e, iters), minCosine)
-  }
-
-  /** Product quantization (PQ): split each vector into `m` contiguous
-    * subvectors and train a `ksub`-centroid codebook PER subspace with
-    * the `kmeansFixedPoint` integer discipline (+2^20-shifted 1e6-
-    * quantized dims, integer `sum div count` centroids, exact int64
-    * squared distances, md5-ordered seeds, lexicographic argmin ties)
-    * — so DuckDB replays training bit-exactly. Every vector is then
-    * ENCODED as m small codes: the 100 TB ANN compression (a 64-dim
-    * float vector becomes m bytes of codes; the index shrinks ~100×).
-    *
-    * All m subspaces train JOINTLY — the subspace id `s` rides every
-    * key (seeds, assignment, centroid update), so m codebooks cost the
-    * same NUMBER of exchanges as one k-means, not m of them.
-    *
-    * Returns (codes, centroids): codes = (vec_id, s, code); centroids
-    * = (s, code, d, c) on GLOBAL dim index d, from the FINAL update —
-    * codes are the final assignment against those centroids (one
-    * assignment after the last update, mirroring the oracle's replay).
-    */
-  def pqTrain(embeddings: DataFrame, m: Int, ksub: Int,
-              iters: Int): (DataFrame, DataFrame) = {
-    require(iters >= 1, s"pqTrain needs at least one iteration, got $iters")
-    // Memoized per (quantized input plan, m, ksub, iters): the trained
-    // index (checkpointed codes + centroids) is corpus-derived state,
-    // and the topk / rerank siblings over the same corpus would
-    // otherwise each re-run the full Lloyd loop.
-    val e = ensureQuantized(embeddings)
-    IndexMemo.of[(DataFrame, DataFrame)]("pq_train", e, (m, ksub, iters))(
-      pqTrainCompute(e, m, ksub, iters))
-  }
-
-  private def pqTrainCompute(e: DataFrame, m: Int, ksub: Int,
-                             iters: Int): (DataFrame, DataFrame) = {
-    val shift = 1048576L // 2^20 (see kmeansFixedPoint)
-    val v = e.select(col("vec_id"), col("q"))
-    val dims = v.select(size(col("q"))).head().getInt(0)
-    require(dims % m == 0, s"$dims dims not divisible into $m subspaces")
-    val subDim = dims / m
-    // subvector ARRAYS (vec, s, sa) — the one materialization;
-    // everything downstream (seeds, assignments, updates) rides it.
-    // LAZY: the seed-codebook collect below materializes the blocks.
-    val vs = v.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> " +
-          s"transform(slice(q, s * $subDim + 1, $subDim), x -> x + ${shift}L))"))
-        .as(Seq("s", "sa")))
-      .localCheckpoint(eager = false)
-    // shared seed VECTORS across subspaces (each contributes its own
-    // subvector per subspace): the ksub smallest md5(vec_id) — the
-    // bounded-TopK seedTable pick (bit-identical to the r18
-    // TakeOrdered + window form), and seed codebooks come straight
-    // off the subvector ARRAY frame via a ksub-row broadcast join
-    // (r19: no corpus-wide per-dim explode + array re-collect)
-    val seeds = localFrame(seedTable(v, Seq(""), ksub)
-      .select(col("vec_id"), col("code")))
-    // seed codebooks collected once (ksub·m subvector rows, driver-side
-    // r20): every assignment's broadcast(cArr) below builds from a
-    // LocalRelation with no Spark job, and the per-iteration centroid
-    // frame materializes through ONE collect instead of a checkpoint
-    // action + per-consumer broadcast-build jobs
-    val seedArr = localFrame(vs.join(broadcast(seeds), Seq("vec_id"))
-      .select(col("s"), col("code"), col("sa").as("ca")))
-    // assignment carries sa through the argmin ((_dist, code) is
-    // unique per (vec, s) group, so the array never compares), and
-    // the centroid update explodes per-dim AFTER the per-vector
-    // reduction — the vd ⋈ assignment join per iteration is gone
-    def assign(cArr: DataFrame): DataFrame =
-      vs.join(broadcast(cArr), Seq("s"))
-        .select(col("vec_id"), col("s"), col("code"),
-          sqDistQ("sa", "ca").as("_dist"), col("sa"))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(struct(col("_dist"), col("code"), col("sa"))).as("_m"))
-        .select(col("vec_id"), col("s"), col("_m.code").as("code"),
-          col("_m.sa").as("sa"))
-    var cents: DataFrame = null
-    var cArr = seedArr
-    (1 to iters).foreach { _ =>
-      cents = localFrame(assign(cArr)
-        .select(col("s"), col("code"), posexplode(col("sa")).as(Seq("ds", "x")))
-        .select(col("s"), col("code"),
-          (col("s") * lit(subDim) + col("ds")).as("d"), col("x"))
-        .groupBy(col("s"), col("code"), col("d"))
-        .agg(expr("sum(x) div count(1)").as("c")))
-      cArr = centArraysLocal(cents, "s", "code")
-    }
-    (assign(cArr).select(col("vec_id"), col("s"), col("code"))
-      .localCheckpoint(), cents)
-  }
-
-  /** PQ top-k by asymmetric distance computation (ADC): the query
-    * keeps its EXACT (shifted-integer) subvectors; each candidate is
-    * represented only by its m codes. Per (query, subspace, code) the
-    * exact partial squared distance to that code's centroid is
-    * precomputed — a |Q|·m·ksub table, broadcast — and a candidate's
-    * distance is the sum of its codes' m table entries. All integer
-    * arithmetic, so the ranking is engine-exact and oracle-gateable
-    * (approximate vs TRUE distance — that's PQ's contract — but
-    * deterministically so).
-    *
-    * Scale shape: the codes table (n·m small ints — the compressed
-    * index, the only thing that scans) joins the broadcast ADC table
-    * map-side; partial sums collapse to one row per (query, candidate)
-    * before the single exchange; top-k is a per-query window over
-    * id-sized rows. The raw vectors are touched only to build the
-    * |Q|-row query side. */
-  def pqTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-             m: Int, ksub: Int, iters: Int,
-             lutBudget: Long = defaultLutEntries): DataFrame = {
-    val (codes, cents) = pqTrain(embeddings, m, ksub, iters)
-    pqSearchIndex(ensureQuantized(embeddings).filter(queryPred), codes, cents,
-      k, lutBudget)
-  }
-
-  /** Per-task LUT broadcast budget: the dense per-query ADC distance
-    * table is |Q|·m·ksub int64s shipped to EVERY task, so an unbounded
-    * |Q| makes the broadcast itself the driver-side ceiling (the
-    * autoDocFreqCap class of trap). 4M entries = 32 MB per broadcast —
-    * chunks of ceil(budget / (m·ksub)) queries keep each broadcast
-    * bounded while the total scan work (|Q|·n gathers) is unchanged.
-    * r17: a `val` default threaded as the `lutBudget` parameter
-    * everywhere (was a `private[graft] var` test seam on a production
-    * path — specs now pass the parameter). */
-  val defaultLutEntries: Long = 4L << 20
-
-  /** Deterministic chunk count with a HARD per-chunk cap: start at
-    * ceil(n / cap) and DOUBLE until no chunk exceeds `cap` ids (each
-    * check is one id-only aggregation; with xxhash64 spreading, the
-    * loop converges immediately in practice). r17 ADVICE fix: the r16
-    * split used pmod(id, nChunks) — this repo's query predicates are
-    * arithmetic progressions (vec_id % 100 === 0), so whenever nChunks
-    * shared a factor with the stride the queries COLLAPSED into one or
-    * two chunks and the per-broadcast budget was exceeded unboundedly
-    * (fully unchunked in the worst case — the exact driver-OOM the
-    * budget exists to prevent). Chunking never affects results (chunks
-    * partition queries), so the hash swap keeps every oracle gate. */
-  private[graft] def hashChunkCount(ids: DataFrame, idCol: String, cap: Long,
-                                    n: Long): Int = {
-    var nChunks = math.max(1L, (n + cap - 1) / cap)
-    while (nChunks > 1 && nChunks < (1L << 30) &&
-           ids.groupBy(pmod(xxhash64(col(idCol)), lit(nChunks)).as("_c"))
-             .count().agg(max(col("count"))).head().getLong(0) > cap)
-      nChunks *= 2
-    nChunks.toInt
-  }
-
-  /** Memoized LUT-chunk sizing per (query-id plan, cap) — r19 (the
-    * annPolicyEnv discipline, VERDICT r18 #4 applied to the search
-    * paths): every quantizer serve paid a fresh ids checkpoint + one
-    * count + the hashChunkCount doubling probe PER CALL, for an
-    * integer that changes only when the query set does. The ids
-    * checkpoint is sizing-local (only the Int is retained), and a
-    * repeat serve over the same (corpus, predicate) runs ZERO sizing
-    * jobs. */
-  private def memoChunkCount(ids: DataFrame, idCol: String, cap: Long): Int =
-    IndexMemo.of[Int]("lut_chunks", ids, (idCol, cap)) {
-      val ck = ids.localCheckpoint()
-      hashChunkCount(ck, idCol, cap, ck.count())
-    }
-
-  /** ADC search of query VECTORS against an existing (codes, cents)
-    * index — the search half of `pqTopK`: queries need not come from
-    * the indexed corpus. `lutBudget` overrides the per-broadcast LUT
-    * entry budget (tests force tiny chunks with it; serving uses the
-    * 32 MB default). */
-  def pqSearchIndex(queries: DataFrame, codes: DataFrame, cents: DataFrame,
-                    k: Int, lutBudget: Long = defaultLutEntries): DataFrame = {
-    val shift = 1048576L
-    // geometry off the dictionary-sized codebook (one tiny job)
-    val g = cents.agg(max(col("s")).cast("int"), max(col("code")).cast("int")).head()
-    val m = g.getInt(0) + 1
-    val ksub = g.getInt(1) + 1
-    val q0 = ensureQuantized(queries)
-    // chunk count from ONE query count: |Q|·m·ksub entries over the
-    // budget, split by a deterministic id hash with a hard per-chunk cap
-    val chunkRows = math.max(1L, lutBudget / (m.toLong * ksub))
-    val nChunks = memoChunkCount(q0.select(col("vec_id")), "vec_id", chunkRows)
-    // the code index in array form (vec_id, carr) — memoized per
-    // codes plan: the search-side shape of the stored index. A caller
-    // that already holds the ARRAY form passes through untouched.
-    // Chunks re-scan this checkpointed frame — the compressed index,
-    // the cheapest thing on the path to re-read.
-    val codesArr =
-      if (codes.columns.contains("carr")) codes
-      else IndexMemo("pq_codes_arr", codes, ()) {
-        codes.groupBy(col("vec_id"))
-          .agg(expr("transform(array_sort(collect_list(struct(s, code))), p -> p.code)")
-            .as("carr"))
-          .localCheckpoint()
-      }
-    def searchChunk(chunk: DataFrame): DataFrame = {
-      val qd = chunk
-        .select(col("vec_id").as("query_id"), posexplode(col("q")).as(Seq("d", "qx")))
-        .select(col("query_id"), col("d"), (col("qx") + shift).as("x"))
-      val adc = qd.join(broadcast(cents), Seq("d"))
-        .groupBy(col("query_id"), col("s"), col("code"))
-        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("pd"))
-      // DENSE per-query distance table (FAISS's LUT): lut[s·ksub+code]
-      // = pd. The old spelling joined the code rows to adc on (s, code)
-      // and hash-aggregated n·m·|Q| rows; the gather form streams
-      // |Q|·n rows through one codegen'd lookup loop — bit-identical
-      // sums (adc covers every (s, code) the training kept, so every
-      // assigned code's slot is populated; the 0 fallback is dead).
-      val lut = adc
-        .groupBy(col("query_id"))
-        .agg(expr(s"map_from_entries(collect_list(" +
-          s"struct(s * $ksub + code AS k, pd AS v)))").as("mp"))
-        .select(col("query_id"), expr(s"transform(sequence(0, ${m * ksub - 1}), " +
-          "i -> coalesce(element_at(mp, i), CAST(0 AS BIGINT)))").as("lut"))
-      // adc_gather_i64 NULLs on a corrupted/out-of-range code; topKAsc's
-      // struct-min would rank a NULL dist FIRST, so drop corrupt
-      // candidates here — the only NULL-capable producer on this path
-      // (a healthy store never NULLs: the LUT is built dense over the
-      // training's own ksub).
-      topKAsc(codesArr.crossJoin(broadcast(lut))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          graft.plans.AdcGatherI64.adc_gather_i64(col("carr"), col("lut"), ksub)
-            .as("adist"))
-        .filter(col("adist").isNotNull),
-        k, "adist")
-    }
-    if (nChunks <= 1) searchChunk(q0)
-    else (0 until nChunks)
-      .map(i => searchChunk(
-        q0.filter(pmod(xxhash64(col("vec_id")), lit(nChunks.toLong)) === i)))
-      .reduce(_.unionByName(_))
   }
 
   /** The quantized corpus (`quantized(e)`'s rows: every input column
@@ -1376,7 +1098,7 @@ object Similarity {
     * per-dimension affine 8-bit codes, `c = (x - mn_d) * 255 div
     * (mx_d - mn_d)` over the exact integer quantized grid, with the
     * per-dim (mn, mx) bounds learned from the corpus. Training is ONE
-    * min/max aggregation (vs PQ/RQ's Lloyd loops) and the index is a
+    * min/max aggregation (no Lloyd loop) and the index is a
     * byte per dimension — the cheap rung of the compression ladder.
     * All operands are non-negative integers, so truncating (Spark
     * `div`) and flooring (DuckDB `//`) division coincide and the codes
@@ -1485,7 +1207,7 @@ object Similarity {
 
   /** SQ8 + exact re-rank: the code-space scan proposes a `pool`-sized
     * candidate set, exact quantized cosine orders the final top-k —
-    * the same refine stage as the PQ/RQ/IVFPQ siblings. Below `cap`
+    * the FAISS refine step (`exactRerank`). Below `cap`
     * both stages run on the driver (`sq8RerankLocal`): no Spark job. */
   def sq8TopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
                     pool: Int, cap: Long = localServeCap): DataFrame = {
@@ -1589,38 +1311,15 @@ object Similarity {
       .select(col("salt"), posexplode(col("_t")).as(Seq("_p", "_s")))
       .select(col("salt"), col("_s.vec_id").as("vec_id"), col("_p").as("code"))
 
-  /** One certified-fixpoint k-means stage over `vecs` (vec_id, xa
-    * ARRAY<BIGINT>, plus optional `passCols` carried through): returns
-    * (final assignment — LAZY, carrying xa and passCols — and the
-    * final PER-DIM centroids, checkpointed). `seeds` holds the stage's
-    * (vec_id, codeName) seed picks — a salt-filtered `seedTable` slice.
-    *
-    * r19 reshape of the r18 form — bit-identical results (same seeds,
-    * same integer argmin/centroid algebra), fewer exchanges and eager
-    * jobs per stage (guide §2.3/§2.4):
-    *  - seed centroids come from a k-row broadcast join against the
-    *    ARRAY frame (the kmeansFixedPointAssign shape) instead of
-    *    exploding the whole corpus per-dim and re-collecting arrays;
-    *  - the centroid update rides the assignment aggregate itself —
-    *    xa is carried through the argmin struct ((_dist, code) is
-    *    unique per vector, so the array never participates in the
-    *    comparison) and explodes per-dim AFTER the per-vector
-    *    reduction: the n·dims-row dimRows ⋈ assignment join/shuffle
-    *    per iteration is gone;
-    *  - the FINAL assignment is returned lazy: callers fold its
-    *    materialization into their next checkpoint (the residual
-    *    frame / the code table) instead of paying an eager job per
-    *    stage, and because it carries xa the residual computation
-    *    needs no join back to the vector frame. */
-  /** Max centroid count for the LITERAL (map-only) assignment spelling
-    * below: k·dims literal longs ride the projection's plan, and each
-    * centroid contributes one codegen'd SqDistI64 call — fine into the
-    * hundreds, a codegen/plan-size hazard in the thousands (the
-    * auto-scaled coarse quantizer at cluster corpus sizes). Above the
-    * cap fpStage keeps the r19 broadcast-join + partial-min-aggregate
-    * spelling; both spellings are bit-identical (FunctionsSpec "fpStage
-    * literal-centroid path" pins it by driving both through `litCap`),
-    * so the cap is a pure plan choice. */
+  /** Max centroid count for `kmeansFixedPointAssign`'s LITERAL
+    * (map-only) assignment spelling: k·dims literal longs ride the
+    * projection's plan, and each centroid contributes one codegen'd
+    * SqDistI64 call — fine into the hundreds, a codegen/plan-size
+    * hazard in the thousands (an auto-scaled k at cluster corpus
+    * sizes). Above the cap the assignment keeps the broadcast-join +
+    * partial-min-aggregate spelling; both spellings are bit-identical
+    * (FunctionsSpec "kmeansFixedPointAssign literal-centroid path"
+    * drives both through `litCap`), so the cap is a pure plan choice. */
   private[graft] val litCentCap = 256
 
   /** Max corpus size, in vectors × dims (quantized longs), that the
@@ -1634,678 +1333,6 @@ object Similarity {
     * identical rows (LocalServeSpec drives both through the `cap`
     * parameter of the serve functions). */
   private[graft] val localServeCap: Long = 1L << 20
-
-  private[graft] def fpStage(seeds: DataFrame, vecs: DataFrame,
-                      codeName: String, k: Int, iters: Int,
-                      passCols: Seq[String] = Nil,
-                      litCap: Int = litCentCap,
-                      seedVecs: Option[Seq[(Int, Seq[Long])]] = None): (DataFrame, DataFrame) = {
-    val spark = vecs.sparkSession
-    // r20 (guide §2.4 "remove shuffles outright", §1.2 step 1 "cut
-    // actions"): centroids live DRIVER-side between iterations —
-    // they are k·dims exact longs, dictionary-sized by construction.
-    // The assignment becomes a MAP-ONLY projection: argmin over k
-    // literal centroid arrays via least(struct(sqdist, code)), which
-    // removes the per-assignment corpus exchange the r19 spelling
-    // paid (crossJoin + groupBy(vec_id) shipped every vector's xa
-    // array through a shuffle so the partial min could merge — pure
-    // overhead, since each vector's k candidate rows never leave
-    // their map task). Ordering is bit-identical: least() on
-    // struct(_dist, code) is the same lexicographic (_dist, code)
-    // min as the r19 min(struct(_dist, code, …)) — the trailing
-    // struct fields there were per-vector constants that never
-    // broke a tie (codes are distinct per candidate).
-    def assignLit(cents: Seq[(Int, Seq[Long])]): DataFrame = {
-      val cand = cents.map { case (code, ca) =>
-        struct(
-          graft.plans.SqDistI64.sqdist_i64(col("xa"), typedLit(ca)).as("_dist"),
-          lit(code).as(codeName))
-      }
-      vecs.withColumn("_m", if (cand.size == 1) cand.head else least(cand: _*))
-        .select(col("vec_id") +: (col(s"_m.$codeName").as(codeName) +:
-          (passCols.map(col) :+ col("xa"))): _*)
-    }
-    // per-dim LocalRelation (codeName, d, c) — the frame shape the
-    // r19 checkpoint held, rebuilt from driver rows (bit-identical)
-    def perDim(cents: Seq[(Int, Seq[Long])]): DataFrame = {
-      import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-      val rows = cents.sortBy(_._1).flatMap { case (code, ca) =>
-        ca.zipWithIndex.map { case (c, d) =>
-          org.apache.spark.sql.Row(code, d, c) } }
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        StructType(Seq(StructField(codeName, IntegerType, nullable = false),
-          StructField("d", IntegerType, nullable = false),
-          StructField("c", LongType, nullable = false))))
-    }
-    // seed centroids are the seed vectors themselves: ONE corpus-scan
-    // collect (the same single pass the r19 broadcast(seedArr) build
-    // ran), <= k rows to the driver. The collect is GATED on the
-    // caller's k (r20 fix): an auto-scaled cell count past the cap
-    // must take the join spelling without first pulling k·dims rows
-    // it won't use. An EMPTY seed set (empty corpus) also falls
-    // through — `least()` needs >= 1 candidate; the join path is
-    // empty-correct. Multi-stage trainers that already hold the seed
-    // vectors driver-side (the residual-chain replay, see
-    // `ivfRqTrainMulti`) pass them via `seedVecs` and skip the collect
-    // job entirely — the values are bit-identical by construction
-    // (same integer argmin/residual algebra, spec-pinned).
-    val seedCents: Seq[(Int, Seq[Long])] =
-      seedVecs.getOrElse {
-        if (k > litCap) Nil
-        else vecs
-          .join(broadcast(seeds.select(col("vec_id"), col(codeName))), Seq("vec_id"))
-          .select(col(codeName), col("xa"))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Long](1)))
-          .sortBy(_._1).toSeq
-      }
-    if (seedCents.nonEmpty && seedCents.size <= litCap) {
-      var centsLocal = seedCents
-      var cents = if (iters == 0) perDim(centsLocal) else null: DataFrame
-      (1 to iters).foreach { _ =>
-        // the stage's one eager job: map-only argmin, per-dim explode
-        // AFTER the per-vector reduction, partial-aggregated sum/count
-        // — the exchange carries <= tasks·k·dims rows
-        val updated = assignLit(centsLocal)
-          .select(col(codeName), posexplode(col("xa")).as(Seq("d", "x")))
-          .groupBy(col(codeName), col("d"))
-          .agg(expr("sum(x) div count(1)").as("c"))
-          .collect()
-        val byCode = updated.groupBy(_.getInt(0)).toSeq
-          .map { case (code, rs) =>
-            (code, rs.map(r => (r.getInt(1), r.getLong(2)))
-              .sortBy(_._1).map(_._2).toSeq) }
-          .sortBy(_._1)
-        centsLocal = byCode
-        cents = perDim(byCode)
-      }
-      (assignLit(centsLocal), cents)
-    } else {
-      // auto-scaled centroid counts past the literal cap: the r19
-      // broadcast-join + partial-min-aggregate spelling (bit-identical
-      // results; see litCentCap)
-      val seedArr = vecs
-        .join(broadcast(seeds.select(col("vec_id"), col(codeName))), Seq("vec_id"))
-        .select(col(codeName), col("xa").as("ca"))
-      def assign(cArr: DataFrame): DataFrame =
-        vecs.crossJoin(broadcast(cArr))
-          .select(col("vec_id") +: (passCols.map(col) ++ Seq(
-            col(codeName), sqDistQ("xa", "ca").as("_dist"), col("xa"))): _*)
-          .groupBy(col("vec_id"))
-          .agg(min(struct(
-            col("_dist") +: col(codeName) +: (passCols.map(col) :+ col("xa")): _*)).as("_m"))
-          .select(col("vec_id") +:
-            ((codeName +: passCols) :+ "xa").map(f => col(s"_m.$f").as(f)): _*)
-      var cents =
-        if (iters == 0)
-          seedArr.select(col(codeName), posexplode(col("ca")).as(Seq("d", "c")))
-            .localCheckpoint()
-        else null: DataFrame
-      var cArr = seedArr
-      (1 to iters).foreach { _ =>
-        cents = assign(cArr)
-          .select(col(codeName), posexplode(col("xa")).as(Seq("d", "x")))
-          .groupBy(col(codeName), col("d"))
-          .agg(expr("sum(x) div count(1)").as("c"))
-          .localCheckpoint()
-        cArr = centArrays(cents, codeName)
-      }
-      (assign(cArr), cents)
-    }
-  }
-
-  /** IVF-RQ (FAISS's IVF,RQ shape): a coarse quantizer of `nCells`
-    * centroids partitions the corpus into inverted lists, and L
-    * ADDITIVE residual codebooks (stage widths `ks`) are trained on the
-    * residuals to each vector's coarse centroid. A query probes its
-    * `nProbe` nearest cells and scores ONLY those cells' codes — with
-    * `autoIvfCells` sizing (nlist ~ √n) probed work grows ~√n per
-    * query. Every training runs the certified fixed-point discipline
-    * through the shared `fpStage` (md5-ordered seeds — coarse by
-    * md5(vec_id), stage s by md5(vec_id || 'r'·s); lexicographic argmin
-    * ties), so DuckDB replays build and search bit-exactly
-    * (`q_ivfrq_auto`).
-    *
-    * LUT-form ADC: a COMBINED (code1, …, codeL) distance table is
-    * exact but k1·…·kL rows, so dead beyond ~3 stages, and 2–3
-    * additive stages measurably cap recall ~0.09 on this corpus (r17
-    * lab). Real residual quantizers run 4–16 stages; the standard ADC
-    * for that regime expands the distance instead of materializing
-    * combinations:
-    *
-    *   ‖q_r − Σ_s c_s‖² = ‖q_r‖² − 2·Σ_s ⟨q_r, c_s⟩ + ‖Σ_s c_s‖²
-    *
-    * — a per-(query, probed-cell, stage) dot LUT of Σk_s entries
-    * (NOT Πk_s), plus a per-VECTOR reconstruction norm `rnorm`
-    * precomputed at train time (the "carry residual norms into the
-    * ADC ordering" form: rnorm is exactly the candidate-side term the
-    * combined table folded in implicitly). A candidate's distance is
-    * L broadcast LUT lookups summed + its stored norm — all int64
-    * exact (operands ≤ 2^22, dots ≤ 2^50), so for L = 2 this returns
-    * BIT-IDENTICAL distances to the combined-table form; the DuckDB
-    * unroll mirrors the same expansion. Stage-s codebooks train in the
-    * +2^(20+s) shifted frame (non-negative operands keep the integer
-    * `sum div count` centroid update floor-division-exact in both
-    * engines); seeds md5(vec_id || 'r'·s). Residual magnitudes shrink
-    * stage-over-stage, so deeper frames stay inside int64 bounds. */
-  def ivfRqTopKMulti(embeddings: DataFrame, queryPred: Column, k: Int,
-                     nCells: Int, nProbe: Int, ks: Seq[Int],
-                     iters: Int): DataFrame = {
-    require(iters >= 1, s"ivfRqTopKMulti needs at least one iteration, got $iters")
-    require(nProbe >= 1 && nProbe <= nCells, s"bad nProbe=$nProbe of $nCells cells")
-    require(ks.nonEmpty && ks.forall(_ >= 1), s"bad stage sizes $ks")
-    val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shiftR = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
-    val e = ensureQuantized(embeddings)
-    val (codesLong, rnorm, cc, cadj) =
-      IndexMemo.of[(DataFrame, DataFrame, DataFrame, DataFrame)](
-        "ivfrq_train", e, (nCells, ks, iters))(
-        ivfRqTrainMulti(e, nCells, ks, iters))
-    // --- search ---
-    val ccArr = broadcast(centArraysLocal(cc, "cell_id"))
-    val qa = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"),
-        expr(s"transform(q, x -> x + ${shift}L)").as("xa"))
-      .localCheckpoint() // consumed twice: cell ranking + residuals
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cd").asc, col("cell_id").asc)
-    val probed = qa.crossJoin(ccArr)
-      .select(col("query_id"), col("cell_id"), sqDistQ("xa", "ca").as("cd"))
-      .withColumn("_rn", row_number().over(wProbe))
-      .filter(col("_rn") <= nProbe)
-      .select(col("query_id"), col("cell_id"))
-    // query residual per probed cell (the stored residuals' +2^21
-    // frame), with its exact squared norm — the ‖q_r‖² term
-    val qr = probed.join(qa, Seq("query_id"))
-      .join(ccArr, Seq("cell_id"))
-      .select(col("query_id"), col("cell_id"),
-        expr(s"zip_with(xa, ca, (x, c) -> x - c + ${shiftR}L)").as("ra"))
-      .withColumn("qn", normQ("ra"))
-    // per-(query, cell, stage, code) dot LUT: Σ_s k_s rows per probed
-    // cell — linear in stage count where the combined table was
-    // multiplicative
-    val lut = qr.crossJoin(broadcast(centArraysLocal(cadj, "s", "code")))
-      .select(col("query_id"), col("cell_id"), col("s"), col("code"),
-        col("qn"), dotQ("ra", "ca").as("dot"))
-    // candidate scan: stage rows of probed cells join the broadcast
-    // LUT, one SUM collapses each candidate to its exact distance
-    val scored = codesLong.join(broadcast(lut), Seq("cell_id", "s", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg((min(col("qn")) - lit(2L) * sum(col("dot"))).as("_qd"))
-      .join(rnorm, Seq("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (col("_qd") + col("rnorm")).as("adist"))
-    topKAsc(scored, k, "adist")
-  }
-
-  /** The training block of `ivfRqTopKMulti`: coarse fixed-point
-    * k-means, then ks.length additive stages chained on successive
-    * residuals (stage s in the +2^(20+s) frame, seeds salted
-    * 'r'·s). Returns:
-    *  - codesLong (vec_id, cell_id, s, code) — the index, one row per
-    *    vector per stage;
-    *  - rnorm (vec_id, rnorm) — ‖Σ_s c_s_adj[code_s]‖², the exact
-    *    squared norm of the vector's reconstructed residual in the
-    *    stage-1 frame;
-    *  - cc — coarse centroids (cell_id, d, c per-dim rows);
-    *  - cadj — per-stage codebooks SHIFT-ADJUSTED into the stage-1
-    *    +2^21 frame ((s, code, d, c): stage 1 as trained, stage s ≥ 2
-    *    minus its 2^(20+s) frame shift), the form both the LUT dots
-    *    and rnorm read. */
-  private def ivfRqTrainMulti(e: DataFrame, nCells: Int, ks: Seq[Int],
-                              iters: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val shift = 1048576L   // 2^20
-    val v = e.select(col("vec_id"), col("q"))
-    // LAZY: the first full-scan consumer (the seed-vector collect, or
-    // fpStage's seed collect past the cap) materializes the blocks
-    val va = v.select(col("vec_id"),
-        expr(s"transform(q, x -> x + ${shift}L)").as("xa"))
-      .localCheckpoint(eager = false)
-    // every stage's seeds (coarse "", residual "r"·s) in ONE bounded
-    // top-k pass, checkpointed once — the L+1 per-stage corpus
-    // order-by subtrees this replaces sat on the sequential critical
-    // path of the r18 cold training (VERDICT r18 task 2)
-    val salts = "" +: ks.indices.map(i => "r" * (i + 1))
-    // r20: the seed table is LOCAL (|salts|·maxK id rows) — every
-    // stage's seed broadcast builds from a LocalRelation with no job
-    val allSeeds = localFrame(seedTable(v, salts, math.max(nCells, ks.max)))
-    def seedsFor(salt: String, k: Int, codeName: String): DataFrame =
-      allSeeds.filter(col("salt") === salt && col("code") < k)
-        .withColumnRenamed("code", codeName)
-    def seedIdsFor(salt: String, k: Int): Seq[(Long, Int)] =
-      allSeeds.filter(col("salt") === salt && col("code") < k)
-        .select(col("vec_id"), col("code")).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    // Residual-chain seed REPLAY (r20, second pass): every stage's
-    // seed VECTORS are that stage's residuals at ≤k seed ids — values
-    // the driver can carry through the chain itself, because in the
-    // literal path it already holds each stage's centroids and the
-    // assignment/residual algebra is exact Long arithmetic
-    // (argminLocal/residualLocal == the codegen'd
-    // least(struct(sqdist_i64))/zip_with, spec-pinned). ONE collect
-    // fetches the shifted vectors at the union of all stages' seed
-    // ids; each per-stage seed-collect job is gone. Past the literal
-    // cap (auto-scaled cell counts at cluster corpus sizes) fpStage's
-    // own collect/join spelling engages unchanged.
-    val replay = nCells <= litCentCap && ks.max <= litCentCap
-    val stageIds: Seq[Seq[(Long, Int)]] =
-      if (replay) ks.zipWithIndex.map { case (kS, i) => seedIdsFor("r" * (i + 1), kS) }
-      else Nil
-    var tracked: Map[Long, Seq[Long]] =
-      if (replay) {
-        val coarseIds = seedIdsFor("", nCells).map(_._1)
-        val allIds = (coarseIds ++ stageIds.flatten.map(_._1)).distinct
-        if (allIds.isEmpty) Map.empty
-        else va.filter(col("vec_id").isin(allIds: _*))
-          .select(col("vec_id"), col("xa")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-      } else Map.empty
-    def stageSeedVecs(ids: Seq[(Long, Int)]): Option[Seq[(Int, Seq[Long])]] =
-      if (!replay) None
-      else Some(ids.map { case (id, code) => (code, tracked(id)) }.sortBy(_._1))
-    val coarseVecs =
-      if (replay)
-        Some(seedIdsFor("", nCells).map { case (id, code) => (code, tracked(id)) }
-          .sortBy(_._1))
-      else None
-    val (caL, cc) = fpStage(seedsFor("", nCells, "cell_id"), va, "cell_id",
-      nCells, iters, seedVecs = coarseVecs)
-    if (replay && tracked.nonEmpty) {
-      val cents0 = centsLocalOf(cc, "cell_id")
-      tracked = tracked.map { case (id, xa) =>
-        (id, residualLocal(cents0, xa, shift * 2)) }
-    }
-    // Residual chain: each stage's lazy assignment (carrying cell_id,
-    // the stage's OWN code, xa) rides a LAZY localCheckpoint — the
-    // next stage's update job materializes it (no per-stage eager
-    // checkpoint job), and the code table below reads codes back off
-    // these frames instead of re-running per-stage assignment jobs.
-    var res = caL.join(broadcast(centArraysLocal(cc, "cell_id")), Seq("cell_id"))
-      .select(col("vec_id"), col("cell_id"),
-        expr(s"zip_with(xa, ca, (x, c) -> x - c + ${shift * 2}L)").as("xa"))
-      .localCheckpoint(eager = false)
-    val stages = ks.zipWithIndex.map { case (kS, i) =>
-      val s = i + 1
-      val (aS, cS) = fpStage(seedsFor("r" * s, kS, "code"),
-        res.select(col("vec_id"), col("cell_id"), col("xa")), "code", kS,
-        iters, passCols = Seq("cell_id"),
-        seedVecs = if (replay) stageSeedVecs(stageIds(i)) else None)
-      val codeRows =
-        if (s < ks.length) {
-          val frameShift = shift * (1L << (s + 1)) // next frame: +2^(21+s)
-          if (replay && tracked.nonEmpty) {
-            val centsS = centsLocalOf(cS, "code")
-            tracked = tracked.map { case (id, xa) =>
-              (id, residualLocal(centsS, xa, frameShift)) }
-          }
-          res = aS.join(broadcast(centArraysLocal(cS, "code")), Seq("code"))
-            .select(col("vec_id"), col("cell_id"), col("code"),
-              expr(s"zip_with(xa, ca, (x, c) -> x - c + ${frameShift}L)").as("xa"))
-            .localCheckpoint(eager = false)
-          res.select(col("vec_id"), col("cell_id"), lit(s).as("s"), col("code"))
-        } else
-          aS.select(col("vec_id"), col("cell_id"), lit(s).as("s"), col("code"))
-      (s, codeRows, cS)
-    }
-    // r20: LOCAL (Σ k_s · dims rows) — the search LUT and rnorm
-    // broadcasts of cadj (and its array form) stop running jobs
-    val cadj = localFrame(stages.map { case (s, _, cS) =>
-      val frameShift = if (s == 1) 0L else shift * (1L << s) // 2^(20+s)
-      cS.select(lit(s).as("s"), col("code"), col("d"),
-        (col("c") - frameShift).as("c"))
-    }.reduce(_.unionByName(_)))
-    val codesLong = stages.map(_._2).reduce(_.unionByName(_))
-      .select(col("vec_id"), col("cell_id"), col("s"), col("code"))
-      .localCheckpoint()
-    // rnorm: reconstruct each vector's residual (sum the adjusted
-    // per-dim codebook rows its codes select), then its exact norm
-    val rnorm = codesLong.join(broadcast(cadj), Seq("s", "code"))
-      .groupBy(col("vec_id"), col("d"))
-      .agg(sum(col("c")).as("rc"))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("rc") * col("rc")).as("rnorm"))
-      .localCheckpoint()
-    (codesLong, rnorm, cc, cadj)
-  }
-
-  /** L-stage IVF-RQ + exact re-rank: the probed LUT-ADC pool refined
-    * by exact quantized cosine (rides `ivfRqTopKMulti`'s memoized
-    * training). */
-  def ivfRqTopKMultiRerank(embeddings: DataFrame, queryPred: Column,
-                           k: Int, nCells: Int, nProbe: Int,
-                           ks: Seq[Int], iters: Int, pool: Int): DataFrame = {
-    require(pool >= k, s"rerank pool $pool must be >= k=$k")
-    val e = ensureQuantized(embeddings)
-    exactRerank(e, queryPred,
-      ivfRqTopKMulti(e, queryPred, pool, nCells, nProbe, ks, iters), k)
-  }
-
-  /** IVFADC — the canonical billion-scale serving index (FAISS's
-    * IVFPQ; Jégou/Douze/Schmid, "Product Quantization for Nearest
-    * Neighbor Search", TPAMI 2011 §V): a COARSE quantizer of `nCells`
-    * centroids partitions the corpus into inverted lists, and a PQ
-    * codebook is trained on the RESIDUALS to each vector's coarse
-    * centroid (residuals concentrate near zero, so the same ksub codes
-    * quantize them far better than raw vectors — the reason IVFADC
-    * beats flat PQ at equal bits). A query probes its `nProbe` nearest
-    * cells and ADC-scores ONLY those cells' codes: search cost drops by
-    * ~nCells/nProbe on top of PQ's ~100× compression.
-    *
-    * Both trainings run the certified fixed-point discipline
-    * (+2^20-shifted dims; residuals re-shifted +2^21; integer
-    * `sum div count` centroids; exact int64 squared L2; md5-ordered
-    * seeds — coarse by md5(vec_id), PQ by md5(vec_id || 'p');
-    * lexicographic argmin ties), so DuckDB replays the whole index
-    * build and search bit-exactly (`q_ivfpq_auto`).
-    *
-    * Scale shape: centroids and codebooks stay dictionary-sized,
-    * localCheckpointed and BROADCAST into every assignment join — the
-    * corpus never shuffles for training; the search side scans only
-    * the codes table (vec, cell, m small ints — the compressed index),
-    * joins the broadcast per-(query, probed-cell) ADC table map-side,
-    * and collapses to one row per (query, candidate) before the single
-    * exchange; the per-query top-k window runs over id-sized rows. */
-  def ivfpqTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                nCells: Int, nProbe: Int, m: Int, ksub: Int,
-                iters: Int, candPred: Option[Column] = None,
-                lutBudget: Long = defaultLutEntries): DataFrame = {
-    require(iters >= 1, s"ivfpqTopK needs at least one iteration, got $iters")
-    require(nProbe >= 1 && nProbe <= nCells, s"bad nProbe=$nProbe of $nCells cells")
-    val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shift2 = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
-    val e = ensureQuantized(embeddings)
-    // Memoized per (quantized input plan, nCells, m, ksub, iters) —
-    // the trained IVFADC index (codes + coarse centroids + residual
-    // codebooks) is shared by the topk / rerank siblings; see pqTrain.
-    val (codes, cc, pc, subDim) =
-      IndexMemo.of[(DataFrame, DataFrame, DataFrame, Int)](
-        "ivfpq_train", e, (nCells, m, ksub, iters))(
-        ivfpqTrainCompute(e, nCells, m, ksub, iters))
-    // --- search ---
-    // consumed per chunk (cell ranking + residuals); memoized per
-    // query-set plan so repeat serves over the same query set skip the
-    // materialization job (r19 — query-side, so bounded by |Q|·dims
-    // rows)
-    val qd = IndexMemo("ivfpq_qd", e.filter(queryPred), ()) {
-      e.filter(queryPred)
-        .select(col("vec_id").as("query_id"), posexplode(col("q")).as(Seq("d", "qx")))
-        .select(col("query_id"), col("d"), (col("qx") + shift).as("x"))
-        .localCheckpoint()
-    }
-    // the inverted code index in array form (vec, cell, carr) —
-    // memoized per codes plan like the row form it derives from
-    val codesArr = IndexMemo("ivfpq_codes_arr", codes, ()) {
-      codes.groupBy(col("vec_id"), col("cell_id"))
-        .agg(expr("transform(array_sort(collect_list(struct(s, code))), p -> p.code)")
-          .as("carr"))
-        .localCheckpoint()
-    }
-    // Filtered search: the predicate restricts the CODE INDEX SCAN
-    // via a semi join on the filtered corpus ids BEFORE the ADC join —
-    // the trained index is untouched (candPred is a search-time
-    // argument, not a training one), and the k survivors are the true
-    // ADC top-k among matching rows, never a post-filtered slice.
-    val searchCodes = candPred.fold(codesArr)(p =>
-      codesArr.join(e.filter(p).select(col("vec_id")), Seq("vec_id"), "left_semi"))
-    // LUT broadcast budget (see pqSearchIndex / defaultLutEntries):
-    // here the dense table is PER (query, probed cell) —
-    // |Q|·nProbe·m·ksub entries — so large query sets chunk by a
-    // deterministic id hash with a hard per-chunk cap (see
-    // hashChunkCount) and each chunk re-reads the checkpointed qd +
-    // code index (cheap) while every broadcast stays <= the budget.
-    // Chunks partition the queries, so the union is the exact
-    // unchunked result.
-    val qChunkRows = math.max(1L,
-      lutBudget / (m.toLong * ksub) / math.max(1, nProbe))
-    // id frame built BEFORE the per-dim explode (vec_id is unique, so
-    // no distinct over the exploded rows); sizing memoized per
-    // (ids plan, cap) — zero sizing jobs on a repeat serve
-    val nChunks = memoChunkCount(
-      e.filter(queryPred).select(col("vec_id").as("query_id")),
-      "query_id", qChunkRows)
-    def searchChunk(qdc: DataFrame): DataFrame = {
-      val wProbe = Window.partitionBy(col("query_id"))
-        .orderBy(col("cd").asc, col("cell_id").asc)
-      val probed = qdc.join(broadcast(cc), Seq("d"))
-        .groupBy(col("query_id"), col("cell_id"))
-        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("cd"))
-        .withColumn("_rn", row_number().over(wProbe))
-        .filter(col("_rn") <= nProbe)
-        .select(col("query_id"), col("cell_id"))
-      val qrd = probed.join(qdc, Seq("query_id"))
-        .join(broadcast(cc.withColumnRenamed("c", "_cc")), Seq("cell_id", "d"))
-        .select(col("query_id"), col("cell_id"),
-          expr(s"d div $subDim").cast("int").as("s"),
-          col("d"), (col("x") - col("_cc") + shift2).as("rqx"))
-      val adc = qrd.join(broadcast(pc), Seq("s", "d"))
-        .groupBy(col("query_id"), col("cell_id"), col("s"), col("code"))
-        .agg(sum((col("rqx") - col("c")) * (col("rqx") - col("c"))).as("pd"))
-      // DENSE per-(query, probed-cell) distance table — the LUT-gather
-      // ADC scan (see pqSearchIndex): joins the cell-restricted code
-      // index on cell_id only, one codegen'd gather per (query, cand)
-      // row instead of an m-entry hash aggregate per pair.
-      val lut = adc
-        .groupBy(col("query_id"), col("cell_id"))
-        .agg(expr(s"map_from_entries(collect_list(" +
-          s"struct(s * $ksub + code AS k, pd AS v)))").as("mp"))
-        .select(col("query_id"), col("cell_id"),
-          expr(s"transform(sequence(0, ${m * ksub - 1}), " +
-            "i -> coalesce(element_at(mp, i), CAST(0 AS BIGINT)))").as("lut"))
-      // corrupt-code NULLs drop instead of ranking first (see
-      // pqSearchIndex)
-      topKAsc(searchCodes.join(broadcast(lut), Seq("cell_id"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          graft.plans.AdcGatherI64.adc_gather_i64(col("carr"), col("lut"), ksub)
-            .as("adist"))
-        .filter(col("adist").isNotNull),
-        k, "adist")
-    }
-    if (nChunks <= 1) searchChunk(qd)
-    else (0 until nChunks)
-      .map(i => searchChunk(
-        qd.filter(pmod(xxhash64(col("query_id")), lit(nChunks.toLong)) === i)))
-      .reduce(_.unionByName(_))
-  }
-
-  /** The training block of `ivfpqTopK`: coarse fixed-point k-means,
-    * residuals, PQ codebooks on the residuals, and the final code
-    * index. Returns (codes, coarse centroids, PQ codebooks, subDim),
-    * every frame checkpointed. */
-  private def ivfpqTrainCompute(e: DataFrame, nCells: Int, m: Int, ksub: Int,
-                                iters: Int): (DataFrame, DataFrame, DataFrame, Int) = {
-    val shift = 1048576L   // 2^20 (see kmeansFixedPoint)
-    val shift2 = 2097152L  // 2^21: residuals in [-2^21, 2^21] re-shift non-negative
-    val v = e.select(col("vec_id"), col("q"))
-    val dims = v.select(size(col("q"))).head().getInt(0)
-    require(dims % m == 0, s"$dims dims not divisible into $m subspaces")
-    val subDim = dims / m
-    // full vectors as +2^20-shifted arrays; per-dim rows for
-    // seeds/updates explode off the one materialization. LAZY: the
-    // first full-scan consumer (the seed-vector collect, or the join
-    // spelling's own collect past the cap) materializes the blocks.
-    val va = v.select(col("vec_id"),
-        expr(s"transform(q, x -> x + ${shift}L)").as("xa"))
-      .localCheckpoint(eager = false)
-    // both seed sets (coarse md5(id), PQ md5(id || 'p')) in one
-    // bounded top-k pass — bit-identical picks to the r18
-    // TakeOrdered + window subtrees (see seedTable); LOCAL (r20), so
-    // both seed fetches broadcast a LocalRelation slice with no job
-    val seeds = localFrame(seedTable(v, Seq("", "p"), math.max(nCells, ksub)))
-    // coarse quantizer: full-vector fixed-point k-means. r20: same
-    // literal-centroid (map-only) spelling as fpStage below the
-    // litCentCap — centroids live driver-side between iterations, the
-    // assignment is a projection-only argmin, and the per-iteration
-    // corpus exchange (groupBy(vec_id) carrying xa) is gone. Above
-    // the cap (or on an empty corpus) the r19 broadcast-join spelling
-    // stays; both are bit-identical (see fpStage / litCentCap).
-    // collect gated on nCells (see fpStage): past the cap the join
-    // spelling must engage without first pulling k·dims rows.
-    // r20 second pass (the ivfRqTrainMulti replay): ONE collect
-    // fetches BOTH seed sets' vectors — the PQ codebook seeds (salt
-    // 'p') are residual subvectors the driver replays from these rows
-    // and the final coarse centroids (exact Long algebra, see
-    // argminLocal/residualLocal), so the rs-scan seed collect below
-    // is gone.
-    def seedIdsOf(salt: String, kMax: Int): Seq[(Long, Int)] =
-      seeds.filter(col("salt") === salt && col("code") < kMax)
-        .select(col("vec_id"), col("code")).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val (seedIdsC, seedIdsP) =
-      if (nCells > litCentCap) (Nil, Nil)
-      else (seedIdsOf("", nCells), seedIdsOf("p", ksub))
-    val tracked: Map[Long, Seq[Long]] =
-      if (nCells > litCentCap || (seedIdsC ++ seedIdsP).isEmpty) Map.empty
-      else va.filter(col("vec_id")
-          .isin((seedIdsC ++ seedIdsP).map(_._1).distinct: _*))
-        .select(col("vec_id"), col("xa")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-    val seedCentsC: Seq[(Int, Seq[Long])] =
-      seedIdsC.map { case (id, code) => (code, tracked(id)) }.sortBy(_._1)
-    val (cc, rs) = if (seedCentsC.nonEmpty && nCells <= litCentCap) {
-      def argminC(cents: Seq[(Int, Seq[Long])]): Column = {
-        val cand = cents.map { case (cell, ca) =>
-          struct(
-            graft.plans.SqDistI64.sqdist_i64(col("xa"), typedLit(ca)).as("_dist"),
-            lit(cell).as("cell_id"))
-        }
-        if (cand.size == 1) cand.head else least(cand: _*)
-      }
-      var centsC = seedCentsC
-      (1 to iters).foreach { _ =>
-        centsC = va.withColumn("_m", argminC(centsC))
-          .select(col("_m.cell_id").as("cell_id"),
-            posexplode(col("xa")).as(Seq("d", "x")))
-          .groupBy(col("cell_id"), col("d"))
-          .agg(expr("sum(x) div count(1)").as("c"))
-          .collect()
-          .groupBy(_.getInt(0)).toSeq
-          .map { case (cell, rws) =>
-            (cell, rws.map(r => (r.getInt(1), r.getLong(2)))
-              .sortBy(_._1).map(_._2).toSeq) }
-          .sortBy(_._1)
-      }
-      // per-dim + array forms as LocalRelations (search broadcasts
-      // build with no job); residual checkpoint materializes the ONE
-      // corpus pass: map-only argmin + 0-job broadcast residual join
-      val ccL = {
-        import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-        val rows = centsC.flatMap { case (cell, ca) =>
-          ca.zipWithIndex.map { case (c, d) =>
-            org.apache.spark.sql.Row(cell, d, c) } }
-        va.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-          StructType(Seq(StructField("cell_id", IntegerType, nullable = false),
-            StructField("d", IntegerType, nullable = false),
-            StructField("c", LongType, nullable = false))))
-      }
-      val rsL = va.withColumn("_m", argminC(centsC))
-        .select(col("vec_id"), col("_m.cell_id").as("cell_id"), col("xa"))
-        .join(broadcast(centArraysLocal(ccL, "cell_id")), Seq("cell_id"))
-        .select(col("vec_id"), col("cell_id"),
-          expr(s"zip_with(xa, ca, (x, c) -> x - c + ${shift2}L)").as("ra"))
-        .select(col("vec_id"), col("cell_id"), posexplode(expr(
-          s"transform(sequence(0, ${m - 1}), s -> slice(ra, s * $subDim + 1, $subDim))"))
-          .as(Seq("s", "sa")))
-        .localCheckpoint(eager = false) // first assignP update job materializes
-      (ccL, rsL)
-    } else {
-      // r19 spelling: array-form assignment — n·nCells codegen'd
-      // sqdists; seed centroids ride a nCells-row broadcast join, the
-      // update rides the assignment aggregate (xa through the argmin)
-      val seedArrC = va.join(broadcast(
-          seeds.filter(col("salt") === "" && col("code") < nCells)
-            .select(col("vec_id"), col("code").as("cell_id"))), Seq("vec_id"))
-        .select(col("cell_id"), col("xa").as("ca"))
-      def assignC(cArr: DataFrame): DataFrame =
-        va.crossJoin(broadcast(cArr))
-          .select(col("vec_id"), col("cell_id"),
-            sqDistQ("xa", "ca").as("_dist"), col("xa"))
-          .groupBy(col("vec_id"))
-          .agg(min(struct(col("_dist"), col("cell_id"), col("xa"))).as("_m"))
-          .select(col("vec_id"), col("_m.cell_id").as("cell_id"),
-            col("_m.xa").as("xa"))
-      var ccV: DataFrame = null
-      var ccArr = seedArrC
-      (1 to iters).foreach { _ =>
-        ccV = assignC(ccArr)
-          .select(col("cell_id"), posexplode(col("xa")).as(Seq("d", "x")))
-          .groupBy(col("cell_id"), col("d"))
-          .agg(expr("sum(x) div count(1)").as("c"))
-          .localCheckpoint()
-        ccArr = centArrays(ccV, "cell_id")
-      }
-      // residual SUBVECTOR arrays to the assigned coarse centroid —
-      // the LAZY final coarse assignment (carrying xa) materializes
-      // inside this checkpoint, and the frame keeps cell_id so the
-      // code table below needs no assignment join
-      val rsV = assignC(ccArr)
-        .join(broadcast(ccArr), Seq("cell_id"))
-        .select(col("vec_id"), col("cell_id"),
-          expr(s"zip_with(xa, ca, (x, c) -> x - c + ${shift2}L)").as("ra"))
-        .select(col("vec_id"), col("cell_id"), posexplode(expr(
-          s"transform(sequence(0, ${m - 1}), s -> slice(ra, s * $subDim + 1, $subDim))"))
-          .as(Seq("s", "sa")))
-        .localCheckpoint()
-      (ccV, rsV)
-    }
-    // PQ codebooks on the residuals (jointly across subspaces); same
-    // fused-update shape as pqTrainCompute, cell_id carried through.
-    // r20 (pqTrainCompute's treatment): seed codebooks and the
-    // per-iteration centroid updates land driver-side (ksub·m rows),
-    // so every assignP broadcast builds from a LocalRelation jobless.
-    // r20 second pass: in the literal path the PQ seed SUBVECTORS are
-    // replayed driver-side from the one up-front collect (residual =
-    // xa − cc[argmin] + 2^21, sliced into m subspaces — the exact
-    // cluster algebra), so the rs-scan collect job is gone; past the
-    // cap the collect spelling engages unchanged.
-    val seedArrP =
-      if (tracked.nonEmpty && seedCentsC.nonEmpty && nCells <= litCentCap) {
-        import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
-        val centsC = centsLocalOf(cc, "cell_id")
-        val rows = seedIdsP.flatMap { case (id, code) =>
-          val ra = residualLocal(centsC, tracked(id), shift2)
-          (0 until m).map(sIdx => org.apache.spark.sql.Row(
-            sIdx, code, ra.slice(sIdx * subDim, (sIdx + 1) * subDim)))
-        }
-        v.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          StructType(Seq(
-            StructField("s", IntegerType, nullable = false),
-            StructField("code", IntegerType, nullable = false),
-            StructField("ca", ArrayType(LongType, containsNull = false),
-              nullable = false))))
-      } else localFrame(rs.join(broadcast(
-          seeds.filter(col("salt") === "p" && col("code") < ksub)
-            .select(col("vec_id"), col("code"))), Seq("vec_id"))
-        .select(col("s"), col("code"), col("sa").as("ca")))
-    def assignP(cArr: DataFrame): DataFrame =
-      rs.join(broadcast(cArr), Seq("s"))
-        .select(col("vec_id"), col("s"), col("cell_id"), col("code"),
-          sqDistQ("sa", "ca").as("_dist"), col("sa"))
-        .groupBy(col("vec_id"), col("s"))
-        .agg(min(struct(col("_dist"), col("code"), col("cell_id"), col("sa"))).as("_m"))
-        .select(col("vec_id"), col("s"), col("_m.code").as("code"),
-          col("_m.cell_id").as("cell_id"), col("_m.sa").as("sa"))
-    var pc: DataFrame = null
-    var pcArr = seedArrP
-    (1 to iters).foreach { _ =>
-      pc = localFrame(assignP(pcArr)
-        .select(col("s"), col("code"), posexplode(col("sa")).as(Seq("ds", "rx")))
-        .select(col("s"), col("code"),
-          (col("s") * lit(subDim) + col("ds")).as("d"), col("rx"))
-        .groupBy(col("s"), col("code"), col("d"))
-        .agg(expr("sum(rx) div count(1)").as("c")))
-      pcArr = centArraysLocal(pc, "s", "code")
-    }
-    // the inverted index: (vec, s, code, cell) — all the search scans;
-    // the final PQ assignment (lazy, carrying cell_id) materializes here
-    val codes = assignP(pcArr)
-      .select(col("vec_id"), col("s"), col("code"), col("cell_id"))
-      .localCheckpoint()
-    (codes, cc, pc, subDim)
-  }
 
   /** Shared refine stage: exact quantized cosine over an approximate
     * method's (query_id, neighbor_id) candidate pool. The pool ids are
@@ -2633,7 +1660,7 @@ object Similarity {
     // Failure discipline (r15 advice — was six Duration.Inf awaits on
     // a non-cancelable pool): every training body runs under one Spark
     // job group with interrupt-on-cancel; the FIRST failure cancels the
-    // group (stopping the other five trainings' Spark jobs instead of
+    // group (stopping the other trainings' Spark jobs instead of
     // letting them run to completion), shutdownNow()s the pool, and
     // propagates immediately via a failure promise raced against the
     // combined result. A hung job can no longer hang the query forever:
@@ -2657,8 +1684,7 @@ object Similarity {
         "annRecall concurrent index training", interruptOnCancel = true)
       body
     }
-    val (truth, nTruth, buckets, sq8All, pqHiAll, ivfAutoAll, ivfRqAutoAll,
-         knnAll, knnSearchAll) = try {
+    val (truth, nTruth, buckets, sq8All, knnAll, knnSearchAll) = try {
       val fTruth = training {
         val t = bruteForceTopKMemo(embeddings, queryPred, k)
           .select(col("query_id"), col("neighbor_id"), lit(true).as("is_truth"))
@@ -2667,30 +1693,6 @@ object Similarity {
       }
       val fBuckets = training { lshBucketsMulti(embeddings, bits, tables) }
       val fSq8 = training { sq8TopK(embeddings, queryPred, 5 * k).localCheckpoint() }
-      val fPqHi = training {
-        pqTopK(embeddings, queryPred, 5 * k,
-            m = AnnPolicy.pqHiM, ksub = AnnPolicy.pqHiKsub, iters = 1)
-          .localCheckpoint()
-      }
-      // ivfpq_auto (r15): the corpus-sized IVFADC at q_ivfpq_auto's
-      // served shape — memo-shares its training with the gated query
-      val fIvfAuto = training {
-        val c = autoIvfCells(embeddings.count())
-        ivfpqTopK(embeddings, queryPred, 5 * k, nCells = c,
-            nProbe = autoIvfProbe(c),
-            m = AnnPolicy.ivfpqAutoM, ksub = AnnPolicy.ivfpqAutoKsub, iters = 1)
-          .localCheckpoint()
-      }
-      // ivfrq_auto (r16, re-pointed r17): the probed residual
-      // quantizer at q_ivfrq_auto's served shape (4 stages of 64
-      // codes, LUT-form ADC, √c probing) — memo-shares its training
-      // with the gated query like the other auto indexes
-      val fIvfRqAuto = training {
-        val c = autoIvfCells(embeddings.count())
-        ivfRqTopKMulti(embeddings, queryPred, 5 * k, nCells = c,
-            nProbe = autoIvfProbe(c), ks = AnnPolicy.ivfrqAutoKs, iters = 1)
-          .localCheckpoint()
-      }
       // knn_graph (r16): the NN-descent graph index at q_knn_graph's
       // served shape (k lists, 2 rounds) — already memo-checkpointed
       val fKnn = training { knnGraph(embeddings, k, 2) }
@@ -2703,8 +1705,7 @@ object Similarity {
             hops = autoGraphHops(n), beam = autoGraphBeam(n))
           .localCheckpoint()
       }
-      val all = Seq[Future[Any]](fTruth, fBuckets, fSq8, fPqHi, fIvfAuto,
-        fIvfRqAuto, fKnn, fKnnSearch)
+      val all = Seq[Future[Any]](fTruth, fBuckets, fSq8, fKnn, fKnnSearch)
       val firstFailure = Promise[Seq[Any]]()
       // Complete the race promise BEFORE shutting the pool down —
       // listeners registered on a drained executor would be rejected
@@ -2720,12 +1721,10 @@ object Similarity {
         Future.firstCompletedOf(Seq(Future.sequence(all), firstFailure.future))(
           scala.concurrent.ExecutionContext.parasitic),
         Duration(30, "minutes"))
-      val Seq(tn, b, s, ph, ia, irq, kg, kgs) = res.asInstanceOf[Seq[Any]]
+      val Seq(tn, b, s, kg, kgs) = res.asInstanceOf[Seq[Any]]
       val (t, n) = tn.asInstanceOf[(DataFrame, Long)]
       (t, n, b.asInstanceOf[DataFrame], s.asInstanceOf[DataFrame],
-        ph.asInstanceOf[DataFrame], ia.asInstanceOf[DataFrame],
-        irq.asInstanceOf[DataFrame], kg.asInstanceOf[DataFrame],
-        kgs.asInstanceOf[DataFrame])
+        kg.asInstanceOf[DataFrame], kgs.asInstanceOf[DataFrame])
     } catch { case e: Throwable =>
       spark.sparkContext.cancelJobGroup(jobGroup)
       pool.shutdownNow()
@@ -2734,11 +1733,10 @@ object Similarity {
     val qIds = emb.filter(queryPred).select(col("vec_id"))
     // EVERY method pipeline below takes the RAW `embeddings` frame,
     // not the harness's quantized checkpoint: the trained-index memos
-    // (lsh_buckets_multi, pq_train, ivfpq_train, ivfrq_train,
-    // sq8_codes) key on the `ensureQuantized(input)` PLAN, and only the
-    // raw frame plans `sameResult` with what the gated
-    // q_lsh_topk_multi / q_pq_hi / q_ivfpq_auto / q_ivfrq_auto /
-    // q_sq8_* queries pass — so the
+    // (lsh_buckets_multi, sq8_codes, knn_graph) key on the
+    // `ensureQuantized(input)` PLAN, and only the raw frame plans
+    // `sameResult` with what the gated q_lsh_topk_multi / q_sq8_* /
+    // q_knn_graph* queries pass — so the
     // whole suite trains each index ONCE (this harness runs first
     // alphabetically and the serving queries ride it warm). Feeding
     // `emb` would fork a second, unshared training of every index
@@ -2746,22 +1744,6 @@ object Similarity {
     // serving query ran). The quantize subtree this re-runs inside
     // each method is one map-side projection — noise next to a
     // shared training.
-    // One multi-table bucketing pass serves BOTH LSH methods: table 0
-    // of lshBucketsMulti reads planeSign plane indices 0..bits-1 —
-    // exactly lshBuckets(bits)'s planes — so the single-table method
-    // is a filter, not a second projection pass.
-    val t0 = buckets.filter(col("tbl") === 0).select(col("vec_id"), col("bucket"))
-    // lsh: query bucket plus every Hamming-1 flip (lshTopK's probing).
-    // Probe buckets are pairwise distinct and a candidate has exactly
-    // one table-0 bucket, so pairs need no dedup.
-    val lshPairs = qIds.join(t0, Seq("vec_id"))
-      .select(col("vec_id").as("query_id"),
-        explode(array((-1 +: (0 until bits).toSeq).map {
-          case -1 => col("bucket")
-          case j  => col("bucket").bitwiseXOR(lit(1L << j))
-        }: _*)).as("bucket"))
-      .join(t0.select(col("bucket"), col("vec_id").as("neighbor_id")), Seq("bucket"))
-      .select(col("query_id"), col("neighbor_id"))
     // lsh_multi: share ANY table's bucket (lshTopKMulti's union), so a
     // pair can surface through several tables — dedup is required.
     val multiPairs = qIds.join(buckets, Seq("vec_id"))
@@ -2794,8 +1776,7 @@ object Similarity {
     val ivfPairs = probeCells.join(assigned, Seq("cell_id"))
       .select(col("query_id"), col("neighbor_id"))
     // sq8: scalar-quantized (8-bit affine per-dim) symmetric code-space
-    // top-k — the cheap rung of the compression ladder (one min/max
-    // training pass vs the Lloyd loops of the other quantizers). The
+    // top-k — one min/max training pass, no Lloyd loop. The
     // 5k code-space pool doubles as sq8_rerank's candidate set: the
     // harness's shared true-cosine scoring of the FULL pool IS the
     // exact re-rank, so its recall equals sq8TopKRerank(pool = 5k)'s
@@ -2803,19 +1784,6 @@ object Similarity {
     val sq8Pairs = sq8All.filter(col("rnk") <= k)
       .select(col("query_id"), col("neighbor_id"))
     val sq8RerankPairs = sq8All.select(col("query_id"), col("neighbor_id"))
-    // pq_hi: the HIGH-FIDELITY PQ operating point (m=16, ksub=64,
-    // iters=1 — q_pq_hi's served config, 96 code bits): the ADC top-k
-    // IS the candidate set; raw ADC recall >= 0.5 at the sf0.01 gate
-    // (r15; the full bits/recall curve is in BUILD_NOTES).
-    val pqHiPairs = pqHiAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    // ivfpq_auto: the corpus-sized coarse quantizer (q_ivfpq_auto's
-    // served shape).
-    val ivfAutoPairs = ivfAutoAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    // ivfrq_auto: the probed residual quantizer (q_ivfrq_auto's shape)
-    val ivfRqAutoPairs = ivfRqAutoAll.filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"))
     // knn_graph: the query nodes' rows of the NN-descent graph — the
     // graph-serving answer is the node's own neighbor list
     val knnPairs = knnAll.filter(queryPred)
@@ -2824,14 +1792,10 @@ object Similarity {
     // out-of-corpus serving read (navigability, not list membership)
     val knnSearchPairs = knnSearchAll.filter(col("rnk") <= k)
       .select(col("query_id"), col("neighbor_id"))
-    val cand = lshPairs.withColumn("method", lit("lsh"))
-      .unionByName(multiPairs.withColumn("method", lit("lsh_multi")))
+    val cand = multiPairs.withColumn("method", lit("lsh_multi"))
       .unionByName(ivfPairs.withColumn("method", lit("ivf")))
       .unionByName(sq8Pairs.withColumn("method", lit("sq8")))
       .unionByName(sq8RerankPairs.withColumn("method", lit("sq8_rerank")))
-      .unionByName(pqHiPairs.withColumn("method", lit("pq_hi")))
-      .unionByName(ivfAutoPairs.withColumn("method", lit("ivfpq_auto")))
-      .unionByName(ivfRqAutoPairs.withColumn("method", lit("ivfrq_auto")))
       .unionByName(knnPairs.withColumn("method", lit("knn_graph")))
       .unionByName(knnSearchPairs.withColumn("method", lit("knn_graph_search")))
       .filter(col("query_id") =!= col("neighbor_id"))

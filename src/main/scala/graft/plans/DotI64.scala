@@ -88,7 +88,7 @@ object DotI64 {
   * Σ (aᵢ − bᵢ)² in one primitive long loop.
   *
   * This is the assignment kernel of every fixed-point Lloyd loop
-  * (k-means / PQ / RQ / IVFPQ training — Similarity.scala). Spelled
+  * (the certified k-means trainings — Similarity.scala). Spelled
   * per-dimension (posexplode → broadcast join on d → sum), each
   * assignment pass materializes n·dims·k rows through a hash
   * aggregate; with the vectors kept as arrays the same pass is n·k
@@ -98,16 +98,15 @@ object DotI64 {
   * downstream gated result — are BIT-IDENTICAL to the per-dim
   * spelling, and the DuckDB oracles replay unchanged.
   *
-  * Magnitudes: operands are +2^20-shifted quantized dims (≤ 2^21) or
-  * +2^21-re-shifted residuals (≤ 2^22), so a diff² ≤ 2^44 and a
-  * 64-dim sum ≤ 2^50 — int64-safe. Null semantics: NULL if either
-  * array is NULL (null-intolerant, like DotI64) — and NULL on a
-  * LENGTH MISMATCH: equal-length inputs are the kernel's invariant
+  * Magnitudes: operands are quantized dims, raw or +2^20-shifted, so
+  * a diff ≤ 2^21, a diff² ≤ 2^42 and a 64-dim sum ≤ 2^48 —
+  * int64-safe. Null semantics: NULL if either array is NULL
+  * (null-intolerant, like DotI64) — and NULL on a LENGTH MISMATCH: equal-length inputs are the kernel's invariant
   * (every Lloyd assignment compares same-dim vectors), so a ragged
   * pair means a corrupted/truncated persisted codebook, and
   * under-summing its distance would silently misassign the vector.
-  * NULL matches AdcGatherI64's corrupted-input discipline: the row
-  * drops out of argmin/topk instead of winning with a short sum. */
+  * A NULL drops the row out of argmin/topk instead of letting it win
+  * with a short sum. */
 case class SqDistI64(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -174,92 +173,6 @@ object SqDistI64 {
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "sqdist_i64", exprs => SqDistI64(exprs(0), exprs(1)), "built-in")
-}
-
-/** ADC LUT gather — the FAISS distance-table scan kernel: for a
-  * candidate's code array `codes` (codes[s] ∈ [0, ksub)) and a
-  * query's DENSE distance table `lut` (lut[s·ksub + c] = exact
-  * partial squared distance of the query's subvector s to centroid
-  * c), the asymmetric distance is Σ_s lut[s·ksub + codes[s]] — one
-  * primitive gather loop per (query, candidate) row.
-  *
-  * This replaces the join-then-aggregate ADC spelling
-  * (codes ⋈ adc on (s, code) → n·m·|Q| rows through a hash
-  * aggregate) with |Q|·n rows and NO aggregate: same integer sum,
-  * bit-identical distances, m× fewer rows on the scan side — the
-  * difference between a flat ADC scan that hash-aggregates 655M rows
-  * and one that streams 41M gathers at the 32× scale point.
-  *
-  * NULL if either array is NULL (null-intolerant, like DotI64), or
-  * if any gathered index falls outside the LUT (cannot happen for a
-  * LUT built dense over the training's own ksub — the guard turns a
-  * corrupted code store into a NULL, never an unsafe read). */
-case class AdcGatherI64(codes: Expression, lut: Expression, ksub: Int)
-    extends BinaryExpression {
-  override def left: Expression = codes
-  override def right: Expression = lut
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = (codes.dataType, lut.dataType) match {
-      case (ArrayType(org.apache.spark.sql.types.IntegerType, _),
-            ArrayType(LongType, _)) => ksub > 0
-      case _ => false
-    }
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"adc_gather_i64 requires (ARRAY<INT>, ARRAY<BIGINT>) and ksub > 0, got " +
-        s"${codes.dataType.simpleString}, ${lut.dataType.simpleString}, ksub=$ksub")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "adc_gather_i64"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val c = a.asInstanceOf[ArrayData]
-    val t = b.asInstanceOf[ArrayData]
-    val m = c.numElements()
-    val tn = t.numElements()
-    var acc = 0L
-    var s = 0
-    while (s < m) {
-      val idx = s * ksub + c.getInt(s)
-      if (idx < 0 || idx >= tn) return null
-      acc += t.getLong(idx)
-      s += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val tn = ctx.freshName("tn")
-      val s = ctx.freshName("s")
-      val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $m = $a.numElements();
-         |int $tn = $b.numElements();
-         |long $acc = 0L;
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $idx = $s * $ksub + $a.getInt($s);
-         |  if ($idx < 0 || $idx >= $tn) { ${ev.isNull} = true; break; }
-         |  $acc += $b.getLong($idx);
-         |}
-         |if (!${ev.isNull}) { ${ev.value} = $acc; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(codes = l, lut = r)
-}
-
-object AdcGatherI64 {
-  /** Column form. */
-  def adc_gather_i64(codes: Column, lut: Column, ksub: Int): Column =
-    GraftSqlBridge.column(AdcGatherI64(
-      GraftSqlBridge.expression(codes), GraftSqlBridge.expression(lut), ksub))
 }
 
 /** Session extensions: `SparkSession.builder.withExtensions(new

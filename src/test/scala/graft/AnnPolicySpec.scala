@@ -11,23 +11,19 @@ import graft.functions.AnnPolicy
 class AnnPolicySpec extends AnyFunSuite {
 
   // a representative sf0.1-shaped parameter env
-  private val env = Map("n" -> 12800L, "q" -> 128L, "c" -> 14L,
-    "p2" -> 4L, "h" -> 4L, "bm" -> 42L, "b16" -> 800L)
+  private val env = Map("n" -> 12800L, "q" -> 128L, "h" -> 4L,
+    "bm" -> 42L, "b16" -> 800L)
 
   test("cost trees compute the documented closed forms (hand-recomputed from the config constants)") {
     def c(m: String) = AnnPolicy.costUnits(m, env)
-    val n = env("n"); val q = env("q"); val cc = env("c"); val p2 = env("p2")
+    val n = env("n"); val q = env("q")
     val h = env("h"); val bm = env("bm"); val b16 = env("b16")
     // each expectation re-derives the rung's cost from the RAW config
     // constants in plain Long arithmetic — a drifted tree fails here
-    assert(c("lsh") == q * (AnnPolicy.harnessLshBits + 1) * b16)
     assert(c("lsh_multi") == q * AnnPolicy.harnessLshTables * b16)
     assert(c("ivf") ==
       q * AnnPolicy.harnessIvfCells + q * AnnPolicy.harnessIvfProbe * b16)
-    assert(c("pq_hi") == AnnPolicy.pqHiM * q * n)
     assert(c("sq8") == AnnPolicy.dims.toLong * q * n)
-    assert(c("ivfpq_auto") == q * cc + q * p2 * (n / cc) * AnnPolicy.ivfpqAutoM)
-    assert(c("ivfrq_auto") == q * cc + q * p2 * (n / cc) * AnnPolicy.ivfrqAutoKs.length)
     assert(c("knn_graph") == q * AnnPolicy.kGraph)
     assert(c("knn_graph_search") == q * (h * bm * AnnPolicy.kGraph + bm))
   }
@@ -63,9 +59,9 @@ class AnnPolicySpec extends AnyFunSuite {
       .map { case (m, fs) =>
         m -> math.round(fs.map(_._2).min * 1000)
       }
-    // the five non-quantizer rungs carry scale-invariant floors
+    // the four rungs without per-SF floors carry scale-invariant ones
     // (q_ann_recall's fixed list) — pinned here at the same values
-    val fixed = Map("lsh" -> 350L, "lsh_multi" -> 380L, "ivf" -> 420L,
+    val fixed = Map("lsh_multi" -> 380L, "ivf" -> 420L,
       "sq8" -> 700L, "sq8_rerank" -> 900L)
     AnnPolicy.rungs.foreach { r =>
       val expected = quantMin.get(r.method).orElse(fixed.get(r.method))
@@ -87,9 +83,9 @@ class AnnPolicySpec extends AnyFunSuite {
     AnnPolicy.rungs.foreach { r =>
       assert(floors.contains(s"('${r.method}', ${r.floorMilli})"), r.method)
     }
-    // 10 rungs on the board
-    assert(AnnPolicy.rungs.size == 10)
-    assert(AnnPolicy.rungs.map(_.method).distinct.size == 10)
+    // 6 rungs on the board
+    assert(AnnPolicy.rungs.size == 6)
+    assert(AnnPolicy.rungs.map(_.method).distinct.size == 6)
   }
 
   test("choose: cheapest floor-meeting rung, ties to the higher floor; unsatisfiable floors fail") {
@@ -123,8 +119,26 @@ class AnnPolicySpec extends AnyFunSuite {
       q <- qGrid(n)
       f <- floors
     } yield AnnPolicy.choose(AnnPolicy.env(n, q), f).method).toSet
-    assert(chosen == Set("ivf", "knn_graph", "knn_graph_search", "lsh_multi",
-      "sq8", "sq8_rerank"), s"chosen set drifted: $chosen")
+    // every rung in the table is pickable somewhere: a dominated rung
+    // cannot be added without failing here
+    assert(chosen == AnnPolicy.rungs.map(_.method).toSet,
+      s"chosen set drifted: $chosen")
+  }
+
+  /** The `Sym` names a cost tree reads. */
+  private def syms(c: AnnPolicy.Cost): Set[String] = c match {
+    case AnnPolicy.Cost.Sym(s) => Set(s)
+    case AnnPolicy.Cost.Lit(_) => Set.empty
+    case AnnPolicy.Cost.Add(a, b) => syms(a) ++ syms(b)
+    case AnnPolicy.Cost.Mul(a, b) => syms(a) ++ syms(b)
+    case AnnPolicy.Cost.Div(a, b) => syms(a) ++ syms(b)
+  }
+
+  test("env holds exactly the symbols the rung cost trees read") {
+    val read = AnnPolicy.rungs.flatMap(r => syms(r.cost)).toSet
+    Seq((2L, 1L), (12800L, 128L), (1000000000000L, 1L)).foreach { case (n, q) =>
+      assert(AnnPolicy.env(n, q).keySet == read, s"n=$n q=$q")
+    }
   }
 
   test("every cost is linear in q below 2^53, so q cannot move choose's winner") {

@@ -1473,8 +1473,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("filtered compressed search == full ADC ranking post-filtered to candidates") {
-    // candPred restricts the CODE SCAN with the SAME trained index, so
-    // the filtered top-k must equal re-ranking the unfiltered ADC
+    // candPred restricts the sq8 CODE SCAN with the SAME code table, so
+    // the filtered top-k must equal re-ranking the unfiltered code-space
     // ranking restricted to candidate ids — no candidate may be lost
     // by filtering inside the scan, none may leak in past it.
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -1490,64 +1490,12 @@ class SimilaritySpec extends SparkSpec {
       .flatMap { case (_, rows) =>
         rows.sortBy(t => (t._3, t._2)).take(k).toSeq }
       .toSet
-    val fIvfpq = Similarity.ivfpqTopK(e, pred, 5, 4, 2, 2, 4, 1, Some(cand))
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
-    assert(fIvfpq == postFiltered(
-      Similarity.ivfpqTopK(e, pred, n, 4, 2, 2, 4, 1), 5),
-      "ivfpq filtered search diverges from the post-filtered full ranking")
     val fSq8 = Similarity.sq8TopK(e, pred, 5, Some(cand))
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
     assert(fSq8 == postFiltered(Similarity.sq8TopK(e, pred, n), 5),
       "sq8 filtered search diverges from the post-filtered full ranking")
-    assert(fIvfpq.nonEmpty && fSq8.nonEmpty)
-    assert(fIvfpq.forall(t => candIds.contains(t._2)))
-  }
-
-  test("pqTrain encodes every vector with one code per subspace; duplicates agree") {
-    val e = emb(
-      (0L, Seq(1f, 0f, 0f, 1f), 0),
-      (1L, Seq(1f, 0f, 0f, 1f), 0),   // exact duplicate of 0
-      (2L, Seq(0f, 1f, 1f, 0f), 0),
-      (3L, Seq(0f, 0.9f, 0.9f, 0f), 0))
-    val (codes, cents) = graft.functions.Similarity.pqTrain(e, m = 2, ksub = 2, iters = 1)
-    val byVec = codes.collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.map(r => r.getInt(1) -> r.getInt(2)).toMap).toMap
-    assert(byVec.keySet == Set(0L, 1L, 2L, 3L))
-    assert(byVec.values.forall(_.keySet == Set(0, 1)), "one code per subspace")
-    assert(byVec(0L) == byVec(1L), "identical vectors must encode identically")
-    // centroids cover every (subspace, code, dim) cell that has members
-    val cdims = cents.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    assert(cdims.subsetOf(Set((0, 0), (0, 1), (1, 0), (1, 1))))
-  }
-
-  test("pqTopK ranks the duplicate of the query first with distance 0 at convergence") {
-    // two tight, well-separated groups; ksub=2 codebooks converge onto
-    // them, so ADC distance query->its own group's members is 0
-    val e = emb(
-      (0L, Seq(1f, 0f, 1f, 0f), 0),
-      (1L, Seq(1f, 0f, 1f, 0f), 0),
-      (2L, Seq(0f, 1f, 0f, 1f), 0),
-      (3L, Seq(0f, 1f, 0f, 1f), 0))
-    val out = graft.functions.Similarity
-      .pqTopK(e, col("vec_id") === 0, k = 3, m = 2, ksub = 2, iters = 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.length == 3)
-    val (rnk1, n1, d1) = out.head
-    assert(rnk1 == 1L && n1 == 1L && d1 == 0L,
-      s"query's duplicate must rank first at ADC distance 0: ${out.toSeq}")
-    // distances are non-decreasing in rank
-    assert(out.map(_._3).toSeq == out.map(_._3).sorted.toSeq)
-  }
-
-  test("pqTrain codes are partition-invariant (integer-exact fixpoint)") {
-    val e = emb((0L to 19L).map(i =>
-      (i, Seq(i.toFloat / 20f, 1f - i.toFloat / 20f, (i % 5).toFloat / 5f, 0.5f), 0)): _*)
-    val (c1, _) = graft.functions.Similarity.pqTrain(e, 2, 3, 2)
-    val (c2, _) = graft.functions.Similarity.pqTrain(e.repartition(7), 2, 3, 2)
-    val s1 = c1.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(t => (t._1, t._2))
-    val s2 = c2.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(t => (t._1, t._2))
-    assert(s1.toSeq == s2.toSeq)
+    assert(fSq8.nonEmpty)
+    assert(fSq8.forall(t => candIds.contains(t._2)))
   }
 
   test("bigramLmScore: hand-computed corpus-trained typicality") {
@@ -1580,138 +1528,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out(0L) == ((3L, 0L, 500000000L + 1000000000L + 500000000L)))
     assert(out(1L) == ((3L, 2L, 500000000L)),
       s"reference-unseen bigrams must count as OOV with 0 probability: $out")
-  }
-
-  test("ivfpqTopK ranks the query's duplicate first at ADC distance 0 at convergence") {
-    // two tight groups: coarse cells converge onto them, residuals
-    // collapse to ~0, so a duplicate's ADC distance is 0 and it wins
-    val e = emb(
-      (0L, Seq(1f, 0f, 1f, 0f), 0),
-      (1L, Seq(1f, 0f, 1f, 0f), 0),
-      (2L, Seq(0f, 1f, 0f, 1f), 0),
-      (3L, Seq(0f, 1f, 0f, 1f), 0))
-    val out = graft.functions.Similarity
-      .ivfpqTopK(e, col("vec_id") === 0, k = 3, nCells = 2, nProbe = 2,
-        m = 2, ksub = 2, iters = 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.nonEmpty)
-    val (rnk1, n1, d1) = out.head
-    assert(rnk1 == 1L && n1 == 1L && d1 == 0L,
-      s"query's duplicate must rank first at ADC distance 0: ${out.toSeq}")
-    assert(out.map(_._3).toSeq == out.map(_._3).sorted.toSeq)
-  }
-
-  test("ivfpqTopK is partition-invariant (integer-exact fixpoint end to end)") {
-    val e = emb((0L to 19L).map(i =>
-      (i, Seq(i.toFloat / 20f, 1f - i.toFloat / 20f, (i % 5).toFloat / 5f, 0.5f), 0)): _*)
-    def run(df: org.apache.spark.sql.DataFrame) = graft.functions.Similarity
-      .ivfpqTopK(df, col("vec_id") % 7 === 0, 5, 2, 2, 2, 2, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      .sortBy(t => (t._1, t._2))
-    assert(run(e) == run(e.repartition(7)))
-  }
-
-  test("ivfpqTopK with nProbe = nCells searches every cell (no candidate outside k dropped)") {
-    // probing ALL cells makes the candidate set the whole corpus, so
-    // the result has exactly k rows per query like flat pqTopK
-    val e = emb((0L to 11L).map(i =>
-      (i, Seq((i % 3).toFloat / 3f, 1f - (i % 3).toFloat / 3f,
-        (i % 4).toFloat / 4f, 0.25f), 0)): _*)
-    val out = graft.functions.Similarity
-      .ivfpqTopK(e, col("vec_id") === 0, k = 5, nCells = 3, nProbe = 3,
-        m = 2, ksub = 3, iters = 1)
-      .collect()
-    assert(out.length == 5, s"all cells probed -> full top-k: got ${out.length}")
-  }
-
-  test("ivfRqTopK ranks the query's duplicate first at ADC distance 0 at convergence") {
-    // two tight groups: coarse cells converge onto them, residuals
-    // collapse to ~0, both additive stages encode them identically,
-    // so a duplicate's ADC distance is 0 and it wins (the L = 2 form)
-    val e = emb(
-      (0L, Seq(1f, 0f, 1f, 0f), 0),
-      (1L, Seq(1f, 0f, 1f, 0f), 0),
-      (2L, Seq(0f, 1f, 0f, 1f), 0),
-      (3L, Seq(0f, 1f, 0f, 1f), 0))
-    val out = graft.functions.Similarity
-      .ivfRqTopKMulti(e, col("vec_id") === 0, k = 3, nCells = 2, nProbe = 2,
-        ks = Seq(2, 2), iters = 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.nonEmpty)
-    val (rnk1, n1, d1) = out.head
-    assert(rnk1 == 1L && n1 == 1L && d1 == 0L,
-      s"query's duplicate must rank first at ADC distance 0: ${out.toSeq}")
-    assert(out.map(_._3).toSeq == out.map(_._3).sorted.toSeq)
-  }
-
-  test("ivfRqTopK is partition-invariant (integer-exact fixpoint end to end)") {
-    val e = emb((0L to 19L).map(i =>
-      (i, Seq(i.toFloat / 20f, 1f - i.toFloat / 20f, (i % 5).toFloat / 5f, 0.5f), 0)): _*)
-    def run(df: org.apache.spark.sql.DataFrame) = graft.functions.Similarity
-      .ivfRqTopKMulti(df, col("vec_id") % 7 === 0, 5, nCells = 2, nProbe = 2,
-        ks = Seq(2, 2), iters = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      .sortBy(t => (t._1, t._2))
-    assert(run(e) == run(e.repartition(7)))
-  }
-
-  test("ivfRqTopK with nProbe = nCells: candidate set is the whole corpus") {
-    val e = emb((0L to 11L).map(i =>
-      (i, Seq((i % 3).toFloat / 3f, 1f - (i % 3).toFloat / 3f,
-        (i % 4).toFloat / 4f, 0.25f), 0)): _*)
-    val out = graft.functions.Similarity
-      .ivfRqTopKMulti(e, col("vec_id") === 0, k = 5, nCells = 3, nProbe = 3,
-        ks = Seq(3, 3), iters = 1)
-      .collect()
-    assert(out.length == 5, s"all cells probed -> full top-k: got ${out.length}")
-  }
-
-  test("LUT chunking: chunked ADC search equals the single-broadcast result") {
-    // force chunking on the fixture (budget of one LUT row) for BOTH
-    // the flat pqSearchIndex path and ivfpqTopK's per-(query, cell)
-    // LUT — bit-identical integer distances, so the union of per-chunk
-    // top-ks must equal the unchunked ranking exactly. r17: the budget
-    // rides the lutBudget PARAMETER (the mutable-global seam is gone).
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val pred = col("vec_id") % 50 === 0 // 10 queries -> >1 chunk at tiny budget
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val flat = rows(Similarity.pqTopK(e, pred, 5, m = 2, ksub = 4, iters = 1))
-    val ivf = rows(Similarity.ivfpqTopK(e, pred, 5, nCells = 4, nProbe = 2,
-      m = 2, ksub = 4, iters = 1))
-    val tiny = 2L * 4L // one m*ksub LUT row per broadcast
-    assert(rows(Similarity.pqTopK(e, pred, 5, m = 2, ksub = 4, iters = 1,
-      lutBudget = tiny)) == flat,
-      "chunked flat ADC diverged from the single-broadcast ranking")
-    assert(rows(Similarity.ivfpqTopK(e, pred, 5, nCells = 4, nProbe = 2,
-      m = 2, ksub = 4, iters = 1, lutBudget = tiny)) == ivf,
-      "chunked IVFADC diverged from the single-broadcast ranking")
-  }
-
-  test("LUT chunking enforces the per-chunk budget on common-stride query ids") {
-    // r17 ADVICE: the r16 split by pmod(vec_id, nChunks) collapsed
-    // whenever nChunks shared a factor with the id stride — this
-    // repo's query sets ARE strided (vec_id % 100 === 0), so the
-    // budget the chunking claims to enforce was unbounded. The hash
-    // split + doubling escalation must cap EVERY chunk at the budget
-    // for a strided id set where the modulo split degenerates.
-    val spark2 = spark
-    import spark2.implicits._
-    val cap = 3L
-    // stride 8: ids {0, 8, 16, ...}; pmod(id, nChunks) for nChunks in
-    // {8, 16, ...} would put ALL ids in chunk 0
-    val ids = (0L until 24L).map(_ * 8L).toDF("vec_id")
-    val n = ids.count()
-    val nChunks = Similarity.hashChunkCount(ids, "vec_id", cap, n)
-    assert(nChunks > 1, "24 ids at cap 3 must chunk")
-    val maxLoad = ids
-      .groupBy(org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(col("vec_id")),
-        org.apache.spark.sql.functions.lit(nChunks.toLong)))
-      .count().agg(org.apache.spark.sql.functions.max("count"))
-      .head().getLong(0)
-    assert(maxLoad <= cap,
-      s"chunk budget violated: max $maxLoad ids in one chunk at cap $cap")
   }
 
   test("knnGraph: sorted bounded lists, no self edges, partition-invariant") {
@@ -1756,24 +1572,15 @@ class SimilaritySpec extends SparkSpec {
     // recall spec below is what certifies the descent earns its keep
   }
 
-  test("knnGraph recall beats the IVFPQ rerank point (the graph-index serving claim)") {
+  test("knnGraph node-list recall holds its floor (the graph-index serving claim)") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val pred = col("vec_id") % 100 === 0
     val truth = Similarity.bruteForceTopK(e, pred, 10).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    def recall(pairs: Set[(Long, Long)]): Double =
-      (pairs & truth).size.toDouble / truth.size
     val graph = Similarity.knnGraph(e, 10, 2).filter(pred).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    // an exact re-rank of a 50-pool keeps every true top-10 member of
-    // the pool in its top 10, so the rerank point's recall IS the
-    // ADC pool's recall
-    val ivfpqRr = Similarity.ivfpqTopK(e, pred, 50, 4, 2, 2, 4, 1)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val (gRec, iRec) = (recall(graph), recall(ivfpqRr))
-    info(f"knn_graph=$gRec%.3f ivfpq_rerank=$iRec%.3f")
-    assert(gRec >= iRec,
-      f"graph index must reach the rerank rung: $gRec%.3f < $iRec%.3f")
+    val gRec = (graph & truth).size.toDouble / truth.size
+    info(f"knn_graph=$gRec%.3f")
     // r17 ring seeding: node-list recall re-measured 0.24 (the bounded
     // O(n·2k) init trades list quality for the 100x build exponent
     // 1.16 -> 0.53; the SERVING walk holds 0.92 — see the search pin)
@@ -1823,28 +1630,6 @@ class SimilaritySpec extends SparkSpec {
     info(f"graph-search recall hops0=$r0%.3f hops3=$r3%.3f")
     assert(r3 >= r0, f"walking the graph must not lose recall: $r3%.3f < $r0%.3f")
     assert(r3 > r0, "three hops must strictly improve on the raw entry points here")
-  }
-
-  test("ivfRqTopKRerank recall >= raw ivfRqTopK recall on the corpus (memo-shared training)") {
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val pred = col("vec_id") % 100 === 0
-    val c = Similarity.autoIvfCells(e.count())
-    val truth = Similarity.bruteForceTopK(e, pred, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    def recall(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      (got & truth).size.toDouble / truth.size
-    }
-    val hits0 = graft.functions.IndexMemo.hitsFor("ivfrq_train")
-    val raw = recall(Similarity.ivfRqTopKMulti(e, pred, 10,
-      nCells = c, nProbe = math.min(2, c), ks = Seq(4, 4), iters = 1))
-    val rr = recall(Similarity.ivfRqTopKMultiRerank(e, pred, 10,
-      nCells = c, nProbe = math.min(2, c), ks = Seq(4, 4), iters = 1, pool = 50))
-    info(f"ivfrq sf0.001: raw=$raw%.3f rerank=$rr%.3f")
-    assert(rr >= raw, f"exact rerank must not lose recall: $rr%.3f < $raw%.3f")
-    // the rerank's proposer rides the SAME trained index (memo hit)
-    assert(graft.functions.IndexMemo.hitsFor("ivfrq_train") > hits0,
-      "the rerank must reuse the memoized IVF-RQ training")
   }
 
   test("hardNegatives returns nearest DIFFERENT-label rows only") {
@@ -1998,7 +1783,7 @@ class SimilaritySpec extends SparkSpec {
     assert(out.keySet == graft.functions.AnnPolicy.rungs.map(_.method).toSet)
     // re-ranking a 5k code-space pool can only help: recall is monotone
     assert(out("sq8_rerank")._3 >= out("sq8")._3)
-    val nTruth = out("lsh")._2
+    val nTruth = out("ivf")._2
     assert(nTruth > 0 && out.values.forall(_._2 == nTruth),
       "all methods score against the same ground truth")
     // Per-method floors pinned to the measured values on this corpus
@@ -2012,15 +1797,8 @@ class SimilaritySpec extends SparkSpec {
     // r13: the harness measures the SERVED operating points (the gated
     // queries' params, memo-shared trainings) instead of a richer
     // config nothing serves.
-    // pq_hi (r15): the high-fidelity PQ point (m=16, ksub=64 — 96 code
-    // bits) — the raw-ADC >= 0.5 serving rung; measured 0.500 on this
-    // corpus, pinned at the measured value per this block's discipline.
-    val floors = Map("lsh" -> 0.38, "lsh_multi" -> 0.54, "ivf" -> 0.52,
-      "pq_hi" -> 0.50, "ivfpq_auto" -> 0.48,
-      // ivfrq_auto (r18): re-pointed to 8 additive stages x 16 codes
-      // (AnnPolicy.ivfrqAutoKs) — measured 0.26 on this corpus (0.18
-      // at r17's 4x64, 0.04 at the r16 2-stage 4x4 point)
-      "ivfrq_auto" -> 0.26, "knn_graph" -> 0.24, "knn_graph_search" -> 0.92, "sq8" -> 0.90,
+    val floors = Map("lsh_multi" -> 0.54, "ivf" -> 0.52,
+      "knn_graph" -> 0.24, "knn_graph_search" -> 0.92, "sq8" -> 0.90,
       "sq8_rerank" -> 1.00)
     out.foreach { case (m, (hits, n, rec)) =>
       info(f"$m%-10s recall=$rec%.3f ($hits/$n)")
@@ -2028,9 +1806,6 @@ class SimilaritySpec extends SparkSpec {
       assert(rec >= floors(m) && rec <= 1.0,
         s"$m recall $rec below its pinned floor ${floors(m)} — retrieval regression")
     }
-    // multi-table candidates are a superset of single-table (shared
-    // table-0 hyperplanes) -> recall cannot drop
-    assert(out("lsh_multi")._3 >= out("lsh")._3)
   }
 
   test("annRecall: shared-scoring fold equals recall of the standalone method top-ks") {
@@ -2046,10 +1821,8 @@ class SimilaritySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = ids(Similarity.bruteForceTopK(e, pred, k))
     val slow = Map(
-      "lsh" -> ids(Similarity.lshTopK(e, pred, k, bits)),
       "lsh_multi" -> ids(Similarity.lshTopKMulti(e, pred, k, bits, tables)),
       "ivf" -> ids(Similarity.ivfTopK(e, pred, k, nCells, nProbe)),
-      "pq_hi" -> ids(Similarity.pqTopK(e, pred, k, 16, 64, 1)),
       "sq8" -> ids(Similarity.sq8TopK(e, pred, k)),
       "sq8_rerank" -> ids(Similarity.sq8TopKRerank(e, pred, k, 5 * k)))
     val fast = Similarity.annRecall(e, pred, k, bits, tables, nCells, nProbe)
@@ -2101,24 +1874,6 @@ class SimilaritySpec extends SparkSpec {
       .select("dc", "qc").collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-5))
-  }
-
-  test("pqSearchIndex drops a corrupted code instead of ranking it first") {
-    // carr=[5] with m=1, ksub=2 gathers out of the dense LUT -> NULL
-    // adist; struct-min top-k would rank a NULL FIRST, so the serving
-    // path must drop the candidate
-    val cents = Seq((0, 0, 0, 10L), (0, 0, 1, 10L),
-        (0, 1, 0, 90L), (0, 1, 1, 90L))
-      .toDF("s", "code", "d", "c")
-    val codes = Seq((1L, Seq(0)), (2L, Seq(5)))
-      .toDF("vec_id", "carr")
-      .select(col("vec_id"), col("carr").cast("array<int>").as("carr"))
-    val queries = Seq((100L, Seq(0.00001, 0.00001)))
-      .toDF("vec_id", "embedding")
-    val got = Similarity.pqSearchIndex(queries, codes, cents, k = 2).collect()
-    assert(got.map(_.getLong(2)).toSet == Set(1L),
-      s"corrupt candidate 2 must drop, got ${got.mkString(", ")}")
-    assert(got.head.getLong(1) == 1L) // vec 1 holds rank 1, not a NULL row
   }
 
   test("annServe dispatches the cheapest floor-meeting rung; floors select different winners") {
@@ -2197,15 +1952,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("ivfpq_qd memo keys on the predicate: a second query set gets its own queries") {
-    val e = sf0001
-    def qids(df: DataFrame) = df.select(col("query_id")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    Similarity.ivfpqTopK(e, col("vec_id") % 100 === 0, 10, 4, 2, 2, 4, 1).count()
-    assert(qids(Similarity.ivfpqTopK(e, otherPred, 10, 4, 2, 2, 4, 1)) ==
-      e.filter(otherPred).select(col("vec_id")).collect().map(_.getLong(0)).toSet)
-  }
-
   test("ann_recall memo keys on the predicate: n_truth follows the query set") {
     val e = sf0001
     def nTruth(p: org.apache.spark.sql.Column) =
@@ -2235,99 +1981,29 @@ class SimilaritySpec extends SparkSpec {
     assert(got == want, s"seedTable drifted from the TakeOrdered pick")
   }
 
-  test("fpStage literal-centroid path == broadcast-join path (r20 map-only assignment)") {
-    // the r20 driver-literal spelling (map-only argmin over typedLit
-    // centroid arrays, centroids updated through a driver collect)
-    // must be BIT-identical to the r19 broadcast-join +
-    // partial-min-aggregate spelling it replaces below litCentCap —
-    // same assignments, same per-dim centroid table, for the same
-    // seeds/corpus/iters
-    val shift = 1048576L
-    val v = Similarity.quantized(
-        Tables.embeddings(spark, "/root/testdata/sf0.001"))
-      .select(col("vec_id"), col("q"))
-    val va = v.select(col("vec_id"),
-      expr(s"transform(q, x -> x + ${shift}L)").as("xa"))
-    val seeds = Similarity.seedTable(v, Seq(""), 7)
-      .select(col("vec_id"), col("code"))
-    val (aLit, cLit) = Similarity.fpStage(seeds, va, "code", 7, 2)
-    val (aBc, cBc) = Similarity.fpStage(seeds, va, "code", 7, 2, Nil, litCap = 0)
-    assert(aLit.select(col("vec_id"), col("code"))
-        .collect().map(_.toSeq).toSet ==
-      aBc.select(col("vec_id"), col("code"))
-        .collect().map(_.toSeq).toSet,
-      "literal-path assignments drifted from the broadcast spelling")
-    assert(cLit.select(col("code"), col("d"), col("c"))
-        .collect().map(_.toSeq).toSet ==
-      cBc.select(col("code"), col("d"), col("c"))
-        .collect().map(_.toSeq).toSet,
-      "literal-path centroids drifted from the broadcast spelling")
-  }
-
-  test("residual-chain seed replay == per-stage collect (r20 trainer action cut)") {
-    // The multi-stage trainer (ivfRqTrainMulti) no
-    // longer re-collect each stage's seed vectors from the residual
-    // frame: the driver replays the residual chain for the tracked
-    // seed ids (argminLocal + residualLocal — the exact Long algebra
-    // of least(struct(sqdist_i64)) + zip_with) and feeds fpStage via
-    // `seedVecs`. This pins BOTH halves: (a) the replayed stage-2
-    // seed vectors equal the cluster-collected ones row for row, and
-    // (b) fpStage(seedVecs = Some(collected)) is bit-identical to the
-    // collect spelling it skips.
-    val shift = 1048576L
-    val shift2 = 2097152L
-    val k1 = 5; val k2 = 7
-    val v = Similarity.quantized(
-        Tables.embeddings(spark, "/root/testdata/sf0.001"))
-      .select(col("vec_id"), col("q"))
-    val va = v.select(col("vec_id"),
-      expr(s"transform(q, x -> x + ${shift}L)").as("xa")).localCheckpoint()
-    val seeds = Similarity.seedTable(v, Seq("", "r"), math.max(k1, k2))
-    val seeds1 = seeds.filter(col("salt") === "" && col("code") < k1)
-      .withColumnRenamed("code", "code1")
-    val (a1, c1) = Similarity.fpStage(seeds1, va, "code1", k1, 1)
-    // cluster residuals (the ivfRqTrainMulti spelling)
-    val c1Arr = c1.groupBy(col("code1"))
-      .agg(expr("array_sort(collect_list(struct(d, c)))").as("_dc"))
-      .select(col("code1"), expr("transform(_dc, x -> x.c)").as("ca"))
-    val ra = a1.join(broadcast(c1Arr), Seq("code1"))
-      .select(col("vec_id"), col("code1"),
-        expr(s"zip_with(xa, ca, (x, c) -> x - c + ${shift2}L)").as("xa"))
-    val ids2 = seeds.filter(col("salt") === "r" && col("code") < k2)
-      .select(col("vec_id"), col("code")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val want = ra.join(broadcast(
-        seeds.filter(col("salt") === "r" && col("code") < k2)
-          .select(col("vec_id"), col("code"))), Seq("vec_id"))
-      .select(col("code"), col("xa")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toList)).sortBy(_._1).toSeq
-    // driver replay
-    val tracked = va.filter(col("vec_id").isin(ids2.map(_._1): _*))
-      .select(col("vec_id"), col("xa")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-    val c1Local = Similarity.centsLocalOf(c1, "code1")
-    val got = ids2.map { case (id, code) =>
-      (code, Similarity.residualLocal(c1Local, tracked(id), shift2).toList)
-    }.sortBy(_._1)
-    assert(got == want, "driver-replayed stage-2 seed vectors drifted " +
-      "from the cluster-collected residuals")
-    // (b) seedVecs plumbing: bit-identical stage outputs
-    val seeds2 = seeds.filter(col("salt") === "r" && col("code") < k2)
-      .withColumnRenamed("code", "code2")
-    val raCk = ra.select(col("vec_id"), col("xa")).localCheckpoint()
-    val (aC, cC) = Similarity.fpStage(seeds2, raCk, "code2", k2, 1)
-    val (aR, cR) = Similarity.fpStage(seeds2, raCk, "code2", k2, 1,
-      seedVecs = Some(got.map { case (c, xs) => (c, xs: Seq[Long]) }))
-    assert(aR.select(col("vec_id"), col("code2"))
-        .collect().map(_.toSeq).toSet ==
-      aC.select(col("vec_id"), col("code2"))
-        .collect().map(_.toSeq).toSet,
-      "seedVecs-path assignments drifted from the collect spelling")
-    assert(cR.select(col("code2"), col("d"), col("c"))
-        .collect().map(_.toSeq).toSet ==
-      cC.select(col("code2"), col("d"), col("c"))
-        .collect().map(_.toSeq).toSet,
-      "seedVecs-path centroids drifted from the collect spelling")
+  test("kmeansFixedPointAssign literal-centroid path == broadcast-join path") {
+    // litCentCap is a pure plan choice: the map-only argmin over literal
+    // centroids and the broadcast-join + partial-min aggregate must give
+    // identical (vec_id, cell_id). litCap = 0 forces the join spelling,
+    // which no board query takes (k <= 32 at sf0.1). The cap is in the
+    // memo key, so each side trains on its own.
+    def assign(e: DataFrame, litCap: Int) =
+      Similarity.kmeansFixedPointAssign(e, 8, 2, litCap)
+    def rows(df: DataFrame) =
+      (df.schema.map(f => f.name -> f.dataType), df.collect().toSet)
+    Seq("sf0.001", "sf0.01").foreach { sf =>
+      val e = Tables.embeddings(spark, s"/root/testdata/$sf")
+      val (literal, joined) = (assign(e, Similarity.litCentCap), assign(e, 0))
+      assert(literal ne joined, s"$sf: the two spellings shared a memo entry")
+      val (l, j) = (rows(literal), rows(joined))
+      assert(l._2.size == e.count(), s"$sf: every vector gets a cell")
+      assert(l._1 == j._1, s"$sf: the two spellings' schemas differ")
+      val differ = (l._2 diff j._2) ++ (j._2 diff l._2)
+      assert(differ.isEmpty, s"$sf: ${differ.size} rows differ between the spellings")
+    }
+    val empty = sf0001.limit(0)
+    assert(rows(assign(empty, Similarity.litCentCap)) == rows(assign(empty, 0)))
+    assert(assign(empty, 0).count() == 0)
   }
 
   test("annPolicyEnv memoizes per (corpus plan, predicate): second call recomputes nothing") {

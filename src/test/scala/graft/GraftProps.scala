@@ -583,7 +583,7 @@ object GraftProps extends Properties("graft") {
     // equal-length inputs are the Lloyd invariant; a length mismatch
     // means a corrupted/truncated persisted codebook, and a silently
     // under-summed distance would misassign the vector — the kernel
-    // NULLs instead (AdcGatherI64's corrupted-input discipline)
+    // NULLs instead
     val genRagged = for {
       n <- Gen.choose(1, 8)
       m <- Gen.choose(1, 8).suchThat(_ != n)
@@ -594,40 +594,6 @@ object GraftProps extends Properties("graft") {
       val r = Seq((a, b)).toDF("a", "b").select(
         graft.plans.SqDistI64.sqdist_i64(col("a"), col("b"))).head()
       Prop(r.isNullAt(0)) :| s"ragged pair must sqdist to NULL, got ${r.get(0)}"
-    }
-  }
-
-  property("adc_gather_i64 equals the join-and-sum ADC it replaced") = {
-    // random codes + a dense LUT: the gather must equal the sum of the
-    // looked-up entries (the old codes-join-adc aggregate)
-    val genCase = for {
-      m <- Gen.choose(1, 6)
-      ksub <- Gen.choose(1, 8)
-      codes <- Gen.listOfN(m, Gen.choose(0, ksub - 1))
-      lut <- Gen.listOfN(m * ksub, Gen.choose(0L, 1L << 40))
-    } yield (ksub, codes, lut)
-    forAll(genCase) { case (ksub, codes, lut) =>
-      val df = Seq((codes, lut)).toDF("codes", "lut")
-      val native = df.select(graft.plans.AdcGatherI64.adc_gather_i64(
-        col("codes"), col("lut"), ksub)).head().getLong(0)
-      val expected = codes.zipWithIndex.map { case (c, s) => lut(s * ksub + c) }.sum
-      Prop(native == expected) :| s"gather mismatch: $native != $expected"
-    }
-  }
-
-  property("adc_gather_i64 yields NULL, never garbage, on out-of-range codes") = {
-    val genBad = for {
-      ksub <- Gen.choose(1, 4)
-      m <- Gen.choose(1, 4)
-      codes <- Gen.listOfN(m, Gen.choose(0, ksub - 1))
-      pos <- Gen.choose(0, m - 1)
-      lut <- Gen.listOfN(m * ksub, Gen.choose(0L, 100L))
-    } yield (ksub, codes.updated(pos, ksub * m + 5), lut) // index past the LUT
-    forAll(genBad) { case (ksub, codes, lut) =>
-      val r = Seq((codes, lut)).toDF("codes", "lut")
-        .select(graft.plans.AdcGatherI64.adc_gather_i64(
-          col("codes"), col("lut"), ksub)).head()
-      Prop(r.isNullAt(0)) :| s"corrupt code must gather to NULL, got ${r.get(0)}"
     }
   }
 }

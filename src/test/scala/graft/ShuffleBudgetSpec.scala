@@ -157,9 +157,6 @@ class ShuffleBudgetSpec extends SparkSpec {
                                       // sum folds into the derivation
                                       // agg; both IN memberships and
                                       // the dims broadcast
-    "q_ann_filtered_ivfpq" -> 4,      // training checkpoints eagerly;
-                                      // probe/ADC aggs + the filtered
-                                      // code-scan semi join + top-k
     "q_ann_filtered_sq8" -> 1,        // code scan semi-filtered map-
                                       // side; one bounded top-k agg
     "q_table_checksum" -> 1,          // map-side lane partials, one scalar
@@ -227,13 +224,6 @@ class ShuffleBudgetSpec extends SparkSpec {
     "q_ngram_novelty" -> 2,           // distinct (doc, digest) rows are
                                       // checkpointed; first-occurrence
                                       // agg + per-doc ownership agg
-    "q_pq_hi" -> 3,                   // ADC table agg + per-(query,
-                                      // cand) code-sum agg + top-k
-                                      // window; training shuffles live
-                                      // in checkpointed jobs
-    "q_ivfpq_auto" -> 4,              // probe window + ADC agg + per-(query,cand)
-                                      // agg + top-k window; the code index scans
-                                      // map-side against the broadcast ADC table
     "q_ivf_sq8_auto" -> 4,            // probe window + top-k agg; the
                                       // code scan reads the memoized
                                       // (codes x cells) checkpoint

@@ -10,11 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * name filter fails loudly instead of selecting nothing. */
 class SparkEntrySpec extends AnyFunSuite {
 
-  test("the board holds 228 uniquely named queries, each with an oracle") {
+  test("the board holds 223 uniquely named queries, each with an oracle") {
     val names = SparkEntry.board.map(_.name)
     val twice = names.diff(names.distinct)
     assert(twice.isEmpty, s"declared twice: $twice")
-    assert(names.size == 228)
+    assert(names.size == 223)
     val noSql = SparkEntry.board.filter(_.oracleSql.trim.isEmpty).map(_.name)
     assert(noSql.isEmpty, s"empty oracle SQL: $noSql")
   }
