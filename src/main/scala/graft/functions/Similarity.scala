@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
@@ -88,7 +90,9 @@ object Similarity {
   /** Pass-through when the caller already quantized (and typically
     * checkpointed) the embeddings — lets annRecall feed ONE quantized
     * materialization to brute force + all three approximate methods
-    * instead of each re-running the quantize+norm subtree. */
+    * instead of each re-running the quantize+norm subtree. The serve
+    * rungs call it only on a `localCorpus` miss and on their Spark-plan
+    * path: below the cap a warm call never builds `quantized(e)`. */
   private def ensureQuantized(embeddings: DataFrame): DataFrame =
     if (embeddings.columns.contains("q")) embeddings else quantized(embeddings)
 
@@ -1024,16 +1028,22 @@ object Similarity {
     }
   }
 
-  /** The corpus `e` (already quantized) as a [[LocalCorpus]], or None
-    * when it is not below `cap` vectors × dims — then the Spark plans
-    * serve it. Built once per (session, corpus plan, cap) by ONE
-    * bounded collect of at most `cap / AnnPolicy.dims + 1` rows, so the
-    * driver never holds much more than the cap. A corpus the kernels
-    * could not replay exactly (a non-BIGINT, null or repeated `vec_id`,
-    * a null vector or element) is served by the Spark plans too. */
-  private[graft] def localCorpus(e: DataFrame, cap: Long = localServeCap): Option[LocalCorpus] =
-    IndexMemo.of[Option[LocalCorpus]]("local_corpus", e, cap) {
-      import org.apache.spark.sql.types.LongType
+  /** The corpus `embeddings` (raw or already quantized) as a
+    * [[LocalCorpus]], or None when it is not below `cap` vectors × dims
+    * — then the Spark plans serve it. Memoized on the plan of the frame
+    * the caller passed, so a warm lookup is one `sameResult` scan of the
+    * memo and derives nothing: every serve entry point passes its
+    * caller's frame on unchanged, so one corpus has one entry per
+    * (session, caller's frame plan, cap). A miss quantizes the frame
+    * (`ensureQuantized`) and runs ONE bounded collect of at most
+    * `cap / AnnPolicy.dims + 1` rows, so the driver never holds much
+    * more than the cap. A corpus the kernels could not replay exactly
+    * (a non-BIGINT, null or repeated `vec_id`, a null vector or element)
+    * is served by the Spark plans too. */
+  private[graft] def localCorpus(embeddings: DataFrame, cap: Long = localServeCap): Option[LocalCorpus] =
+    IndexMemo.of[Option[LocalCorpus]]("local_corpus", embeddings, cap) {
+      import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      val e = ensureQuantized(embeddings)
       val schema = e.schema
       val rowCap = (math.max(0L, cap) / AnnPolicy.dims).min(Int.MaxValue - 1L).toInt
       val (iId, iQ, iN) = (schema.fieldIndex("vec_id"), schema.fieldIndex("q"), schema.fieldIndex("nq"))
@@ -1044,8 +1054,12 @@ object Similarity {
         rows.forall(r => !r.isNullAt(iId) && !r.isNullAt(iQ) && !r.getSeq[Any](iQ).contains(null)) &&
         ids.distinct.length == ids.length && q.map(_.length.toLong).sum < cap
       if (!fits) None
-      else Some(new LocalCorpus(rowsFrame(e.sparkSession, rows.toSeq, schema.fields.toSeq),
-        ids, q, rows.map(_.getLong(iN))))
+      else {
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+        Some(new LocalCorpus(
+          GraftSqlBridge.localFrame(e.sparkSession, schema, rows.map(toCatalyst(_).asInstanceOf[InternalRow]).toSeq),
+          ids, q, rows.map(_.getLong(iN))))
+      }
     }
 
   /** `DotI64` on the driver: the plain (wrapping) Long sum over the
@@ -1084,15 +1098,14 @@ object Similarity {
       StructField("rnk", LongType, nullable = false), StructField("neighbor_id", LongType, idNullable))
   }
 
-  /** Driver rows as a LocalRelation frame: its collect runs no Spark job. */
-  private def rowsFrame(spark: SparkSession, rows: Seq[Row], fields: Seq[StructField]): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
-
   /** A driver kernel's (query_id, rnk, neighbor_id, score) rows over
-    * `lc`, with the schema of the rung's Spark plan. */
+    * `lc`, with the schema of the rung's Spark plan, as a LocalRelation
+    * of InternalRows: the kernels' values are longs and doubles, already
+    * Catalyst's, so nothing is converted. */
   private def localAnswer(lc: LocalCorpus, rows: Seq[Row],
                           score: String, scoreType: DataType): DataFrame =
-    rowsFrame(lc.frame.sparkSession, rows, rankFields(lc) :+ StructField(score, scoreType))
+    GraftSqlBridge.localFrame(lc.frame.sparkSession,
+      StructType(rankFields(lc) :+ StructField(score, scoreType)), rows.map(r => InternalRow.fromSeq(r.toSeq)))
 
   /** Scalar quantization (SQ8 — FAISS's ScalarQuantizer QT_8bit shape):
     * per-dimension affine 8-bit codes, `c = (x - mn_d) * 255 div
@@ -1109,12 +1122,13 @@ object Similarity {
     * norm. Memoized per corpus plan like the other trained indexes;
     * the bounds (dims-sized — metadata) collect to the driver and ride
     * the code construction as literals, so encoding is ONE map-side
-    * pass over the vector scan: no shuffle at any corpus size. Below
-    * `cap` the codes come from the driver-resident corpus
-    * (`LocalCorpus.sq8`) as a LocalRelation: no job at all. */
-  def sq8CodeTable(embeddings: DataFrame, cap: Long = localServeCap): DataFrame = {
-    val e = ensureQuantized(embeddings)
-    IndexMemo.of[DataFrame]("sq8_codes", e, cap)(localCorpus(e, cap).fold {
+    * pass over the vector scan: no shuffle at any corpus size. Keyed,
+    * like `localCorpus`, on the caller's frame. Below `cap` the codes
+    * come from the driver-resident corpus (`LocalCorpus.sq8`) as a
+    * LocalRelation of InternalRows: no job at all. */
+  def sq8CodeTable(embeddings: DataFrame, cap: Long = localServeCap): DataFrame =
+    IndexMemo.of[DataFrame]("sq8_codes", embeddings, cap)(localCorpus(embeddings, cap).fold {
+      val e = ensureQuantized(embeddings)
       val bounds = e.select(posexplode(col("q")).as(Seq("d", "x")))
         .groupBy(col("d")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
         .orderBy(col("d")).collect()
@@ -1132,11 +1146,11 @@ object Similarity {
         .localCheckpoint()
     } { lc =>
       val (c, ncc) = lc.sq8
-      rowsFrame(e.sparkSession, lc.ids.indices.map(i => Row(lc.ids(i), c(i).toSeq, ncc(i))),
-        Seq(StructField("vec_id", LongType),
-          StructField("c", org.apache.spark.sql.types.ArrayType(LongType)), StructField("ncc", LongType)))
+      GraftSqlBridge.localFrame(embeddings.sparkSession,
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("c", org.apache.spark.sql.types.ArrayType(LongType)), StructField("ncc", LongType))),
+        lc.ids.indices.map(i => InternalRow(lc.ids(i), new GenericArrayData(c(i)), ncc(i))))
     })
-  }
 
   /** SQ8 top-k by symmetric code-space squared distance: both sides
     * use their 8-bit codes, and `|qc - cc|² = ncc_q + ncc_c - 2·qc·cc`
@@ -1156,17 +1170,16 @@ object Similarity {
     * and tie-breaks: no Spark job, a LocalRelation answer. */
   def sq8TopK(embeddings: DataFrame, queryPred: Column, k: Int,
               candPred: Option[Column] = None,
-              cap: Long = localServeCap): DataFrame = {
-    val e = ensureQuantized(embeddings)
-    localCorpus(e, cap).fold(sq8TopKPlan(e, queryPred, k, candPred, cap)) { lc =>
+              cap: Long = localServeCap): DataFrame =
+    localCorpus(embeddings, cap).fold(sq8TopKPlan(embeddings, queryPred, k, candPred, cap)) { lc =>
       localAnswer(lc, sq8Local(lc, lc.matching(queryPred), k, candPred.map(lc.matching)),
         "adist", LongType)
     }
-  }
 
-  private def sq8TopKPlan(e: DataFrame, queryPred: Column, k: Int,
+  private def sq8TopKPlan(embeddings: DataFrame, queryPred: Column, k: Int,
                           candPred: Option[Column], cap: Long): DataFrame = {
-    val codes = sq8CodeTable(e, cap)
+    val e = ensureQuantized(embeddings)
+    val codes = sq8CodeTable(embeddings, cap)
     val qIds = e.filter(queryPred).select(col("vec_id"))
     val q = codes.join(broadcast(qIds), Seq("vec_id"), "left_semi")
       .select(col("vec_id").as("query_id"), col("c").as("qc"), col("ncc").as("qn"))
@@ -1212,10 +1225,10 @@ object Similarity {
   def sq8TopKRerank(embeddings: DataFrame, queryPred: Column, k: Int,
                     pool: Int, cap: Long = localServeCap): DataFrame = {
     require(pool >= k, s"rerank pool $pool must be >= k=$k")
-    val e = ensureQuantized(embeddings)
-    localCorpus(e, cap).flatMap(lc =>
+    localCorpus(embeddings, cap).flatMap(lc =>
       sq8RerankLocal(lc, lc.matching(queryPred), k, pool).map(localAnswer(lc, _, "cosine", DoubleType)))
-      .getOrElse(exactRerank(e, queryPred, sq8TopK(e, queryPred, pool, cap = cap), k))
+      .getOrElse(exactRerank(ensureQuantized(embeddings), queryPred,
+        sq8TopK(embeddings, queryPred, pool, cap = cap), k))
   }
 
   /** `sq8TopKRerank` over the driver-resident corpus: each query's
@@ -1265,7 +1278,7 @@ object Similarity {
           .groupBy(col("cell_id"), col("d"))
           .agg(expr("sum(x) div count(1)").as("c")),
         "cell_id")
-      (sq8CodeTable(e).join(assign, Seq("vec_id")).localCheckpoint(), pc)
+      (sq8CodeTable(embeddings).join(assign, Seq("vec_id")).localCheckpoint(), pc)
     }
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("cd").asc, col("cell_id").asc)
@@ -1373,8 +1386,8 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, queryPred: Column, k: Int,
               nCells: Int, nProbe: Int, trainIters: Int = 0,
               cap: Long = localServeCap): DataFrame = {
-    val e = ensureQuantized(embeddings)
-    val centroids =
+    lazy val e = ensureQuantized(embeddings)
+    lazy val centroids =
       if (trainIters == 0)
         e.orderBy(col("vec_id").asc).limit(nCells)
           .select(col("vec_id").as("cell_id"), col("q").as("cv"), col("nq").as("cn"))
@@ -1384,7 +1397,7 @@ object Similarity {
           .withColumn("cn", expr(
             "aggregate(cv, CAST(0 AS BIGINT), (acc, v) -> acc + v * v)"))
           .select(col("cell_id"), col("cv"), col("cn"))
-    localCorpus(e, cap).flatMap { lc =>
+    localCorpus(embeddings, cap).flatMap { lc =>
       val cents =
         if (trainIters == 0) lc.firstById(nCells)
         else centroids.collect().map(r =>
@@ -1555,7 +1568,7 @@ object Similarity {
     * memo entry (the predicate's evaluation is the whole cost). */
   def annPolicyEnv(embeddings: DataFrame, queryPred: Column,
                    cap: Long = localServeCap): Map[String, Long] =
-    localCorpus(ensureQuantized(embeddings), cap).fold(annPolicyEnvPlan(embeddings, queryPred, cap))(
+    localCorpus(embeddings, cap).fold(annPolicyEnvPlan(embeddings, queryPred, cap))(
       lc => AnnPolicy.env(lc.ids.length, lc.matching(queryPred).length))
 
   /** `annPolicyEnv` at or above `cap`: two count() jobs, memoized per
@@ -1577,12 +1590,13 @@ object Similarity {
     * a schema break.
     *
     * `cap` is the driver-resident corpus cap (`localServeCap`). Below
-    * it a call looks the corpus up once, evaluates `queryPred` once
-    * (`LocalCorpus.matching`), and hands the matched positions to both
-    * the policy's counts and the chosen rung's driver kernel
+    * it a call looks the corpus up once, on the plan of the frame it was
+    * given (`localCorpus`: nothing is re-derived), evaluates `queryPred`
+    * once (`LocalCorpus.matching`), and hands the matched positions to
+    * both the policy's counts and the chosen rung's driver kernel
     * (`AnnRung.local`: sq8, sq8_rerank, ivf), whose rows are the answer
-    * as one LocalRelation: no Spark job, and the caller's collect is
-    * the call's only executed query. A rung with no driver kernel, or a
+    * as one LocalRelation of InternalRows: no Spark job, and the
+    * caller's collect is the call's only executed query. A rung with no driver kernel, or a
     * kernel that declines (a zero norm), runs its Spark plan. At or
     * above the cap the env is `annPolicyEnv`'s memoized counts and the
     * rung's Spark plan answers. */
@@ -1594,7 +1608,7 @@ object Similarity {
           lit(chosen.cost.eval(env)).as("cost_units"),
           lit(chosen.floorMilli).as("floor_milli"),
           col("query_id"), col("rnk"), col("neighbor_id"))
-    localCorpus(ensureQuantized(embeddings), cap).fold {
+    localCorpus(embeddings, cap).fold {
       val env = annPolicyEnvPlan(embeddings, queryPred, cap)
       served(AnnPolicy.choose(env, recallFloorMilli), env)
     } { lc =>
@@ -1602,12 +1616,14 @@ object Similarity {
       val env = AnnPolicy.env(lc.ids.length, hits.length)
       val chosen = AnnPolicy.choose(env, recallFloorMilli)
       // the rung's (method, cost_units, floor_milli) literals, then the top-k
-      val head = Seq(chosen.method, chosen.cost.eval(env), chosen.floorMilli)
-      val fields = Seq(StructField("method", StringType, nullable = false),
+      val method = org.apache.spark.unsafe.types.UTF8String.fromString(chosen.method)
+      val cost = chosen.cost.eval(env)
+      val schema = StructType(Seq(StructField("method", StringType, nullable = false),
         StructField("cost_units", LongType, nullable = false),
-        StructField("floor_milli", LongType, nullable = false)) ++ rankFields(lc)
+        StructField("floor_milli", LongType, nullable = false)) ++ rankFields(lc))
       chosen.local.flatMap(_(lc, hits, k)).fold(served(chosen, env))(rows =>
-        rowsFrame(lc.frame.sparkSession, rows.map(r => Row.fromSeq(head ++ r.toSeq.take(3))), fields))
+        GraftSqlBridge.localFrame(lc.frame.sparkSession, schema,
+          rows.map(r => InternalRow(method, cost, chosen.floorMilli, r(0), r(1), r(2)))))
     }
   }
 
@@ -1733,9 +1749,9 @@ object Similarity {
     val qIds = emb.filter(queryPred).select(col("vec_id"))
     // EVERY method pipeline below takes the RAW `embeddings` frame,
     // not the harness's quantized checkpoint: the trained-index memos
-    // (lsh_buckets_multi, sq8_codes, knn_graph) key on the
-    // `ensureQuantized(input)` PLAN, and only the raw frame plans
-    // `sameResult` with what the gated q_lsh_topk_multi / q_sq8_* /
+    // key on the input's plan (sq8_codes, local_corpus) or on its
+    // `ensureQuantized(input)` PLAN (lsh_buckets_multi, knn_graph), and
+    // only the raw frame plans `sameResult` with what the gated q_lsh_topk_multi / q_sq8_* /
     // q_knn_graph* queries pass — so the
     // whole suite trains each index ONCE (this harness runs first
     // alphabetically and the serving queries ride it warm). Feeding

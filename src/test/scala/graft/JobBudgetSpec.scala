@@ -77,6 +77,28 @@ class JobBudgetSpec extends SparkSpec {
     assert(rounds == Seq.fill(3)((1, 0, 0, 0)), s"per-round job counts: $rounds")
   }
 
+  test("above the cap on sf0.001: the jobs of a cold and then a warm serve call") {
+    // cap 0 forces the Spark plans, the path a corpus too large for the
+    // driver takes; each serve function runs in its own fresh session
+    val cold = col("vec_id") % 100 === 0
+    val warm = col("vec_id").isin((1L to 20L).map(_ * 13): _*)
+    type Serve = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column) => Unit
+    val serves = Seq[(String, Serve)](
+      "sq8TopK" -> ((e, p) => Similarity.sq8TopK(e, p, 10, cap = 0L).collect()),
+      "sq8TopKRerank" -> ((e, p) => Similarity.sq8TopKRerank(e, p, 10, 50, 0L).collect()),
+      "ivfTopK(trainIters 0)" -> ((e, p) => Similarity.ivfTopK(e, p, 10, 16, 4, 0, 0L).collect()),
+      "annServe(400)" -> ((e, p) => Similarity.annServe(e, p, 10, 400L, 0L).collect()),
+      "annServe(700)" -> ((e, p) => Similarity.annServe(e, p, 10, 700L, 0L).collect()),
+      "annServe(900)" -> ((e, p) => Similarity.annServe(e, p, 10, 900L, 0L).collect()))
+    val got = serves.map { case (name, serve) =>
+      val e = Tables.embeddings(spark.newSession(), sf)
+      name -> (jobs(serve(e, cold)), jobs(serve(e, warm)))
+    }
+    assert(got == Seq("sq8TopK" -> (10, 4), "sq8TopKRerank" -> (18, 12), "ivfTopK(trainIters 0)" -> (12, 11),
+      "annServe(400)" -> (16, 15), "annServe(700)" -> (14, 8), "annServe(900)" -> (22, 16)),
+      s"(cold, warm) job counts: $got")
+  }
+
   /** (jobs, executed queries) of `body` on `session`: each action or
     * write is one query, counted by a listener on that session. */
   private def jobsAndQueries(session: SparkSession)(body: => Unit): (Int, Int) = {

@@ -119,6 +119,38 @@ class LocalServeSpec extends SparkSpec {
     }
   }
 
+  test("every spelling of the corpus frame serves the same rows; a repeat call hits its one entry") {
+    val session = spark.newSession()
+    val path = "/root/testdata/sf0.001"
+    val raw = Tables.embeddings(session, path)
+    val pred = col("vec_id") % 100 === 0
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    /** This session's `local_corpus` entries, read the way perfbench
+      * counts memo entries (element 0 is the (tag, params) key). */
+    def entries(): Int = {
+      val f = graft.functions.IndexMemo.getClass.getDeclaredField("entries")
+      f.setAccessible(true)
+      f.get(graft.functions.IndexMemo).asInstanceOf[List[Product]].count(e =>
+        e.productElement(0).asInstanceOf[(String, Any)]._1 == "local_corpus" &&
+          (e.productElement(1).asInstanceOf[AnyRef] eq session))
+    }
+    val spellings = Seq("raw" -> raw, "a second read" -> Tables.embeddings(session, path),
+      "quantized" -> Similarity.quantized(raw))
+    val got = spellings.map { case (name, e) =>
+      name -> (rows(Similarity.annServe(e, pred, 10, 700L)), rows(Similarity.sq8TopK(e, pred, 10)))
+    }
+    assert(got.head._2._1.nonEmpty && got.head._2._2.nonEmpty)
+    got.tail.foreach { case (name, answer) => assert(answer == got.head._2, s"$name serves other rows") }
+    // the two reads share one entry; the quantized spelling is another plan
+    assert(entries() == 2)
+    assert(Similarity.localCorpus(raw).isDefined)
+    assert(Similarity.localCorpus(raw, 0L).isEmpty)
+    val (hits, before) = (graft.functions.IndexMemo.hitsFor("local_corpus"), entries())
+    rows(Similarity.annServe(raw, col("vec_id").isin(3L, 150L, 299L), 10, 700L))
+    assert(graft.functions.IndexMemo.hitsFor("local_corpus") == hits + 1, "a repeat call looks the corpus up once")
+    assert(entries() == before, "a repeat call adds no entry")
+  }
+
   test("a repeated ivf call (its cells kept on the corpus) returns the same rows") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val a = col("vec_id") % 100 === 0
