@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
+import SpendingReport.onOnePartition
 
 /** J1/P5: the reference's conditional upsert of period reports keyed by
   * `(begin_date, end_date)` (/root/reference/transformer.py:30-132):
@@ -17,12 +18,17 @@ import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructTyp
   * Expressed as one full-outer join on the report key — the relational
   * form of MERGE. The incoming side is a per-period aggregate (tiny:
   * one row per date range), but Spark has no broadcast hash join for a
-  * full outer join: `merge` plans a SortMergeJoin that shuffles BOTH
-  * sides. `mergeInto` runs three jobs, those two shuffles and the
-  * write; it reads the stored table with the schema in one part file's
-  * footer (the Spark row metadata the sink's own write recorded), read
-  * on the driver, so no schema-inference job runs. With the report's
-  * four, one extract + fold + upsert cycle runs seven (`JobBudgetSpec`).
+  * full outer join: `merge` plans a SortMergeJoin, which shuffles BOTH
+  * sides of a partitioned input. `mergeInto` reads the stored table
+  * with the schema in one part file's footer (the Spark row metadata
+  * the sink's own write recorded), read on the driver, so no
+  * schema-inference job runs. When the stored table and the batch
+  * together are estimated below `cap` (`SpendingReport.onOnePartition`),
+  * both sides are on one partition: the join sorts in place with no
+  * shuffle, the write is the upsert's one job and the table stays one
+  * part file, and with the report's one job an extract + fold + upsert
+  * cycle runs two. At or above the cap the join shuffles both sides:
+  * three jobs, and seven a cycle (`JobBudgetSpec` pins both sides).
   * At 100 TB the stored table is date-partitioned and
   * `mergeIntoPartitioned` rewrites only the touched partitions.
   */
@@ -73,12 +79,14 @@ object ReportUpsert {
     * leftover `_staged` from a crashed write is discarded — the merge
     * simply re-runs). The data itself is never in a partial state:
     * reads only ever see the old complete table or the new one. */
-  def mergeInto(dir: String, incoming: DataFrame): Unit = withWriterLock(dir) {
+  def mergeInto(dir: String, incoming: DataFrame,
+                cap: Long = SpendingReport.smallInputBytes): Unit = withWriterLock(dir) {
     recover(dir)
-    val spark = incoming.sparkSession
     val merged =
-      if (Fs.exists(dir)) merge(readStored(spark, dir), incoming)
-      else incoming
+      if (Fs.exists(dir)) {
+        val Seq(stored, batch) = onOnePartition(cap)(readStored(incoming.sparkSession, dir), incoming)
+        merge(stored, batch)
+      } else onOnePartition(cap)(incoming).head
     // Overwrite must not read its own output mid-write: stage to a temp
     // local collect-free checkpoint via a shadow dir swap.
     val tmp = dir + "_staged"
@@ -178,15 +186,14 @@ object ReportUpsert {
     val merged =
       if (Fs.exists(dir)) {
         val touchedDf = incoming.select(col("begin_date")).distinct()
-        // cap the collect before building it: count first (cheap — the
-        // distinct is one shuffle over a batch-sized frame)
-        val nDates = touchedDf.count()
+        // one bounded collect: a row past `isinPruneMaxDates` means the
+        // set is too wide for an isin
+        val touched = touchedDf.limit(isinPruneMaxDates + 1).collect().map(_.get(0)).toSeq
         val existingTouched =
-          if (nDates <= isinPruneMaxDates) {
+          if (touched.length <= isinPruneMaxDates) {
             // metadata-sized set: an isin literal prunes PARTITION DIRS
             // at planning time — the existing-side read lists only the
             // touched directories
-            val touched = touchedDf.collect().map(_.get(0)).toSeq
             spark.read.parquet(dir)
               .filter(col("begin_date").isin(touched: _*))
           } else

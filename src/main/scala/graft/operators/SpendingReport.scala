@@ -39,6 +39,21 @@ object SpendingReport {
   private def amt2: Column = col("amount").cast("decimal(14,2)")
   private def moneySum(c: Column): Column = sum(c).cast("double")
 
+  /** Inputs whose estimated size is below this (4 MB, Spark's own
+    * `openCostInBytes` default) fold and merge on one partition. */
+  private[graft] val smallInputBytes: Long = 4L << 20
+
+  /** `frames` each on one partition when the optimizer's estimate of
+    * their summed size (the file listing or a LocalRelation's rows: it
+    * runs no job) is below `cap`, else `frames` as they are. The
+    * `CoalesceExec(1)` reports SinglePartition, which satisfies every
+    * clustered and all-tuples distribution above it, so the aggregates
+    * and sort-merge joins over it plan no Exchange: one stage, one job. */
+  private[graft] def onOnePartition(cap: Long)(frames: DataFrame*): Seq[DataFrame] =
+    if (frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum < cap)
+      frames.map(_.coalesce(1))
+    else frames
+
   /** A1-A4: global totals and the covered date range — one row.
     * Reference: transformer.py:146-147,172-187,229-231,241-242. */
   def globalSummary(tx: DataFrame): DataFrame =
@@ -281,12 +296,11 @@ object SpendingReport {
     * projection at :283): one row; ordered map-likes persisted as
     * arrays of (key,total) structs so output hashing is deterministic.
     *
-    * One scan of the input feeds one chain of three aggregates (four
-    * Spark jobs: three shuffles and the collect), with every sum an
-    * exact decimal cast to double once, so each value is the same
-    * double the building blocks above (`globalSummary`, `keyTotals`,
-    * `zeroImputedMean`, `pctChangeLatest`, `top5Asc`, `uniqueKeySets`)
-    * produce:
+    * One scan of the input feeds one chain of three aggregates, with
+    * every sum an exact decimal cast to double once, so each value is
+    * the same double the building blocks above (`globalSummary`,
+    * `keyTotals`, `zeroImputedMean`, `pctChangeLatest`, `top5Asc`,
+    * `uniqueKeySets`) produce:
     *  - E1: each transaction becomes three `(kind, key)` rows, kind
     *    `category`, `vendor` and `all` (whose key is null), grouped by
     *    `(kind, key, txn_date)` into cells (decimal sum, row count);
@@ -306,13 +320,20 @@ object SpendingReport {
     * Kept quirk: `denseGrid`'s equi-join never matches a null date or a
     * null key, so a cell with either counts as 0 in `pct_change` (a null
     * key's pct_change is 0) while it still counts in totals and means.
+    *
+    * Below `cap` (`onOnePartition`) the chain runs on one partition
+    * with no Exchange: the collect is the report's one Spark job. At or
+    * above it the chain shuffles between the aggregates: four jobs,
+    * three shuffles and the collect. The exact sums and sorted lists
+    * make the row the same either way.
     */
-  def report(tx: DataFrame): DataFrame = {
+  def report(tx: DataFrame, cap: Long = smallInputBytes): DataFrame = {
+    val Seq(in) = onOnePartition(cap)(tx)
     val kinds = explode(array(
       struct(lit("category").as("kind"), col("category").as("key")),
       struct(lit("vendor").as("kind"), col("vendor").as("key")),
       struct(lit("all").as("kind"), lit(null).cast(StringType).as("key"))))
-    val cells = tx.select(col("txn_date"), amt2.as("amt"), kinds.as("k"))
+    val cells = in.select(col("txn_date"), amt2.as("amt"), kinds.as("k"))
       .groupBy(col("k.kind").as("kind"), col("k.key").as("key"), col("txn_date"))
       .agg(sum(col("amt")).as("cell"), count(lit(1)).as("n"))
     val keyed = cells.groupBy(col("kind"), col("key")).agg(
@@ -392,10 +413,12 @@ object SpendingReport {
     * §2.10): collects the one report row once, renders the executive
     * summary via the supplied function (deterministic stub by default),
     * and returns the final file_details-shaped row as a local one-row
-    * frame, so nothing stays cached and later reads re-run no job. */
+    * frame, so nothing stays cached and later reads re-run no job.
+    * `cap` is `report`'s. */
   def enriched(tx: DataFrame,
-               summarize: ReportFields => String = Summarizer.stub): DataFrame = {
-    val r = report(tx)
+               summarize: ReportFields => String = Summarizer.stub,
+               cap: Long = smallInputBytes): DataFrame = {
+    val r = report(tx, cap)
     val Array(row) = r.collect()
     val at = row.fieldIndex _
     require(!row.isNullAt(at("begin_date")), "no transactions to report")

@@ -40,25 +40,52 @@ class JobBudgetSpec extends SparkSpec {
 
   test("report(tx).collect() on sf0.001: job count") {
     val tx = Tables.transactions(spark, sf)
-    // 4 = three shuffles (cells, per key, global) and the collect; the
-    // three-consumer fold before ran 12, the nine-way composition 63
-    assert(jobs(SpendingReport.report(tx).collect()) == 4)
+    // below the cap: one partition, no Exchange, the collect is the job;
+    // at cap 0, 4 = three shuffles (cells, per key, global) and the
+    // collect; the three-consumer fold before ran 12, the nine-way
+    // composition 63
+    assert(jobs(SpendingReport.report(tx).collect()) == 1)
+    assert(jobs(SpendingReport.report(tx, cap = 0L).collect()) == 4)
   }
 
   test("report(tx).collect(): the job count grows with neither input size nor key count") {
     val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
     val inputs = Seq(Tables.transactions(spark, sf01), TestRefs.landedUploads(spark, 26))
-    assert(inputs.map(tx => jobs(SpendingReport.report(tx).collect())) == Seq(4, 4))
+    assert(inputs.map(tx => jobs(SpendingReport.report(tx).collect())) == Seq(1, 1))
+    assert(inputs.map(tx => jobs(SpendingReport.report(tx, cap = 0L).collect())) == Seq(4, 4))
   }
 
   test("one enriched + mergeInto cycle: job count") {
     val tx = Tables.transactions(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/reports"
-    ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx.filter("txn_date < DATE'2024-01-02'")))
-    // 7 = the report's 4 + the upsert's two merge shuffles and write
-    // (the stored schema comes from a footer, with no inference job);
-    // 16 before, and the nine-way report with its cached row ran 68
-    assert(jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx))) == 7)
+    def cycle(cap: Long) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/reports"
+      ReportUpsert.mergeInto(dir,
+        SpendingReport.enriched(tx.filter("txn_date < DATE'2024-01-02'"), cap = cap), cap)
+      jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx, cap = cap), cap))
+    }
+    // below the cap, 2 = the report's collect + the upsert's write (its
+    // join sorts one partition in place); at cap 0, 7 = the report's 4 +
+    // the two merge shuffles and the write (the stored schema comes from
+    // a footer, with no inference job); 16 before, and the nine-way
+    // report with its cached row ran 68
+    assert(cycle(SpendingReport.smallInputBytes) == 2)
+    assert(cycle(0L) == 7)
+  }
+
+  test("mergeIntoPartitioned finds its touched dates with one bounded collect") {
+    val tx = Tables.transactions(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs_part").toString + "/reports"
+    def daily(cond: String, version: String) = {
+      val d = ReportUpsert.dailyReports(tx.filter(cond), version)
+      spark.createDataFrame(java.util.List.of(d.collect(): _*), d.schema)
+    }
+    ReportUpsert.mergeIntoPartitioned(dir, daily("txn_date < DATE'2024-01-03'", "v1"))
+    val batch = daily("txn_date >= DATE'2024-01-02'", "v2")
+    // 6: the touched dates' distinct and its limited collect (2), the
+    // stored table's schema inference (1), the merge's two shuffles and
+    // the partitioned write (3); a count() before the collect made the
+    // touched dates 5 jobs, 9 in all
+    assert(jobs(ReportUpsert.mergeIntoPartitioned(dir, batch)) == 6)
   }
 
   test("annServe on sf0.001: the cold call collects the corpus once; every other call runs no job") {

@@ -287,13 +287,19 @@ class SpendingReportSpec extends SparkSpec {
       "26 landed uploads" -> TestRefs.landedUploads(spark, 26)) ++
       Seq("sf0.001", "sf0.01", "sf0.1").map(s => s -> Tables.transactions(spark, s"$testdata/$s"))
     inputs.foreach { case (name, in) =>
-      val fused = SpendingReport.report(in)
       val ref = nineWay(in)
+      val want = view(ref)
       def types(r: DataFrame) = r.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
-      assert(types(fused) == types(ref), s"$name: schema")
-      val (got, want) = (view(fused), view(ref))
-      assert(got.length == 1, s"$name: report must be one row, got ${got.length}")
-      assert(got == want, s"$name: fused ${got.map(_._2)} vs nine-way ${want.map(_._2)}")
+      // both sides of the one-partition cap: cap 0 always shuffles, and
+      // every input here (sf0.1 included) is below the default
+      assert(in.queryExecution.optimizedPlan.stats.sizeInBytes < SpendingReport.smallInputBytes, name)
+      for (cap <- Seq(0L, SpendingReport.smallInputBytes)) {
+        val fused = SpendingReport.report(in, cap)
+        assert(types(fused) == types(ref), s"$name, cap $cap: schema")
+        val got = view(fused)
+        assert(got.length == 1, s"$name, cap $cap: report must be one row, got ${got.length}")
+        assert(got == want, s"$name, cap $cap: fused ${got.map(_._2)} vs nine-way ${want.map(_._2)}")
+      }
     }
     def pct(in: DataFrame, category: String): Any = SpendingReport.report(in)
       .selectExpr(s"filter(pct_change_category, x -> x.category = '$category')[0].pct_change")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.ReportUpsert
+import graft.operators.{ReportUpsert, SpendingReport}
 import graft.streaming.StreamingReport
 
 class UpsertSpec extends SparkSpec {
@@ -48,10 +48,54 @@ class UpsertSpec extends SparkSpec {
       "a changed type" -> batch.withColumn("total_transactions",
         col("total_transactions").cast("string"))
     ).foreach { case (name, bad) =>
-      val e = intercept[IllegalArgumentException](ReportUpsert.mergeInto(dir, bad))
-      assert(e.getMessage.contains("existing/incoming schemas must match"), s"$name: $e")
-      assert(files == filesBefore && rows == rowsBefore, s"$name: the table changed")
+      for (cap <- Seq(0L, SpendingReport.smallInputBytes)) {
+        val e = intercept[IllegalArgumentException](ReportUpsert.mergeInto(dir, bad, cap))
+        assert(e.getMessage.contains("existing/incoming schemas must match"), s"$name, cap $cap: $e")
+        assert(files == filesBefore && rows == rowsBefore, s"$name, cap $cap: the table changed")
+      }
     }
+  }
+
+  test("mergeInto stores the same rows on both sides of the one-partition cap") {
+    val batches = Seq(
+      // the first write stores the batch as it is: a duplicate key and a null date
+      reports(("2024-01-01", 10.0, "seed", 5L), ("2024-01-01", 11.0, "dup", 6L),
+        (null, 1.0, "null date", 1L)),
+      reports(("2024-01-02", 3.0, "insert", 2L)),
+      reports(("2024-01-02", 4.0, "update", 3L)),
+      reports(("2024-01-02", 5.0, "no-op", 3L)),
+      reports(("2024-01-02", 4.0, "update", 3L)), // replay
+      reports(("2024-01-01", 12.0, "over both duplicates", 7L)),
+      reports(("2024-01-03", 1.0, "two for one key", 1L), ("2024-01-03", 2.0, "two for one key", 2L)),
+      reports(("2024-01-02", 6.0, "two for a stored key", 9L), ("2024-01-02", 7.0, "loses", 1L)),
+      reports((null, 2.0, "another null date", 5L)))
+    def stored(cap: Long) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_cap").toString + "/reports"
+      batches.map { b =>
+        ReportUpsert.mergeInto(dir, b, cap)
+        spark.read.parquet(dir).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      }
+    }
+    val (shuffled, onePartition) = (stored(0L), stored(SpendingReport.smallInputBytes))
+    assert(onePartition == shuffled)
+    assert(shuffled.last.count(_.contains("null date")) == 2 && shuffled.last.length == 8,
+      shuffled.last.mkString("\n"))
+  }
+
+  test("four mergeInto cycles below the cap leave exactly one part file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_onefile").toString + "/reports"
+    val seed = (1 to 24).map(d => (f"2024-01-$d%02d", d.toDouble, "seed", d.toLong))
+    val files = Seq(
+      reports(seed: _*),
+      reports(("2024-02-01", 1.0, "insert", 1L)),
+      reports(("2024-01-05", 9.0, "update", 50L)),
+      reports(("2024-01-05", 9.0, "no-op", 50L))
+    ).map { b =>
+      ReportUpsert.mergeInto(dir, b)
+      new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    }
+    assert(files == Seq(1, 1, 1, 1))
+    assert(spark.read.parquet(dir).count() == 25)
   }
 
   test("mergeInto recovers from every crash point of the dir swap") {
