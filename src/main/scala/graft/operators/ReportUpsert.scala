@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
-import SpendingReport.onOnePartition
+import SpendingReport.small
 
 /** J1/P5: the reference's conditional upsert of period reports keyed by
   * `(begin_date, end_date)` (/root/reference/transformer.py:30-132):
@@ -23,12 +23,13 @@ import SpendingReport.onOnePartition
   * with the schema in one part file's footer (the Spark row metadata
   * the sink's own write recorded), read on the driver, so no
   * schema-inference job runs. When the stored table and the batch
-  * together are estimated below `cap` (`SpendingReport.onOnePartition`),
-  * both sides are on one partition: the join sorts in place with no
-  * shuffle, the write is the upsert's one job and the table stays one
-  * part file, and with the report's one job an extract + fold + upsert
-  * cycle runs two. At or above the cap the join shuffles both sides:
-  * three jobs, and seven a cycle (`JobBudgetSpec` pins both sides).
+  * together are `SpendingReport.small` (estimated below
+  * `smallInputBytes`), both sides are on one partition: the join sorts
+  * in place with no shuffle, the write is the upsert's one job and the
+  * table stays one part file, and with the report's one job an
+  * extract + fold + upsert cycle runs two. Above the cap the join
+  * shuffles both sides: three jobs, and seven a cycle (`JobBudgetSpec`
+  * pins both sides).
   * At 100 TB the stored table is date-partitioned and
   * `mergeIntoPartitioned` rewrites only the touched partitions.
   */
@@ -79,14 +80,15 @@ object ReportUpsert {
     * leftover `_staged` from a crashed write is discarded — the merge
     * simply re-runs). The data itself is never in a partial state:
     * reads only ever see the old complete table or the new one. */
-  def mergeInto(dir: String, incoming: DataFrame,
-                cap: Long = SpendingReport.smallInputBytes): Unit = withWriterLock(dir) {
+  def mergeInto(dir: String, incoming: DataFrame): Unit = withWriterLock(dir) {
     recover(dir)
     val merged =
       if (Fs.exists(dir)) {
-        val Seq(stored, batch) = onOnePartition(cap)(readStored(incoming.sparkSession, dir), incoming)
-        merge(stored, batch)
-      } else onOnePartition(cap)(incoming).head
+        val stored = readStored(incoming.sparkSession, dir)
+        if (small(stored, incoming)) merge(stored.coalesce(1), incoming.coalesce(1))
+        else merge(stored, incoming)
+      } else if (small(incoming)) incoming.coalesce(1)
+      else incoming
     // Overwrite must not read its own output mid-write: stage to a temp
     // local collect-free checkpoint via a shadow dir swap.
     val tmp = dir + "_staged"

@@ -39,20 +39,21 @@ object SpendingReport {
   private def amt2: Column = col("amount").cast("decimal(14,2)")
   private def moneySum(c: Column): Column = sum(c).cast("double")
 
-  /** Inputs whose estimated size is below this (4 MB, Spark's own
-    * `openCostInBytes` default) fold and merge on one partition. */
-  private[graft] val smallInputBytes: Long = 4L << 20
+  /** Inputs whose estimated size is below this fold and merge on one
+    * partition (see `small`). On a 4-core session the one-partition
+    * report wins at 1.46 MB of estimated input (sf0.1), ties at 2.93 MB
+    * and loses at 4.39 MB (unions of sf0.1; DESIGN.md), so the cap sits
+    * below the crossover. */
+  private[graft] val smallInputBytes: Long = 2L << 20
 
-  /** `frames` each on one partition when the optimizer's estimate of
-    * their summed size (the file listing or a LocalRelation's rows: it
-    * runs no job) is below `cap`, else `frames` as they are. The
+  /** Whether the optimizer's estimate of the frames' summed size (the
+    * file listing or a LocalRelation's rows: it runs no job) is below
+    * `smallInputBytes`. A small input is `coalesce(1)`ed: the
     * `CoalesceExec(1)` reports SinglePartition, which satisfies every
     * clustered and all-tuples distribution above it, so the aggregates
     * and sort-merge joins over it plan no Exchange: one stage, one job. */
-  private[graft] def onOnePartition(cap: Long)(frames: DataFrame*): Seq[DataFrame] =
-    if (frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum < cap)
-      frames.map(_.coalesce(1))
-    else frames
+  private[graft] def small(frames: DataFrame*): Boolean =
+    frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum < smallInputBytes
 
   /** A1-A4: global totals and the covered date range — one row.
     * Reference: transformer.py:146-147,172-187,229-231,241-242. */
@@ -321,14 +322,13 @@ object SpendingReport {
     * null key, so a cell with either counts as 0 in `pct_change` (a null
     * key's pct_change is 0) while it still counts in totals and means.
     *
-    * Below `cap` (`onOnePartition`) the chain runs on one partition
-    * with no Exchange: the collect is the report's one Spark job. At or
-    * above it the chain shuffles between the aggregates: four jobs,
-    * three shuffles and the collect. The exact sums and sorted lists
-    * make the row the same either way.
+    * A `small` input runs the chain on one partition with no Exchange:
+    * the collect is the report's one Spark job. A larger one shuffles
+    * between the aggregates: four jobs, three shuffles and the collect.
+    * The exact sums and sorted lists make the row the same either way.
     */
-  def report(tx: DataFrame, cap: Long = smallInputBytes): DataFrame = {
-    val Seq(in) = onOnePartition(cap)(tx)
+  def report(tx: DataFrame): DataFrame = {
+    val in = if (small(tx)) tx.coalesce(1) else tx
     val kinds = explode(array(
       struct(lit("category").as("kind"), col("category").as("key")),
       struct(lit("vendor").as("kind"), col("vendor").as("key")),
@@ -413,12 +413,10 @@ object SpendingReport {
     * §2.10): collects the one report row once, renders the executive
     * summary via the supplied function (deterministic stub by default),
     * and returns the final file_details-shaped row as a local one-row
-    * frame, so nothing stays cached and later reads re-run no job.
-    * `cap` is `report`'s. */
+    * frame, so nothing stays cached and later reads re-run no job. */
   def enriched(tx: DataFrame,
-               summarize: ReportFields => String = Summarizer.stub,
-               cap: Long = smallInputBytes): DataFrame = {
-    val r = report(tx, cap)
+               summarize: ReportFields => String = Summarizer.stub): DataFrame = {
+    val r = report(tx)
     val Array(row) = r.collect()
     val at = row.fieldIndex _
     require(!row.isNullAt(at("begin_date")), "no transactions to report")

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.col
@@ -40,36 +40,35 @@ class JobBudgetSpec extends SparkSpec {
 
   test("report(tx).collect() on sf0.001: job count") {
     val tx = Tables.transactions(spark, sf)
-    // below the cap: one partition, no Exchange, the collect is the job;
-    // at cap 0, 4 = three shuffles (cells, per key, global) and the
-    // collect; the three-consumer fold before ran 12, the nine-way
-    // composition 63
+    // small: one partition, no Exchange, the collect is the job; unsized,
+    // 4 = three shuffles (cells, per key, global) and the collect; the
+    // three-consumer fold before ran 12, the nine-way composition 63
     assert(jobs(SpendingReport.report(tx).collect()) == 1)
-    assert(jobs(SpendingReport.report(tx, cap = 0L).collect()) == 4)
+    assert(jobs(SpendingReport.report(TestRefs.unsized(tx)).collect()) == 4)
   }
 
   test("report(tx).collect(): the job count grows with neither input size nor key count") {
     val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
     val inputs = Seq(Tables.transactions(spark, sf01), TestRefs.landedUploads(spark, 26))
     assert(inputs.map(tx => jobs(SpendingReport.report(tx).collect())) == Seq(1, 1))
-    assert(inputs.map(tx => jobs(SpendingReport.report(tx, cap = 0L).collect())) == Seq(4, 4))
+    assert(inputs.map(tx => jobs(SpendingReport.report(TestRefs.unsized(tx)).collect())) == Seq(4, 4))
   }
 
   test("one enriched + mergeInto cycle: job count") {
     val tx = Tables.transactions(spark, sf)
-    def cycle(cap: Long) = {
+    def cycle(sized: DataFrame => DataFrame) = {
       val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/reports"
       ReportUpsert.mergeInto(dir,
-        SpendingReport.enriched(tx.filter("txn_date < DATE'2024-01-02'"), cap = cap), cap)
-      jobs(ReportUpsert.mergeInto(dir, SpendingReport.enriched(tx, cap = cap), cap))
+        sized(SpendingReport.enriched(sized(tx.filter("txn_date < DATE'2024-01-02'")))))
+      jobs(ReportUpsert.mergeInto(dir, sized(SpendingReport.enriched(sized(tx)))))
     }
-    // below the cap, 2 = the report's collect + the upsert's write (its
-    // join sorts one partition in place); at cap 0, 7 = the report's 4 +
-    // the two merge shuffles and the write (the stored schema comes from
-    // a footer, with no inference job); 16 before, and the nine-way
+    // small, 2 = the report's collect + the upsert's write (its join
+    // sorts one partition in place); unsized, 7 = the report's 4 + the
+    // two merge shuffles and the write (the stored schema comes from a
+    // footer, with no inference job); 16 before, and the nine-way
     // report with its cached row ran 68
-    assert(cycle(SpendingReport.smallInputBytes) == 2)
-    assert(cycle(0L) == 7)
+    assert(cycle(identity) == 2)
+    assert(cycle(TestRefs.unsized) == 7)
   }
 
   test("mergeIntoPartitioned finds its touched dates with one bounded collect") {

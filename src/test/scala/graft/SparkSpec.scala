@@ -20,6 +20,12 @@ abstract class SparkSpec extends AnyFunSuite {
 
 /** Shared test-reference helpers. */
 object TestRefs {
+  /** `df`'s rows behind a LogicalRDD, whose size estimate is
+    * `spark.sql.defaultSizeInBytes` (Long.MaxValue): never
+    * `SpendingReport.small`, so the report and the upsert over it take
+    * their shuffling plans. */
+  def unsized(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(df.rdd, df.schema)
+
   /** UTF-8 BYTE order (= code-point order) — matches the engine's
     * UTF8String and DuckDB's binary collation; Scala String/tuple
     * ordering would compare UTF-16 code units, which diverges for

@@ -290,15 +290,15 @@ class SpendingReportSpec extends SparkSpec {
       val ref = nineWay(in)
       val want = view(ref)
       def types(r: DataFrame) = r.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
-      // both sides of the one-partition cap: cap 0 always shuffles, and
-      // every input here (sf0.1 included) is below the default
-      assert(in.queryExecution.optimizedPlan.stats.sizeInBytes < SpendingReport.smallInputBytes, name)
-      for (cap <- Seq(0L, SpendingReport.smallInputBytes)) {
-        val fused = SpendingReport.report(in, cap)
-        assert(types(fused) == types(ref), s"$name, cap $cap: schema")
+      // both sides of the one-partition cap: every input here (sf0.1
+      // included) is small, and its unsized copy never is
+      assert(SpendingReport.small(in) && !SpendingReport.small(TestRefs.unsized(in)), name)
+      for ((side, tx) <- Seq("small" -> in, "unsized" -> TestRefs.unsized(in))) {
+        val fused = SpendingReport.report(tx)
+        assert(types(fused) == types(ref), s"$name, $side: schema")
         val got = view(fused)
-        assert(got.length == 1, s"$name, cap $cap: report must be one row, got ${got.length}")
-        assert(got == want, s"$name, cap $cap: fused ${got.map(_._2)} vs nine-way ${want.map(_._2)}")
+        assert(got.length == 1, s"$name, $side: report must be one row, got ${got.length}")
+        assert(got == want, s"$name, $side: fused ${got.map(_._2)} vs nine-way ${want.map(_._2)}")
       }
     }
     def pct(in: DataFrame, category: String): Any = SpendingReport.report(in)

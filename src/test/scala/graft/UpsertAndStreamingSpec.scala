@@ -48,10 +48,10 @@ class UpsertSpec extends SparkSpec {
       "a changed type" -> batch.withColumn("total_transactions",
         col("total_transactions").cast("string"))
     ).foreach { case (name, bad) =>
-      for (cap <- Seq(0L, SpendingReport.smallInputBytes)) {
-        val e = intercept[IllegalArgumentException](ReportUpsert.mergeInto(dir, bad, cap))
-        assert(e.getMessage.contains("existing/incoming schemas must match"), s"$name, cap $cap: $e")
-        assert(files == filesBefore && rows == rowsBefore, s"$name, cap $cap: the table changed")
+      for ((side, b) <- Seq("small" -> bad, "unsized" -> TestRefs.unsized(bad))) {
+        val e = intercept[IllegalArgumentException](ReportUpsert.mergeInto(dir, b))
+        assert(e.getMessage.contains("existing/incoming schemas must match"), s"$name, $side: $e")
+        assert(files == filesBefore && rows == rowsBefore, s"$name, $side: the table changed")
       }
     }
   }
@@ -69,14 +69,15 @@ class UpsertSpec extends SparkSpec {
       reports(("2024-01-03", 1.0, "two for one key", 1L), ("2024-01-03", 2.0, "two for one key", 2L)),
       reports(("2024-01-02", 6.0, "two for a stored key", 9L), ("2024-01-02", 7.0, "loses", 1L)),
       reports((null, 2.0, "another null date", 5L)))
-    def stored(cap: Long) = {
+    def stored(sized: DataFrame => DataFrame) = {
       val dir = java.nio.file.Files.createTempDirectory("graft_cap").toString + "/reports"
       batches.map { b =>
-        ReportUpsert.mergeInto(dir, b, cap)
+        ReportUpsert.mergeInto(dir, sized(b))
         spark.read.parquet(dir).collect().map(_.toSeq.mkString("|")).sorted.toSeq
       }
     }
-    val (shuffled, onePartition) = (stored(0L), stored(SpendingReport.smallInputBytes))
+    assert(batches.forall(b => SpendingReport.small(b) && !SpendingReport.small(TestRefs.unsized(b))))
+    val (shuffled, onePartition) = (stored(TestRefs.unsized), stored(identity))
     assert(onePartition == shuffled)
     assert(shuffled.last.count(_.contains("null date")) == 2 && shuffled.last.length == 8,
       shuffled.last.mkString("\n"))

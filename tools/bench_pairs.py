@@ -11,8 +11,10 @@ one after the other; the order flips on every pair, so a drift in the
 machine's speed falls on both sides alike. Each run's last stdout line is
 its JSON result. Prints, per metric, the median and the interquartile
 range (IQR) of each side, the median's relative change and the number of
-pairs in which the change read lower. Exits non-zero when a run printed
-no result or reported `"correct": false`; the table still prints.
+pairs in which the change read lower (a raw count, whichever way the
+metric is better). A metric the change never reported is listed apart.
+Exits non-zero when a run printed no result or reported
+`"correct": false`; the table still prints.
 """
 import argparse
 import json
@@ -71,17 +73,23 @@ def main():
     names = sorted(set().union(*(p["parent"]["metrics"] for p in ok))) if ok else []
     print(f"{args.workload}: {len(ok)} pairs (seeds {args.seeds[0]}-{args.seeds[-1]})")
     print(f"{'metric':40s} {'parent med':>12s} {'IQR':>21s} {'change med':>12s} {'IQR':>21s}"
-          f" {'delta':>8s} {'lower':>7s}")
+          f" {'delta':>8s} {'change<parent':>14s}")
+    missing = []
     for m in names:
         both = [(p["parent"]["metrics"][m]["value"], p["change"]["metrics"][m]["value"])
                 for p in ok if m in p["parent"]["metrics"] and m in p["change"]["metrics"]]
+        if not both:
+            missing.append(m)
+            continue
         par, chg = [b[0] for b in both], [b[1] for b in both]
         mp, mc = statistics.median(par), statistics.median(chg)
         (p1, p3), (c1, c3) = quartiles(par), quartiles(chg)
         delta = f"{(mc - mp) / mp:+.1%}" if mp else "n/a"
         lower = sum(c < p for p, c in both)
         print(f"{m:40s} {mp:12.4f} {f'[{p1:.4f}, {p3:.4f}]':>21s} {mc:12.4f}"
-              f" {f'[{c1:.4f}, {c3:.4f}]':>21s} {delta:>8s} {f'{lower}/{len(both)}':>7s}")
+              f" {f'[{c1:.4f}, {c3:.4f}]':>21s} {delta:>8s} {f'{lower}/{len(both)}':>14s}")
+    for m in missing:
+        print(f"{m:40s} reported by the parent only")
     for b in bad:
         print(f"FAILED {b}")
     sys.exit(1 if bad else 0)
