@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
@@ -24,9 +24,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, S
   */
 object Similarity {
 
-  /** floor(x * 1e6) per element — exact integer embedding. */
+  /** floor(x * 1e6) per element — exact integer embedding — through
+    * the native codegen'd `QuantizeI64`: one primitive loop per vector,
+    * no interpreted lambda, and an `UnsafeArrayData` over a `long[]`
+    * that `localCorpus` collects and keeps as its frame's rows. */
   def quantize(embCol: String): Column =
-    expr(s"transform(CAST($embCol AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000.0) AS BIGINT))")
+    graft.plans.QuantizeI64.quantize_i64(col(embCol))
 
   /** Quantized dot products run through the native codegen'd DotI64
     * expression — the HOF fold this replaces evaluates interpreted and
@@ -950,10 +953,11 @@ object Similarity {
   /** The quantized corpus (`quantized(e)`'s rows: every input column
     * plus `q` and `nq`) resident on the driver, for the sq8, sq8_rerank
     * and ivf serve rungs below `localServeCap`. `frame` is a
-    * LocalRelation over the same rows, the one a predicate is analyzed
-    * against; `ids`, `q` and `nq` hold them as arrays, the operands of
-    * the driver kernels. The ivf cell membership of each centroid set
-    * is kept here too (`members`), so it is assigned once per corpus. */
+    * LocalRelation over the collected Catalyst rows themselves, the one
+    * a predicate is analyzed against; `ids`, `q` and `nq` hold them as
+    * arrays, the operands of the driver kernels. The ivf cell membership
+    * of each centroid set is kept here too (`members`), so it is
+    * assigned once per corpus. */
   private[graft] final class LocalCorpus(val frame: DataFrame, val ids: Array[Long],
                                          val q: Array[Array[Long]], val nq: Array[Long]) {
     /** Positions of the rows `pred` selects, in corpus order, with no
@@ -1013,17 +1017,29 @@ object Similarity {
       }
 
     /** `sq8CodeTable`'s codes and their squared norms, row-aligned:
-      * per-dim (mn, mx) over every row holding the dim, then
-      * `(x − mn)·255 div (mx − mn)`, 0 on a constant dim — the same
+      * per-dim (mn, mx) over every row holding the dim, in one pass,
+      * then `(x − mn)·255 div (mx − mn)`, 0 on a constant dim — the same
       * Long algebra, overflow-checked like ANSI Spark's. */
     lazy val sq8: (Array[Array[Long]], Array[Long]) = {
       val width = if (q.isEmpty) 0 else q.map(_.length).max
-      val mn = Array.tabulate(width)(d => q.filter(_.length > d).map(_(d)).min)
-      val mx = Array.tabulate(width)(d => q.filter(_.length > d).map(_(d)).max)
-      val c = q.map(_.zipWithIndex.map { case (x, d) =>
-        if (mx(d) > mn(d))
-          Math.multiplyExact(Math.subtractExact(x, mn(d)), 255L) / Math.subtractExact(mx(d), mn(d))
-        else 0L })
+      val mn = Array.fill(width)(Long.MaxValue)
+      val mx = Array.fill(width)(Long.MinValue)
+      for (v <- q) {
+        var d = 0
+        while (d < v.length) {
+          mn(d) = math.min(mn(d), v(d)); mx(d) = math.max(mx(d), v(d)); d += 1
+        }
+      }
+      val c = q.map { v =>
+        val out = new Array[Long](v.length)
+        var d = 0
+        while (d < v.length) {
+          if (mx(d) > mn(d))
+            out(d) = Math.multiplyExact(Math.subtractExact(v(d), mn(d)), 255L) / Math.subtractExact(mx(d), mn(d))
+          d += 1
+        }
+        out
+      }
       (c, c.map(v => dotLocal(v, v)))
     }
   }
@@ -1037,29 +1053,28 @@ object Similarity {
     * (session, caller's frame plan, cap). A miss quantizes the frame
     * (`ensureQuantized`) and runs ONE bounded collect of at most
     * `cap / AnnPolicy.dims + 1` rows, so the driver never holds much
-    * more than the cap. A corpus the kernels could not replay exactly
-    * (a non-BIGINT, null or repeated `vec_id`, a null vector or element)
-    * is served by the Spark plans too. */
+    * more than the cap. That collect returns Catalyst rows
+    * (`GraftSqlBridge.collectInternal`): the kernels' arrays are read
+    * straight out of them, and they are the frame's LocalRelation rows,
+    * with no conversion either way. A corpus the kernels could not
+    * replay exactly (a non-BIGINT, null or repeated `vec_id`, a null
+    * vector or element) is served by the Spark plans too. */
   private[graft] def localCorpus(embeddings: DataFrame, cap: Long = localServeCap): Option[LocalCorpus] =
     IndexMemo.of[Option[LocalCorpus]]("local_corpus", embeddings, cap) {
-      import org.apache.spark.sql.catalyst.CatalystTypeConverters
       val e = ensureQuantized(embeddings)
       val schema = e.schema
       val rowCap = (math.max(0L, cap) / AnnPolicy.dims).min(Int.MaxValue - 1L).toInt
       val (iId, iQ, iN) = (schema.fieldIndex("vec_id"), schema.fieldIndex("q"), schema.fieldIndex("nq"))
-      lazy val rows = e.limit(rowCap + 1).collect()
+      lazy val rows = GraftSqlBridge.collectInternal(e.limit(rowCap + 1))
       lazy val ids = rows.map(_.getLong(iId))
-      lazy val q = rows.map(_.getSeq[Long](iQ).toArray)
+      lazy val q = rows.map(_.getArray(iQ).toLongArray())
       val fits = schema(iId).dataType == LongType && rows.length <= rowCap &&
-        rows.forall(r => !r.isNullAt(iId) && !r.isNullAt(iQ) && !r.getSeq[Any](iQ).contains(null)) &&
+        rows.forall(r => !r.isNullAt(iId) && !r.isNullAt(iQ) &&
+          !(0 until r.getArray(iQ).numElements()).exists(r.getArray(iQ).isNullAt)) &&
         ids.distinct.length == ids.length && q.map(_.length.toLong).sum < cap
       if (!fits) None
-      else {
-        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-        Some(new LocalCorpus(
-          GraftSqlBridge.localFrame(e.sparkSession, schema, rows.map(toCatalyst(_).asInstanceOf[InternalRow]).toSeq),
-          ids, q, rows.map(_.getLong(iN))))
-      }
+      else Some(new LocalCorpus(GraftSqlBridge.localFrame(e.sparkSession, schema, rows.toSeq),
+        ids, q, rows.map(_.getLong(iN))))
     }
 
   /** `DotI64` on the driver: the plain (wrapping) Long sum over the
@@ -1149,7 +1164,7 @@ object Similarity {
       GraftSqlBridge.localFrame(embeddings.sparkSession,
         StructType(Seq(StructField("vec_id", LongType),
           StructField("c", org.apache.spark.sql.types.ArrayType(LongType)), StructField("ncc", LongType))),
-        lc.ids.indices.map(i => InternalRow(lc.ids(i), new GenericArrayData(c(i)), ncc(i))))
+        lc.ids.indices.map(i => InternalRow(lc.ids(i), UnsafeArrayData.fromPrimitiveArray(c(i)), ncc(i))))
     })
 
   /** SQ8 top-k by symmetric code-space squared distance: both sides

@@ -5,7 +5,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, NumericType, StructField, StructType}
 import SpendingReport.small
 
 /** J1/P5: the reference's conditional upsert of period reports keyed by
@@ -102,20 +102,28 @@ object ReportUpsert {
     } else Fs.move(tmp, dir)
   }
 
-  /** The `mergeInto` table, read with the schema stored in its first
-    * part file's footer: the Spark row metadata the sink's write put
-    * there, one footer read on the driver. `spark.read.parquet(dir)`
-    * would infer the same schema in a Spark job. A file without that
-    * metadata (written by another tool) falls back to inference. */
-  private def readStored(spark: SparkSession, dir: String): DataFrame = {
+  /** A sink's table, read with the schema stored in its first part
+    * file's footer: the Spark row metadata the sink's write put there,
+    * one footer read on the driver. `spark.read.parquet(dir)` would
+    * infer the same schema in a Spark job. A `partition` column (the
+    * `mergeIntoPartitioned` layout) is not in the files: the part file
+    * is looked up under its first `<name>=<value>` directory, and the
+    * column is appended to the footer's schema, where inference puts
+    * it. A file without that metadata (written by another tool) falls
+    * back to inference. */
+  private def readStored(spark: SparkSession, dir: String, partition: Option[StructField] = None): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val schema = Fs.list(dir).map(_.getPath).find(_.getName.startsWith("part-")).flatMap { p =>
+    val files = partition.fold(Fs.list(dir).iterator)(f => Fs.list(dir).iterator
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith(f.name + "="))
+      .flatMap(d => Fs.list(d.getPath.toString)))
+    val schema = files.map(_.getPath).find(_.getName.startsWith("part-")).flatMap { p =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
       try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
         .get(ParquetReadSupport.SPARK_METADATA_KEY))
       finally reader.close()
     }
-    schema.map(json => spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+    schema.map(json => spark.read.schema(
+        StructType(DataType.fromJson(json).asInstanceOf[StructType].fields ++ partition)))
       .getOrElse(spark.read).parquet(dir)
   }
 
@@ -187,6 +195,7 @@ object ReportUpsert {
     val spark = incoming.sparkSession
     val merged =
       if (Fs.exists(dir)) {
+        val stored = readStored(spark, dir, Some(StructField("begin_date", DateType)))
         val touchedDf = incoming.select(col("begin_date")).distinct()
         // one bounded collect: a row past `isinPruneMaxDates` means the
         // set is too wide for an isin
@@ -196,14 +205,12 @@ object ReportUpsert {
             // metadata-sized set: an isin literal prunes PARTITION DIRS
             // at planning time — the existing-side read lists only the
             // touched directories
-            spark.read.parquet(dir)
-              .filter(col("begin_date").isin(touched: _*))
+            stored.filter(col("begin_date").isin(touched: _*))
           } else
             // degenerate wide-date batch: prune via broadcast semi join
             // (still partition-prunable via dynamic runtime filtering,
             // and never builds a thousands-long driver-side predicate)
-            spark.read.parquet(dir)
-              .join(broadcast(touchedDf), Seq("begin_date"), "left_semi")
+            stored.join(broadcast(touchedDf), Seq("begin_date"), "left_semi")
         merge(existingTouched, incoming)
       } else incoming
     // Dynamic mode: Overwrite replaces only the partitions present in

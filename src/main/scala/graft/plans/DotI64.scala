@@ -1,11 +1,22 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+
+/* The engine's native array kernels, each a primitive loop inside
+ * whole-stage codegen in place of an interpreted higher-order function:
+ *   - DotI64 (`dot_i64`): Σ aᵢ·bᵢ over two ARRAY<BIGINT>;
+ *   - SqDistI64 (`sqdist_i64`): Σ (aᵢ − bᵢ)² over two ARRAY<BIGINT>;
+ *   - QuantizeI64 (`quantize_i64`): floor(xᵢ · 1e6) of a FLOAT or DOUBLE array,
+ *     the exact integer embedding every similarity operator reads.
+ * GraftExtensions below exposes the first two, with the top_k and
+ * exact_percentiles aggregates, to SQL. */
 
 /** Native integer dot product over two ARRAY<BIGINT> columns.
   *
@@ -173,6 +184,84 @@ object SqDistI64 {
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "sqdist_i64", exprs => SqDistI64(exprs(0), exprs(1)), "built-in")
+}
+
+/** `CAST(floor(x * 1000000.0) AS BIGINT)` per element of
+  * `CAST(child AS ARRAY<DOUBLE>)` — the `transform` lambda spelling of
+  * `Similarity.quantize`, as one primitive loop. Spark's `ArrayTransform`
+  * is `CodegenFallback`, so the lambda dispatched every element
+  * interpreted; this generates `(long) Math.floor((double) x * 1e6)`
+  * inline, the same Java arithmetic `Floor` and the widening `Cast`
+  * generate (NaN → 0, ±∞ and magnitudes past 2^63 / 1e6 saturate).
+  *
+  * The child is an ARRAY<FLOAT> or ARRAY<DOUBLE> (the embeddings and
+  * the trained centroids), widened per element as that CAST would,
+  * with no intermediate array. A NULL array is NULL and a NULL element
+  * stays NULL. An array with no NULL element comes out as
+  * `UnsafeArrayData` over a `long[]` — what the collect and the kernels
+  * downstream read without boxing — and one with a NULL element as a
+  * `GenericArrayData`. The type is ARRAY<BIGINT> with nullable
+  * elements, the lambda's: the CAST to ARRAY<DOUBLE> makes every
+  * element nullable. */
+case class QuantizeI64(child: Expression) extends UnaryExpression {
+
+  private def elementType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"quantize_i64 requires an ARRAY<FLOAT> or ARRAY<DOUBLE>, got ${t.simpleString}")
+  }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "quantize_i64"
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val get = InternalRow.getAccessor(elementType)
+    val n = x.numElements()
+    def q(i: Int): Long = Math.floor(get(x, i).asInstanceOf[Number].doubleValue() * 1000000.0).toLong
+    if ((0 until n).exists(x.isNullAt))
+      new GenericArrayData(Array.tabulate[Any](n)(i => if (x.isNullAt(i)) null else q(i)))
+    else UnsafeArrayData.fromPrimitiveArray(Array.tabulate(n)(q))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      val hasNull = ctx.freshName("hasNull")
+      val out = ctx.freshName("out")
+      val q = s"(long) java.lang.Math.floor(((double) ${CodeGenerator.getValue(a, elementType, i)}) * 1000000.0)"
+      val scan =
+        if (child.dataType.asInstanceOf[ArrayType].containsNull)
+          s"for (int $i = 0; $i < $n && !$hasNull; $i++) { $hasNull = $a.isNullAt($i); }"
+        else ""
+      s"""
+         |int $n = $a.numElements();
+         |boolean $hasNull = false;
+         |$scan
+         |if (!$hasNull) {
+         |  long[] $out = new long[$n];
+         |  for (int $i = 0; $i < $n; $i++) { $out[$i] = $q; }
+         |  ${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray($out);
+         |} else {
+         |  Object[] $out = new Object[$n];
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $out[$i] = $a.isNullAt($i) ? null : (Object) java.lang.Long.valueOf($q);
+         |  }
+         |  ${ev.value} = new ${classOf[GenericArrayData].getName}($out);
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object QuantizeI64 {
+  /** Column form. */
+  def quantize_i64(a: Column): Column =
+    GraftSqlBridge.column(QuantizeI64(GraftSqlBridge.expression(a)))
 }
 
 /** Session extensions: `SparkSession.builder.withExtensions(new

@@ -579,6 +579,42 @@ object GraftProps extends Properties("graft") {
     }
   }
 
+  property("quantize_i64 equals the transform lambda it replaced; no ArrayTransform is left") = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructField, StructType}
+    val genX: Gen[java.lang.Double] = Gen.frequency(
+      1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0, 1e300, -1e300,
+        Double.MinPositiveValue, 9.3e12, -9.3e12),
+      4 -> Gen.choose(-1.0, 1.0),
+      2 -> Gen.choose(-1e14, 1e14)).flatMap(x => Gen.frequency(5 -> Gen.const(java.lang.Double.valueOf(x)),
+        1 -> Gen.const(null: java.lang.Double)))
+    val genArr = Gen.frequency(1 -> Gen.const(null), 5 -> Gen.listOf(genX))
+    forAll(Gen.listOf(genArr), Gen.oneOf(DoubleType, FloatType)) { (arrs, t) =>
+      val rows = arrs.zipWithIndex.map { case (a, i) =>
+        Row(i.toLong, Option(a).map(_.map(x =>
+          if (x == null || t == DoubleType) x else java.lang.Float.valueOf(x.floatValue()))).orNull)
+      }
+      val df = spark.createDataFrame(java.util.List.of(rows: _*),
+        StructType(Seq(StructField("id", LongType), StructField("v", ArrayType(t)))))
+      // the spelling `Similarity.quantize` had before the native loop
+      val lambda = org.apache.spark.sql.functions.expr(
+        "transform(CAST(v AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000.0) AS BIGINT))")
+      // a LocalRelation folds the projection (interpreted eval); the
+      // repartition keeps it in a whole-stage codegen'd Project
+      val outs = Seq(df, df.repartition(2)).map(
+        _.select(col("id"), graft.functions.Similarity.quantize("v").as("n"), lambda.as("l")))
+      val typed = outs.forall(o => o.schema("n").dataType == o.schema("l").dataType)
+      val bad = outs.flatMap(_.collect().filter(r => r.get(1) != r.get(2)))
+      Prop(typed && bad.isEmpty) :| s"type ${outs.head.schema}, mismatched rows $bad"
+    } && {
+      val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      val plan = graft.functions.Similarity.quantized(e).queryExecution.executedPlan
+      Prop(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayTransform])))) :|
+        s"quantized(e) still runs an ArrayTransform: $plan"
+    }
+  }
+
   property("sqdist_i64 yields NULL, never a short sum, on ragged arrays") = {
     // equal-length inputs are the Lloyd invariant; a length mismatch
     // means a corrupted/truncated persisted codebook, and a silently

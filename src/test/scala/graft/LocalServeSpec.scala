@@ -166,6 +166,26 @@ class LocalServeSpec extends SparkSpec {
       }
   }
 
+  test("corpora the driver path declines: a null element, a null vector, a repeated or INT vec_id") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField}
+    def corpus(idType: org.apache.spark.sql.types.DataType, rows: Seq[(Long, Seq[java.lang.Float])]) =
+      spark.createDataFrame(java.util.List.of(rows.map { case (id, v) =>
+          Row(if (idType == IntegerType) id.toInt else id, (id % 3).toInt, v) }: _*),
+        StructType(Seq(StructField("vec_id", idType), StructField("label", IntegerType),
+          StructField("embedding", ArrayType(FloatType)))))
+    val vecs = (0L until 8L).map(i => i -> Seq[java.lang.Float](0.5f + i, 0.25f * i, 0.75f - 0.1f * i))
+    val declined = Seq(
+      "a null element" -> corpus(LongType, vecs.updated(3, 3L -> Seq[java.lang.Float](0.1f, null, 0.3f))),
+      "a null vector" -> corpus(LongType, vecs.updated(5, 5L -> null)),
+      "a repeated vec_id" -> corpus(LongType, vecs :+ (2L -> Seq[java.lang.Float](0.9f, 0.8f, 0.7f))),
+      "an INT vec_id" -> corpus(IntegerType, vecs))
+    declined.foreach { case (name, e) =>
+      assert(Similarity.localCorpus(e).isEmpty, s"$name: the driver path must decline it")
+      sameBothSides(e, col("vec_id") % 2 === 0, 3)
+    }
+  }
+
   test("edge corpora: empty, constant, zero-norm; k beyond the candidates") {
     val empty = Seq.empty[(Long, Int, Array[Float])].toDF("vec_id", "label", "embedding")
     sameBothSides(empty, col("vec_id") % 2 === 0, 10).foreach { case (name, rows) =>

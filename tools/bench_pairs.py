@@ -13,14 +13,20 @@ its JSON result. Prints, per metric, the median and the interquartile
 range (IQR) of each side, the median's relative change and the number of
 pairs in which the change read lower (a raw count, whichever way the
 metric is better). A metric the change never reported is listed apart.
-Exits non-zero when a run printed no result or reported
-`"correct": false`; the table still prints.
+Then, per side, the operations that failed out of those attempted (summed
+over the runs) and the median of the runs' start and end CPU probes, read
+from each run's `machine:` line. Exits non-zero when a run printed no
+result or reported `"correct": false`, or when the change failed a larger
+share of its operations than the parent; the table still prints.
 """
 import argparse
 import json
+import re
 import statistics
 import subprocess
 import sys
+
+PROBE = re.compile(r"machine:.*cpu probe (\d+) -> (\d+) ms")
 
 
 def seed_range(text):
@@ -29,15 +35,21 @@ def seed_range(text):
 
 
 def run(checkout, args, seed):
-    """The JSON result of one perfbench run, or None when it printed none."""
+    """The JSON result of one perfbench run, or None when it printed none,
+    with the run's (start, end) CPU probe in ms under "probe" when its
+    `machine:` line gave one."""
     cmd = ["python3", "perfbench/run.py", "--workload", args.workload, "--seed", str(seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace)]
     out = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True).stdout
     lines = out.strip().splitlines()
     try:
-        return json.loads(lines[-1]) if lines else None
+        res = json.loads(lines[-1]) if lines else None
     except json.JSONDecodeError:
         return None
+    probe = PROBE.search(out)
+    if res is not None and probe:
+        res["probe"] = (float(probe.group(1)), float(probe.group(2)))
+    return res
 
 
 def quartiles(xs):
@@ -90,6 +102,19 @@ def main():
               f" {f'[{c1:.4f}, {c3:.4f}]':>21s} {delta:>8s} {f'{lower}/{len(both)}':>14s}")
     for m in missing:
         print(f"{m:40s} reported by the parent only")
+    share = {}
+    for side in ("parent", "change"):
+        runs = [p[side] for p in pairs if p[side]]
+        failed = sum(r.get("failed", 0) for r in runs)
+        attempted = sum(r.get("attempted", 0) for r in runs)
+        share[side] = failed / attempted if attempted else 0.0
+        probes = [r["probe"] for r in runs if "probe" in r]
+        probe = (f"cpu probe median {statistics.median(p[0] for p in probes):.0f} -> "
+                 f"{statistics.median(p[1] for p in probes):.0f} ms" if probes else "no cpu probe")
+        print(f"{side}: {failed}/{attempted} operations failed; {probe}")
+    if share["change"] > share["parent"]:
+        bad.append(f"the change failed {share['change']:.2%} of its operations, "
+                   f"the parent {share['parent']:.2%}")
     for b in bad:
         print(f"FAILED {b}")
     sys.exit(1 if bad else 0)
