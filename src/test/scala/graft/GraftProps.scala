@@ -608,10 +608,12 @@ object GraftProps extends Properties("graft") {
       val bad = outs.flatMap(_.collect().filter(r => r.get(1) != r.get(2)))
       Prop(typed && bad.isEmpty) :| s"type ${outs.head.schema}, mismatched rows $bad"
     } && {
-      val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      val e = spark.range(4).selectExpr("id AS vec_id", "array(CAST(id / 4 AS FLOAT), 0.5F) AS embedding")
       val plan = graft.functions.Similarity.quantized(e).queryExecution.executedPlan
-      Prop(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayTransform])))) :|
-        s"quantized(e) still runs an ArrayTransform: $plan"
+      val exprs = plan.flatMap(_.expressions)
+      Prop(exprs.exists(_.exists(_.isInstanceOf[graft.plans.QuantizeI64])) &&
+        !exprs.exists(_.exists(_.isInstanceOf[ArrayTransform]))) :|
+        s"quantized(e) must run QuantizeI64 and no ArrayTransform: $plan"
     }
   }
 
